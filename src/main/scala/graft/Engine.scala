@@ -180,14 +180,14 @@ object Engine {
     *    with identical rows — the exactly-once contract; compaction
     *    collapses partitions into the batch_id=-1 epoch, changing the
     *    set), which is why raw roots keep the listing fingerprint. */
-  private final case class CountKey(
+  private final case class MemoKey(
       tag: String, semHash: Int, planHash: Int, paths: Seq[String],
       filesFp: Long)
 
-  private val countCache =
-    new java.util.LinkedHashMap[CountKey, java.lang.Long](16, 0.75f, true) {
+  private val memoCache =
+    new java.util.LinkedHashMap[MemoKey, AnyRef](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[CountKey, java.lang.Long]): Boolean = size() > 64
+          e: java.util.Map.Entry[MemoKey, AnyRef]): Boolean = size() > 64
     }
 
   def memoCount(df: DataFrame): Long = memoStat(df, "count")(df.count())
@@ -197,7 +197,28 @@ object Engine {
     * max-key estimate) cached under the same key contract — one
     * probe job per (statistic, plan, file listing), not one per
     * operator EXECUTION. */
-  def memoStat(df: DataFrame, tag: String)(compute: => Long): Long = {
+  def memoStat(df: DataFrame, tag: String)(compute: => Long): Long =
+    memoSnapshot[java.lang.Long](df, tag)(Long.box(compute)).longValue
+
+  /** Any value read from `df` — a statistic, or a small table read
+    * whole (Serving's PQ model) — memoized once per snapshot of the
+    * files under it, under the key contract above. One `tag` must
+    * always memoize one value type. */
+  def memoSnapshot[T <: AnyRef](df: DataFrame, tag: String)(compute: => T): T = {
+    val k = snapshotKey(df, tag)
+    memoCache.synchronized {
+      val hit = memoCache.get(k)
+      if (hit != null) return hit.asInstanceOf[T]
+    }
+    val v = compute
+    memoCache.synchronized { memoCache.put(k, v) }
+    v
+  }
+
+  /** The memo key: the canonical plan's two hashes, every file
+    * relation's root paths, and a fingerprint of the files under them
+    * (driver-side metadata only, no Spark job). */
+  private def snapshotKey(df: DataFrame, tag: String): MemoKey = {
     import org.apache.spark.sql.execution.datasources.{
       CatalogFileIndex, FileIndex, PartitioningAwareFileIndex}
     val plan = df.queryExecution.analyzed
@@ -247,20 +268,13 @@ object Engine {
         }
       }
     val canon = plan.canonicalized
-    val k = CountKey(tag, canon.semanticHash(), canon.hashCode(), paths, filesFp)
-    countCache.synchronized {
-      val hit = countCache.get(k)
-      if (hit != null) return hit.longValue()
-    }
-    val n = compute
-    countCache.synchronized { countCache.put(k, n) }
-    n
+    MemoKey(tag, canon.semanticHash(), canon.hashCode(), paths, filesFp)
   }
 
-  /** Drop every memoized count (tests / explicit refresh). The normal
+  /** Drop every memoized value (tests / explicit refresh). The normal
     * write paths need no call here — see the memoCount key contract. */
   def invalidateCounts(): Unit =
-    countCache.synchronized { countCache.clear() }
+    memoCache.synchronized { memoCache.clear() }
 
   // -------------------------------------------------------------------
   // Deterministic numeric helpers shared by the operator library.

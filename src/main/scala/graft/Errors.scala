@@ -21,6 +21,9 @@ object Errors {
   final val UndefinedTable = "42P01"
   final val FeatureNotSupported = "0A000"
   final val InternalError = "XX000"
+  /** PG's cardinality_violation: a lookup that must match one row
+    * matched several. */
+  final val CardinalityViolation = "21000"
   /** PG's lock_not_available. The reference's lmgr waits indefinitely
     * on a conflict (lmgr.rs:277-373) and so never raises this; this
     * port waits a bounded window (LockManager.waitTimeoutMs) and then

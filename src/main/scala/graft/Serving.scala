@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftShim, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -22,14 +22,23 @@ import graft.operators.{TextPipeline, VectorSearch}
   *   SELECT * FROM graft_hybrid_topk(42, 'scan hash merge', 20);
   * }}}
   *
-  * Every function builds the `boundedQ` LAZY serving plan: a single
-  * query id, probed IVF cells pruned as PartitionFilters, query-term
-  * postings pruned at the scan — at 100 TB a call touches nprobe cells
-  * of the index plus the rerank shortlist (vector arm) or the query
-  * terms' postings (lexical arm), never the corpus. The returned
-  * LogicalPlan is the same analyzed plan the Scala APIs produce, so the
-  * wire path and the driver-contract path can never drift
-  * (ServingSqlSpec + WireServerSpec hash-check them equal).
+  * Every function returns a LAZY serving plan for ONE query; `k` must
+  * be >= 1. The vector arm (`graft_ann_topk`, and the vector half of
+  * `graft_hybrid_topk`) is `VectorSearch.ivfPqTopKForQid`: the query
+  * vector is looked up once while the plan is built, and its probed IVF
+  * cells and PQ distance table are bound into the plan as literals —
+  * pruned index scan (the cells are PartitionFilters), ADC-scored
+  * sort-limit shortlist, broadcast join to `{prefix}_emb` for the exact
+  * rerank, sort-limit k. No per-query aggregate, no query-side
+  * broadcast. The lexical arm prunes to the query terms' postings at
+  * the scan. At 100 TB a call touches nprobe cells of the index plus
+  * the rerank shortlist, or the query terms' postings, never the
+  * corpus. Building a plan runs one job (the query-vector lookup, vector
+  * arm only); the PQ model is read once per snapshot of the model table
+  * ([[readModel]]). The returned LogicalPlan is the same analyzed plan
+  * the Scala APIs produce, so the wire path and the driver-contract path
+  * can never drift (ServingSqlSpec + WireServerSpec hash-check them
+  * equal).
   *
   * Deployment shape: [[buildIndexes]] persists the three index tables
   * plus the PQ model (encode once); [[install]] registers the functions
@@ -146,12 +155,17 @@ object Serving {
     readModel(spark, tbl(prefix, "pqmodel")); ()
   }
 
-  /** Inverse of [[writeModel]] — a collect of the kB-sized model table
-    * (the one eager step of a serving call's plan BUILD; the plan itself
-    * stays lazy). */
+  /** Inverse of [[writeModel]] — a collect of the kB-sized model table,
+    * run once per snapshot of the table's files (`Engine.memoSnapshot`,
+    * the memoCount key contract): warm serving calls read no model, and
+    * a rebuilt or rewritten model table is seen on the next call. */
   private[graft] def readModel(spark: SparkSession,
       table: String): VectorSearch.PqModel = {
-    val rows = spark.table(table).collect()
+    val t = spark.table(table)
+    Engine.memoSnapshot(t, "pqModel")(modelOf(t.collect()))
+  }
+
+  private def modelOf(rows: Array[Row]): VectorSearch.PqModel = {
     def vecs(kind: String): Array[(Int, Int, Array[Double])] = rows
       .filter(_.getString(0) == kind)
       .map(r => (r.getInt(1), r.getInt(2),
@@ -183,26 +197,25 @@ object Serving {
     case Literal(v: Int, IntegerType) => v.toLong
     case _ => argErr(fn, want)
   }
-  private def litInt(fn: String, want: String, e: Expression): Int =
-    litLong(fn, want, e).toInt
+  /** The `k` argument: a literal >= 1 (the plans end in `limit(k)`). */
+  private def litK(fn: String, want: String, e: Expression): Int = {
+    val k = litLong(fn, want, e)
+    if (k < 1 || k > Int.MaxValue)
+      throw new GraftArgError(Errors.InvalidParameterValue,
+        s"$fn: k must be between 1 and ${Int.MaxValue}, got $k")
+    k.toInt
+  }
   private def litStr(fn: String, want: String, e: Expression): String = e match {
     case Literal(v, StringType) if v != null => v.toString
     case _ => argErr(fn, want)
   }
 
-  /** The vector serving arm: single-qid IVF-PQ top-k against the
-    * persisted index — `boundedQ = true` holds STATICALLY (one query
-    * row by construction), so the plan is fully lazy and the in-plan
-    * cardinality guard never fires. */
+  /** The vector serving arm: the single-query IVF-PQ plan
+    * (`VectorSearch.ivfPqTopKForQid`) against the persisted index. */
   private def annPlan(prefix: String, qid: Long, k: Int): LogicalPlan = {
     val s = active
-    val corpus = s.table(tbl(prefix, "emb"))
-    val model = readModel(s, tbl(prefix, "pqmodel"))
-    val q = corpus.filter(col("vec_id") === qid)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    VectorSearch.ivfPqTopKIndexed(s.table(tbl(prefix, "ivf")), corpus, q,
-      model.copy(rerank = math.max(model.rerank, k)), k, boundedQ = true,
-      persistedIndex = true)
+    VectorSearch.ivfPqTopKForQid(s.table(tbl(prefix, "ivf")), s.table(tbl(prefix, "emb")),
+      readModel(s, tbl(prefix, "pqmodel")), qid, k)
       .queryExecution.analyzed
   }
 
@@ -223,8 +236,7 @@ object Serving {
     VectorSearch.hybridRrfTopKIndexed(
       s.table(tbl(prefix, "postings")), s.table(tbl(prefix, "doclens")),
       s.table(tbl(prefix, "ivf")), s.table(tbl(prefix, "emb")),
-      readModel(s, tbl(prefix, "pqmodel")), terms, qid, k,
-      persistedIndex = true)
+      readModel(s, tbl(prefix, "pqmodel")), terms, qid, k)
       .queryExecution.analyzed
   }
 
@@ -246,7 +258,7 @@ object Serving {
         val want = "graft_ann_topk(qid BIGINT, k INT)"
         if (es.length != 2) argErr("graft_ann_topk", want)
         annPlan(prefix, litLong("graft_ann_topk", want, es(0)),
-          litInt("graft_ann_topk", want, es(1)))
+          litK("graft_ann_topk", want, es(1)))
       }),
     (FunctionIdentifier("graft_bm25_topk"),
       info("graft_bm25_topk",
@@ -255,7 +267,7 @@ object Serving {
         val want = "graft_bm25_topk(terms STRING, k INT)"
         if (es.length != 2) argErr("graft_bm25_topk", want)
         bm25Plan(prefix, splitTerms(litStr("graft_bm25_topk", want, es(0))),
-          litInt("graft_bm25_topk", want, es(1)))
+          litK("graft_bm25_topk", want, es(1)))
       }),
     (FunctionIdentifier("graft_hybrid_topk"),
       info("graft_hybrid_topk",
@@ -265,7 +277,7 @@ object Serving {
         if (es.length != 3) argErr("graft_hybrid_topk", want)
         hybridPlan(prefix, litLong("graft_hybrid_topk", want, es(0)),
           splitTerms(litStr("graft_hybrid_topk", want, es(1))),
-          litInt("graft_hybrid_topk", want, es(2)))
+          litK("graft_hybrid_topk", want, es(2)))
       }))
 
   /** Register the serving table functions on a LIVE session (the

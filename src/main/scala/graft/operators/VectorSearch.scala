@@ -1,12 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Engine, GQ}
-import graft.functions.{GraftFunctions => GF, GraftHash}
+import graft.{Engine, Errors, GQ, GraftStateError}
+import graft.functions.{GraftFunctions => GF, GraftHash, NearestCellsKernel, PqKernels}
 
 /** Similarity search over embedding columns (array<float>).
   *
@@ -89,9 +93,8 @@ object VectorSearch {
     * <= [[MaxBoundedQids]] distinct qids (a point lookup, a single-user
     * query), so the heap can never hit the 128-group sort fallback and
     * the plan returns LAZY — zero extra jobs, no cache entry, no durable
-    * write, and the full logical plan stays visible to consumers (the
-    * index-pruning scan paths ServingPathSpec pins). Batch callers leave
-    * it false. The contract is ENFORCED in-plan: a violating caller
+    * write, and the full logical plan stays visible to consumers. Batch
+    * callers leave it false. The contract is ENFORCED in-plan: a violating caller
     * fails loudly at execution instead of silently degrading to the
     * external-sort fallback (see the guard below).
     */
@@ -489,58 +492,108 @@ object VectorSearch {
       corpus, queries, probedQueries(queries, model), k, rerank)
   }
 
+  /** Each query row's probed cells, computed ONCE on the driver from one
+    * collect of the (qid, qv) rows, by the kernel the in-plan
+    * NearestCells expression compiles to (round6 = false). The indexed
+    * searches feed these same cells to the index partition filter AND to
+    * the probe side, so the two cannot disagree. A NULL embedding probes
+    * no cells, like the expression's null -> explode-drops-row path. */
+  private def probeCells(queries: DataFrame,
+      model: PqModel): Array[(Row, Array[Int])] = {
+    val et = queries.schema("qv").dataType.asInstanceOf[ArrayType].elementType
+    val norms = NearestCellsKernel.sqrtNorms(model.centroids)
+    queries.select("qid", "qv").collect().map { r =>
+      val cells =
+        if (r.isNullAt(1)) Array.empty[Int]
+        else {
+          val c = NearestCellsKernel.topN(arrayData(r, 1), et,
+            model.centroids, norms, model.nprobe, false)
+          Array.tabulate(c.numElements())(c.getInt)
+        }
+      (r, cells)
+    }
+  }
+
+  private def arrayData(r: Row, i: Int): ArrayData =
+    new GenericArrayData(r.getSeq[Any](i).toArray)
+
   /** IVF-PQ over a PERSISTED index table (written by
     * `Layout.writeIvfIndex`, partitioned by cid): the probed cell set is
-    * tiny and driver-known (|Q| x nprobe ids), so it becomes a literal
-    * IN filter the scan turns into PartitionFilters — at 100 TB the
-    * query touches nprobe/cells of the index files and never scans the
-    * corpus except for the Q x rerank shortlist fetch. This is the
-    * serving shape: encode once (`encodeIvfPq` + Layout), search many. */
+    * tiny and driver-known (|Q| x nprobe ids, [[probeCells]]), so it
+    * becomes a literal IN filter the scan turns into PartitionFilters —
+    * at 100 TB the query touches nprobe/cells of the index files and
+    * never scans the corpus except for the Q x rerank shortlist fetch.
+    * The collected query rows, with their cells, are also the probe and
+    * rerank sides (a local relation), so the query set is scanned once.
+    * This is the multi-query shape; one query is served by
+    * [[ivfPqTopKForQid]]. */
   def ivfPqTopKIndexed(index: DataFrame, corpus: DataFrame,
       queries: DataFrame, model: PqModel, k: Int,
-      boundedQ: Boolean = false, persistedIndex: Boolean = false): DataFrame = {
-    val q = probedQueries(queries, model)
-    // r19: the probed cell ids used to come from a distinct-collect of
-    // q's cid column — a distinct exchange + fetch job over the
-    // exploded probe frame, run once per serve
-    // call. The cells are a pure function of (qv, model), so collect
-    // the |Q| query rows instead (the indexed path's |Q| is serving-
-    // bounded — 1 for the SQL table functions) and run the SAME
-    // NearestCellsKernel.topN the in-plan expression compiles to.
-    // COUPLING NOTE: this driver-side derivation must stay parameter-
-    // identical to probedQueries' in-plan NearestCells expression
-    // (same centroids/norms/nprobe, round6 = false) — the index filter
-    // below prunes to THESE cells while the broadcast q side probes
-    // the expression's cells; drift would silently drop candidates.
-    // End-to-end drift is gated by the s15/s16/s17 oracles (a dropped
-    // candidate changes the top-k hash) and the served==inline spec.
-    // A NULL embedding contributes no cells, like the expression's
-    // nullSafeEval -> null -> explode-drops row path.
-    val et = queries.schema("qv").dataType
-      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-    val norms = graft.functions.NearestCellsKernel.sqrtNorms(model.centroids)
-    val probed = queries.select(col("qv")).collect()
-      .flatMap { r =>
-        if (r.isNullAt(0)) Array.empty[Int]
-        else {
-          val v = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            r.getSeq[Any](0).toArray)
-          val cells = graft.functions.NearestCellsKernel
-            .topN(v, et, model.centroids, norms, model.nprobe, false)
-          Array.tabulate(cells.numElements())(cells.getInt)
-        }
-      }.distinct.sorted
-    // same exchange barrier as ivfPqTopK: when the caller passes an
-    // INLINE-encoded index (the no-table case), the deferred projection
-    // would re-encode per candidate. A PERSISTED Layout index stores
-    // `codes` — nothing re-evaluates per candidate — so the serving
-    // path (r19, persistedIndex = true) skips the exchange outright:
-    // the probed rows already arrive cid-clustered from partition
-    // pruning, and the repartition was one pure-overhead stage per
-    // serve call.
-    val probedIdx = index.filter(col("cid").isin(probed.toIndexedSeq: _*))
-    pqSearch(if (persistedIndex) probedIdx else probedIdx.repartition(col("cid")),
-      corpus, queries, q, k, model.rerank, boundedQ = boundedQ)
+      boundedQ: Boolean = false): DataFrame = {
+    val probed = probeCells(queries, model)
+    val local = queries.sparkSession.createDataFrame(
+      probed.toSeq.map { case (r, cells) => Row(r.get(0), r.get(1), cells.toSeq) }.asJava,
+      queries.select("qid", "qv").schema
+        .add("cells", ArrayType(IntegerType, containsNull = false)))
+    val q = local.select(col("qid"), explode(col("cells")).as("cid"),
+      GF.pqAdcTable(col("qv"), model.books).as("adc"))
+    val cells = probed.flatMap(_._2).distinct.sorted
+    // same exchange barrier as ivfPqTopK: an INLINE-encoded index would
+    // otherwise re-encode per candidate (the deferred projection)
+    pqSearch(index.filter(col("cid").isin(cells.toIndexedSeq: _*))
+        .repartition(col("cid")),
+      corpus, local.select("qid", "qv"), q, k, model.rerank, boundedQ = boundedQ)
+  }
+
+  /** One query's top-`n` candidates in [[TopKHeap]]'s total order (sim
+    * desc, nid asc) as a sort-limit; null sims drop, as the heap drops
+    * them. */
+  private def sortLimit(cand: DataFrame, n: Int): DataFrame =
+    cand.filter(col("sim").isNotNull).orderBy(col("sim").desc, col("nid")).limit(n)
+
+  /** Single-query IVF-PQ top-k over a persisted index: the serving plan
+    * of `graft_ann_topk` and of [[hybridRrfTopKIndexed]]'s vector arm.
+    * The query vector `qid` is looked up once on the driver; its probed
+    * cells ([[probeCells]]) and ADC table (the `PqKernels.adcTable` the
+    * in-plan expression runs) are bound into the plan as literals:
+    * pruned index scan -> ADC score -> sort-limit shortlist of
+    * max(`model.rerank`, `k`) -> broadcast join to the corpus -> exact
+    * sim -> sort-limit `k`. For one query the per-qid heap's order (sim desc,
+    * nid asc) is a plain sort order, so the sort-limits return the rows
+    * [[ivfPqTopKIndexed]] returns with `rerank` raised to k
+    * (ServingSqlSpec pins them equal)
+    * without its two heap aggregates, query-side broadcasts or extra
+    * corpus scans for the query row. A missing qid or a NULL embedding
+    * returns no rows; a qid matching more than one corpus row fails. */
+  def ivfPqTopKForQid(index: DataFrame, corpus: DataFrame, model: PqModel,
+      qid: Long, k: Int): DataFrame = {
+    val probed = probeCells(corpus.filter(col("vec_id") === qid)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv")), model)
+    if (probed.length > 1)
+      throw new GraftStateError(Errors.CardinalityViolation,
+        s"query vector vec_id = $qid is ambiguous: ${probed.length} corpus " +
+          "rows carry it, and vec_id must be unique")
+    probed.headOption.filter(_._2.nonEmpty) match {
+      case None =>
+        corpus.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](),
+          StructType(Seq(StructField("qid", LongType), StructField("nid", LongType),
+            StructField("sim", DoubleType))))
+      case Some((r, cells)) =>
+        val qvType = corpus.schema("embedding").dataType
+        val qv = arrayData(r, 1)
+        val adc = PqKernels.adcTable(qv,
+          qvType.asInstanceOf[ArrayType].elementType, model.books).toDoubleArray()
+        val cand = index
+          .filter(col("cid").isin(cells.toIndexedSeq: _*) && col("vec_id") =!= qid)
+          .select(col("vec_id").cast(LongType).as("nid"),
+            GF.pqAdcSum(col("codes"), typedLit(adc)).as("sim"))
+        val exact = corpus
+          .join(broadcast(sortLimit(cand, math.max(model.rerank, k)).select("nid")),
+            col("vec_id") === col("nid"))
+          .select(lit(qid).as("qid"), col("nid"),
+            sim6(GraftShim.column(Literal(qv, qvType)), col("embedding")).as("sim"))
+        sortLimit(exact, k)
+    }
   }
 
   /** Capped LSH bucket self-join pair generator — the shared candidate
@@ -1095,17 +1148,11 @@ object VectorSearch {
     * VectorSearchSpec pins it EQUAL to the same arms computed inline. */
   def hybridRrfTopKIndexed(postings: DataFrame, doclens: DataFrame,
       ivfIndex: DataFrame, corpus: DataFrame, model: PqModel,
-      terms: Seq[String], qid: Long, k: Int = 20,
-      persistedIndex: Boolean = false): DataFrame = {
+      terms: Seq[String], qid: Long, k: Int = 20): DataFrame = {
     val lexTop = rankLex(TextPipeline.bm25FromIndex(postings, doclens, terms), k)
-    val q = corpus.filter(col("vec_id") === qid)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    // ONE query row — the boundedQ serving contract holds statically:
-    // the serve path stays a single LAZY plan (index partition pruning
-    // visible end-to-end, zero extra jobs, no per-query cache entry)
-    val vecTop = rankVec(ivfPqTopKIndexed(ivfIndex, corpus, q,
-      model.copy(rerank = math.max(model.rerank, k)), k, boundedQ = true,
-      persistedIndex = persistedIndex))
+    // ONE query: the single-query plan stays LAZY (index partition
+    // pruning visible end-to-end, no per-query cache entry)
+    val vecTop = rankVec(ivfPqTopKForQid(ivfIndex, corpus, model, qid, k))
     hybridRrfFuse(lexTop, vecTop)
   }
 

@@ -806,6 +806,28 @@ class WireServerSpec extends AnyFunSuite {
     } finally srv.close()
   }
 
+  test("a serving call with k < 1 errors 22023 and the connection keeps serving") {
+    // the argument check runs before any index table is read
+    graft.Serving.install(spark, "wsrk")
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup(); c.drain()
+      c.query("SELECT * FROM graft_ann_topk(0, 0)")
+      val (bad, st) = c.drain()
+      val err = c.errFields(bad)
+      assert(err('C') == "22023")
+      assert(err('M').contains("graft_ann_topk") && err('M').contains("k must be"),
+        err('M'))
+      assert(st == 'I')
+      c.query("SELECT * FROM graft_hybrid_topk(0, 'scan', -2)")
+      assert(c.errFields(c.drain()._1)('C') == "22023")
+      c.query("SELECT 7 AS x")
+      assert(c.dataRows(c.drain()._1) == Seq(Seq("7")))
+      c.terminate()
+    } finally srv.close()
+  }
+
   test("the wire serving loop releases ephemerals per statement") {
     // the Engine.scala serving-lifecycle contract, applied to the wire
     // loop (r17 verdict #1): any frame registered against the server's
