@@ -200,6 +200,26 @@ object Engine {
   def memoStat(df: DataFrame, tag: String)(compute: => Long): Long =
     memoSnapshot[java.lang.Long](df, tag)(Long.box(compute)).longValue
 
+  /** The one session switch over every size-gated driver-local regime:
+    * `off` forces the distributed arm of all of them (how the parity
+    * specs, the chaos harness and the pricing study run the
+    * distributed loops at gate scale). */
+  val DriverLocalConf = "graft.driverLocal"
+
+  /** The one driver-local regime gate, shared by the graph operators,
+    * connected components, the BPE trainer, k-means and q59: true
+    * ("collect and run on the driver") when [[DriverLocalConf]] is not
+    * `off` and `gated` has at most `maxRows` rows. Each caller's limit
+    * is a constant at its call site, sized for driver memory. The row
+    * count is memoized on `gated` under [[memoCount]]'s entry, so a
+    * warm call on an unchanged plan and file set runs no job. `rows`
+    * is by name: a caller may count an already-cut frame of the same
+    * rows, and it is never evaluated when the switch is off or the
+    * memo hits. */
+  def driverLocal(gated: DataFrame, maxRows: Long)(rows: => Long): Boolean =
+    !gated.sparkSession.conf.getOption(DriverLocalConf).contains("off") &&
+      memoStat(gated, "count")(rows) <= maxRows
+
   /** Any value read from `df` — a statistic, or a small table read
     * whole (Serving's PQ model) — memoized once per snapshot of the
     * files under it, under the key contract above. One `tag` must

@@ -50,6 +50,10 @@ object Bpe {
         .otherwise(concat(acc, array(x))))
   }
 
+  /** Driver-local merge-loop limit for [[trainMerges]]: 500k word
+    * types. */
+  private val DriverMaxVocab = 500000L
+
   /** Learn `numMerges` merges; returns (rank, left, right, pair_count)
     * — rank 1 is the first (highest-count) merge.
     *
@@ -65,22 +69,21 @@ object Bpe {
     * identical merge sequence (BpeSpec parity pin): same adjacent-pair
     * counting weighted by word count, same (count DESC, l, r)
     * tie-break with UTF8 byte string order, same greedy
-    * left-to-right non-overlapping application. The switch is
-    * session-tunable via `graft.bpe.driverMaxVocab` (0 forces the
-    * distributed arm — how the parity spec exercises both). */
+    * left-to-right non-overlapping application. The regime goes
+    * through [[Engine.driverLocal]] at [[DriverMaxVocab]] word types
+    * (the parity spec forces the distributed arm with
+    * [[Engine.DriverLocalConf]]). */
   def trainMerges(documents: DataFrame, textCol: String,
-      numMerges: Int, driverMaxVocab: Long = 500000L): DataFrame = {
+      numMerges: Int): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     val words = documents
       .select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("wc"))
-    val maxVocab = spark.conf.getOption("graft.bpe.driverMaxVocab")
-      .map(_.toLong).getOrElse(driverMaxVocab)
     // vocab size via the memoized plan-statistic cache (the derived-
     // density-knob class): one count job per (plan, file set), shared
     // by repeated builds in one session
-    if (maxVocab > 0 && Engine.memoCount(words) <= maxVocab) {
+    if (Engine.driverLocal(words, DriverMaxVocab)(words.count())) {
       val wordRows = words.collect().map(r => (r.getString(0), r.getLong(1)))
       return trainMergesLocal(spark, wordRows, numMerges)
     }

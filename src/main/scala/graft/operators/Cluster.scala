@@ -217,23 +217,17 @@ object Cluster {
     asg.join(drops, Seq("vec_id"), "left_anti").select("vec_id", "cid")
   }
 
-  /** r19 dual-regime switch for the Lloyd loop (VERDICT item 7 — the
-    * d05/BPE/graph size-threshold pattern applied to k-means): below
-    * `graft.kmeans.driverMaxVecs` vectors (default 100k ≈ 25 MB of
-    * 64-dim float data; 0 forces the distributed arm — how the parity
-    * spec, chaos harness and PriceReliable keep exercising the
-    * distributed loop at gate scale) the iterations run driver-locally.
-    * A gate-scale Lloyd pass pays one scheduled job + one exchange PER
+  /** r19 dual-regime limit for the Lloyd loop (VERDICT item 7 — the
+    * d05/BPE/graph size-threshold pattern applied to k-means, through
+    * [[Engine.driverLocal]]): at or below 100k vectors (≈ 25 MB of
+    * 64-dim float data) the iterations run driver-locally. A
+    * gate-scale Lloyd pass pays one scheduled job + one exchange PER
     * ITERATION plus the seed job, on frames of a few thousand rows —
     * fixed latency at any corpus size, exactly the overhead class the
-    * graph fixpoints shed in r18. The threshold probe count is memoized
-    * on the input plan ([[Engine.memoStat]]), so the 100 TB path pays
-    * at most one count per plan per session. */
-  private val DriverMaxVecsDefault = 100000L
-
-  private def driverMaxVecs(spark: SparkSession): Long =
-    spark.conf.getOption("graft.kmeans.driverMaxVecs").map(_.toLong)
-      .getOrElse(DriverMaxVecsDefault)
+    * graph fixpoints shed in r18. The gate's count is memoized on the
+    * input plan, so the 100 TB path pays at most one count per plan per
+    * session. */
+  private val DriverMaxVecs = 100000L
 
   /** The driver-local twin of [[kmeans]] — identical values by
     * construction, not re-derivation:
@@ -334,8 +328,7 @@ object Cluster {
     * centroid. Returns (assignment with `cid`, final centroids). */
   def kmeans(e: DataFrame, vecCol: String, k: Int, iters: Int,
       dim: Int = 64): (DataFrame, Array[Array[Double]]) = {
-    val limit = driverMaxVecs(e.sparkSession)
-    if (limit > 0 && Engine.memoStat(e, "kmeansVecs")(e.count()) <= limit)
+    if (Engine.driverLocal(e, DriverMaxVecs)(e.count()))
       return kmeansLocal(e, vecCol, k, iters)
     val picked = e.select(col("vec_id"), col(vecCol))
       .orderBy(hash(col("vec_id")), col("vec_id")).limit(k).collect()

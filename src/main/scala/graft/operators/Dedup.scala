@@ -305,9 +305,12 @@ object Dedup {
   private def releaseCheckpoint(df: DataFrame): Unit =
     Engine.releaseCheckpoint(df)
 
-  def nearDupClusters(pairs: DataFrame, nodes: DataFrame,
-      driverMaxEdges: Long = 2000000L): DataFrame =
-    componentsByMinLabel(pairs, nodes, driverMaxEdges)
+  def nearDupClusters(pairs: DataFrame, nodes: DataFrame): DataFrame =
+    componentsByMinLabel(pairs, nodes)
+
+  /** Driver-local union-find limit for [[componentsByMinLabel]]: 2M
+    * pairs, ~32 MB of longs (see the regime note there). */
+  private val DriverMaxEdges = 2000000L
 
   /** Connected components by min-label propagation, generic over the
     * node-id type: LongType (d05's doc ids) and StringType (d16's name
@@ -326,33 +329,30 @@ object Dedup {
     * diverge above the BMP). DuckDB's default binary collation matches,
     * which is what keeps the d16 oracle exact.
     */
-  private def componentsByMinLabel(pairs: DataFrame, nodes: DataFrame,
-      driverMaxEdges: Long): DataFrame = {
-    // the regime switch is session-tunable: `graft.dedup.driverMaxEdges`
-    // overrides the call-site default (0 forces the distributed arm —
-    // how the ClusterCheck chaos harness executor-kills the min-label
-    // fixpoint at gate scale, where the LSH residue would otherwise
-    // always fit the driver)
-    val maxEdges = pairs.sparkSession.conf
-      .getOption("graft.dedup.driverMaxEdges").map(_.toLong)
-      .getOrElse(driverMaxEdges)
+  private def componentsByMinLabel(pairs: DataFrame,
+      nodes: DataFrame): DataFrame = {
     // materialize the (possibly expensive) pair source ONCE, then derive
     // the symmetric edge list from the materialized form — a union of
     // two references to the raw plan would execute it twice
-    val p = pairs.select(col("id_a"), col("id_b")).transform(Engine.cut)
+    val pl = pairs.select(col("id_a"), col("id_b"))
+    val p = pl.transform(Engine.cut)
     val idType = p.schema.head.dataType
     // adaptive execution, sized from the (already materialized) edge
     // count — the same runtime-statistics reasoning AQE applies within
     // a query, applied across the loop. The candidate-pair graph holds
     // only docs WITH a near-dup candidate (the LSH residue), orders
     // smaller than the corpus, so two regimes:
-    //  - graph fits driver memory (<= driverMaxEdges, ~32 MB of longs
-    //    at the default): exact union-find on the driver — O(E α(E))
-    //    with zero per-round job scheduling, the same min-id labels;
-    //  - larger: the distributed min-label fixpoint below, whose
-    //    partitioning is itself sized from the edge count.
-    val graphRows = p.count()
-    if (graphRows <= maxEdges) {
+    //  - graph fits driver memory (<= DriverMaxEdges pairs, ~32 MB):
+    //    exact union-find on the driver — O(E α(E)) with zero
+    //    per-round job scheduling, the same min-id labels;
+    //  - larger, or the Engine.DriverLocalConf switch off (how the
+    //    ClusterCheck chaos harness executor-kills the min-label
+    //    fixpoint at gate scale): the distributed min-label fixpoint
+    //    below, whose partitioning is itself sized from the edge count.
+    // The gate memoizes its count on the pre-cut plan; the lazy val
+    // runs at most one count job per call, shared with the sizing.
+    lazy val graphRows = p.count()
+    if (Engine.driverLocal(pl, DriverMaxEdges)(graphRows)) {
       val edgeRows = p.collect()
       releaseCheckpoint(p)
       // ordering must agree with the distributed arm's min()/least():
@@ -593,8 +593,7 @@ object Dedup {
     val pairs = entityPairs(parts, nameCol, maxDist, dfCap)
       .select(col("name_a").as("id_a"), col("name_b").as("id_b"))
     val names = parts.select(col(nameCol).as("name")).distinct()
-    componentsByMinLabel(pairs, names.select(col("name").as("id")),
-        driverMaxEdges = 2000000L)
+    componentsByMinLabel(pairs, names.select(col("name").as("id")))
       .select(col("id").as("name"), col("cluster").as("entity"),
         (col("id") === col("cluster")).as("is_canonical"))
   }

@@ -31,87 +31,59 @@ import graft.{Engine, GQ}
   */
 object Graph {
 
-  /** r18 dual-regime switch for the ITERATIVE operators (pageRank,
-    * labelPropagation, kCorePeel, bfsHops, hits) — the d05 pattern
-    * (see Dedup.componentsByMinLabel): below a measured edge count the
-    * whole fixpoint runs driver-locally with zero per-round job
-    * scheduling; above it the distributed loops below are unchanged.
-    * A gate-scale fixpoint pays ~2-4 Spark jobs per round in fixed
-    * scheduling/cut overhead on frames of a few hundred rows — pure
-    * latency at any scale, and on a real cluster each round is a
-    * stage-latency floor too. Both regimes compute identical values:
-    * all five loops are exact integer/fixed-point arithmetic (micros,
-    * floor div) replicated op-for-op, pinned by GraphSpec parity
-    * tests. Session-tunable via `graft.graph.driverMaxEdges` (0 forces
-    * the distributed arm — how the parity specs and the ClusterCheck
-    * chaos harness exercise the distributed loops at gate scale).
+  /** r18 dual-regime limit for the ITERATIVE operators (pageRank,
+    * labelPropagation, kCorePeel, bfsHops, hits) and, since r19, the
+    * one-shot pair-graph operators — the d05 pattern (see
+    * Dedup.componentsByMinLabel) through [[Engine.driverLocal]]: at or
+    * below this edge count the whole computation runs driver-locally
+    * with zero per-round job scheduling; above it the distributed
+    * loops below are unchanged. A gate-scale fixpoint pays ~2-4 Spark
+    * jobs per round in fixed scheduling/cut overhead on frames of a few
+    * hundred rows — pure latency at any scale, and on a real cluster
+    * each round is a stage-latency floor too. Both regimes compute
+    * identical values: the loops are exact integer/fixed-point
+    * arithmetic (micros, floor div) replicated op-for-op, pinned by
+    * GraphSpec parity tests with the distributed arms forced through
+    * [[Engine.DriverLocalConf]].
     *
-    * The default threshold bounds driver memory (~32 MB of edge longs,
-    * the d05 sizing) AND keeps hits' normalization product in Long:
-    * raw <= 1e6 micros x 2e6 edges = 2e12, x 1e6 = 2e18 < 2^63. */
-  private val DriverMaxEdgesDefault = 2000000L
+    * 2M edges bounds driver memory (~32 MB of edge longs, the d05
+    * sizing) AND keeps hitsLocal's plain-Long normalization product in
+    * range: raw <= 1e6 micros x 2e6 edges = 2e12, x 1e6 = 2e18 < 2^63
+    * (the distributed arm widens through DECIMAL(38,0) instead). */
+  private val DriverMaxEdges = 2000000L
 
-  private def driverMaxEdges(spark: SparkSession): Long =
-    spark.conf.getOption("graft.graph.driverMaxEdges").map(_.toLong)
-      .getOrElse(DriverMaxEdgesDefault)
-
-  /** Overflow-safe local-regime cap for [[hits]] (r19, advice item):
-    * hitsLocal normalizes with `raw * 1000000L` in plain Long while the
-    * distributed arm widens through DECIMAL(38,0). raw <= 1e6 micros x
-    * |E|, so the product stays under 2^63 only while |E| <= ~9.2e6.
-    * `graft.graph.driverMaxEdges` is an unguarded session knob — without
-    * this clamp, raising it past that bound (safe for pageRank/kCore/
-    * bfs, whose local arithmetic never leaves the seed scale) would
-    * silently overflow and corrupt hits scores in the local regime
-    * only. 9e6 leaves a margin below the exact 2^63/1e12 ~ 9.22e6. */
-  private val HitsLocalMaxEdges = 9000000L
-
-  /** Cut + count the edge plan once; collect it when the driver regime
+  /** Cut the edge plan once and collect it when the driver regime
     * applies. Returns the cut frame either way (the distributed arms
-    * keep reading it; callers release it). The threshold probe count is
-    * memoized on the PRE-cut edge plan ([[Engine.memoStat]], the BPE
-    * driverMaxVocab discipline — r18 advice: the unconditional
+    * keep reading it; callers release it). The gate's count is
+    * memoized on the PRE-cut edge plan (r18 advice: the unconditional
     * `e.count()` added one full scan of the checkpointed edge table per
-    * invocation even when the graph is far above the threshold, e.g.
-    * the decade-3 sf100 pageRank fixture). A memo hit costs zero jobs;
-    * a miss counts the already-materialized cut frame (cheap re-read,
-    * never a re-execution of the edge-producing plan).
-    *
-    * `capAt` bounds the local regime independently of the session conf
-    * (hits' overflow clamp above); limit = 0 keeps forcing the
-    * distributed arm with no count at all (chaos/pricing harness). */
-  private def cutAndMaybeCollect(edges: DataFrame,
-      capAt: Long = Long.MaxValue): (DataFrame, Option[Array[(Long, Long)]]) = {
+    * invocation even when the graph is far above the limit, e.g. the
+    * decade-3 sf100 pageRank fixture). A memo hit costs zero jobs; a
+    * miss counts the already-materialized cut frame (cheap re-read,
+    * never a re-execution of the edge-producing plan). */
+  private def cutAndMaybeCollect(edges: DataFrame)
+      : (DataFrame, Option[Array[(Long, Long)]]) = {
     val e = edges.transform(Engine.cut)
-    val limit = math.min(driverMaxEdges(e.sparkSession), capAt)
-    if (limit > 0 && Engine.memoStat(edges, "graphEdges")(e.count()) <= limit) {
-      val arr = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      (e, Some(arr))
-    } else (e, None)
+    if (Engine.driverLocal(edges, DriverMaxEdges)(e.count()))
+      (e, Some(e.collect().map(r => (r.getLong(0), r.getLong(1)))))
+    else (e, None)
   }
 
   /** Gate + collect for the ONE-SHOT pair-graph operators (triangle
     * counts, local clustering, adamic-adar, assortativity) — the same
-    * driverMaxEdges regime as the fixpoints, r19, with the
-    * [[cutAndMaybeCollect]] cut-and-reuse discipline: the pair plan
-    * executes exactly ONCE (the cut), the gate count and the local
-    * fetch are cheap re-reads of the materialized blocks, and the
-    * distributed arms consume the SAME cut instead of re-cutting
-    * (review finding: the first cut-less version executed the lazy
-    * pair plan twice on a cold gate hit). Below threshold the cut is
-    * pair-set-sized (KBs at gate scale — not the q69 disk class);
-    * callers release it either way. Ids are cast to Long (the
-    * kCorePeel discipline). */
+    * regime as the fixpoints, r19, with the [[cutAndMaybeCollect]]
+    * cut-and-reuse discipline: the pair plan executes exactly ONCE (the
+    * cut), the gate count and the local fetch are cheap re-reads of the
+    * materialized blocks, and the distributed arms consume the SAME cut
+    * instead of re-cutting (review finding: the first cut-less version
+    * executed the lazy pair plan twice on a cold gate hit). Below the
+    * limit the cut is pair-set-sized (KBs at gate scale — not the q69
+    * disk class); callers release it either way. Ids are cast to Long
+    * (the kCorePeel discipline). */
   private def cutAndMaybeCollectPairs(pairs: DataFrame)
-      : (DataFrame, Option[Array[(Long, Long)]]) = {
-    val pl = pairs.select(col("id_a").cast(LongType).as("id_a"),
-      col("id_b").cast(LongType).as("id_b"))
-    val cut = pl.transform(Engine.cut)
-    val limit = driverMaxEdges(pairs.sparkSession)
-    if (limit > 0 && Engine.memoStat(pl, "graphEdges")(cut.count()) <= limit)
-      (cut, Some(cut.collect().map(r => (r.getLong(0), r.getLong(1)))))
-    else (cut, None)
-  }
+      : (DataFrame, Option[Array[(Long, Long)]]) =
+    cutAndMaybeCollect(pairs.select(col("id_a").cast(LongType).as("id_a"),
+      col("id_b").cast(LongType).as("id_b")))
 
   /** Degree + per-node-triangle maps over a collected canonical pair
     * multiset — the local twin of [[triangleCounts]]' dataflow,
@@ -174,8 +146,6 @@ object Graph {
     * the DISTRIBUTED regime calls this — the driver regime collects. */
   private def cutByKey(df: DataFrame, key: String): DataFrame = {
     val spark = df.sparkSession
-    if (spark.conf.getOption("graft.graph.copartition").contains("off"))
-      return Engine.cut(df) // A/B escape hatch: the pre-r19 plain cut
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     Engine.withoutAqe(spark) {
       Engine.cut(df.repartition(p, col(key)))
@@ -448,8 +418,8 @@ object Graph {
     * driver state. */
   def triangleCounts(pairs: DataFrame, nodes: DataFrame): DataFrame = {
     // r19 dual-regime (the d05/fixpoint pattern applied to the one-shot
-    // ops): below driverMaxEdges the count runs driver-locally;
-    // GraphSpec parity pins it against the distributed arm below, which
+    // ops): at or below DriverMaxEdges the count runs driver-locally;
+    // GraphSpec parity pins it against the distributed pass, which
     // consumes the gate's cut directly (referenced 5x; plan runs once)
     val (p, small) = cutAndMaybeCollectPairs(pairs)
     small.foreach { arr =>
@@ -460,6 +430,16 @@ object Graph {
           Seq("id"), "left")
         .select(col("id"), coalesce(col("tri"), lit(0L)).as("triangles"))
     }
+    val out = trianglesFromCut(p, nodes)
+    Engine.releaseCheckpoint(p)
+    out
+  }
+
+  /** The distributed triangle pass of [[triangleCounts]] over an
+    * already-gated, already-cut (id_a, id_b) Long pair frame `p`, which
+    * the caller keeps and releases ([[localClustering]] reads it again
+    * for its degree rollup). */
+  private def trianglesFromCut(p: DataFrame, nodes: DataFrame): DataFrame = {
     val deg = p.select(col("id_a").as("id"))
       .unionAll(p.select(col("id_b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
@@ -471,7 +451,6 @@ object Graph {
       .select(when(aFirst, col("id_a")).otherwise(col("id_b")).as("u"),
         when(aFirst, col("id_b")).otherwise(col("id_a")).as("v"))
       .transform(Engine.cut)
-    Engine.releaseCheckpoint(p)
     val e1 = e.select(col("u").as("a"), col("v").as("b"))
     val e2 = e.select(col("u").as("b"), col("v").as("c"))
     val e3 = e.select(col("u").as("a2"), col("v").as("c2"))
@@ -500,78 +479,53 @@ object Graph {
     * round, nothing to diverge.
     *
     * `edges` is the directed both-ways edge list of an undirected
-    * graph. 100 TB shape: per round, one degree aggregation + two semi
-    * joins on the shrinking edge table, materialized per round with the
-    * previous round's blocks released (the iterative-consumer case
-    * where checkpointing IS the right call — each round's table feeds
-    * two joins and the next round). */
+    * graph. `k` must be at least 1: at k <= 0 nothing is ever peeled
+    * and the two regimes disagree on asymmetric input (below), so it
+    * is rejected up front.
+    *
+    * 100 TB shape: the distributed arm maintains degrees by delta (r19, the round's
+    * "Not yet optimized" kCorePeel item; it replaced a rescan loop that
+    * re-aggregated degrees from the FULL shrinking edge table and
+    * re-materialized |E| blocks every round, 2.1x slower at decade 3).
+    * The edge table materializes ONCE, pre-partitioned on dst
+    * ([[cutByKey]], the r19 copartition law), and each round maintains
+    * the |V|-sized degree table:
+    *
+    *   peel_r  = deg rows with dg < k           (nodes leaving now)
+    *   delta   = eByDst ⋈ peel_r on dst, grouped by src
+    *   deg_r+1 = (deg_r minus peel_r) - coalesce(delta, 0)
+    *
+    * Value identity with [[kCorePeelLocal]]'s per-round recount: an
+    * edge instance (v, u) is subtracted from deg(v) exactly in the
+    * round u is peeled while v is still alive — the round the recount
+    * drops it (both-endpoints-same-round edges vanish with both rows;
+    * earlier-dead endpoints cannot re-match peel_r because peel_r only
+    * ever holds currently-alive rows). A node whose degree decays to 0
+    * is peeled the following round with an empty probe — a no-op, and
+    * its final coalesce(0) output matches the recount's absent-row 0.
+    * Per round this exchanges only peel/delta/deg (all <= |V|) and
+    * SCANS the static partitioned edge table with no shuffle and no
+    * re-write. GraphSpec parity pins value identity. */
   def kCorePeel(edges: DataFrame, nodes: DataFrame, k: Int,
       rounds: Int): DataFrame = {
+    require(k >= 1, s"kCorePeel: k must be >= 1, got $k")
     val (e1, small) = cutAndMaybeCollect(
       edges.select(col("src").cast(LongType), col("dst").cast(LongType)))
     small.foreach { arr =>
       Engine.releaseCheckpoint(e1)
       return kCorePeelLocal(arr, nodes, k, rounds)
     }
-    val spark = edges.sparkSession
-    if (!spark.conf.getOption("graft.kcore.delta").contains("off"))
-      return kCorePeelDelta(e1, nodes, k, rounds)
-    var e = e1
-    for (_ <- 1 to rounds) {
-      val alive = e.groupBy("src").agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= k).select(col("src").as("id"))
-      val next = e.join(alive.select(col("id").as("src")), "src")
-        .join(alive.select(col("id").as("dst")), "dst")
-        .select("src", "dst").transform(Engine.cut)
-      Engine.releaseCheckpoint(e)
-      e = next
-    }
-    val deg = e.groupBy("src").agg(count(lit(1)).as("core_deg"))
-    val out = nodes.join(deg, col("id") === col("src"), "left")
-      .select(col("id"), coalesce(col("core_deg"), lit(0L)).as("core_deg"))
-      .transform(Engine.cut)
-    Engine.releaseCheckpoint(e)
-    out
-  }
-
-  /** Delta-maintained distributed k-core (r19, the round's "Not yet
-    * optimized" kCorePeel item): the rescan loop above re-aggregated
-    * degrees from the FULL shrinking edge table and re-materialized
-    * |E| blocks every round (one |E| exchange + one |E| localCheckpoint
-    * write per round — the dominant decade-scale cost, and the q69
-    * disk-window exposure class). Here the edge table materializes
-    * ONCE, pre-partitioned on dst ([[cutByKey]], the r19 copartition
-    * law), and each round maintains the |V|-sized degree table:
-    *
-    *   peel_r  = deg rows with dg < k           (nodes leaving now)
-    *   delta   = eByDst ⋈ peel_r on dst, grouped by src
-    *   deg_r+1 = (deg_r minus peel_r) - coalesce(delta, 0)
-    *
-    * Value identity with the rescan loop: an edge instance (v, u) is
-    * subtracted from deg(v) exactly in the round u is peeled while v
-    * is still alive — the round the rescan loop's double semi join
-    * drops it (both-endpoints-same-round edges vanish with both rows;
-    * earlier-dead endpoints cannot re-match peel_r because peel_r only
-    * ever holds currently-alive rows). A node whose degree decays to 0
-    * is peeled the following round with an empty probe — a no-op, and
-    * its final coalesce(0) output matches the rescan arm's absent-row
-    * 0. Per round this exchanges only peel/delta/deg (all <= |V|) and
-    * SCANS the static partitioned edge table with no shuffle and no
-    * re-write. Escape hatch `graft.kcore.delta=off` keeps the
-    * pre-r19 rescan loop byte-identical (the A/B arm); GraphSpec
-    * parity + the decade fingerprint A/B pin value identity. */
-  private def kCorePeelDelta(e1: DataFrame, nodes: DataFrame, k: Int,
-      rounds: Int): DataFrame = {
     val eByDst = cutByKey(e1, "dst")
     Engine.releaseCheckpoint(e1)
     // Seed the degree table with EVERY endpoint: a dst-only node (an
     // asymmetric input — no out-edges) has no src-degree row, yet the
-    // rescan loop treats it as dead in round 1 (alive = srcs with
+    // recount treats it as dead in round 1 (alive = srcs with
     // deg >= k), dropping its incoming edges. A dg = 0 seed row makes
-    // the delta arm peel it in round 1 and subtract those in-edges
-    // identically. Symmetric inputs (every in-repo caller) produce an
-    // empty anti join — no extra rows, no behavior change there; the
-    // asymmetric case is pinned by GraphSpec's directed-triple test.
+    // the delta arm peel it in round 1 (0 < k for k >= 1) and subtract
+    // those in-edges identically. Symmetric inputs (every in-repo
+    // caller) produce an empty anti join — no extra rows, no behavior
+    // change there; the asymmetric case is pinned by GraphSpec's
+    // directed-triple test.
     val srcDeg = eByDst.groupBy("src").agg(count(lit(1)).as("dg"))
     val dstOnly = eByDst.select(col("dst").as("src")).distinct()
       .join(srcDeg.select("src"), Seq("src"), "left_anti")
@@ -1061,7 +1015,7 @@ object Graph {
 
   def degreeAssortativity(pairs: DataFrame): DataFrame = {
     // r19 dual-regime: the six moment sums fold driver-locally below
-    // driverMaxEdges — same Long ring arithmetic (wrap included), same
+    // DriverMaxEdges — same Long ring arithmetic (wrap included), same
     // double expression, same 6dp round; GraphSpec parity pins it.
     // Above threshold the distributed arm consumes the gate's cut —
     // the pre-r19 lazy shape executed the pair-generation subtree once
@@ -1239,8 +1193,9 @@ object Graph {
               .cast(DoubleType) / 1e6)
             .otherwise(lit(0.0)).as("clustering"))
     }
-    // the gate's cut feeds both the tri pass and deg below
-    val tri = triangleCounts(p, nodes)
+    // the gate's cut feeds both the tri pass and deg below — no
+    // second gate, cut or count
+    val tri = trianglesFromCut(p, nodes)
     val deg = p.select(col("id_a").as("id"))
       .unionAll(p.select(col("id_b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
@@ -1276,8 +1231,7 @@ object Graph {
     * per round like pageRank. */
   def hits(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     val (e0, small) = cutAndMaybeCollect(
-      edges.select(col("src").cast(LongType), col("dst").cast(LongType)),
-      capAt = HitsLocalMaxEdges)
+      edges.select(col("src").cast(LongType), col("dst").cast(LongType)))
     small.foreach { arr =>
       Engine.releaseCheckpoint(e0)
       return hitsLocal(arr, nodes, iters)
@@ -1331,9 +1285,8 @@ object Graph {
     * inner join on scores), the round max taken over EVERY gathered id
     * (the raw table includes ids outside `nodes`; only node rows keep
     * scores — replicated exactly), and the normalization
-    * (raw * 1e6) div max(mx, 1) in Long (safe under the edge
-    * threshold: raw <= 1e6 x 2e6, x 1e6 < 2^63 — the reason the
-    * default threshold is what it is). Isolated nodes normalize to 0
+    * (raw * 1e6) div max(mx, 1) in Long (safe under
+    * [[DriverMaxEdges]]: raw <= 1e6 x 2e6, x 1e6 < 2^63). Isolated nodes normalize to 0
     * after any half-step, attached by coalesce. */
   private def hitsLocal(edges: Array[(Long, Long)], nodes: DataFrame,
       iters: Int): DataFrame = {

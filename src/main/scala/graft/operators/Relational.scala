@@ -72,6 +72,10 @@ object Relational {
         + min(when(col("cum") >= expr("n div 2 + 1"), col(v)))).as("med2"))
   }
 
+  /** Driver-local fold limit for [[madOutliers]]: 1M (brand, pc)
+    * groups. */
+  private val DriverMaxGroups = 1000000L
+
   /** q59 body over (p_brand, pc integer-cents) rows: median + MAD +
     * outlier counts, bounded-state form (spec: RelationalSpec "q59
     * rollup"). Spark's exact `percentile` collects every group value
@@ -94,22 +98,25 @@ object Relational {
     // broadcast subqueries, and the cache write + InMemoryTableScan
     // reads cost more than they save. Left as the static-replan /
     // runtime-reuse shape deliberately.
-    val cnt = j.groupBy("p_brand", "pc").agg(count(lit(1)).as("c"))
+    // pc widens to Long here (count's c already is), so both regimes
+    // take any integral pc: madOutliersLocal reads the rollup with
+    // getLong, which throws on an IntegerType column
+    val cnt = j.groupBy(col("p_brand"), col("pc").cast(LongType).as("pc"))
+      .agg(count(lit(1)).as("c"))
     // r19 dual-regime (the d05/BPE/graph/kmeans size-threshold pattern):
     // the rollup is value-domain bounded (|brands| x |price domain|,
     // 599k rows at sf0.1), and the probe split showed the rollup itself
     // at ~1.0 s of a 4.3 s warm run — 3+ s went to the downstream
     // median windows / broadcast joins / final agg over that SMALL
-    // frame, fixed per-query overhead at any corpus size. Below a
-    // MEASURED group count (`graft.q59.driverMaxGroups`, 0 forces
-    // distributed) the whole post-rollup derivation folds driver-
-    // locally over ONE collect of the rollup; above it the bounded-
-    // state distributed form below is byte-unchanged (the 100 TB path:
-    // the price-domain cardinality grows with |part|, so decade scales
-    // stay distributed). The threshold probe count is memoized on the
-    // rollup plan (Engine.memoStat) — at most one count per plan per
-    // session, the Graph/kmeans discipline. Parity pinned by
-    // RelationalSpec's forced-distributed q59 test.
+    // frame, fixed per-query overhead at any corpus size. At or below
+    // a MEASURED 1M groups (Engine.driverLocal) the whole post-rollup
+    // derivation folds driver-locally over ONE collect of the rollup;
+    // above it the bounded-state distributed form below is
+    // byte-unchanged (the 100 TB path: the price-domain cardinality
+    // grows with |part|, so decade scales stay distributed). The gate's
+    // count is memoized on the rollup plan — at most one count per plan
+    // per session, the Graph/kmeans discipline. Parity pinned by
+    // RelationalSpec's forced-distributed q59 tests.
     // Gate-cost note (review finding): a COLD below-threshold call
     // executes the rollup twice (the gate count, then the collect —
     // separate jobs share no exchange); warm calls memo-hit the count
@@ -120,9 +127,7 @@ object Relational {
     // trade a one-time +1 rollup cold for a per-invocation |cnt| block
     // write on the 100 TB path. Count-then-collect is the right side
     // of that trade.
-    val limit = j.sparkSession.conf.getOption("graft.q59.driverMaxGroups")
-      .map(_.toLong).getOrElse(1000000L)
-    if (limit > 0 && Engine.memoStat(cnt, "q59groups")(cnt.count()) <= limit)
+    if (Engine.driverLocal(cnt, DriverMaxGroups)(cnt.count()))
       return madOutliersLocal(cnt)
     val m = median2FromCounts(cnt, "p_brand", "pc", "c")
     val dvc = cnt.join(broadcast(m), "p_brand")

@@ -274,7 +274,7 @@ object ClusterCheck {
     *  - g08 HITS: the longest fixpoint chain (2 cut half-steps x
     *    iters, ~45 jobs) — kill at 20, past the adjacency cuts.
     *  - d05 near-dup components with the DISTRIBUTED min-label arm
-    *    forced (driverMaxEdges=0; 159 jobs at sf0.01) — kill at 60,
+    *    forced (graft.driverLocal=off; 159 jobs at sf0.01) — kill at 60,
     *    inside the label-propagation rounds.
     *  - t24 BPE trainer (8 merge ranks, 29 jobs) — kill at 12,
     *    mid-merge-loop, between one rank's cut and the next's
@@ -282,30 +282,28 @@ object ClusterCheck {
   // r18: the graph fixpoints and the BPE trainer gained driver-local
   // arms below a measured size threshold (like d05's union-find); the
   // chaos arms kill mid-DISTRIBUTED-fixpoint, so every affected spec
-  // forces the distributed arm — the killed path is byte-identical to
-  // the pre-r18 one.
-  private val distGraph = Map("graft.graph.driverMaxEdges" -> "0")
-  private val distBpe = Map("graft.bpe.driverMaxVocab" -> "0")
+  // forces the distributed arm through the one switch — the killed
+  // path is byte-identical to the pre-r18 one.
+  private val dist = Map(Engine.DriverLocalConf -> "off")
 
   val chaosSpecs: Seq[ChaosSpec] = Seq(
-    ChaosSpec("g08_hits", 20, distGraph),
-    ChaosSpec("d05_neardup_clusters", 60,
-      Map("graft.dedup.driverMaxEdges" -> "0")),
-    ChaosSpec("t24_bpe_merges", 12, distBpe),
+    ChaosSpec("g08_hits", 20, dist),
+    ChaosSpec("d05_neardup_clusters", 60, dist),
+    ChaosSpec("t24_bpe_merges", 12, dist),
     // r14 verdict missing #6a: the kill lands INSIDE the durability
     // machinery itself — on the 2nd task of the 6th Engine.cut-tagged
     // job (mid-fixpoint, strictly inside a reliable checkpoint
     // materialization: some checkpoint part-files written, others'
     // tasks in flight). Reliable-only by construction: local mode
     // tags no jobs, so there is no local twin to fail.
-    ChaosSpec("g08_hits", 6, distGraph, insideCutWrite = true),
+    ChaosSpec("g08_hits", 6, dist, insideCutWrite = true),
     // r15 checkpoint-every-k: kill every executor mid-fixpoint while
     // only every 3rd cut is durable — the lost INTERMEDIATE rounds'
     // cached partitions must recompute through kept lineage back to
     // the last durable boundary (reliable-only: local mode reads no
     // everyK and its twin is the standard local arm above)
     ChaosSpec("g08_hits", 20,
-      distGraph ++ Map("graft.checkpoint.everyK" -> "3"), tag = "_k3"),
+      dist ++ Map("graft.checkpoint.everyK" -> "3"), tag = "_k3"),
     // r16 advice (high): g08's releases are all deferred to loop end,
     // so the arm above could never detect the eager-release everyK
     // bug — a fixpoint that releases the superseded round EVERY
@@ -317,7 +315,7 @@ object ClusterCheck {
     // shape; the kill lands mid-loop, inside the deferred-delete
     // window.
     ChaosSpec("t24_bpe_merges", 12,
-      distBpe ++ Map("graft.checkpoint.everyK" -> "3"), tag = "_k3"),
+      dist ++ Map("graft.checkpoint.everyK" -> "3"), tag = "_k3"),
     // r16 verdict #7: every durability arm above stores checkpoints on
     // NVMe; these two re-run the g08 kill with the checkpoint DIR on
     // slowfs (40 ms per metadata op — the priced object-store model),
@@ -329,9 +327,9 @@ object ClusterCheck {
     // read by chaosArm (re-points the dir + registers the scheme), not
     // an engine conf.
     ChaosSpec("g08_hits", 20,
-      distGraph ++ Map("graft.cc.slowfs" -> "40"), tag = "_slowfs"),
+      dist ++ Map("graft.cc.slowfs" -> "40"), tag = "_slowfs"),
     ChaosSpec("g08_hits", 20,
-      distGraph ++ Map("graft.checkpoint.everyK" -> "3", "graft.cc.slowfs" -> "40"),
+      dist ++ Map("graft.checkpoint.everyK" -> "3", "graft.cc.slowfs" -> "40"),
       tag = "_k3slowfs")) ++
     // r16 verdict #3: a kill at decade-3 frame size — pageRank over the
     // prebuilt sf100 mutual-kNN edge fixture (millions of nodes; every

@@ -29,23 +29,22 @@ import org.apache.spark.sql.SparkSession
   */
 object PriceReliable {
 
+  private val distributed = Map(graft.Engine.DriverLocalConf -> "off")
+
   /** The iterative family: graph fixpoints, distributed components
     * (forced off the driver union-find so rounds actually run), the
     * BPE merge loop, Lloyd's k-means, MMR's greedy selection loop. */
   val family: Seq[(String, Map[String, String])] = Seq(
-    // graph fixpoints + the BPE trainer forced off their r18
-    // driver-local arms (like d05) so the per-round durable cuts being
-    // priced actually run at gate scale
-    "g01_pagerank" -> Map("graft.graph.driverMaxEdges" -> "0"),
-    "g04_kcore_peel" -> Map("graft.graph.driverMaxEdges" -> "0"),
-    "g05_bfs_hops" -> Map("graft.graph.driverMaxEdges" -> "0"),
-    "g08_hits" -> Map("graft.graph.driverMaxEdges" -> "0"),
-    "d05_neardup_clusters" -> Map("graft.dedup.driverMaxEdges" -> "0"),
-    "t24_bpe_merges" -> Map("graft.bpe.driverMaxVocab" -> "0"),
-    // r19: kmeans gained a driver-local arm below driverMaxVecs (like
-    // the graph/BPE rows above) — force the distributed Lloyd loop so
-    // the per-iteration costs being priced actually run
-    "c01_kmeans_embeddings" -> Map("graft.kmeans.driverMaxVecs" -> "0"),
+    // graph fixpoints, components, the BPE trainer and Lloyd's k-means
+    // forced off their driver-local arms (the one switch) so the
+    // per-round durable cuts being priced actually run at gate scale
+    "g01_pagerank" -> distributed,
+    "g04_kcore_peel" -> distributed,
+    "g05_bfs_hops" -> distributed,
+    "g08_hits" -> distributed,
+    "d05_neardup_clusters" -> distributed,
+    "t24_bpe_merges" -> distributed,
+    "c01_kmeans_embeddings" -> distributed,
     "s13_mmr_rerank" -> Map.empty)
 
   def main(args: Array[String]): Unit = {

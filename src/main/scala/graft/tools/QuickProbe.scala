@@ -87,8 +87,8 @@ object QuickProbe {
         // r19 co-partitioning A/B: time the ITERATIVE graph operators
         // over a PREBUILT symmetrized edge fixture (no kNN rebuild),
         // min-of-3 warm, with an order-independent fingerprint so both
-        // arms prove value-identity. 7.09M edges > driverMaxEdges, so
-        // the distributed arms run by size.
+        // arms prove value-identity. 7.09M edges > Graph's 2M-edge
+        // driver-local limit, so the distributed arms run by size.
         val edgesPath = args.drop(2).headOption
           .getOrElse("target/biggraph/edges-sf100.parquet")
         val edges = spark.read.parquet(edgesPath)
@@ -123,118 +123,6 @@ object QuickProbe {
         big("kCorePeel")(graft.operators.Graph.kCorePeel(edges, nodes, 2, 3))
         big("bfsHops")(graft.operators.Graph.bfsHops(edges, seeds, 3))
         big("hits")(graft.operators.Graph.hits(edges, nodes, 2))
-      case "copartplan" =>
-        // judge-checkable plan evidence for the r19 graph co-partition
-        // change: the pageRank ROUND-SHAPE join (rank ⋈ adjacency →
-        // re-aggregate on dst) planned over (a) a plain Engine.cut
-        // adjacency — the pre-r19 shape — and (b) the cutByKey
-        // pre-partitioned adjacency. Writes plans/r19/copart_round_
-        // {before,after}.txt. The declared g01..g08 queries execute
-        // their fixpoints eagerly inside the builder, so PlanDump on
-        // the returned frame can only show the final LogicalRDD — this
-        // case dumps the per-round plan the loop actually executes.
-        // sized so the rank side EXCEEDS autoBroadcastJoinThreshold
-        // (2M nodes ~ 32 MB) — the decade-scale SMJ regime the change
-        // targets; a broadcast-sized fixture would hide the exchange
-        val edges = spark.range(0, 8000000)
-          .selectExpr("id % 2000000 AS src", "(id * 7) % 2000000 AS dst")
-        val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        val adjPlain = graft.Engine.cut(
-          edges.join(deg, "src").select(col("src"), col("dst"), col("deg")))
-        spark.conf.set("graft.graph.copartition", "on")
-        val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        val adjPart = graft.Engine.withoutAqe(spark) {
-          graft.Engine.cut(edges.join(deg, "src")
-            .select(col("src"), col("dst"), col("deg"))
-            .repartition(p, col("src")))
-        }
-        val ranks = spark.range(0, 2000000)
-          .select(col("id"), lit(1000000L).as("micros"))
-          .transform(graft.Engine.cut)
-        def round(adj: org.apache.spark.sql.DataFrame) =
-          ranks.join(adj, col("id") === col("src"))
-            .select(col("dst"),
-              (col("micros") / col("deg")).cast(LongType).as("c"))
-            .groupBy("dst").agg(sum("c").as("s"))
-        Seq(("before", adjPlain), ("after", adjPart)).foreach { case (tag, adj) =>
-          val txt = round(adj).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          val w = new java.io.PrintWriter(s"plans/r19/copart_round_$tag.txt")
-          try w.println(txt) finally w.close()
-          println(s"[probe] wrote plans/r19/copart_round_$tag.txt")
-        }
-        graft.Engine.releaseCheckpoint(adjPlain)
-        graft.Engine.releaseCheckpoint(adjPart)
-        graft.Engine.releaseCheckpoint(ranks)
-      case "graphab" =>
-        // interleaved SAME-SESSION copartition A/B: the cross-session
-        // graphbig arms put identical kCore code at 10.7 vs 45.2 s
-        // (pure window noise), so per-op verdicts for hits need arms
-        // that alternate within one JVM. graft.graph.copartition=off
-        // is byte-identical to the pre-r19 plain cut.
-        val edgesPath = args.drop(2).headOption
-          .getOrElse("target/biggraph/edges-sf100.parquet")
-        val edges = spark.read.parquet(edgesPath)
-        val nodes = edges.select(col("src").as("id")).distinct()
-          .transform(graft.Engine.cut)
-        println(s"[probe] edges=${edges.count()} nodes=${nodes.count()}")
-        def fpAb(df: org.apache.spark.sql.DataFrame): String =
-          df.agg(sum(xxhash64(df.columns.map(c => col(c).cast("string")): _*)
-            .cast(DecimalType(38, 0))).as("h")).collect()(0).toString
-        def oneAb(name: String, arm: String)(
-            f: => org.apache.spark.sql.DataFrame): Double = {
-          spark.conf.set("graft.graph.copartition", arm)
-          val t0 = System.nanoTime()
-          val out = f
-          require(out.count() > 0)
-          val sec = (System.nanoTime() - t0) / 1e9
-          val h = fpAb(out)
-          graft.Engine.releaseCheckpoint(out)
-          println(f"[probe] $name%-10s arm=$arm%-3s $sec%6.2f s  fp=$h")
-          sec
-        }
-        val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-          ("hits", () => graft.operators.Graph.hits(edges, nodes, 2)),
-          ("pageRank", () => graft.operators.Graph.pageRank(edges, nodes, 3)))
-        ops.foreach { case (nm, f) =>
-          val offs = collection.mutable.Buffer[Double]()
-          val ons = collection.mutable.Buffer[Double]()
-          (1 to 3).foreach { _ =>
-            offs += oneAb(nm, "off")(f()); ons += oneAb(nm, "on")(f())
-          }
-          println(f"[probe] $nm SUMMARY min off=${offs.min}%.2f s  " +
-            f"on=${ons.min}%.2f s")
-        }
-      case "kcoreab" =>
-        // r19 delta-degree kCorePeel A/B: interleaved same-session arms
-        // (graft.kcore.delta on/off) over the decade edge fixture,
-        // order-independent fingerprints proving value identity —
-        // the graphab harness shape applied to the kcore loop.
-        val edgesPath = args.drop(2).headOption
-          .getOrElse("target/biggraph/edges-sf100.parquet")
-        val edges = spark.read.parquet(edgesPath)
-        val nodes = edges.select(col("src").as("id")).distinct()
-          .transform(graft.Engine.cut)
-        println(s"[probe] edges=${edges.count()} nodes=${nodes.count()}")
-        def fpK(df: org.apache.spark.sql.DataFrame): String =
-          df.agg(sum(xxhash64(df.columns.map(c => col(c).cast("string")): _*)
-            .cast(DecimalType(38, 0))).as("h")).collect()(0).toString
-        def oneK(arm: String): Double = {
-          spark.conf.set("graft.kcore.delta", arm)
-          val t0 = System.nanoTime()
-          val out = graft.operators.Graph.kCorePeel(edges, nodes, 2, 3)
-          require(out.count() > 0)
-          val sec = (System.nanoTime() - t0) / 1e9
-          val h = fpK(out)
-          graft.Engine.releaseCheckpoint(out)
-          println(f"[probe] kCorePeel arm=$arm%-3s $sec%6.2f s  fp=$h")
-          sec
-        }
-        val offs = collection.mutable.Buffer[Double]()
-        val ons = collection.mutable.Buffer[Double]()
-        (1 to 3).foreach { _ => offs += oneK("off"); ons += oneK("on") }
-        println(f"[probe] kCorePeel SUMMARY min off=${offs.min}%.2f s  " +
-          f"on=${ons.min}%.2f s")
       case "skewab" =>
         // VERDICT item 8: does the e32 salted arm (and AQE's skew
         // split) actually engage and pay off on a decade-scale skewed

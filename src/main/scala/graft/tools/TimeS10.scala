@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
   * <sfDir> [-Dconf=v ...] <query> [query ...] — each query runs twice
   * (cold + warm, the BASELINE.md convention; the warm number is the
   * one scaling laws are fitted on). -D args become session confs
-  * (e.g. -Dgraft.dedup.driverMaxEdges=0 forces d05's distributed
+  * (e.g. -Dgraft.driverLocal=off forces d05's distributed
   * arm). */
 object TimeS10 {
   def main(args: Array[String]): Unit = {

@@ -23,17 +23,15 @@ class CheckpointStrategySpec extends AnyFunSuite {
   private def withMode[A](mode: String, dir: Option[String] = None)(f: => A): A = {
     spark.conf.set("graft.checkpoint.mode", mode)
     dir.foreach(d => spark.conf.set("graft.checkpoint.dir", d))
-    // this spec pins the PER-ROUND CUT machinery, so the g01/t24
+    // this spec pins the PER-ROUND CUT machinery, so the g01/d05/t24
     // fixpoints must actually iterate distributed — force them off
-    // their r18 driver-local small-input arms (which perform no cuts)
-    spark.conf.set("graft.graph.driverMaxEdges", "0")
-    spark.conf.set("graft.bpe.driverMaxVocab", "0")
+    // their driver-local small-input arms (which perform no cuts)
+    spark.conf.set(Engine.DriverLocalConf, "off")
     try f
     finally {
       spark.conf.set("graft.checkpoint.mode", "local")
       spark.conf.unset("graft.checkpoint.dir")
-      spark.conf.unset("graft.graph.driverMaxEdges")
-      spark.conf.unset("graft.bpe.driverMaxVocab")
+      spark.conf.unset(Engine.DriverLocalConf)
     }
   }
 

@@ -158,8 +158,8 @@ class PlanLintSpec extends AnyFunSuite {
   private val collectBudget = Map(
     "Catalog.scala" -> 2, "Dedup.scala" -> 1,
     // Bpe #3 (r18): the driver-local merge-training regime's word
-    // table collect — gated by a MEASURED vocab count against
-    // graft.bpe.driverMaxVocab (the d05 dual-regime discipline), so
+    // table collect — gated by a MEASURED vocab count through
+    // Engine.driverLocal (the d05 dual-regime discipline), so
     // the collect is vocabulary-bounded by construction, never
     // corpus-sized
     "Bpe.scala" -> 3,
@@ -170,27 +170,26 @@ class PlanLintSpec extends AnyFunSuite {
     // session lifetime (r14 verdict #2)
     // Relational #3 (r19): q59's driver-local median/MAD regime — ONE
     // collect of the (brand, pc) count rollup gated by a MEASURED group
-    // count against graft.q59.driverMaxGroups (the d05/BPE/graph/kmeans
+    // count through Engine.driverLocal (the d05/BPE/graph/kmeans
     // dual-regime discipline), so the collect is threshold-bounded by
     // construction, never corpus-row-sized
     // Cluster #5 (r19): kmeans' driver-local Lloyd regime — ONE
-    // full-input collect gated by a MEASURED vector count against
-    // graft.kmeans.driverMaxVecs (the d05/BPE/graph dual-regime
+    // full-input collect gated by a MEASURED vector count through
+    // Engine.driverLocal (the d05/BPE/graph dual-regime
     // discipline), so the collect is threshold-bounded by construction
     "Relational.scala" -> 3, "Cluster.scala" -> 5, "VectorSearch.scala" -> 4,
     "Layout.scala" -> 3, "WireServer.scala" -> 2, "Skew.scala" -> 1,
     // Graph (r18): the iterative operators' driver-local small-graph
     // regime (the d05 pattern) — one edge-list collect gated by a
-    // MEASURED edge count against graft.graph.driverMaxEdges, plus
+    // MEASURED edge count through Engine.driverLocal, plus
     // four edge-touched-slice collects (node set x2, seed values,
     // seed ids), each bounded by 2x the already-collected edge count
     // via a broadcast semi join; the node/seed tables themselves are
     // never collected
-    // Graph #6 (r19): the one-shot ops' (triangles/clustering/
-    // adamic-adar/assortativity) shared pair-list collect, gated by the
-    // SAME measured driverMaxEdges count (maybeCollectPairs) — bounded
-    // by construction like the fixpoint collect above
-    "Graph.scala" -> 6,
+    // The one-shot ops (triangles/clustering/adamic-adar/
+    // assortativity) share that collect: cutAndMaybeCollectPairs
+    // delegates to the fixpoints' cutAndMaybeCollect
+    "Graph.scala" -> 5,
     // TextPipeline (r15/r16, folded r18): the NB one-pass scorer's
     // class constants — class list, prior map, per-class OOV default
     // weights — now ONE |langs|-row collect (collectClasses; the
@@ -204,9 +203,9 @@ class PlanLintSpec extends AnyFunSuite {
     // BigGraph (r16): the decade-3 graph-law probe's one-row
     // fingerprint aggregate (a dev tool, never a query path)
     "BigGraph.scala" -> 1,
-    // QuickProbe (r19): the copart/skew/kcore A/B harnesses' one-row
-    // fingerprint aggregates, x4 (dev tool, never a query path)
-    "QuickProbe.scala" -> 4,
+    // QuickProbe (r19): the graphbig and skewab harnesses' one-row
+    // fingerprint aggregates, x2 (dev tool, never a query path)
+    "QuickProbe.scala" -> 2,
     // Serving (r18): readModel — the kB-sized persisted PQ model table
     // (|cells| centroid rows + m x 32 codeword rows + 2 params), the
     // same bounded codebook-collect class as VectorSearch's; loaded at

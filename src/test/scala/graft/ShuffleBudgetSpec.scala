@@ -82,7 +82,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     // rollup input / distinct-basket frame each feed 2-3 consumers);
     // identical exchanges dedupe at runtime via ReusedExchange
     // (spark.sql.exchange.reuse) — the budget pins the static shape
-    "q59_mad_outliers" -> 0,       // r19: below graft.q59.driverMaxGroups the
+    "q59_mad_outliers" -> 0,       // r19: below q59's driver-local limit the
                                    // post-rollup median/MAD derivation folds
                                    // driver-locally over one gated collect of
                                    // the value-domain-bounded rollup — the
@@ -142,15 +142,14 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   }
 
   test("q59 distributed arm keeps its exact shuffle budget") {
-    // the 100 TB path (above graft.q59.driverMaxGroups): one (brand,pc)
+    // the 100 TB path (above q59's driver-local limit): one (brand,pc)
     // rollup x3 consumers (statically re-planned, runtime-reused via
     // ReusedExchange) + 2 cumulative-median windows + dev rollup +
     // final agg = 9 exchanges, unchanged from the pre-r19 default shape
-    spark.conf.set("graft.q59.driverMaxGroups", "0")
-    try {
+    TestSpark.distributed {
       val df = SparkEntry.queries("q59_mad_outliers")(spark, TestSpark.sf)
       val got = executableShuffles(df.queryExecution.executedPlan.toString)
       assert(got == 9, s"q59 distributed arm: $got shuffles (budget 9)")
-    } finally spark.conf.unset("graft.q59.driverMaxGroups")
+    }
   }
 }

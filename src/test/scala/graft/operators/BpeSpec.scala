@@ -91,7 +91,7 @@ class BpeSpec extends AnyFunSuite {
 
   test("driver-local and distributed training regimes learn identical merges") {
     // r18 dual-regime (the d05 pattern): vocab-bounded driver arm vs
-    // the distributed loop, forced via graft.bpe.driverMaxVocab=0.
+    // the distributed loop, forced via TestSpark.distributed.
     // Corpus engineered with count ties (so the (c DESC, l, r)
     // tie-break is exercised), repeats inside words (greedy
     // non-overlap), and cascading merges.
@@ -101,10 +101,7 @@ class BpeSpec extends AnyFunSuite {
         Seq.fill(5)("mississippi")
     ).zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "text")
     val local = Bpe.trainMerges(docs, "text", 8).collect().toSeq
-    spark.conf.set("graft.bpe.driverMaxVocab", "0")
-    val dist =
-      try Bpe.trainMerges(docs, "text", 8).collect().toSeq
-      finally spark.conf.unset("graft.bpe.driverMaxVocab")
+    val dist = TestSpark.distributed(Bpe.trainMerges(docs, "text", 8).collect().toSeq)
     assert(local == dist, s"regimes diverged:\n  local=$local\n  dist=$dist")
   }
 

@@ -299,7 +299,7 @@ class ClusterSpec extends AnyFunSuite {
 
   test("kmeans driver-local and distributed regimes agree") {
     // r19 dual-regime parity (the GraphSpec pattern):
-    // graft.kmeans.driverMaxVecs=0 forces the distributed Lloyd loop;
+    // TestSpark.distributed forces the distributed Lloyd loop;
     // the default runs the driver-local twin at this corpus size. Both
     // centroids (bit-exact doubles) and the full assignment must match.
     def run(): (Seq[Seq[Double]], Map[Long, Int]) = {
@@ -309,9 +309,7 @@ class ClusterSpec extends AnyFunSuite {
           .map(r => r.getLong(0) -> r.getInt(1)).toMap)
     }
     val (lc, la) = run()
-    spark.conf.set("graft.kmeans.driverMaxVecs", "0")
-    val (dc, da) = try run()
-      finally spark.conf.unset("graft.kmeans.driverMaxVecs")
+    val (dc, da) = TestSpark.distributed(run())
     assert(lc == dc, "centroids diverge between regimes")
     assert(la == da, "assignments diverge between regimes")
   }

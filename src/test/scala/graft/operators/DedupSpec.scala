@@ -86,10 +86,10 @@ class DedupSpec extends AnyFunSuite {
     assert(cc(3L) == (3L, true))  // singleton survives as its own cluster
     assert(cc(4L) == (4L, true))
     assert(cc(5L) == (4L, false))
-    // the distributed fixpoint (forced via driverMaxEdges = -1) must
+    // the distributed fixpoint (forced via TestSpark.distributed) must
     // produce byte-identical labels to the driver union-find path
-    val dist = Dedup.nearDupClusters(pairs, nodes, driverMaxEdges = -1L)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    val dist = TestSpark.distributed(Dedup.nearDupClusters(pairs, nodes)
+      .collect()).map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(dist == cc)
   }
 
@@ -109,8 +109,8 @@ class DedupSpec extends AnyFunSuite {
     assert(drv("echo") == ("delta", false))
     assert(drv("zeta") == ("zeta", true)) // isolate survives alone
     // distributed fixpoint must agree byte-for-byte on strings too
-    val dist = Dedup.nearDupClusters(pairs, nodes, driverMaxEdges = -1L)
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getBoolean(2))).toMap
+    val dist = TestSpark.distributed(Dedup.nearDupClusters(pairs, nodes)
+      .collect()).map(r => r.getString(0) -> (r.getString(1), r.getBoolean(2))).toMap
     assert(dist == drv)
   }
 
@@ -136,8 +136,8 @@ class DedupSpec extends AnyFunSuite {
       val nodes = ids.toDF("id")
       val small = Dedup.nearDupClusters(pairs, nodes)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      val dist = Dedup.nearDupClusters(pairs, nodes, driverMaxEdges = -1L)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      val dist = TestSpark.distributed(Dedup.nearDupClusters(pairs, nodes)
+        .collect()).map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       assert(dist == small, s"trial $trial: regimes disagree")
       // the STRING-label arm must produce the isomorphic clustering on
       // the same graph: zero-padded labels order like the numbers, so
@@ -146,12 +146,12 @@ class DedupSpec extends AnyFunSuite {
       val sPairs = edges.result().distinct.map { case (a, b) => (s(a), s(b)) }
         .toDF("id_a", "id_b")
       val sNodes = ids.map(s).toDF("id")
-      for (dme <- Seq(2000000L, -1L)) {
-        val got = Dedup.nearDupClusters(sPairs, sNodes, driverMaxEdges = dme)
-          .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSet
+      def strArm = Dedup.nearDupClusters(sPairs, sNodes).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSet
+      for ((regime, got) <- Seq("local" -> strArm,
+          "distributed" -> TestSpark.distributed(strArm)))
         assert(got == small.map { case (a, b, c) => (s(a), s(b), c) },
-          s"trial $trial: string arm (driverMaxEdges=$dme) diverges")
-      }
+          s"trial $trial: string arm ($regime) diverges")
       // every node labeled exactly once, every cluster label is a member
       assert(small.size == n)
       val byCluster = small.groupBy(_._2)

@@ -118,7 +118,7 @@ class GraphSpec extends AnyFunSuite {
     // multigraph with hubs, duplicate edges, self-referential degrees,
     // nodes missing from the node table, and seeds outside the edge
     // set — every membership subtlety the driver arms replicate.
-    // graft.graph.driverMaxEdges=0 forces the distributed loops.
+    // TestSpark.distributed forces the distributed loops.
     val rnd = new scala.util.Random(7)
     val raw = Seq.tabulate(400)(_ =>
       (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
@@ -130,13 +130,8 @@ class GraphSpec extends AnyFunSuite {
       .map(i => (i, (i % 11) * 100000L)).toDF("id", "micros")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
-    def both(f: => org.apache.spark.sql.DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-      val local = rows(f)
-      spark.conf.set("graft.graph.driverMaxEdges", "0")
-      val dist = try rows(f)
-        finally spark.conf.unset("graft.graph.driverMaxEdges")
-      (local, dist)
-    }
+    def both(f: => org.apache.spark.sql.DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) =
+      (rows(f), TestSpark.distributed(rows(f)))
     val checks: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       ("pageRank", () => Graph.pageRank(edges, nodes, iters = 3)),
       ("labelPropagation", () => Graph.labelPropagation(edges, seedScores, iters = 2)),
@@ -148,38 +143,33 @@ class GraphSpec extends AnyFunSuite {
       assert(local == dist, s"$name: regimes diverged")
       assert(local.nonEmpty, s"$name: empty result")
     }
-    // r19: the distributed kCorePeel default is now the delta-degree
-    // loop — pin it against BOTH the driver twin (above) and the
-    // pre-r19 rescan loop (graft.kcore.delta=off), same multigraph
-    spark.conf.set("graft.graph.driverMaxEdges", "0")
-    spark.conf.set("graft.kcore.delta", "off")
-    val rescan = try rows(Graph.kCorePeel(edges, nodes, k = 2, rounds = 3))
-      finally {
-        spark.conf.unset("graft.graph.driverMaxEdges")
-        spark.conf.unset("graft.kcore.delta")
-      }
-    val (localK, deltaK) = both(Graph.kCorePeel(edges, nodes, k = 2, rounds = 3))
-    assert(rescan == deltaK, "kCorePeel: delta arm diverged from rescan arm")
-    assert(rescan == localK, "kCorePeel: local twin diverged from rescan arm")
-    // asymmetric directed input (review finding): node 3 appears only
-    // as dst — the rescan loop treats a node with no src-degree row as
+    // the distributed kCorePeel is the delta-degree loop; the checks
+    // above pin it against the driver twin on this multigraph.
+    // Asymmetric directed input (review finding): node 3 appears only
+    // as dst — the driver twin treats a node with no src-degree row as
     // dead in round 1 and drops its in-edges; the delta arm must seed
     // a dg=0 row for it or it diverges (core_deg(1) = 1 instead of 0)
     val asym = Seq((1L, 3L), (1L, 2L), (2L, 1L)).toDF("src", "dst")
     val asymNodes = Seq(1L, 2L, 3L).toDF("id")
-    def asymRows(conf: Map[String, String]): Seq[Seq[Any]] = {
-      conf.foreach { case (key, v) => spark.conf.set(key, v) }
-      try rows(Graph.kCorePeel(asym, asymNodes, k = 2, rounds = 1))
-      finally conf.keys.foreach(spark.conf.unset)
-    }
-    val asymRescan = asymRows(Map("graft.graph.driverMaxEdges" -> "0",
-      "graft.kcore.delta" -> "off"))
-    val asymDelta = asymRows(Map("graft.graph.driverMaxEdges" -> "0"))
-    val asymLocal = asymRows(Map.empty)
-    assert(asymRescan == asymDelta,
-      s"asymmetric: delta=$asymDelta rescan=$asymRescan")
-    assert(asymRescan == asymLocal,
-      s"asymmetric: local=$asymLocal rescan=$asymRescan")
+    val (asymLocal, asymDelta) =
+      both(Graph.kCorePeel(asym, asymNodes, k = 2, rounds = 1))
+    assert(asymDelta == asymLocal,
+      s"asymmetric: delta=$asymDelta local=$asymLocal")
+    assert(asymLocal == Seq(Seq(1L, 0L), Seq(2L, 0L), Seq(3L, 0L)),
+      s"asymmetric: $asymLocal")
+  }
+
+  test("kCorePeel rejects k < 1 in both regimes") {
+    // at k <= 0 nothing is ever peeled, and on asymmetric input the
+    // delta arm's dg = 0 seed rows would then disagree with the driver
+    // twin — so the operator rejects k < 1 before choosing a regime
+    val asym = Seq((1L, 3L), (1L, 2L), (2L, 1L)).toDF("src", "dst")
+    val nodes = Seq(1L, 2L, 3L).toDF("id")
+    val local = intercept[IllegalArgumentException](
+      Graph.kCorePeel(asym, nodes, k = 0, rounds = 1))
+    val dist = intercept[IllegalArgumentException](TestSpark.distributed(
+      Graph.kCorePeel(asym, nodes, k = 0, rounds = 1)))
+    Seq(local, dist).foreach(e => assert(e.getMessage.contains("k must be >= 1")))
   }
 
   test("local regime accepts IntegerType ids like the distributed arms do") {
@@ -198,9 +188,7 @@ class GraphSpec extends AnyFunSuite {
       df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
     def both(f: => org.apache.spark.sql.DataFrame): Unit = {
       val local = rows(f)
-      spark.conf.set("graft.graph.driverMaxEdges", "0")
-      val dist = try rows(f)
-        finally spark.conf.unset("graft.graph.driverMaxEdges")
+      val dist = TestSpark.distributed(rows(f))
       assert(local == dist)
       assert(local.nonEmpty)
     }
@@ -253,8 +241,7 @@ class GraphSpec extends AnyFunSuite {
     // r19 parity for the one-shot pair-graph ops (the r18 fixpoint
     // parity test's sibling): a pseudo-random multigraph with duplicate
     // canonical pairs, hubs, skewed degrees, and node-table rows with
-    // no edges. graft.graph.driverMaxEdges=0 forces the distributed
-    // shapes.
+    // no edges. TestSpark.distributed forces the distributed shapes.
     val rnd = new scala.util.Random(13)
     val raw = Seq.tabulate(300) { _ =>
       val a = rnd.nextInt(30).toLong; val b = rnd.nextInt(30).toLong
@@ -266,9 +253,7 @@ class GraphSpec extends AnyFunSuite {
       df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
     def both(name: String)(f: => org.apache.spark.sql.DataFrame): Unit = {
       val local = rows(f)
-      spark.conf.set("graft.graph.driverMaxEdges", "0")
-      val dist = try rows(f)
-        finally spark.conf.unset("graft.graph.driverMaxEdges")
+      val dist = TestSpark.distributed(rows(f))
       assert(local == dist, s"$name: regimes diverged " +
         s"onlyLocal=${(local.toSet -- dist.toSet).take(2)} " +
         s"onlyDist=${(dist.toSet -- local.toSet).take(2)}")
@@ -278,6 +263,28 @@ class GraphSpec extends AnyFunSuite {
     both("localClustering")(Graph.localClustering(pairs, nodes))
     both("adamicAdar")(Graph.adamicAdar(pairs, maxMidDegree = 12))
     both("degreeAssortativity")(Graph.degreeAssortativity(pairs))
+  }
+
+  test("localClustering's distributed arm reuses its gate's cut") {
+    // the distributed pass counts triangles over the pair frame its own
+    // gate already cut; it used to re-enter triangleCounts, which cut
+    // that frame a second time (one more job per call, and one |E|
+    // block write at decade scale): 14 jobs here, 15 with the second
+    // cut. The same multigraph shape as the
+    // one-shot parity test above; the call returns an eager cut, so
+    // every job it needs runs inside the probe.
+    val rnd = new scala.util.Random(13)
+    val raw = Seq.tabulate(300) { _ =>
+      val a = rnd.nextInt(30).toLong; val b = rnd.nextInt(30).toLong
+      (math.min(a, b), math.max(a, b))
+    }.filter { case (a, b) => a != b }
+    val pairs = (raw ++ raw.take(20)).toDF("id_a", "id_b")
+    val nodes = (0L to 35L).toDF("id")
+    val jobs = graft.JobCounter.jobsInGroup(spark, "clustering-cut-reuse") {
+      graft.Engine.releaseCheckpoint(
+        TestSpark.distributed(Graph.localClustering(pairs, nodes)))
+    }
+    assert(jobs == 14, s"distributed localClustering ran $jobs jobs")
   }
 
   test("adamicAdar: hand-scored wedges, adjacency excluded, hub capped") {

@@ -153,15 +153,36 @@ class RelationalSpec extends AnyFunSuite {
     // r19 dual-regime parity: the default (driver-local) regime above
     // must equal the forced-distributed arm bit-for-bit — same brands,
     // same Long counts, same exact 2-adic double medians
-    spark.conf.set("graft.q59.driverMaxGroups", "0")
-    try {
-      val dist = graft.operators.Relational.madOutliers(j)
+    val dist = TestSpark.distributed(graft.operators.Relational.madOutliers(j)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+        r.getDouble(3), r.getLong(4))).toSet)
+    assert(dist == got,
+      s"regime divergence: onlyDist=${(dist -- got).take(3)} " +
+        s"onlyLocal=${(got -- dist).take(3)}")
+  }
+
+  test("q59 rollup takes an IntegerType pc in both regimes") {
+    // the driver-local fold reads the rollup with getLong; the rollup
+    // widens pc to Long so an int-typed caller column cannot throw
+    // ClassCastException there while the distributed arm coerces it
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val base = graft.Engine.table(spark, TestSpark.sf, "lineitem")
+      .join(graft.Engine.table(spark, TestSpark.sf, "part"),
+        col("l_partkey") === col("p_partkey"))
+      .select(col("p_brand"), round(col("l_extendedprice") * 100, 0).as("pc"))
+    val jInt = base.select(col("p_brand"), col("pc").cast(IntegerType).as("pc"))
+    val jLong = base.select(col("p_brand"), col("pc").cast(LongType).as("pc"))
+    def rows(j: org.apache.spark.sql.DataFrame) =
+      graft.operators.Relational.madOutliers(j)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
           r.getDouble(3), r.getLong(4))).toSet
-      assert(dist == got,
-        s"regime divergence: onlyDist=${(dist -- got).take(3)} " +
-          s"onlyLocal=${(got -- dist).take(3)}")
-    } finally spark.conf.unset("graft.q59.driverMaxGroups")
+    val local = rows(jInt)
+    val dist = TestSpark.distributed(rows(jInt))
+    assert(local.nonEmpty)
+    assert(local == dist,
+      s"regime divergence: onlyDist=${(dist -- local).take(3)} " +
+        s"onlyLocal=${(local -- dist).take(3)}")
+    assert(local == rows(jLong), "int-typed pc changed the q59 result")
   }
 
   test("q53 compilation matches hand-computed GROUPS frame semantics") {
