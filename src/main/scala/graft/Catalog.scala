@@ -22,13 +22,16 @@ object Catalog {
   final val NotNullProp = "graft.notnull"
 
   /** NOT NULL columns of a catalog table per [[NotNullProp]] (empty for
-    * temp views and property-less tables). */
-  def notNullCols(spark: SparkSession, table: String): Set[String] =
-    scala.util.Try(
-      spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-        .collectFirst { case r if r.getString(0) == NotNullProp =>
-          r.getString(1).split(",").filter(_.nonEmpty).toSet })
-      .toOption.flatten.getOrElse(Set.empty)
+    * temp views and property-less tables). Any other catalog failure —
+    * an unknown table, an unreachable metastore — propagates: COPY's
+    * 23502 enforcement must never be switched off by a swallowed error. */
+  def notNullCols(spark: SparkSession, table: String): Set[String] = {
+    val state = spark.sessionState
+    val ident = state.sqlParser.parseTableIdentifier(table)
+    if (state.catalog.isTempView(ident)) Set.empty
+    else state.catalog.getTableMetadata(ident).properties.get(NotNullProp)
+      .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+  }
 
   /** (oid, typname, typlen, typalign) — the 8 bootstrapped types
     * (initdb/main.rs:407-452) + the driver-testdata extensions that the

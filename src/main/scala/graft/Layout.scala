@@ -147,8 +147,8 @@ object Layout {
   def appendMomentsTable(df: DataFrame, table: String,
       groupCols: Seq[String], momentCols: Seq[String]): Unit = {
     val aggs = momentCols.flatMap(c => Seq(
-      sum(col(c).cast(Engine.DEC)).as(s"s_$c"),
-      sum((col(c) * col(c)).cast(Engine.DEC)).as(s"ss_$c"))) :+
+      sum(Engine.exactDec(col(c))).as(s"s_$c"),
+      sum(Engine.exactDec(col(c) * col(c))).as(s"ss_$c"))) :+
       count(lit(1)).as("n_rows")
     df.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
@@ -176,8 +176,8 @@ object Layout {
   def writeMomentsTable(df: DataFrame, table: String,
       groupCols: Seq[String], momentCols: Seq[String]): Unit = {
     val aggs = momentCols.flatMap(c => Seq(
-      sum(col(c).cast(Engine.DEC)).as(s"s_$c"),
-      sum((col(c) * col(c)).cast(Engine.DEC)).as(s"ss_$c"))) :+
+      sum(Engine.exactDec(col(c))).as(s"s_$c"),
+      sum(Engine.exactDec(col(c) * col(c))).as(s"ss_$c"))) :+
       count(lit(1)).as("n_rows")
     df.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)

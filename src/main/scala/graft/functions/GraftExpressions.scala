@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, JavaCode, TrueLiteral}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -1103,6 +1103,75 @@ case class Round6(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Round6 =
     copy(child = c)
   override def prettyName: String = "graft_round6"
+}
+
+/** Proven fast path for `cast(x AS DECIMAL(38,10))` on a double.
+  *
+  * Spark's cast parses `Double.toString(x)` as a BigDecimal and rounds
+  * it HALF_UP to 10 places: a string build, a parse and a setScale per
+  * row. [[unscaled]] returns the same unscaled value from double
+  * arithmetic alone whenever it can prove the two agree, and
+  * [[NotProven]] otherwise. It proves agreement when |x| < 2^17 and
+  * x lies within 0.25 units of 1e-10 of the grid point r * 1e-10,
+  * r = rint(x * 1e10):
+  *  - p = x * 1e10 rounded and e = fma(x, 1e10, -p) give x * 1e10 =
+  *    p + e exactly (1e10 is a double; e can only be inexact on
+  *    underflow, far below the 0.25 margin). p - r is exact, so
+  *    (p - r) + e rounds x * 1e10 - r once, and rounding is monotonic:
+  *    a computed |d| < 0.25 means the true distance is < 0.25 units.
+  *  - The cast's string parses back to x, so it lies within half an
+  *    ulp of x; below 2^17 that is at most 2^-37 < 0.073 units.
+  *  - The string is therefore < 0.25 + 0.073 < 0.5 units from
+  *    r * 1e-10 and rounds to it (the margin holds even for a full ulp,
+  *    0.146 units). |r| < 2^17 * 1e10 < 1e18, so r fits the long.
+  * NaN, +-Inf, |x| >= 2^17 and values near a half-point fail the test.
+  * [[ExactDec10]] emits NULL for them and [[graft.Engine.exactDec]]
+  * falls back to the Cast itself, so values and ANSI errors are the
+  * cast's by construction. Property-pinned against Spark's Cast in
+  * KernelPropertySpec. */
+object ExactDec10Kernel {
+  final val NotProven = Long.MinValue
+  private final val Limit = 131072.0 // 2^17
+
+  def unscaled(x: Double): Long = {
+    if (!(java.lang.Math.abs(x) < Limit)) return NotProven // also NaN
+    val p = x * 1e10
+    val e = java.lang.Math.fma(x, 1e10, -p)
+    val r = java.lang.Math.rint(p)
+    if (java.lang.Math.abs((p - r) + e) < 0.25) r.toLong else NotProven
+  }
+}
+
+/** graft_exact_dec10(x) -> DECIMAL(38,10): the exact
+  * `cast(x AS DECIMAL(38,10))` when [[ExactDec10Kernel]] proves it, NULL
+  * otherwise (and always NULL for a non-double input). Only meaningful
+  * under `coalesce(ExactDec10(x), cast(x AS DECIMAL(38,10)))` —
+  * [[graft.Engine.exactDec]]. The result is a long-backed Decimal. */
+case class ExactDec10(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = DecimalType(38, 10)
+  override def nullable: Boolean = true
+  override def nullSafeEval(v: Any): Any = child.dataType match {
+    case DoubleType =>
+      val u = ExactDec10Kernel.unscaled(v.asInstanceOf[Double])
+      if (u == ExactDec10Kernel.NotProven) null else Decimal.createUnsafe(u, 38, 10)
+    case _ => null
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (child.dataType != DoubleType)
+      ExprCode(TrueLiteral, JavaCode.defaultLiteral(dataType))
+    else {
+      val u = ctx.freshName("unscaled")
+      nullSafeCodeGen(ctx, ev, v =>
+        s"""long $u = graft.functions.ExactDec10Kernel.unscaled($v);
+           |if ($u == ${ExactDec10Kernel.NotProven}L) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  ${ev.value} = org.apache.spark.sql.types.Decimal.createUnsafe($u, 38, 10);
+           |}""".stripMargin)
+    }
+  override protected def withNewChildInternal(c: Expression): ExactDec10 =
+    copy(child = c)
+  override def prettyName: String = "graft_exact_dec10"
 }
 
 /** graft_pq_encode(vec) -> array<int>: per-subspace codeword ids. */

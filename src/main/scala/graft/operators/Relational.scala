@@ -502,7 +502,7 @@ object Relational {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         t(s, d, "lineitem").select(
           col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-          Engine.decOut(sum(col("l_quantity").cast(Engine.DEC)).over(w)).as("run_qty"))
+          Engine.decOut(sum(Engine.exactDec(col("l_quantity"))).over(w)).as("run_qty"))
       }),
 
     // ---- set operations: UNION / EXCEPT / INTERSECT (SURVEY §2.7) ------

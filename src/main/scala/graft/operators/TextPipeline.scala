@@ -80,7 +80,7 @@ object TextPipeline {
     dsirTerms(s, d)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("nt"),
-        (sum(round(col("term_raw"), 6).cast(Engine.DEC)).cast(Engine.DEC6)
+        (sum(Engine.exactDec(round(col("term_raw"), 6))).cast(Engine.DEC6)
           * lit(1000000L)).cast(LongType).as("sm"))
       .select(col("doc_id"), col("nt").cast(IntegerType).as("n_tokens"),
         (expr("sm div (100 * nt)").cast(DoubleType) / 1e4).as("dsir_weight"))
@@ -800,8 +800,8 @@ object TextPipeline {
           .select(col("bigram"),
             // the same per-position term as before — round6 then DEC
             // (see the t18 dsirWeights determinism note)
-            round(log((col("c2").cast(DoubleType) + 1)
-              / (col("c1") + col("nv"))), 6).cast(Engine.DEC).as("w"))
+            Engine.exactDec(round(log((col("c2").cast(DoubleType) + 1)
+              / (col("c1") + col("nv"))), 6)).as("w"))
         dbk.join(wt, "bigram")
           .groupBy("doc_id")
           .agg(sum(col("k")).as("nt"),
@@ -1633,7 +1633,6 @@ object TextPipeline {
     * persist them as catalog tables (train once, score any slice
     * later; the serving-index story applied to models). */
   def nbTrain(base: DataFrame): (DataFrame, DataFrame) = {
-    val DEC = DecimalType(38, 10)
     val tok = base.select(col("doc_id"), col("lang"),
       explode(tokens(col("text"))).as("token"))
     // r19 NOTE (the VERDICT item-4/5 regime question, measured and
@@ -1662,7 +1661,7 @@ object TextPipeline {
       .join(tot, "clang")
       .crossJoin(broadcast(vocab))
       .select(col("clang"),
-        round(log(col("nd").cast(DoubleType) / col("n")), 6).cast(DEC)
+        Engine.exactDec(round(log(col("nd").cast(DoubleType) / col("n")), 6))
           .as("prior"),
         col("tot"), col("v"))
     (ct, classes)
@@ -1690,12 +1689,10 @@ object TextPipeline {
       local: DataFrame)
 
   private def collectClasses(classes: DataFrame): NbClasses = {
-    val DEC = DecimalType(38, 10)
     val withW0 = classes.select(col("clang"), col("prior"), col("tot"),
       col("v"),
-      round(log(lit(1L).cast(DoubleType)
-        / (col("tot") + col("v")).cast(DoubleType)), 6)
-        .cast(DEC).as("w0"))
+      Engine.exactDec(round(log(lit(1L).cast(DoubleType)
+        / (col("tot") + col("v")).cast(DoubleType)), 6)).as("w0"))
     val rows = withW0.collect()
     val spark = classes.sparkSession
     val local = spark.createDataFrame(
@@ -1778,7 +1775,7 @@ object TextPipeline {
         .withColumn("doc_id", lit(0L)).withColumn("pred", lit(""))
         .withColumn("margin", lit(0.0)).limit(0)
         .select("doc_id", "pred", "margin")
-    val zero = lit(new java.math.BigDecimal(0)).cast(DecimalType(38, 10))
+    val zero = lit(new java.math.BigDecimal(0)).cast(Engine.DEC)
     val cands = clangs.map(c => struct(
       (lit(k.priors(c)) + coalesce(col(s"`s_$c`"), zero)).as("score"),
       lit(c).as("clang")))
@@ -1808,7 +1805,6 @@ object TextPipeline {
     * relation all come from the same collected rows. */
   private def nbSums(base: DataFrame, ct: DataFrame,
       k: NbClasses): (DataFrame, Seq[String]) = {
-    val DEC = DecimalType(38, 10)
     // r19: row-local tf (tokenCounts RLE kernel) — the groupBy form
     // shuffled the corpus-sized (doc_id, token) stream for counts that
     // are doc-local; the multiset is identical (guide §8), so the
@@ -1822,8 +1818,8 @@ object TextPipeline {
       .crossJoin(broadcast(k.local.select("clang", "tot", "v")))
       .join(ct, Seq("clang", "token"), "left")
       .select(col("token"), col("clang"),
-        round(log((coalesce(col("c"), lit(0L)) + 1).cast(DoubleType)
-          / (col("tot") + col("v")).cast(DoubleType)), 6).cast(DEC).as("w"))
+        Engine.exactDec(round(log((coalesce(col("c"), lit(0L)) + 1).cast(DoubleType)
+          / (col("tot") + col("v")).cast(DoubleType)), 6)).as("w"))
     val wt = dense.groupBy("token")
       .pivot("clang", clangs.toIndexedSeq).agg(first(col("w")))
     // Out-of-vocabulary default (r16, judge r15 finding #1): a token
@@ -1843,7 +1839,7 @@ object TextPipeline {
     // arithmetic, no second execution of the classes subplan.)
     val w0: Map[String, java.math.BigDecimal] = k.w0
     val sumCols = clangs.map(c =>
-      sum(col("tf") * coalesce(col(s"`$c`"), lit(w0(c)).cast(DEC)))
+      sum(col("tf") * coalesce(col(s"`$c`"), lit(w0(c)).cast(Engine.DEC)))
         .as(s"s_$c"))
     (tf.join(broadcast(wt), Seq("token"), "left")
       .groupBy("doc_id").agg(sumCols.head, sumCols.tail: _*),
@@ -1868,7 +1864,7 @@ object TextPipeline {
     val k = collectClasses(classes)
     val (sums, clangs) = nbSums(base, ct, k)
     val priors: Map[String, java.math.BigDecimal] = k.priors
-    val zero = lit(new java.math.BigDecimal(0)).cast(DecimalType(38, 10))
+    val zero = lit(new java.math.BigDecimal(0)).cast(Engine.DEC)
     val cands = clangs.map(c => struct(
       (lit(priors(c)) + coalesce(col(s"`s_$c`"), zero)).as("score"),
       lit(c).as("clang")))

@@ -509,6 +509,27 @@ class GraftSessionSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS restart_probe")
   }
 
+  test("Catalog.notNullCols: NOT NULL columns, empty for temp views, other errors propagate") {
+    spark.sql("DROP TABLE IF EXISTS nn_probe")
+    spark.sql("DROP TABLE IF EXISTS nn_plain")
+    sess.execute("CREATE TABLE nn_probe (a int NOT NULL, b bigint, c int NOT NULL)")
+    sess.execute("CREATE TABLE nn_plain (a int, b bigint)")
+    try {
+      assert(Catalog.notNullCols(spark, "nn_probe") == Set("a", "c"))
+      assert(Catalog.notNullCols(spark, "nn_plain") == Set.empty)
+      spark.range(1).createOrReplaceTempView("nn_view")
+      assert(Catalog.notNullCols(spark, "nn_view") == Set.empty)
+      // an unknown table is a catalog error, not "no constraints": COPY's
+      // 23502 enforcement must not silently switch off
+      intercept[org.apache.spark.sql.AnalysisException](
+        Catalog.notNullCols(spark, "nn_no_such_table"))
+    } finally {
+      spark.catalog.dropTempView("nn_view")
+      spark.sql("DROP TABLE IF EXISTS nn_probe")
+      spark.sql("DROP TABLE IF EXISTS nn_plain")
+    }
+  }
+
   test("declared arithmetic proc matrix is SQL-callable with PG semantics") {
     // mixed-width procs from the bootstrap catalog (initdb:528-584)
     assert(spark.sql("SELECT int24pl(CAST(1 AS SMALLINT), 2)").head.getInt(0) == 3)

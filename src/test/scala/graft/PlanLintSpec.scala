@@ -127,9 +127,7 @@ class PlanLintSpec extends AnyFunSuite {
     * becomes a single-machine one. Every `.collect()`/`.head()`/
     * `.first()` in src/main is audited here with a per-file budget; a
     * new call fails the lint until it is justified below.
-    *  - Catalog.scala 2: spark.catalog.listTables — |tables| rows; and
-    *    SHOW TBLPROPERTIES per table — |properties| rows (the NOT NULL
-    *    column list the catalog persists out-of-band).
+    *  - Catalog.scala 1: spark.catalog.listTables — |tables| rows.
     *  - Dedup.scala 1: d05 union-find edges, <=2M-edge bounded cutover
     *    with a distributed fixpoint fallback (Dedup.scala:297-323).
     *  - Bpe.scala 2: per-iteration argmax (1 row x 8 iterations) and
@@ -156,7 +154,7 @@ class PlanLintSpec extends AnyFunSuite {
     *    its measurement is cited by a02's bound comment).
     */
   private val collectBudget = Map(
-    "Catalog.scala" -> 2, "Dedup.scala" -> 1,
+    "Catalog.scala" -> 1, "Dedup.scala" -> 1,
     // Bpe #3 (r18): the driver-local merge-training regime's word
     // table collect — gated by a MEASURED vocab count through
     // Engine.driverLocal (the d05 dual-regime discipline), so

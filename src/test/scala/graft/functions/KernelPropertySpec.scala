@@ -350,4 +350,205 @@ class KernelPropertySpec extends AnyFunSuite {
       "tokenizer must compile into the whole-stage-codegen span")
     assert(!code.contains("CodegenFallback"), "no fallback boxing in the token scan")
   }
+
+  // ---- ExactDec10: the proven fast path of cast(double AS DECIMAL(38,10))
+
+  private val two17 = 131072.0
+
+  /** Every edge class the ExactDec10 proof distinguishes, plus money-like
+    * products and 6dp values (the shapes dsum actually sees). None = NULL. */
+  private def exactDecInputs: Seq[Option[Double]] = {
+    val rnd = new scala.util.Random(11)
+    def around(x: Double) = Seq(x, Math.nextUp(x), Math.nextDown(x))
+    val money = Seq.fill(400) {
+      val price = rnd.nextInt(10000000) / 100.0
+      val disc = rnd.nextInt(11) / 100.0
+      val qty = (1 + rnd.nextInt(50)).toDouble
+      rnd.nextInt(3) match {
+        case 0 => price * (1 - disc)
+        case 1 => price * (1 - disc) * (1 + disc / 2)
+        case _ => qty * price // often >= 2^17: the fallback side
+      }
+    }
+    val sixDp = Seq.fill(300) {
+      new java.math.BigDecimal(rnd.nextDouble() * 2e5 - 1e5)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    }
+    val magnitudes = for (e <- -14 to 20; _ <- 1 to 4)
+      yield (rnd.nextDouble() - 0.5) * math.pow(10, e)
+    // just past the 2^17 limit, where an ulp outgrows the proof's margin
+    val pastLimit = Seq.fill(100)(two17 + rnd.nextDouble() * 1.6e7)
+    val grid = Seq.fill(150)(rnd.nextLong() % 1310720000000000L)
+      .flatMap(k => around(k / 1e10))
+    val halves = Seq.fill(150)(rnd.nextLong() % 1310720000000000L)
+      .flatMap(k => around((k + 0.5) / 1e10)) ++
+      Seq(5e-11, -5e-11, 1.5e-10, 2.5e-10, 0.12345678905, 1234.00000000005)
+        .flatMap(around)
+    val edges = Seq(0.0, -0.0, Double.MinPositiveValue, -Double.MinPositiveValue,
+      1e-310, -1e-310, java.lang.Double.MIN_NORMAL, 1e-11, 4.9e-11,
+      two17, -two17, Math.nextDown(two17), Math.nextUp(-two17),
+      Math.nextUp(two17), 1e20, -1e27, 9.99e27, 1e30, -1e29,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    (money ++ sixDp ++ magnitudes ++ pastLimit ++ grid ++ halves ++ edges).map(Some(_)) ++
+      Seq(None, None)
+  }
+
+  private def doubles(xs: Seq[Option[Double]], g: Int => Int = _ => 0) = {
+    import org.apache.spark.sql.Row
+    val rows = xs.zipWithIndex.map { case (x, i) => Row(g(i), x.orNull) }
+    // an RDD source, not a local relation: the projection must run in the
+    // generated (or interpreted) operator, not be folded on the driver
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("g", IntegerType), StructField("x", DoubleType))))
+  }
+
+  /** A result or the error's condition + parameters (the query context
+    * names a call site, so it is left out of the comparison). */
+  private def outcome(f: => Seq[org.apache.spark.sql.Row]): Either[String, Seq[Seq[Any]]] =
+    try Right(f.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }))
+    catch {
+      case t: Throwable =>
+        val st = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case s: org.apache.spark.SparkThrowable => s }
+        Left(st.map(s => s"${s.getCondition} ${s.getMessageParameters}")
+          .getOrElse(t.getClass.getName))
+    }
+
+  /** Run `f` under ANSI on/off x whole-stage codegen on, off, and fully
+    * interpreted expressions. */
+  private def inEveryMode(f: String => Unit): Unit =
+    for (ansi <- Seq("true", "false");
+         (wsc, factory) <- Seq("true" -> "FALLBACK", "false" -> "FALLBACK",
+           "false" -> "NO_CODEGEN")) {
+      val keys = Seq("spark.sql.ansi.enabled" -> ansi,
+        "spark.sql.codegen.wholeStage" -> wsc,
+        "spark.sql.codegen.factoryMode" -> factory)
+      val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+      keys.foreach { case (k, v) => spark.conf.set(k, v) }
+      try f(s"ansi=$ansi wholeStage=$wsc factory=$factory")
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
+  test("ExactDec10Kernel == Double.toString -> BigDecimal HALF_UP 10dp wherever it answers") {
+    val rnd = new scala.util.Random(5)
+    var fast = 0
+    for (i <- 0 until 300000) {
+      val x = i % 4 match {
+        case 0 => rnd.nextDouble() * 2 * two17 - two17
+        case 1 => (rnd.nextLong() % 1310720000000000L + 0.5 * rnd.nextInt(2)) / 1e10
+        case 2 => (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(24) - 16)
+        case _ => java.lang.Double.longBitsToDouble(rnd.nextLong())
+      }
+      val u = ExactDec10Kernel.unscaled(x)
+      if (u != ExactDec10Kernel.NotProven) {
+        fast += 1
+        val ref = new java.math.BigDecimal(java.lang.Double.toString(x))
+          .setScale(10, java.math.RoundingMode.HALF_UP).unscaledValue
+        assert(java.math.BigInteger.valueOf(u) == ref, s"kernel diverged on x=$x")
+      }
+    }
+    assert(fast > 100000, s"only $fast of 300000 took the fast path")
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      two17, -two17, 5e-11, -5e-11, 1e20)
+      .foreach(x => assert(ExactDec10Kernel.unscaled(x) == ExactDec10Kernel.NotProven, s"x=$x"))
+  }
+
+  test("Engine.exactDec == cast(x AS DECIMAL(38,10)) in value and error, every codegen mode") {
+    val xs = exactDecInputs
+    val fast = xs.flatten.count(x => ExactDec10Kernel.unscaled(x) != ExactDec10Kernel.NotProven)
+    assert(fast > xs.size / 2 && fast < xs.size - 20, s"fast $fast of ${xs.size}")
+    // NaN, +-Inf and values past DECIMAL(38,10)'s range may raise under
+    // ANSI: they run one at a time, so one error cannot mask another
+    def raising(x: Double) = x.isNaN || x.isInfinite || math.abs(x) >= 1e28
+    val df = doubles(xs.filterNot(_.exists(raising)), i => i)
+    inEveryMode { mode =>
+      val got = outcome(df.select(col("x"), graft.Engine.exactDec(col("x"))).collect().toSeq)
+      val ref = outcome(df.select(col("x"), col("x").cast(graft.Engine.DEC)).collect().toSeq)
+      val firstDiff = (got, ref) match {
+        case (Right(g), Right(r)) => g.zip(r).find { case (a, b) => a != b }
+        case _ => Some((got.left.toOption, ref.left.toOption))
+      }
+      assert(firstDiff.isEmpty && got.isRight,
+        s"[$mode] exactDec diverged from the cast: ${firstDiff.getOrElse("")}")
+      // non-double inputs always take the cast
+      for (c <- Seq(col("g") * 7919 - 40000,
+          when(abs(col("x")) < 1e15, col("x")).cast(DecimalType(30, 12)),
+          col("x").cast(FloatType))) {
+        val nd = df.select(graft.Engine.exactDec(c))
+        assert(outcome(nd.collect().toSeq) ==
+          outcome(df.select(c.cast(graft.Engine.DEC)).collect().toSeq),
+          s"[$mode] non-double input $c diverged")
+      }
+      for (x <- xs.flatten if raising(x)) {
+        val one = doubles(Seq(Some(x)))
+        assert(outcome(one.select(graft.Engine.exactDec(col("x"))).collect().toSeq) ==
+          outcome(one.select(col("x").cast(graft.Engine.DEC)).collect().toSeq),
+          s"[$mode] diverged on x=$x")
+      }
+    }
+  }
+
+  test("dsum/davg == decOut(sum(cast DEC)) over mixed, all-NULL and empty groups") {
+    import graft.Engine.{DEC, davg, decOut, dsum}
+    def oldDsum(c: org.apache.spark.sql.Column) = decOut(sum(c.cast(DEC)))
+    def oldDavg(c: org.apache.spark.sql.Column) =
+      round(sum(c.cast(DEC)).cast(DoubleType) / count(c), 6)
+    val rnd = new scala.util.Random(23)
+    // g0 fast-path only, g1 mixed fast/fallback, g2 all NULL, g3 carries
+    // NaN and Inf (an ANSI error or a NULL cast, per mode)
+    val g0 = Seq.fill(200)(Some(rnd.nextInt(10000000) / 100.0 * (1 - rnd.nextInt(11) / 100.0)))
+    val g1 = Seq.fill(200)(Some(rnd.nextDouble() * 1e6 - 5e5)) ++
+      Seq(Some(5e-11), Some(two17 + 0.3), Some(1e20), Some(-1e20), None)
+    val g2 = Seq.fill(5)(None)
+    val g3 = Seq(Some(1.5), Some(Double.NaN), Some(Double.PositiveInfinity), None)
+    val groups = Seq(g0, g1, g2)
+    val finite = doubles(groups.flatten, {
+      val sizes = groups.map(_.size).scanLeft(0)(_ + _)
+      i => sizes.lastIndexWhere(_ <= i)
+    })
+    val special = doubles(g3, _ => 3)
+    val empty = finite.filter(lit(false))
+    def check(df: org.apache.spark.sql.DataFrame, mode: String, what: String): Unit = {
+      val agg = Seq(
+        (dsum(col("x")), oldDsum(col("x"))), (davg(col("x")), oldDavg(col("x"))))
+      for ((got, ref) <- agg) {
+        assert(outcome(df.groupBy("g").agg(got).orderBy("g").collect().toSeq) ==
+          outcome(df.groupBy("g").agg(ref).orderBy("g").collect().toSeq),
+          s"[$mode] grouped $what diverged")
+        assert(outcome(df.agg(got).collect().toSeq) == outcome(df.agg(ref).collect().toSeq),
+          s"[$mode] global $what diverged")
+      }
+    }
+    inEveryMode { mode =>
+      check(finite, mode, "finite")
+      check(special, mode, "NaN/Inf")
+      check(empty, mode, "empty")
+    }
+    // the groups really do split across the two paths
+    assert(g0.flatten.forall(x => ExactDec10Kernel.unscaled(x) != ExactDec10Kernel.NotProven))
+    assert(g1.flatten.exists(x => ExactDec10Kernel.unscaled(x) == ExactDec10Kernel.NotProven))
+    assert(finite.groupBy("g").agg(dsum(col("x"))).collect()
+      .exists(r => r.getInt(0) == 2 && r.isNullAt(1)), "an all-NULL group sums to NULL")
+  }
+
+  test("q05's partial aggregate calls the ExactDec10 kernel inside whole-stage codegen") {
+    // q05's dsum is the hottest exact sum of the olap bench: pin that its
+    // cast runs as the static kernel call in the generated loop, with no
+    // interpreted-eval fallback anywhere in the query's code
+    val df = graft.SparkEntry.queries("q05_nation_revenue")(spark, graft.TestSpark.sf)
+    df.collect() // AQE: the generated stages exist once the final plan does
+    val stages = df.queryExecution.debug.codegenToSeq()
+    // the stage whose root (first line) is the partial aggregate
+    val partial = stages.filter(_._1.linesIterator.next().contains("partial_sum"))
+    assert(partial.nonEmpty, stages.map(_._1).mkString("\n"))
+    assert(partial.forall(_._2.contains("graft.functions.ExactDec10Kernel.unscaled(")),
+      "the partial aggregate must call the kernel's static method")
+    assert(!stages.exists(_._2.contains("CodegenFallback")), "no fallback boxing in q05")
+  }
 }
