@@ -56,33 +56,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-bench", Engine.cpus)
     spark.sparkContext.setLogLevel("ERROR") // keep stdout/stderr free of WARN noise
-    Engine.prepare(spark)
     // Per-query Spark JOB counts ride along in BENCH_DETAIL.json: job
     // counts are a host-noise-immune regression signal (seconds drift
-    // 30-40% across reboots on this shared host; a plan that suddenly
-    // runs more jobs changed for real). Counted via listener; job-start
-    // events are queued asynchronously, so read the counter only after
-    // it has been stable for 100ms (a blocking count() has already
-    // submitted every one of its jobs by the time it returns).
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCounter.incrementAndGet()
-    })
-    def settledJobCount(): Int = {
-      var prev = -1; var cur = jobCounter.get(); var waited = 0
-      while (cur != prev && waited < 2000) {
-        prev = cur; Thread.sleep(100); waited += 100; cur = jobCounter.get()
-      }
-      cur
-    }
+    // 30-40% between runs on a shared host; a plan that suddenly
+    // runs more jobs changed for real). Every job counts, broadcast and
+    // subquery sub-jobs included; a blocking count() has submitted all
+    // of its jobs by the time it returns, and the counter drains the
+    // listener bus before each read.
+    val jobCounter = JobCounter(spark)
     // Contention guard (r08+r09 postmortem: two rounds shipped artifacts
     // where a burst of host load inflated a contiguous window of queries
     // 40-70x with bit-identical job counts; the code was exonerated both
@@ -127,12 +110,12 @@ object Bench {
       // the timed pass would read the warmup's blocks instead of paying
       // the heap execution it reports
       Engine.releaseEphemeral(spark)
-      val j0 = settledJobCount()
+      val j0 = jobCounter.drained()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
         val secs = (System.nanoTime() - t0) / 1e9
-        Right((secs, settledJobCount() - j0))
+        Right((secs, jobCounter.drained() - j0))
       } catch { case e: Throwable => Left(e.getClass.getSimpleName) }
     }
     val firstPass: Seq[(String, Either[String, (Double, Int)], Double)] =

@@ -27,14 +27,23 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Build a fully-configured local session (tests / standalone use). */
-  def session(master: String = "local[*]", app: String = "graft"): SparkSession = {
-    val s = SparkSession.builder()
+  /** Cores a standalone main runs on: `SPARK_GRAFT_CPUS`, else every
+    * core the JVM sees. The only place the variable is read. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session factory: every main, the test suite, perfbench and
+    * the wire path build through it. `partitions` is the initial
+    * shuffle-partition count; `confs` are static confs that must be set
+    * before the context starts (a warehouse dir, an executor classpath). */
+  def session(master: String = "local[*]", app: String = "graft",
+      partitions: Int = 32, confs: Map[String, String] = Map.empty): SparkSession = {
+    val s = confs.foldLeft(SparkSession.builder()
       .master(master)
       .appName(app)
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", partitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     prepare(s)
   }
@@ -621,9 +630,10 @@ object Engine {
     * pre-partitioned cuts (r19): an EAGER checkpoint planned under AQE
     * captures AdaptiveSparkPlanExec, whose outputPartitioning is
     * UnknownPartitioning, so the LogicalRDD silently loses the hash
-    * layout the repartition paid for (measured: QuickProbe copart —
-    * a join over an AQE-planned pre-partitioned cut still exchanges
-    * both sides; the AQE-off cut exchanges only the other side).
+    * layout the repartition paid for (measured with the copart probe,
+    * deleted after a1c96e4 — a join over an AQE-planned pre-partitioned
+    * cut still exchanges both sides; the AQE-off cut exchanges only the
+    * other side).
     * CONSUMERS still plan under AQE — only the materializing execution
     * of the cut frame itself runs without it. */
   def withoutAqe[T](spark: SparkSession)(body: => T): T = {

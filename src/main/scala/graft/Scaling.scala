@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local scaling probe: times a query family at two scale-factor dirs
   * in one session (warm = 2nd in-session run, the BASELINE.md
   * methodology) and prints one JSON line per query with both times,
@@ -100,14 +98,8 @@ object Scaling {
       else if (args.length > 2) args.drop(2).toSeq
       else headline
     val budget = if (gateMode) Some(loadBudget()) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-scaling", Engine.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    Engine.prepare(spark)
     def f3(v: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def timed(name: String, dir: String): (Double, Long) = {

@@ -150,11 +150,6 @@ object Serving {
       .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
   }
 
-  /** Probe hook for the serving-latency split (QuickProbe s17split). */
-  private[graft] def probeReadModel(spark: SparkSession, prefix: String): Unit = {
-    readModel(spark, tbl(prefix, "pqmodel")); ()
-  }
-
   /** Inverse of [[writeModel]] — a collect of the kB-sized model table,
     * run once per snapshot of the table's files (`Engine.memoSnapshot`,
     * the memoCount key contract): warm serving calls read no model, and

@@ -442,7 +442,8 @@ object Analytics {
           .groupBy("l_returnflag").agg(aggs.head, aggs.tail: _*)
         // compare in ROW space with a one-row tolerance: GK ranks are
         // integers, and the measured error sits exactly AT eps on this
-        // corpus (Probe2: max err = 1.0 x 1/acc), where the double
+        // corpus (max err = 1.0 x 1/acc, measured with the rank-error
+        // probe deleted after a1c96e4), where the double
         // division would tip an inclusive bound on rounding alone
         def bounded(i: Int, q: Double) =
           (col(s"lt$i").cast(DoubleType) <= lit(q + eps) * col("n") + 1.0) &&

@@ -208,8 +208,9 @@ object Relational {
     // consumers (the cap aggregate, the support aggregate, and the
     // basket build) whose aggregate shapes differ, so exchange reuse
     // only dedupes the shuffle write — each consumer still re-ran the
-    // distinct aggregation over 55M rows at sf10 (Probe q69Diag: input
-    // 13.7 s warm, basket stage 38 s ~ 3x). DISK_ONLY persist, not
+    // distinct aggregation over 55M rows at sf10 (measured with the
+    // q69Diag probe, deleted after a1c96e4: input 13.7 s warm, basket
+    // stage 38 s ~ 3x). DISK_ONLY persist, not
     // Engine.cut: the frame is corpus-sized, so deserialized
     // executor-memory blocks OOM a small heap, while disk blocks cost
     // one write + three local reads; lineage stays intact (executor
@@ -234,20 +235,16 @@ object Relational {
     // a slow-disk window against a 2.4 s record). The input frame is
     // already the minimal 2-column projection (l_orderkey, p_brand — both
     // consumers read both columns, nothing to narrow), so the dials are:
-    //  (a) storage level, conf `graft.q69.inputStorageLevel` — the frame
-    //      is cached as compressed COLUMNAR batches (InMemoryRelation),
-    //      so MEMORY_AND_DISK keeps the gate-scale working set in
+    //  (a) storage level MEMORY_AND_DISK — the frame is cached as
+    //      compressed COLUMNAR batches (InMemoryRelation), so
+    //      MEMORY_AND_DISK keeps the gate-scale working set in
     //      evictable storage memory (no disk dependency on the bench
     //      path) and degrades per-block to disk under pressure at scale
     //      — storage memory evicts, it does not OOM (unlike the
     //      deserialized localCheckpoint blocks the r14 note rejected);
     //  (b) the cap and support aggregates fold into ONE grouping-sets
     //      pass below (3 reads of the persisted frame -> 2).
-    val level = b.sparkSession.conf
-      .getOption("graft.q69.inputStorageLevel")
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-      .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bc = b.persist(level)
+    val bc = b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       bc.count()
       // one grouping-sets aggregate serves BOTH the degenerate-basket cap

@@ -630,9 +630,10 @@ object TextPipeline {
     // by 6dp-rounding each per-token log-ratio, exact DECIMAL sum, one
     // division, 4dp emit. Still red. r8 hypothesis (per-token ln/round
     // diverging by an ulp across engines) was DISPROVED by measurement:
-    // `Probe t18` dumps every distinct per-token term and a DuckDB diff
-    // found ZERO divergent doubles — raw or 6dp — at sf0.01, and zero
-    // divergent per-doc quotients. The actual bug was IEEE signed zero on
+    // the t18 term dump (a probe deleted after a1c96e4) wrote every
+    // distinct per-token term, and a DuckDB diff found ZERO divergent
+    // doubles — raw or 6dp — at sf0.01, and zero divergent per-doc
+    // quotients. The actual bug was IEEE signed zero on
     // exactly one document: its mean log-ratio is a tiny NEGATIVE that
     // rounds to zero at 4dp, DuckDB's float-space round keeps the sign
     // (-0.0), Spark's BigDecimal round has no -0 (+0.0) — equal under

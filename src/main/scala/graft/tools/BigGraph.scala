@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -47,14 +47,8 @@ object BigGraph {
       case a if a.startsWith("--only=") =>
         a.stripPrefix("--only=").split(",").toSet
     }.getOrElse(Set.empty[String])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-biggraph", Engine.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    Engine.prepare(spark)
 
     val e = Engine.table(spark, dir, "embeddings")
     var t0 = System.nanoTime()

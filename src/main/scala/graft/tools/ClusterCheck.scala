@@ -110,22 +110,16 @@ object ClusterCheck {
   }
 
   private def session(master: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master(master)
-      .appName(s"graft-clustercheck")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    val withCp =
+    // executor JVMs are launched by the standalone worker and do NOT
+    // inherit sbt's classpath — hand them the driver's, so graft
+    // kernel classes resolve executor-side (the thing local[32]
+    // can never prove)
+    val cp =
       if (master.startsWith("local-cluster"))
-        // executor JVMs are launched by the standalone worker and do NOT
-        // inherit sbt's classpath — hand them the driver's, so graft
-        // kernel classes resolve executor-side (the thing local[32]
-        // can never prove)
-        b.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      else b
-    val s = withCp.getOrCreate()
+        Map("spark.executor.extraClassPath" -> sys.props("java.class.path"))
+      else Map.empty[String, String]
+    val s = Engine.session(master, "graft-clustercheck", confs = cp)
     s.sparkContext.setLogLevel("ERROR")
-    Engine.prepare(s)
     s
   }
 
@@ -270,7 +264,9 @@ object ClusterCheck {
       reliableOnly: Boolean = false)
 
   /** The kill matrix (r13 verdict #2 widened it from g08 alone). Kill
-    * points sit mid-fixpoint, tuned from graft.tools.JobCount totals:
+    * points sit mid-fixpoint, tuned from per-query job totals (counted
+    * by the JobCount probe, deleted after a1c96e4; each arm's
+    * `jobs_seen` reports the total now):
     *  - g08 HITS: the longest fixpoint chain (2 cut half-steps x
     *    iters, ~45 jobs) — kill at 20, past the adjacency cuts.
     *  - d05 near-dup components with the DISTRIBUTED min-label arm

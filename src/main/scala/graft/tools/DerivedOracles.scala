@@ -57,14 +57,8 @@ object DerivedOracles {
     // --sql-only regenerates oracle_sql.json against existing dumps
     // (oracle-text refactors do not change the Spark side)
     val sqlOnly = args.contains("--sql-only")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-derived-oracles", Engine.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    Engine.prepare(spark)
     val fam = derivedFamily(spark, dir)
     for ((name, _) <- fam if !sqlOnly) {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.{Engine, SparkEntry}
 
 /** Dump `.explain("formatted")` output for named queries to files — the
@@ -10,9 +9,9 @@ import graft.{Engine, SparkEntry}
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt "runMain graft.tools.PlanDump plans/r18 before q59_mad_outliers ..."
   *
-  * Runs on the bench's session shape (local[$SPARK_GRAFT_CPUS], same
-  * Engine.prepare confs) so the dumped plans are the plans the bench
-  * executes. AQE renders `AdaptiveSparkPlan isFinalPlan=false` — the
+  * Runs on the bench's session shape (`Engine.session` at
+  * `Engine.cpus` cores and partitions) so the dumped plans are the plans
+  * the bench executes. AQE renders `AdaptiveSparkPlan isFinalPlan=false` — the
   * initial plan; Exchange counts / join strategies / PushedFilters are
   * all visible there.
   */
@@ -29,14 +28,8 @@ object PlanDump {
     }.toSeq
     val names = args.drop(2).filterNot(_.startsWith("--conf=")).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-plandump", Engine.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    Engine.prepare(spark)
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Price the durable checkpoint strategy (r13 verdict item 3: "no
   * measured price for `reliable` mode"): warm seconds for the
@@ -55,12 +54,9 @@ object PriceReliable {
     val slow = args.contains("--slow")
     val rttMs = intArg("rtt-ms", 40L)
     val mbps = intArg("mbps", 100L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Engine.session(s"local[${graft.Engine.cpus}]",
+      "graft-price-reliable", graft.Engine.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.Engine.prepare(spark)
     val slowDir = {
       val hc = spark.sparkContext.hadoopConfiguration
       hc.set("fs.slowfs.impl", classOf[SlowFs].getName)

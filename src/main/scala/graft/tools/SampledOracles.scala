@@ -133,14 +133,8 @@ object SampledOracles {
     val family0 = args.collectFirst {
       case a if a.startsWith("--family=") => a.stripPrefix("--family=")
     }.getOrElse("all")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-sampled-oracles", Engine.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    Engine.prepare(spark)
     val e = Engine.table(spark, dir, "embeddings")
     import org.apache.spark.sql.functions.col
     def q = e.filter(col("vec_id") % 100 === 0)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{Chaos, Engine}
 import graft.streaming.EventsStreaming
 
@@ -26,15 +24,9 @@ object TornBatch {
 
   def main(args: Array[String]): Unit = {
     val Array(src, ckpt, wh, table, haltAt) = args.take(5)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tornbatch-child")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh)
-      .getOrCreate()
+    val spark = Engine.session("local[8]", "graft-tornbatch-child", 8,
+      Map("spark.sql.warehouse.dir" -> wh))
     spark.sparkContext.setLogLevel("ERROR")
-    Engine.prepare(spark)
     if (haltAt.toLong >= 0L) spark.conf.set(Chaos.HaltAfterBatchWrite, haltAt)
 
     val loc = new java.io.File(wh, table)

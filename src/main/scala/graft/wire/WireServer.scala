@@ -713,3 +713,17 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
     send(out, 'D', (i16(fields.length) +: cols).reduce(_ ++ _))
   }
 }
+
+/** Standalone server: `runMain graft.wire.WireServer [port] [sfDir]`
+  * listens on `port` (default 15432), resolves the fixture tables under
+  * `sfDir` when given, and blocks until the JVM is stopped. */
+object WireServer {
+  def main(args: Array[String]): Unit = {
+    val port = args.headOption.map(_.toInt).getOrElse(15432)
+    val spark = graft.Engine.session(s"local[${graft.Engine.cpus}]", "graft-wire")
+    spark.sparkContext.setLogLevel("ERROR")
+    val srv = new WireServer(spark, args.lift(1), port = port).start()
+    println(s"[wire] listening on ${srv.boundPort}; ctrl-c to stop")
+    Thread.currentThread().join()
+  }
+}

@@ -42,6 +42,11 @@ object GraftShim {
     spark.asInstanceOf[classic.SparkSession].sessionState.tableFunctionRegistry
       .registerFunction(name, info, builder)
 
+  /** Block until every event posted to the listener bus has been
+    * delivered (`listenerBus` is private[spark]). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Idempotently install a planner strategy on a live session. */
   def addStrategy(spark: SparkSession, s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental

@@ -156,19 +156,6 @@ class CheckpointStrategySpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.checkpoint.everyK")
   }
 
-  /** Listener events drain async; poll until the counter is stable
-    * across a 200 ms window instead of a fixed sleep (r16 advice: a
-    * loaded box made 500 ms insufficient in principle). */
-  private def drained(c: java.util.concurrent.atomic.AtomicInteger): Int = {
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var prev = -1
-    var cur = c.get()
-    while (cur != prev && System.nanoTime() < deadline) {
-      prev = cur; Thread.sleep(200); cur = c.get()
-    }
-    cur
-  }
-
   test("checkpoint-every-k produces fingerprint-identical results and durable files only at boundaries") {
     // r15: everyK intermediate cuts materialize into the executor cache
     // with lineage kept (bounded recovery to the last durable boundary)
@@ -179,29 +166,20 @@ class CheckpointStrategySpec extends AnyFunSuite {
       "t24" -> fingerprint(SparkEntry.queries("t24_bpe_merges")(spark, sf)))
     // durable writes are observable as Engine.cut-tagged jobs (the
     // everyK intermediate branch persists untagged)
-    val tagged = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .contains(Engine.CutJobDescription)) tagged.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val tagged = JobCounter(spark, JobCounter.cutJobs)
     try {
       val every = withMode("reliable", Some(ckptRoot))(runs())
-      val everyJobs = drained(tagged)
-      tagged.set(0)
+      val everyJobs = tagged.drained()
       spark.conf.set("graft.checkpoint.everyK", "3")
       val everyK =
         try withMode("reliable", Some(ckptRoot))(runs())
         finally spark.conf.unset("graft.checkpoint.everyK")
-      val everyKJobs = drained(tagged)
+      val everyKJobs = tagged.drained() - everyJobs
       assert(every == everyK,
         s"everyK changed results: every=$every everyK=$everyK")
       assert(everyKJobs.toDouble <= everyJobs * 0.6,
         s"everyK did not reduce durable-checkpoint jobs: $everyKJobs vs $everyJobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally tagged.close()
   }
 
   test("re-points across FILESYSTEMS (file: -> slowfs:) instead of throwing Wrong FS") {

@@ -147,11 +147,6 @@ class PlanLintSpec extends AnyFunSuite {
     *  - ClusterCheck.scala 1: the ONE-row (sum, count) fingerprint
     *    aggregate of the multi-JVM parity harness — a scalar per
     *    query, never rows.
-    *  - Probe.scala 1: the s04 stage-split diagnostic's ONE-row
-    *    sum(sim) throughput probe (a dev tool, never a query path).
-    *  - Probe2.scala 1: the approx_percentile rank-error probe's
-    *    |flags|-row sketch collect (a dev tool, never a query path;
-    *    its measurement is cited by a02's bound comment).
     */
   private val collectBudget = Map(
     "Catalog.scala" -> 1, "Dedup.scala" -> 1,
@@ -195,15 +190,10 @@ class PlanLintSpec extends AnyFunSuite {
     // must be driver-known to emit per-class sum columns, the
     // row-local argmax/top-2 folds, and the OOV coalesce literals
     "TextPipeline.scala" -> 1,
-    // Probe #2 (r16): s03Diag's codebook pick — |cells| rows (500 at
-    // sf100), the same bounded collect the operator itself performs
-    "ClusterCheck.scala" -> 1, "Probe.scala" -> 2, "Probe2.scala" -> 1,
+    "ClusterCheck.scala" -> 1,
     // BigGraph (r16): the decade-3 graph-law probe's one-row
     // fingerprint aggregate (a dev tool, never a query path)
     "BigGraph.scala" -> 1,
-    // QuickProbe (r19): the graphbig and skewab harnesses' one-row
-    // fingerprint aggregates, x2 (dev tool, never a query path)
-    "QuickProbe.scala" -> 2,
     // Serving (r18): readModel — the kB-sized persisted PQ model table
     // (|cells| centroid rows + m x 32 codeword rows + 2 params), the
     // same bounded codebook-collect class as VectorSearch's; loaded at
@@ -234,6 +224,26 @@ class PlanLintSpec extends AnyFunSuite {
     for ((file, budget) <- collectBudget)
       assert(found.getOrElse(file, 0) == budget,
         s"$file budget is stale ($budget vs ${found.getOrElse(file, 0)} found) — keep the audit exact")
+  }
+
+  /** Every main, the test suite and the wire path share one session
+    * shape: cores, shuffle partitions, UTC, UI off and `Engine.prepare`
+    * all come from `Engine.session`, so no other file in src/main may
+    * build a session of its own. */
+  test("SparkSession.builder appears in src/main only in Engine.scala") {
+    import scala.jdk.CollectionConverters._
+    val builder = java.util.regex.Pattern.compile("SparkSession\\s*\\.\\s*builder")
+    val sites = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Engine.scala")
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        val m = builder.matcher(src)
+        Iterator.continually(m.find()).takeWhile(identity).map(_ => f.toString)
+      }.toSeq
+    if (sites.nonEmpty) fail(
+      s"${sites.size} SparkSession.builder site(s) outside Engine.scala — build " +
+        s"through Engine.session:\n  ${sites.distinct.sorted.mkString("\n  ")}")
   }
 
   /** A window with no partitionBy funnels its entire input through ONE
