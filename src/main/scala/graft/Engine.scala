@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -77,13 +77,9 @@ object Engine {
     // scan — at 100 TB this prunes fact-table rows before the exchange
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     // NOTE on ObjectHashAggregate's sort fallback (default threshold:
-    // 128 groups per task): every TypedImperativeAggregate past it —
-    // including the bounded top-k heaps — degrades to an EXTERNAL SORT
-    // of its remaining input, so a heap aggregate is only scale-safe
-    // when its input stream is already volume-capped (the r15 decade-3
-    // stage split watched the flat s05 emission's 3.28B-row fallback
-    // sort fill a 43 GB disk and die). The threshold is deliberately
-    // NOT raised globally: it equally governs collect_list/collect_set
+    // 128 groups per task): every TypedImperativeAggregate past it
+    // degrades to an EXTERNAL SORT of its remaining input. The threshold
+    // is deliberately NOT raised: it governs collect_list/collect_set
     // buffers (a bucket group holds ~36 KB of member vectors — 256k
     // in-memory groups OOMed a 32-task JVM in one stage). Cap the
     // stream, don't uncap the map.
@@ -598,35 +594,11 @@ object Engine {
     * wrong answer. The conf is read at OPTIMIZATION time, so the
     * set/restore window only affects queries PLANNED concurrently on
     * this session, and for those the effect is the loss of inferred
-    * is-not-null join filters — a perf assist, never correctness
-    * (unlike the execution-time ObjectHashAggregate threshold, which
-    * is why topKPerQid uses a cloned session instead). */
-  def withoutConstraintPropagation[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.constraintPropagation.enabled"
-    // Reentrancy (r17 advice): without a depth count, two overlapping
-    // scopes on one session would have the inner capture prior="false"
-    // and restore it after the outer exits — leaving the conf disabled
-    // session-wide. Only the OUTERMOST scope captures and restores; the
-    // bookkeeping runs under one monitor (scope entry/exit only, never
-    // around `body`).
-    cpLock.synchronized {
-      val d = cpDepth.getOrDefault(spark, 0)
-      if (d == 0) { cpPrior.put(spark, spark.conf.get(key)); spark.conf.set(key, "false") }
-      cpDepth.put(spark, d + 1)
-    }
-    try body finally cpLock.synchronized {
-      val d = cpDepth.get(spark) - 1
-      if (d == 0) {
-        spark.conf.set(key, cpPrior.remove(spark)); cpDepth.remove(spark)
-      } else cpDepth.put(spark, d)
-    }
-  }
-  private val cpLock = new Object
-  private val cpDepth = new java.util.concurrent.ConcurrentHashMap[SparkSession, Integer]()
-  private val cpPrior = new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
+    * is-not-null join filters — a perf assist, never correctness. */
+  def withoutConstraintPropagation[T](spark: SparkSession)(body: => T): T =
+    withConfOff(spark, "spark.sql.constraintPropagation.enabled")(body)
 
-  /** Scope AQE off for `body` — the same reentrancy-safe discipline as
-    * [[withoutConstraintPropagation]]. Used by the graph operators'
+  /** Scope AQE off for `body`. Used by the graph operators'
     * pre-partitioned cuts (r19): an EAGER checkpoint planned under AQE
     * captures AdaptiveSparkPlanExec, whose outputPartitioning is
     * UnknownPartitioning, so the LogicalRDD silently loses the hash
@@ -636,73 +608,38 @@ object Engine {
     * other side).
     * CONSUMERS still plan under AQE — only the materializing execution
     * of the cut frame itself runs without it. */
-  def withoutAqe[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    aqeLock.synchronized {
-      val d = aqeDepth.getOrDefault(spark, 0)
-      if (d == 0) { aqePrior.put(spark, spark.conf.get(key)); spark.conf.set(key, "false") }
-      aqeDepth.put(spark, d + 1)
-    }
-    try body finally aqeLock.synchronized {
-      val d = aqeDepth.get(spark) - 1
-      if (d == 0) {
-        spark.conf.set(key, aqePrior.remove(spark)); aqeDepth.remove(spark)
-      } else aqeDepth.put(spark, d)
-    }
-  }
-  private val aqeLock = new Object
-  private val aqeDepth = new java.util.concurrent.ConcurrentHashMap[SparkSession, Integer]()
-  private val aqePrior = new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
+  def withoutAqe[T](spark: SparkSession)(body: => T): T =
+    withConfOff(spark, "spark.sql.adaptive.enabled")(body)
 
-  // -------------------------------------------------------------------
-  // Ephemeral per-query caches (r16 verdict #2): operators that must
-  // materialize an intermediate EAGERLY inside a scoped-conf execution
-  // (topKPerQid's bounded heap under the ANN twin session's raised
-  // ObjectHashAggregate fallback threshold) persist an output-sized
-  // frame the downstream consumer reads through CacheManager
-  // substitution. The frame's lifetime is ONE query: the query
-  // lifecycle (Verify/Bench per query; a serving loop per statement)
-  // calls releaseEphemeral once the consumer has materialized, so no
-  // cache entry outlives its query (TopKCacheSpec pins this — the q69
-  // r14 leak class, closed the same way). Keyed by the PARENT session a
-  // query runs on; releasing while a sibling query on the same session
-  // is mid-flight would merely force a recompute (slow, never wrong),
-  // and the lifecycles here are driver-serial per session.
-  // -------------------------------------------------------------------
-  private val ephemerals = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]]()
-
-  def registerEphemeral(owner: SparkSession, df: Dataset[_]): Unit = {
-    // a released owner's entry is removed by releaseEphemeral; owners
-    // whose CONTEXT has stopped (multi-session drivers that never
-    // release — ClusterCheck's per-master arms) purge here, so the map
-    // cannot grow monotonically across retired sessions (r17 verdict #4)
-    val it = ephemerals.keySet.iterator
-    while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
-    ephemerals.computeIfAbsent(owner,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]())
-      .add(df)
-    ()
-  }
-
-  /** Number of sessions currently holding unreleased ephemerals —
-    * observability for the no-leak specs. */
-  def ephemeralSessions: Int = ephemerals.size
-
-  /** Unpersist every ephemeral frame registered against `owner` since
-    * the last release. Returns the number of frames released. */
-  def releaseEphemeral(owner: SparkSession): Int = {
-    val q = ephemerals.remove(owner)
-    if (q == null) 0
-    else {
-      var n = 0
-      var d = q.poll()
-      while (d != null) {
-        d.unpersist(blocking = false)
-        n += 1
-        d = q.poll()
+  /** Set boolean conf `key` to false on `spark` for `body`, restoring the
+    * prior value after. Reentrant per (session, key) (r17 advice):
+    * without a depth count, two overlapping scopes would have the inner
+    * capture prior="false" and restore it after the outer exits —
+    * leaving the conf disabled session-wide. Only the OUTERMOST scope
+    * captures and restores; the bookkeeping runs under one monitor
+    * (scope entry/exit only, never around `body`). */
+  private def withConfOff[T](spark: SparkSession, key: String)(body: => T): T = {
+    val scope = (spark, key)
+    scopeLock.synchronized {
+      scopes.get(scope) match {
+        case Some((prior, d)) => scopes(scope) = (prior, d + 1)
+        case None => scopes(scope) = (spark.conf.get(key), 1); spark.conf.set(key, "false")
       }
-      n
+    }
+    try body finally scopeLock.synchronized {
+      val (prior, d) = scopes(scope)
+      if (d == 1) { spark.conf.set(key, prior); scopes.remove(scope) }
+      else scopes(scope) = (prior, d - 1)
     }
   }
+  private val scopeLock = new Object
+  // (session, key) -> (value before the outermost scope, open scopes)
+  private val scopes =
+    scala.collection.mutable.HashMap.empty[(SparkSession, String), (String, Int)]
+
+  /** No-op kept for callers of the retired per-query cache registry: no
+    * operator persists a per-query frame any more (the top-k heap runs
+    * inside the consumer's plan), so there is never anything to release.
+    * Always returns 0. */
+  def releaseEphemeral(owner: SparkSession): Int = 0
 }

@@ -19,9 +19,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // per-query lifecycle: the result has landed, so any ephemeral
-      // cache a builder registered (topKPerQid's heap frames) is dead
-      Engine.releaseEphemeral(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, JavaCode, TrueLiteral}
@@ -1282,18 +1283,23 @@ case class PqAdcSum(left: Expression, right: Expression)
   override def prettyName: String = "graft_pq_adc_sum"
 }
 
-/** Bounded top-k heap of (nid, sim) pairs — the buffer behind
-  * [[TopKPairsAgg]]. Keeps the k best by (sim desc, nid asc); the root of
-  * the binary heap is the WORST kept element so an incoming better pair
-  * evicts in O(log k). */
-final class TopKHeap(val k: Int, val distinct: Boolean = false) {
-  val nids = new Array[Long](math.max(k, 1))
-  val sims = new Array[Double](math.max(k, 1))
-  var size = 0
+/** Bounded top-k heap of (nid, sim) pairs over abstract slot storage.
+  * Keeps the k best by (sim desc, nid asc); the root of the binary heap
+  * is the WORST kept element so an incoming better pair evicts in
+  * O(log k). Two layouts share these operations: [[TopKHeap]] (arrays,
+  * the in-kernel heaps of [[BucketTopKKernel]]) and [[RowTopKHeap]]
+  * (the fixed-width aggregation buffer of [[TopKPairsAgg]]). */
+abstract class PairHeap(val k: Int, val distinct: Boolean) {
+  def size: Int
+  protected def setSize(n: Int): Unit
+  def nid(i: Int): Long
+  def sim(i: Int): Double
+  protected def set(i: Int, n: Long, s: Double): Unit
 
-  private def contains(nid: Long): Boolean = {
+  private def contains(n: Long): Boolean = {
     var i = 0
-    while (i < size) { if (nids(i) == nid) return true; i += 1 }
+    val sz = size
+    while (i < sz) { if (nid(i) == n) return true; i += 1 }
     false
   }
 
@@ -1302,52 +1308,85 @@ final class TopKHeap(val k: Int, val distinct: Boolean = false) {
     si < sj || (si == sj && ni > nj)
 
   private def swap(i: Int, j: Int): Unit = {
-    val tn = nids(i); nids(i) = nids(j); nids(j) = tn
-    val ts = sims(i); sims(i) = sims(j); sims(j) = ts
+    val tn = nid(i); val ts = sim(i)
+    set(i, nid(j), sim(j)); set(j, tn, ts)
   }
 
   private def siftUp(start: Int): Unit = {
     var i = start
-    while (i > 0 && worseThan(sims(i), nids(i), sims((i - 1) / 2), nids((i - 1) / 2))) {
+    while (i > 0 && worseThan(sim(i), nid(i), sim((i - 1) / 2), nid((i - 1) / 2))) {
       swap(i, (i - 1) / 2); i = (i - 1) / 2
     }
   }
 
   private def siftDown(): Unit = {
+    val sz = size
     var i = 0
     var done = false
     while (!done) {
       val l = 2 * i + 1; val r = 2 * i + 2
       var w = i // worst of the triple
-      if (l < size && worseThan(sims(l), nids(l), sims(w), nids(w))) w = l
-      if (r < size && worseThan(sims(r), nids(r), sims(w), nids(w))) w = r
+      if (l < sz && worseThan(sim(l), nid(l), sim(w), nid(w))) w = l
+      if (r < sz && worseThan(sim(r), nid(r), sim(w), nid(w))) w = r
       if (w == i) done = true else { swap(i, w); i = w }
     }
   }
 
-  def insert(nid: Long, sim: Double): Unit = {
+  def insert(n: Long, s: Double): Unit = {
     // distinct mode: a duplicate nid is ALWAYS an identical (nid, sim)
     // pair in this engine (sim is a deterministic function of the pair),
     // so skipping it is exact — this is what lets LSH candidate streams
     // feed the heap WITHOUT a prior dropDuplicates shuffle
-    if (distinct && contains(nid)) return
-    if (size < k) {
-      nids(size) = nid; sims(size) = sim; size += 1; siftUp(size - 1)
-    } else if (k > 0 && worseThan(sims(0), nids(0), sim, nid)) {
-      nids(0) = nid; sims(0) = sim; siftDown()
+    if (distinct && contains(n)) return
+    val sz = size
+    if (sz < k) {
+      set(sz, n, s); setSize(sz + 1); siftUp(sz)
+    } else if (k > 0 && worseThan(sim(0), nid(0), s, n)) {
+      set(0, n, s); siftDown()
     }
   }
 
-  def absorb(o: TopKHeap): Unit = {
+  def absorb(o: PairHeap): Unit = {
     var i = 0
-    while (i < o.size) { insert(o.nids(i), o.sims(i)); i += 1 }
+    val sz = o.size
+    while (i < sz) { insert(o.nid(i), o.sim(i)); i += 1 }
   }
 
   /** Kept pairs best-first as array<struct<nid,sim>>. */
   def toArrayData: GenericArrayData = {
-    val order = (0 until size).sortBy(i => (-sims(i), nids(i)))
+    val order = (0 until size).sortBy(i => (-sim(i), nid(i)))
     new GenericArrayData(order.map(i =>
-      new GenericInternalRow(Array[Any](nids(i), sims(i)))).toArray[Any])
+      new GenericInternalRow(Array[Any](nid(i), sim(i)))).toArray[Any])
+  }
+}
+
+/** [[PairHeap]] over two primitive arrays. */
+final class TopKHeap(k: Int, distinct: Boolean = false) extends PairHeap(k, distinct) {
+  private val nids = new Array[Long](math.max(k, 1))
+  private val sims = new Array[Double](math.max(k, 1))
+  private var n = 0
+  def size: Int = n
+  protected def setSize(sz: Int): Unit = n = sz
+  def nid(i: Int): Long = nids(i)
+  def sim(i: Int): Double = sims(i)
+  protected def set(i: Int, nd: Long, s: Double): Unit = { nids(i) = nd; sims(i) = s }
+}
+
+/** [[PairHeap]] laid out in a row from ordinal `base`: the size, then k
+  * nid slots, then k sim slots — every slot fixed-width, so the row can
+  * live in HashAggregateExec's UnsafeRow map. [[at]] re-points the view
+  * at another row without allocating (one view per aggregate instance,
+  * and an aggregate instance is used by one task). */
+final class RowTopKHeap(k: Int, distinct: Boolean) extends PairHeap(k, distinct) {
+  private var row: InternalRow = _
+  private var base = 0
+  def at(r: InternalRow, b: Int): this.type = { row = r; base = b; this }
+  def size: Int = row.getInt(base)
+  protected def setSize(n: Int): Unit = row.setInt(base, n)
+  def nid(i: Int): Long = row.getLong(base + 1 + i)
+  def sim(i: Int): Double = row.getDouble(base + 1 + k + i)
+  protected def set(i: Int, n: Long, s: Double): Unit = {
+    row.setLong(base + 1 + i, n); row.setDouble(base + 1 + k + i, s)
   }
 }
 
@@ -1357,63 +1396,71 @@ final class TopKHeap(val k: Int, val distinct: Boolean = false) {
   * own TakeOrderedAndProject shape applied per group: at 100 TB a
   * query's N candidates reduce to (#partitions x k) before the shuffle,
   * where a window row_number() <= k would sort all N in ONE task.
+  *
+  * The buffer is 2k + 1 fixed-width slots ([[RowTopKHeap]]), so Spark
+  * plans the heap in HashAggregateExec, as it does HyperLogLogPlusPlus:
+  * no group-count fallback (ObjectHashAggregateExec's 128-group sort
+  * threshold does not apply), and a sort-based spill only under memory
+  * pressure. A group's state is O(k) whatever the group count.
   */
 case class TopKPairsAgg(nid: Expression, sim: Expression, k: Int,
     distinct: Boolean = false,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends aggregate.TypedImperativeAggregate[TopKHeap] {
+    extends aggregate.ImperativeAggregate {
   override def children: Seq[Expression] = Seq(nid, sim)
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("nid", LongType, nullable = false),
     StructField("sim", DoubleType, nullable = false))), containsNull = false)
 
-  override def createAggregationBuffer(): TopKHeap = new TopKHeap(k, distinct)
-  // The update path runs INTERPRETED per candidate row (Typed-
-  // ImperativeAggregate is outside whole-stage codegen), and
-  // Expression.eval boxes every Long/Double — at 15M candidates per
-  // query the allocation churn measured ~5x the codegen'd scan that
-  // produced the stream. After optimization both children are plain
-  // bound references (the narrow (qid, nid, sim) projection feeds the
-  // aggregate), so read the primitives directly; any other shape keeps
-  // the general eval path.
+  private def slots: Int = math.max(k, 0)
+  override lazy val aggBufferAttributes: Seq[AttributeReference] =
+    AttributeReference("size", IntegerType, nullable = false)() +:
+      ((0 until slots).map(i => AttributeReference(s"nid$i", LongType)()) ++
+        (0 until slots).map(i => AttributeReference(s"sim$i", DoubleType)()))
+  override lazy val aggBufferSchema: StructType =
+    org.apache.spark.sql.catalyst.types.DataTypeUtils.fromAttributes(aggBufferAttributes)
+  override lazy val inputAggBufferAttributes: Seq[AttributeReference] =
+    aggBufferAttributes.map(_.newInstance())
+
+  @transient private lazy val heap = new RowTopKHeap(slots, distinct)
+  @transient private lazy val other = new RowTopKHeap(slots, distinct)
+
+  override def initialize(buffer: InternalRow): Unit =
+    buffer.setInt(mutableAggBufferOffset, 0)
+
+  // update runs INTERPRETED per candidate row (ImperativeAggregate is
+  // outside whole-stage codegen), and Expression.eval boxes every
+  // Long/Double — at 15M candidates per query the allocation churn
+  // measured ~5x the codegen'd scan that produced the stream. After
+  // optimization both children are plain bound references (the narrow
+  // (qid, nid, sim) projection feeds the aggregate), so read the
+  // primitives directly; any other shape keeps the general eval path.
   @transient private[functions] lazy val primitiveOrds: Array[Int] = (nid, sim) match {
     case (nr: BoundReference, sr: BoundReference)
         if nr.dataType == LongType && sr.dataType == DoubleType =>
       Array(nr.ordinal, sr.ordinal)
     case _ => null
   }
-  override def update(b: TopKHeap, input: org.apache.spark.sql.catalyst.InternalRow): TopKHeap = {
+  override def update(buffer: InternalRow, input: InternalRow): Unit = {
     val ords = primitiveOrds
     if (ords != null) {
       if (!input.isNullAt(ords(0)) && !input.isNullAt(ords(1)))
-        b.insert(input.getLong(ords(0)), input.getDouble(ords(1)))
+        heap.at(buffer, mutableAggBufferOffset)
+          .insert(input.getLong(ords(0)), input.getDouble(ords(1)))
     } else {
       val n = nid.eval(input)
       val s = sim.eval(input)
       if (n != null && s != null)
-        b.insert(n.asInstanceOf[Long], s.asInstanceOf[Double])
+        heap.at(buffer, mutableAggBufferOffset)
+          .insert(n.asInstanceOf[Long], s.asInstanceOf[Double])
     }
-    b
   }
-  override def merge(b: TopKHeap, o: TopKHeap): TopKHeap = { b.absorb(o); b }
-  override def eval(b: TopKHeap): Any = b.toArrayData
-
-  override def serialize(b: TopKHeap): Array[Byte] = {
-    val buf = java.nio.ByteBuffer.allocate(4 + 16 * b.size)
-    buf.putInt(b.size)
-    var i = 0
-    while (i < b.size) { buf.putLong(b.nids(i)); buf.putDouble(b.sims(i)); i += 1 }
-    buf.array()
-  }
-  override def deserialize(bytes: Array[Byte]): TopKHeap = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-    val n = buf.getInt
-    val h = new TopKHeap(k, distinct)
-    var i = 0
-    while (i < n) { h.insert(buf.getLong, buf.getDouble); i += 1 }
-    h
-  }
+  override def merge(buffer: InternalRow, input: InternalRow): Unit =
+    heap.at(buffer, mutableAggBufferOffset)
+      .absorb(other.at(input, inputAggBufferOffset))
+  override def eval(buffer: InternalRow): Any =
+    heap.at(buffer, mutableAggBufferOffset).toArrayData
 
   override def withNewMutableAggBufferOffset(o: Int): TopKPairsAgg =
     copy(mutableAggBufferOffset = o)

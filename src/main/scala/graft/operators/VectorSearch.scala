@@ -34,53 +34,6 @@ object VectorSearch {
     * differences vs an oracle while keeping full discrimination. */
   private[graft] def sim6(a: Column, b: Column): Column = GF.round6(GF.cosine(a, b))
 
-  /** Memoized per-parent ANN twin session: a `cloneSession()` whose
-    * ObjectHashAggregate sort-fallback threshold is raised (2^20), so
-    * the bounded per-qid heap never degrades to an external sort of the
-    * full candidate stream. Scoping the raise to a CLONE — instead of
-    * the r16 set/restore toggle on the shared session conf — makes it
-    * concurrency-safe (the r16 verdict's hazard #3): a vector-carrying
-    * collect_list aggregate executing concurrently on the parent session
-    * keeps the protective 128 default at all times (Engine.prepare
-    * documents the measured OOM class: 256k in-memory bucket groups x
-    * ~36 KB member buffers). The clone shares SparkContext, CacheManager
-    * and the registered function surface; only its SQLConf diverges. */
-  private val annSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
-  /** CONF-SNAPSHOT SEMANTICS (r17 advice): the twin's SQLConf is a copy
-    * taken at the parent's FIRST ANN query — parent conf changes made
-    * later (timezone, ANSI mode, shuffle partitions) never reach heap
-    * execution until [[evictAnnSession]] drops the memo. That is the
-    * accepted trade: the alternative (a fresh clone per query) re-pays
-    * clone+conf setup on every ANN call, and the confs that matter to
-    * the heap (the fallback threshold) are exactly the ones the twin
-    * exists to pin. Entries whose parent's SparkContext has stopped are
-    * purged on the next access (the multi-session driver pattern —
-    * ClusterCheck's per-master arms — would otherwise accumulate dead
-    * parent+twin pairs forever); single-context drivers can also evict
-    * explicitly when retiring a session. */
-  private[graft] def annSession(spark: SparkSession): SparkSession = {
-    purgeStoppedAnnSessions()
-    annSessions.computeIfAbsent(spark, s => {
-      val c = GraftShim.cloneSession(s)
-      c.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString)
-      c
-    })
-  }
-
-  /** Close hook: drop a retiring parent session's memoized twin (the
-    * registry otherwise holds strong refs to both for process life). */
-  def evictAnnSession(parent: SparkSession): Unit = { annSessions.remove(parent); () }
-
-  private def purgeStoppedAnnSessions(): Unit = {
-    val it = annSessions.keySet.iterator
-    while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
-  }
-
-  private[graft] def annRegistrySize: Int = annSessions.size
-
   /** Per-query exact top-k over a (qid, nid, sim) candidate set via the
     * bounded-heap aggregate (functions/GraftExpressions TopKPairsAgg):
     * each input partition reduces to <= k pairs per qid BEFORE the
@@ -89,104 +42,32 @@ object VectorSearch {
     * every query's full candidate list in one task (the round-3 verdict's
     * named scale-killer).
     *
-    * `boundedQ = true` is the SERVING contract: the caller guarantees
-    * <= [[MaxBoundedQids]] distinct qids (a point lookup, a single-user
-    * query), so the heap can never hit the 128-group sort fallback and
-    * the plan returns LAZY — zero extra jobs, no cache entry, no durable
-    * write, and the full logical plan stays visible to consumers. Batch
-    * callers leave it false. The contract is ENFORCED in-plan: a violating caller
-    * fails loudly at execution instead of silently degrading to the
-    * external-sort fallback (see the guard below).
+    * The plan is lazy for every caller, one query or many: the heap needs
+    * no bound on the number of qids because its fixed-width buffer plans
+    * under HashAggregateExec, which keeps any number of groups in its
+    * hash map and spills by sort only under memory pressure.
     */
-  /** The `boundedQ` serving bound: the parent session's protective
-    * ObjectHashAggregate fallback threshold (Engine.prepare's 128
-    * default) — a serving query set at or under it can never trigger
-    * the sort fallback, so its heap plan is safe to leave lazy. */
-  val MaxBoundedQids = 128
-
   private[graft] def topKPerQid(pairs: DataFrame, k: Int,
-      distinct: Boolean = false, boundedQ: Boolean = false): DataFrame = {
+      distinct: Boolean = false): DataFrame = {
     // distinct=true: in-heap dedup by nid (exact when duplicates are
     // identical (nid, sim) repeats — the multi-table LSH case), saving
     // the dropDuplicates shuffle of the full candidate set
     val agg =
       if (distinct) GF.topKPairsDistinct(col("nid").cast(LongType), col("sim"), k)
       else GF.topKPairs(col("nid").cast(LongType), col("sim"), k)
-    val heap = pairs.groupBy("qid").agg(agg.as("topk"))
-    // boundedQ CONTRACT GUARD (r17 verdict #2): the caller promised
-    // <= MaxBoundedQids distinct qids. A violation would otherwise
-    // silently external-sort the full candidate stream under the parent
-    // session's protective 128-group ObjectHashAggregate fallback — the
-    // exact scale-killer this mechanism avoids. The guard stays LAZY
-    // (zero extra jobs, the serving property): the heap output is one
-    // row per distinct qid, so a window count over a constant partition
-    // — one tiny exchange of <= |Q| heap rows — measures |Q| in-plan,
-    // and the qid projection raises at execution when it exceeds the
-    // bound. Loud-not-early: a violating query pays its heap before the
-    // error fires, but it FAILS, with the contract named, instead of
-    // degrading (BoundedQGuardSpec pins both sides).
-    val checked =
-      if (!boundedQ) heap
-      else {
-        val nq = count(lit(1)).over(Window.partitionBy(lit(0)))
-        heap.select(
-          when(nq > lit(MaxBoundedQids), raise_error(format_string(
-            s"boundedQ serving contract violated: %s distinct qids exceed " +
-              s"the $MaxBoundedQids bound; use boundedQ = false for batch " +
-              "query sets", nq))).otherwise(col("qid")).as("qid"),
-          col("topk"))
-      }
-    val out = checked
+    pairs.groupBy("qid").agg(agg.as("topk"))
       .select(col("qid"), explode(col("topk")).as("p"))
       .select(col("qid"), col("p.nid").as("nid"), col("p.sim").as("sim"))
-    if (boundedQ) out
-    else {
-      // Unbounded |Q|: execute the heap EAGERLY under the ANN twin
-      // session's raised fallback threshold (the r16 s03 stage split at
-      // sf100: 92-128 s hash vs 250-1230 s fallback-sort, the sort
-      // additionally 4-10x run-to-run variable under spill pressure).
-      // The threshold conf is read at EXECUTION time (driver-side, in
-      // ObjectHashAggregateExec.doExecute, then captured into the task
-      // closure — so cached-partition RECOMPUTE after an executor loss
-      // keeps the raised value), so the frame must materialize through
-      // the twin session: an ephemeral persist + count — NOT Engine.cut
-      // (r16), which in reliable mode paid a durable checkpoint write
-      // per ANN query and bumped the everyK counter shared with the
-      // fixpoint operators, and whose localCheckpoint frame leaked for
-      // the session lifetime (the q69 r14 leak class). The persisted
-      // frame is output-sized (|Q| x k rows), registered with
-      // Engine.registerEphemeral, and released by the query lifecycle
-      // (Verify/Bench per query; TopKCacheSpec pins no-survivor).
-      // Consumers re-bind the SAME analyzed plan on the parent session:
-      // the shared CacheManager substitutes the built InMemoryRelation,
-      // so downstream plans read the cache — never re-run the heap under
-      // the parent's protective 128 default.
-      val spark = pairs.sparkSession
-      val bound = GraftShim.ofRows(annSession(spark), out.queryExecution.analyzed)
-      val p = bound.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // A failed materialization must not leave the half-built cache
-      // entry registered: a long-lived session (the wire serving loop)
-      // that catches the error and continues would otherwise hold a
-      // broken entry CacheManager may later try to rebuild — observed
-      // at decade-4 probe scale, where Spark's buildBuffers error path
-      // (recacheByPlan -> tryRebuildCacheEntry) NPEs on the failed
-      // entry's planless builder and MASKS the original OOM.
-      try p.count()
-      catch { case t: Throwable => p.unpersist(blocking = false); throw t }
-      Engine.registerEphemeral(spark, p)
-      GraftShim.ofRows(spark, out.queryExecution.analyzed)
-    }
   }
 
   /** Exact top-k neighbors for each query vector (brute force). */
   def bruteForceTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      boundedQ: Boolean = false): DataFrame = {
+      corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     // queries: (qid, qv); corpus: (vec_id, embedding)
     val pairs = corpus.join(broadcast(queries), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
         sim6(col("qv"), col("embedding")).as("sim"))
-    topKPerQid(pairs, k, boundedQ = boundedQ)
+    topKPerQid(pairs, k)
   }
 
   /** Deterministic random hyperplanes: plane j element i in {-1,+1}. */
@@ -253,8 +134,10 @@ object VectorSearch {
     // bucket lists pays a WIDER external sort (members carry vectors)
     // than the narrow candidate sort it removes; the self-join family
     // wins that trade only because m^2/2 pairs amortize m collected
-    // members. Raising the 128-group ObjectHashAggregate fallback
-    // threshold (1M) bought just 27% (147 -> 107 s): the dominant cost
+    // members. Lifting the heap's 128-group sort fallback (r15: a raised
+    // ObjectHashAggregate threshold; the heap now plans under
+    // HashAggregateExec, which has none) bought just 27% (147 -> 107 s):
+    // the dominant cost
     // is the honest |Q| x tables x density candidate volume through the
     // codegen'd cosine, and derived planes already hold THAT sub-linear
     // (3.1x on the 10x sf10->sf100 step).
@@ -287,8 +170,7 @@ object VectorSearch {
     * index files. Candidate semantics are identical to [[lshTopK]]
     * (pcode is a bijection of (tbl, bucket)). */
   def lshTopKIndexed(index: DataFrame, queries: DataFrame, k: Int,
-      planes: Int = 4, tables: Int = 8, dim: Int = 64,
-      boundedQ: Boolean = false): DataFrame = {
+      planes: Int = 4, tables: Int = 8, dim: Int = 64): DataFrame = {
     val q = queries.select(col("qid"), col("qv"),
         posexplode(lshBucketsAll(col("qv"), planes, tables, dim)).as(Seq("tbl", "bucket")))
       .select(col("qid"), col("qv"),
@@ -299,7 +181,7 @@ object VectorSearch {
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
         sim6(col("qv"), col("embedding")).as("sim"))
-    topKPerQid(pairs, k, distinct = true, boundedQ = boundedQ)
+    topKPerQid(pairs, k, distinct = true)
   }
 
   /** IVF-flavored ANN: a coarse codebook of `cells` centroids (derived
@@ -455,22 +337,21 @@ object VectorSearch {
   /** ADC-score candidates from an encoded index (inline or persisted),
     * shortlist with the bounded heap, rerank exactly from true vectors. */
   private def pqSearch(index: DataFrame, corpus: DataFrame,
-      queries: DataFrame, q: DataFrame, k: Int, rerank: Int,
-      boundedQ: Boolean = false): DataFrame = {
+      queries: DataFrame, q: DataFrame, k: Int, rerank: Int): DataFrame = {
     // each corpus row has exactly ONE cid, so a (qid, nid) pair cannot
     // repeat across probes — no dedup needed before the heap
     val cand = index.join(broadcast(q), Seq("cid"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
         GF.pqAdcSum(col("codes"), col("adc")).as("sim"))
-    val shortlist = topKPerQid(cand, rerank, boundedQ = boundedQ)
+    val shortlist = topKPerQid(cand, rerank)
       .select("qid", "nid")
     // exact rerank: fetch true vectors for the Q x rerank shortlist only
     val exact = corpus
       .join(broadcast(shortlist), col("vec_id") === col("nid"))
       .join(broadcast(queries.select(col("qid"), col("qv"))), Seq("qid"))
       .select(col("qid"), col("nid"), sim6(col("qv"), col("embedding")).as("sim"))
-    topKPerQid(exact, k, boundedQ = boundedQ)
+    topKPerQid(exact, k)
   }
 
   def ivfPqTopK(
@@ -528,8 +409,7 @@ object VectorSearch {
     * This is the multi-query shape; one query is served by
     * [[ivfPqTopKForQid]]. */
   def ivfPqTopKIndexed(index: DataFrame, corpus: DataFrame,
-      queries: DataFrame, model: PqModel, k: Int,
-      boundedQ: Boolean = false): DataFrame = {
+      queries: DataFrame, model: PqModel, k: Int): DataFrame = {
     val probed = probeCells(queries, model)
     val local = queries.sparkSession.createDataFrame(
       probed.toSeq.map { case (r, cells) => Row(r.get(0), r.get(1), cells.toSeq) }.asJava,
@@ -542,7 +422,7 @@ object VectorSearch {
     // otherwise re-encode per candidate (the deferred projection)
     pqSearch(index.filter(col("cid").isin(cells.toIndexedSeq: _*))
         .repartition(col("cid")),
-      corpus, local.select("qid", "qv"), q, k, model.rerank, boundedQ = boundedQ)
+      corpus, local.select("qid", "qv"), q, k, model.rerank)
   }
 
   /** One query's top-`n` candidates in [[TopKHeap]]'s total order (sim
@@ -1095,8 +975,7 @@ object VectorSearch {
     val lexTop = rankLex(TextPipeline.bm25Scores(documents, terms), k)
     val q = corpus.filter(col("vec_id") === qid)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    // ONE query row — the boundedQ serving contract holds statically
-    val vecTop = rankVec(bruteForceTopK(corpus, q, k, boundedQ = true))
+    val vecTop = rankVec(bruteForceTopK(corpus, q, k))
     hybridRrfFuse(lexTop, vecTop)
   }
 

@@ -131,9 +131,6 @@ object ClusterCheck {
         val t0 = System.nanoTime()
         val fp = fingerprint(SparkEntry.queries(n)(spark, dir))
         val sec = (System.nanoTime() - t0) / 1e9
-        // per-query lifecycle (r17): drop any ephemeral heap caches the
-        // builder registered so the next family member starts cold
-        Engine.releaseEphemeral(spark)
         println(f"[cluster-check] $master%-24s $n%-28s fp=${fp._1}%22s rows=${fp._2}%7d $sec%6.1f s")
         n -> Entry(fp._1, fp._2, sec)
       } ++ Seq(

@@ -38,7 +38,6 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       val w = new java.io.PrintWriter(s"$outDir/${n}_$suffix.txt")
       try w.println(txt) finally w.close()
-      Engine.releaseEphemeral(spark)
       println(s"[plandump] wrote $outDir/${n}_$suffix.txt")
     }
     spark.stop()

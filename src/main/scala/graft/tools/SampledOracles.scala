@@ -181,7 +181,6 @@ object SampledOracles {
     for ((name, _) <- fam) {
       val t0 = System.nanoTime()
       sparkSide(name)().write.mode("overwrite").parquet(s"$out/$name")
-      Engine.releaseEphemeral(spark) // per-query lifecycle (r17)
       println(f"[sampled] $name dumped in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     new java.io.File(out).mkdirs()

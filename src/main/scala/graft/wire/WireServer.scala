@@ -172,9 +172,6 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
       case _: Exception if !running =>
     } finally {
       cancelKeys.remove(sid)
-      // connection teardown: whatever the loop's per-statement/Sync
-      // releases missed (abrupt disconnect mid-statement) goes here
-      try graft.Engine.releaseEphemeral(spark) catch { case _: Exception => }
       try sock.close() catch { case _: Exception => }
     }
   }
@@ -340,17 +337,7 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
                   sendError(out, sqlStateOf(e),
                     Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
                   failed = true
-              } finally {
-                spark.sparkContext.clearJobGroup()
-                // per-statement ephemeral release (the Verify/Bench
-                // lifecycle discipline, applied to the wire loop): any
-                // frame an operator persisted for THIS statement's
-                // execution (topKPerQid's unbounded heap) is dropped
-                // once the statement's result has been written — a wire
-                // client can never accumulate per-query cache entries
-                // (WireServerSpec pins it; the r14/r16 leak class)
-                graft.Engine.releaseEphemeral(sess.spark)
-              }
+              } finally spark.sparkContext.clearJobGroup()
             }
           }
           sendReady = true
@@ -484,13 +471,8 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
               send(out, '3') // CloseComplete
             case 'H' => out.flush() // Flush
             case 'S' => // Sync: statement boundary — open cursors close
-              // (autocommit twin of PG's transaction-end portal drop).
-              // Ephemerals release HERE in extended mode, not per
-              // Execute: a suspended portal's row iterator may still
-              // read a statement's persisted frame across Execute
-              // messages; Sync is the boundary where those cursors drop
+              // (autocommit twin of PG's transaction-end portal drop)
               suspended.clear()
-              graft.Engine.releaseEphemeral(sess.spark)
               sendReady = true
             case other =>
               sendError(out, "08P01",

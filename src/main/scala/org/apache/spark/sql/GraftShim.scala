@@ -21,15 +21,6 @@ object GraftShim {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** Fork an isolated twin of a live session: shared SparkContext,
-    * CacheManager and function/catalog state at fork time, but an
-    * INDEPENDENT SQLConf — the concurrency-safe way to scope an
-    * execution-time conf (e.g. the ObjectHashAggregate sort-fallback
-    * threshold) to one operator's queries without a set/restore window
-    * on the shared session (private[sql] in 4.x). */
-  def cloneSession(s: SparkSession): SparkSession =
-    s.asInstanceOf[classic.SparkSession].cloneSession()
-
   /** Register a TABLE function (SELECT * FROM f(args)) on a live
     * session — the runtime twin of
     * `SparkSessionExtensions.injectTableFunction` (the registry is

@@ -226,24 +226,40 @@ class PlanLintSpec extends AnyFunSuite {
         s"$file budget is stale ($budget vs ${found.getOrElse(file, 0)} found) — keep the audit exact")
   }
 
+  /** (path, text) of every Scala source under src/main. */
+  private def mainSources: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(f => f.toString -> new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+      .toSeq
+  }
+
   /** Every main, the test suite and the wire path share one session
     * shape: cores, shuffle partitions, UTC, UI off and `Engine.prepare`
     * all come from `Engine.session`, so no other file in src/main may
     * build a session of its own. */
   test("SparkSession.builder appears in src/main only in Engine.scala") {
-    import scala.jdk.CollectionConverters._
     val builder = java.util.regex.Pattern.compile("SparkSession\\s*\\.\\s*builder")
-    val sites = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala
-      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Engine.scala")
-      .flatMap { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    val sites = mainSources
+      .filter { case (f, _) => !f.endsWith("/Engine.scala") }
+      .flatMap { case (f, src) =>
         val m = builder.matcher(src)
-        Iterator.continually(m.find()).takeWhile(identity).map(_ => f.toString)
-      }.toSeq
+        Iterator.continually(m.find()).takeWhile(identity).map(_ => f)
+      }
     if (sites.nonEmpty) fail(
       s"${sites.size} SparkSession.builder site(s) outside Engine.scala — build " +
         s"through Engine.session:\n  ${sites.distinct.sorted.mkString("\n  ")}")
+  }
+
+  /** The top-k heap plans under HashAggregateExec, so no operator needs
+    * a session whose SQLConf differs from its caller's: a cloned session
+    * with a raised ObjectHashAggregate fallback threshold (the retired
+    * ANN twin) must not come back unnoticed. */
+  test("src/main neither clones a session nor sets the ObjectHashAggregate fallback threshold") {
+    val banned = Seq("cloneSession", "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
+    val sites = for ((f, src) <- mainSources; b <- banned if src.contains(b)) yield s"$f: $b"
+    assert(sites.isEmpty, s"conf-forking session sites:\n  ${sites.sorted.mkString("\n  ")}")
   }
 
   /** A window with no partitionBy funnels its entire input through ONE
@@ -267,13 +283,9 @@ class PlanLintSpec extends AnyFunSuite {
     // rank windows over .limit(k) candidate lists (BM25 arm + vector
     // arm before RRF fusion): k rows each by construction
     "s07_hybrid_rrf",
-    // the SQL-served twins (r18): the same k-row rank windows as s07,
-    // plus the boundedQ contract-guard count window whose input is the
-    // per-qid heap OUTPUT (one row per distinct qid, <= 128 by the
-    // enforced serving contract — over-bound inputs raise, they don't
-    // sort; BoundedQGuardSpec). partitionBy(lit(0)) constant-folds to
-    // an empty partition spec, which is why these render unpartitioned
-    "s16_ann_sql_serving", "s17_hybrid_sql_serving",
+    // the SQL-served hybrid twin (r18): the same two k-row rank windows
+    // as s07
+    "s17_hybrid_sql_serving",
     // regression over the top-100 vocabulary slice
     "t31_zipf_slope")
 

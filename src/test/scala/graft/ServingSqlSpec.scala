@@ -32,7 +32,7 @@ class ServingSqlSpec extends AnyFunSuite {
     val q = e.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val scala_ = VectorSearch.ivfPqTopKIndexed(spark.table("svq_ivf"), e, q,
-      model.copy(rerank = math.max(model.rerank, 10)), 10, boundedQ = true)
+      model.copy(rerank = math.max(model.rerank, 10)), 10)
     assert(canon(sql) == canon(scala_))
     assert(sql.count() == 10)
 
@@ -47,8 +47,8 @@ class ServingSqlSpec extends AnyFunSuite {
       "inline" -> VectorSearch.encodeIvfPq(e, model))
     for ((name, index) <- indexes; k <- Seq(1, 10, 60)) {
       val m = model.copy(rerank = math.max(model.rerank, k))
-      val multi = canon(VectorSearch.ivfPqTopKIndexed(index, e, qs, m, k,
-        boundedQ = true)).groupBy(_._1)
+      val multi = canon(VectorSearch.ivfPqTopKIndexed(index, e, qs, m, k))
+        .groupBy(_._1)
       for (qid <- qids) {
         val one = canon(VectorSearch.ivfPqTopKForQid(index, e, m, qid, k))
         assert(one.nonEmpty && one == multi.getOrElse(qid, Nil),
@@ -136,7 +136,7 @@ class ServingSqlSpec extends AnyFunSuite {
 
   test("SQL serving stays lazy: no ephemerals, composable in plain SQL") {
     installed
-    Engine.releaseEphemeral(spark)
+    spark.sharedState.cacheManager.clearCache()
     // composability: the TVF result is a normal relation — joins, CTEs,
     // aggregates over it all analyze and run
     val n = spark.sql("""
@@ -144,9 +144,9 @@ class ServingSqlSpec extends AnyFunSuite {
       SELECT COUNT(*) AS n FROM hits JOIN svq_emb ON hits.nid = svq_emb.vec_id
     """).collect().head.getLong(0)
     assert(n == 5)
-    // the boundedQ serving path registered NOTHING for later release
-    assert(Engine.releaseEphemeral(spark) == 0,
-      "a lazy serving call must not register ephemeral frames")
+    // the serving plan cached nothing
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a lazy serving call must not leave a cache entry")
   }
 
   test("non-literal or malformed arguments fail loudly") {

@@ -1,70 +1,48 @@
 package graft
 
-import org.apache.spark.sql.GraftShim
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.VectorSearch
-
-/** Session-scoped registries must not grow monotonically (r17 verdict
-  * #4): the ANN twin memo and the ephemeral-frame map both key by
-  * SparkSession, and a multi-session driver (per-client sessions, the
-  * ClusterCheck per-master arms) would otherwise accumulate dead
-  * entries for process life. Also pins the conf-scope semantics the
-  * registries exist for: the twin's conf snapshot, and the reentrancy
-  * of the optimization-time set/restore scope (r17 advice). */
+/** Pins the conf-scope semantics of Engine's scoped-conf helpers
+  * (`withoutConstraintPropagation`, `withoutAqe`): reentrancy of the
+  * set/restore scope (r17 advice), kept per session and per conf key. */
 class SessionHygieneSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("annSession registry shrinks under the close hook") {
-    val before = VectorSearch.annRegistrySize
-    val parents = (1 to 3).map(_ => GraftShim.cloneSession(spark))
-    parents.foreach(VectorSearch.annSession)
-    assert(VectorSearch.annRegistrySize == before + 3)
-    // memoized: a second lookup adds nothing
-    parents.foreach(VectorSearch.annSession)
-    assert(VectorSearch.annRegistrySize == before + 3)
-    parents.foreach(VectorSearch.evictAnnSession)
-    assert(VectorSearch.annRegistrySize == before)
-  }
-
-  test("the ANN twin is a conf SNAPSHOT: later parent changes don't reach it") {
-    val parent = GraftShim.cloneSession(spark)
-    val twin = VectorSearch.annSession(parent)
-    assert(twin.conf.get(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-      == (1 << 20).toString)
-    parent.conf.set("spark.sql.session.timeZone", "America/New_York")
-    assert(twin.conf.get("spark.sql.session.timeZone") != "America/New_York",
-      "twin conf must be isolated from post-fork parent changes")
-    VectorSearch.evictAnnSession(parent)
-  }
-
-  test("ephemeral registry empties on release and reports its size") {
-    val owner = GraftShim.cloneSession(spark)
-    val before = Engine.ephemeralSessions
-    val df = owner.range(10).persist()
-    df.count()
-    Engine.registerEphemeral(owner, df)
-    assert(Engine.ephemeralSessions == before + 1)
-    assert(Engine.releaseEphemeral(owner) == 1)
-    assert(Engine.ephemeralSessions == before)
-    assert(Engine.releaseEphemeral(owner) == 0)
-  }
+  private val cpKey = "spark.sql.constraintPropagation.enabled"
+  private val aqeKey = "spark.sql.adaptive.enabled"
+  private def cpScope(s: SparkSession)(b: => Unit): Unit =
+    Engine.withoutConstraintPropagation(s)(b)
+  private def aqeScope(s: SparkSession)(b: => Unit): Unit = Engine.withoutAqe(s)(b)
 
   test("withoutConstraintPropagation is reentrant per session") {
-    val s = GraftShim.cloneSession(spark)
-    val key = "spark.sql.constraintPropagation.enabled"
-    assert(s.conf.get(key) == "true")
-    Engine.withoutConstraintPropagation(s) {
-      assert(s.conf.get(key) == "false")
-      Engine.withoutConstraintPropagation(s) {
+    for ((key, scope) <- Seq(cpKey -> (cpScope _), aqeKey -> (aqeScope _))) {
+      val s = spark.newSession()
+      s.conf.set(key, "true")
+      scope(s) {
         assert(s.conf.get(key) == "false")
+        scope(s) {
+          assert(s.conf.get(key) == "false")
+        }
+        // the r17 hazard: the inner scope exiting must NOT restore yet
+        assert(s.conf.get(key) == "false",
+          s"$key: inner scope restored early — nesting broken")
       }
-      // the r17 hazard: the inner scope exiting must NOT restore yet
-      assert(s.conf.get(key) == "false",
-        "inner scope restored early — nesting broken")
+      assert(s.conf.get(key) == "true",
+        s"$key: outermost scope must restore the depth-0 prior")
     }
-    assert(s.conf.get(key) == "true",
-      "outermost scope must restore the depth-0 prior")
+    // scopes on different keys and different sessions do not interact
+    val s = spark.newSession()
+    val other = spark.newSession()
+    s.conf.set(cpKey, "true"); s.conf.set(aqeKey, "true")
+    other.conf.set(aqeKey, "true")
+    cpScope(s) {
+      aqeScope(s) {
+        assert(s.conf.get(cpKey) == "false" && s.conf.get(aqeKey) == "false")
+        assert(other.conf.get(aqeKey) == "true")
+      }
+      assert(s.conf.get(aqeKey) == "true" && s.conf.get(cpKey) == "false")
+    }
+    assert(s.conf.get(cpKey) == "true")
   }
 }

@@ -17,34 +17,9 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   private val shuffleRe =
     "Exchange (hashpartitioning|rangepartitioning|SinglePartition)".r
 
-  /** Count EXECUTABLE shuffle exchanges in a plan string: an
-    * InMemoryTableScan is a leaf of the serve plan — the cached plan
-    * treeString renders below it (via innerChildren, twice: once under
-    * the scan, once under the relation) is build PROVENANCE that already
-    * executed when the ephemeral cache materialized (topKPerQid's heap
-    * frames), not work this plan will do. Subtree extent is tracked by
-    * tree-art depth: a node's children render strictly deeper. */
-  private def executableShuffles(plan: String): Int = {
-    // depth = offset of the first non-tree-art character: children always
-    // render strictly deeper, INCLUDING art-less lines (AQE's
-    // "== Final Plan ==" section contents render plain-indented)
-    def nodePos(line: String): Int =
-      line.indexWhere(c => c != ' ' && c != ':' && c != '+' && c != '-') match {
-        case -1 => 0
-        case i  => i
-      }
-    var skip = -1
-    var n = 0
-    for (line <- plan.linesIterator if line.trim.nonEmpty) {
-      val pos = nodePos(line)
-      if (skip >= 0 && pos <= skip) skip = -1
-      if (skip < 0) {
-        if (line.contains("InMemoryTableScan")) skip = pos
-        else if (shuffleRe.findFirstIn(line).isDefined) n += 1
-      }
-    }
-    n
-  }
+  /** Count the shuffle exchanges in a plan string. */
+  private def shuffleCount(plan: String): Int =
+    shuffleRe.findAllIn(plan).size
 
   /** (query -> exact shuffle-exchange count in the initial plan).
     * Chosen to cover each dataflow family: scans (0), single-agg (1),
@@ -61,17 +36,9 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     "e01_hourly_event_stats" -> 1, // windowed rollup
     "e02_sessionize" -> 1,         // one user-key sort shuffle feeds lag+sum+agg
     "t10_vocab_topk" -> 1,         // token count; top-k is TakeOrdered, no extra
-    "s01_ann_bruteforce" -> 0,     // r17: the per-qid heap executes EAGERLY
-                                   // inside topKPerQid via the ANN twin
-                                   // session (raised ObjectHashAggregate
-                                   // fallback threshold, ephemeral persist),
-                                   // so the broadcast join + heap partial-agg
-                                   // shuffle run at build time and the serve
-                                   // plan is one InMemoryTableScan of the
-                                   // output-sized |Q| x k cache — 0 EXECUTABLE
-                                   // shuffles; the build's exchange is visible
-                                   // below the scan as provenance and excluded
-                                   // by executableShuffles
+    "s01_ann_bruteforce" -> 1,     // the per-qid heap's partial -> final
+                                   // hash exchange on qid; the query set
+                                   // broadcasts, so the join adds none
     "d09_decontaminate" -> 2,      // gram build + anti join
     "t21_per_source_cap" -> 2,     // the documented two-phase cap
     "t34_ngram_novelty" -> 2,      // gram df + per-doc rollup
@@ -126,19 +93,16 @@ class ShuffleBudgetSpec extends AnyFunSuite {
                                    // appear in this final serve plan
 
   test("headline plans keep their exact shuffle budgets") {
-    // budgets are defined against a COLD cache state (r17 advice):
-    // executableShuffles skips InMemoryTableScan subtrees, so a cache
-    // entry left behind by another suite in this JVM could substitute
-    // into an unrelated budget query and shift counts with test order
+    // budgets are defined against a COLD cache state (r17 advice): a
+    // cache entry left behind by another suite in this JVM could
+    // substitute into an unrelated budget query and shift its plan
     spark.catalog.clearCache()
-    Engine.releaseEphemeral(spark)
     val diffs = budgets.toSeq.sortBy(_._1).flatMap { case (name, want) =>
       val df = SparkEntry.queries(name)(spark, TestSpark.sf)
-      val got = executableShuffles(df.queryExecution.executedPlan.toString)
+      val got = shuffleCount(df.queryExecution.executedPlan.toString)
       if (got != want) Some(s"$name: $got shuffles (budget $want)") else None
     }
     assert(diffs.isEmpty, s"shuffle budgets violated:\n  ${diffs.mkString("\n  ")}")
-    Engine.releaseEphemeral(spark) // don't leak this suite's heap builds onward
   }
 
   test("q59 distributed arm keeps its exact shuffle budget") {
@@ -148,7 +112,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     // final agg = 9 exchanges, unchanged from the pre-r19 default shape
     TestSpark.distributed {
       val df = SparkEntry.queries("q59_mad_outliers")(spark, TestSpark.sf)
-      val got = executableShuffles(df.queryExecution.executedPlan.toString)
+      val got = shuffleCount(df.queryExecution.executedPlan.toString)
       assert(got == 9, s"q59 distributed arm: $got shuffles (budget 9)")
     }
   }

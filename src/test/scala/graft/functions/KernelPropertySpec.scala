@@ -257,7 +257,7 @@ class KernelPropertySpec extends AnyFunSuite {
     val agg = df.groupBy("qid")
       .agg(GraftFunctions.topKPairs(col("nid").cast("long"), col("sim"), 2).as("t"))
     import org.apache.spark.sql.catalyst.expressions.BindReferences
-    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     val rows0 = agg.select(col("qid"), explode(col("t"))).collect()
     assert(rows0.length == 3)
     // the partial-mode instance is the one fed 15M-row candidate
@@ -269,7 +269,7 @@ class KernelPropertySpec extends AnyFunSuite {
       case p => p
     }
     val partials = finalPlan.collect {
-      case p: ObjectHashAggregateExec if p.aggregateExpressions.exists(
+      case p: HashAggregateExec if p.aggregateExpressions.exists(
           _.mode == org.apache.spark.sql.catalyst.expressions.aggregate.Partial) =>
         p.aggregateExpressions.map(ae =>
           BindReferences.bindReference(

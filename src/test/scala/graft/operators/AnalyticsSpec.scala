@@ -76,11 +76,34 @@ class AnalyticsSpec extends AnyFunSuite {
     // not — exact_p50 is decimal-exact and the booleans hold at any
     // partitioning by the published guarantee, so the driver's hash
     // stays stable whatever parallelism it runs at
+    //
+    // Under Engine.prepare's AQE confs Spark sizes every shuffle from
+    // initialPartitionNum and ignores spark.sql.shuffle.partitions, so
+    // each run also turns coalescing off, and checks on the executed
+    // plan that its hash shuffles really use `parts` partitions. The
+    // confs are set after the frame is built: every Engine.table call
+    // re-applies prepare's AQE confs, and physical planning happens at
+    // the action
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    object Aqe extends AdaptiveSparkPlanHelper
     def run(parts: Int): Seq[String] = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try graft.SparkEntry.queries("a02_approx_percentiles")(spark, graft.TestSpark.sf)
-        .collect().map(_.toString).sorted.toSeq
-      finally spark.conf.unset("spark.sql.shuffle.partitions")
+      val confs = Map("spark.sql.shuffle.partitions" -> parts.toString,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+      val df = graft.SparkEntry.queries("a02_approx_percentiles")(spark, graft.TestSpark.sf)
+      val prior = confs.keys.map(k => k -> spark.conf.get(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val out = df.collect().map(_.toString).sorted.toSeq
+        val hashParts = Aqe.collect(df.queryExecution.executedPlan) {
+          case s: ShuffleExchangeExec if s.outputPartitioning.isInstanceOf[HashPartitioning] =>
+            s.outputPartitioning.numPartitions
+        }
+        assert(hashParts.nonEmpty && hashParts.forall(_ == parts),
+          s"a02 at $parts partitions planned hash shuffles of $hashParts")
+        out
+      } finally prior.foreach { case (k, v) => spark.conf.set(k, v) }
     }
     assert(run(3) == run(17))
   }

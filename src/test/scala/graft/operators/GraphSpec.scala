@@ -234,7 +234,6 @@ class GraphSpec extends AnyFunSuite {
       == seeds.collect().map(_.getLong(0)).toSet)
     // and the parent session conf is restored after the loop
     assert(spark.conf.get("spark.sql.constraintPropagation.enabled") == "true")
-    graft.Engine.releaseEphemeral(spark)
   }
 
   test("driver-local and distributed regimes agree on every one-shot operator") {

@@ -84,9 +84,7 @@ class MmrKernelSpec extends AnyFunSuite {
       val queries = corpus.filter(col("vec_id") % 5 === lit(2))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val got = rows(VectorSearch.mmrRerank(corpus, queries, k, kCand))
-      Engine.releaseEphemeral(spark)
       val want = rows(loopForm(corpus, queries, k, kCand))
-      Engine.releaseEphemeral(spark)
       assert(got == want, s"trial=$trial n=$n k=$k kCand=$kCand")
     }
   }
@@ -96,9 +94,7 @@ class MmrKernelSpec extends AnyFunSuite {
     val q = e.filter(col("vec_id") % 20 === lit(3))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val got = rows(VectorSearch.mmrRerank(e, q, k = 4, kCand = 8))
-    Engine.releaseEphemeral(spark)
     val want = rows(loopForm(e, q, k = 4, kCand = 8))
-    Engine.releaseEphemeral(spark)
     assert(got.nonEmpty && got == want)
   }
 }

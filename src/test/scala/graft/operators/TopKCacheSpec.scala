@@ -5,50 +5,26 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Engine, SparkEntry, TestSpark}
 
-/** Pins the r17 fix for topKPerQid's leaked cut frame (r16 verdict
-  * "What's wrong" #2 — the q69 r14 leak class, closed the same way):
-  * the eager heap materialization is an EPHEMERAL cache entry registered
-  * with Engine.registerEphemeral, released by the query lifecycle
-  * (Verify/Bench per query), never a localCheckpoint pinned for session
-  * life and never a reliable-mode DURABLE checkpoint write per ANN
-  * query. Also pins the r16 hazard-#3 fix: the raised
-  * ObjectHashAggregate fallback threshold lives on the ANN twin session
-  * only — the parent session's protective default is never toggled. */
+/** topKPerQid's heap runs inside the consumer's plan (HashAggregateExec
+  * over the fixed-width TopKPairsAgg buffer): no call leaves a cache
+  * entry behind, never pays a reliable-mode DURABLE checkpoint write,
+  * and never touches the session's ObjectHashAggregate fallback
+  * threshold. */
 class TopKCacheSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("s02's heap frames are registered ephemerals: released on the query lifecycle, cold on repeat") {
-    spark.sharedState.cacheManager.clearCache()
-    Engine.releaseEphemeral(spark) // drop stale registrations from other suites
-    val r1 = SparkEntry.queries("s02_ann_lsh")(spark, TestSpark.sf)
-      .collect().map(_.toSeq).toSet
-    // the builder materialized eagerly through the twin session — the
-    // frame is alive (the consumer above read it) and REGISTERED
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "s02's heap frame should be cached until the lifecycle releases it")
-    assert(Engine.releaseEphemeral(spark) >= 1,
-      "s02's heap frame was not registered for release")
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "release left a cache entry alive — the r16 leak class")
-    // a second invocation recomputes from scratch and agrees exactly
-    val r2 = SparkEntry.queries("s02_ann_lsh")(spark, TestSpark.sf)
-      .collect().map(_.toSeq).toSet
-    assert(Engine.releaseEphemeral(spark) >= 1)
-    assert(spark.sharedState.cacheManager.isEmpty)
-    assert(r1 == r2 && r1.nonEmpty)
-  }
-
-  test("boundedQ serving path: lazy plan, no cache entry, no registration") {
-    spark.sharedState.cacheManager.clearCache()
-    Engine.releaseEphemeral(spark)
-    val e = Engine.table(spark, TestSpark.sf, "embeddings")
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val top = VectorSearch.bruteForceTopK(e, q, 10, boundedQ = true)
-    assert(top.collect().length == 10)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "the boundedQ serving path must not cache")
-    assert(Engine.releaseEphemeral(spark) == 0)
+  test("s01, s02 and s13 leave no cache entry") {
+    for (name <- Seq("s01_ann_bruteforce", "s02_ann_lsh", "s13_mmr_rerank")) {
+      spark.sharedState.cacheManager.clearCache()
+      val r1 = SparkEntry.queries(name)(spark, TestSpark.sf)
+        .collect().map(_.toSeq).toSet
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name left a cache entry behind — the r16 leak class")
+      val r2 = SparkEntry.queries(name)(spark, TestSpark.sf)
+        .collect().map(_.toSeq).toSet
+      assert(spark.sharedState.cacheManager.isEmpty, name)
+      assert(r1 == r2 && r1.nonEmpty, name)
+    }
   }
 
   test("reliable mode: an ANN query pays NO durable checkpoint write and no everyK counter bump") {
@@ -62,7 +38,7 @@ class TopKCacheSpec extends AnyFunSuite {
       val n = VectorSearch.bruteForceTopK(e, q, 10).count()
       assert(n > 0)
       // r16 paid a ReliableCheckpointRDD write (object-store RTT class)
-      // per ANN query here; the ephemeral persist must not
+      // per ANN query here; the in-plan heap must not
       def rddDirs(f: java.io.File): Seq[String] =
         if (!f.isDirectory) Nil
         else f.listFiles().toSeq.flatMap(c =>
@@ -72,8 +48,6 @@ class TopKCacheSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("graft.checkpoint.mode")
       spark.conf.unset("graft.checkpoint.dir")
-      Engine.releaseEphemeral(spark)
-      spark.sharedState.cacheManager.clearCache()
     }
   }
 
@@ -86,9 +60,5 @@ class TopKCacheSpec extends AnyFunSuite {
     VectorSearch.bruteForceTopK(e, q, 10).count()
     assert(spark.conf.get(key) == before,
       "protected path leaked a conf change onto the parent session")
-    // and the twin session really carries the raise (the s03 sf100 fix)
-    assert(VectorSearch.annSession(spark).conf.get(key) == (1 << 20).toString)
-    Engine.releaseEphemeral(spark)
-    spark.sharedState.cacheManager.clearCache()
   }
 }

@@ -61,7 +61,8 @@ class VectorSearchSpec extends AnyFunSuite {
       // bounded-heap aggregate runs partial (per-partition) before the
       // qid exchange: each partition ships <= k pairs per query
       assert(p.contains("graft_topk_pairs"), "heap aggregate missing")
-      assert(p.contains("ObjectHashAggregate"), "partial agg missing")
+      assert(p.contains("HashAggregate") && !p.contains("ObjectHashAggregate"),
+        "partial agg missing or not in HashAggregateExec")
     }
   }
 

@@ -790,7 +790,7 @@ class WireServerSpec extends AnyFunSuite {
         .selectExpr("vec_id AS qid", "embedding AS qv")
       val scalaRows = graft.operators.VectorSearch
         .ivfPqTopKIndexed(spark.table("wsrv_ivf"), e, q,
-          model.copy(rerank = math.max(model.rerank, 10)), 10, boundedQ = true)
+          model.copy(rerank = math.max(model.rerank, 10)), 10)
         .orderBy(org.apache.spark.sql.functions.col("sim").desc,
           org.apache.spark.sql.functions.col("nid"))
         .collect().map(r => s"${r.getLong(0)}|${r.getLong(1)}|${r.getDouble(2)}")
@@ -824,33 +824,6 @@ class WireServerSpec extends AnyFunSuite {
       assert(c.errFields(c.drain()._1)('C') == "22023")
       c.query("SELECT 7 AS x")
       assert(c.dataRows(c.drain()._1) == Seq(Seq("7")))
-      c.terminate()
-    } finally srv.close()
-  }
-
-  test("the wire serving loop releases ephemerals per statement") {
-    // the Engine.scala serving-lifecycle contract, applied to the wire
-    // loop (r17 verdict #1): any frame registered against the server's
-    // session during a statement is unpersisted once that statement's
-    // result is written — a wire client can never accumulate per-query
-    // cache entries (the r14/r16 leak class)
-    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
-    try {
-      val c = new Client(srv.boundPort)
-      c.startup(); c.drain()
-      // simulate an operator registering an ephemeral mid-statement:
-      // the release must be driven by the LOOP, not by the operator
-      val df = spark.range(16).persist()
-      df.count()
-      graft.Engine.registerEphemeral(spark, df)
-      assert(df.storageLevel.useMemory)
-      c.query("SELECT 1 AS x")
-      val (msgs, _) = c.drain()
-      assert(c.dataRows(msgs) == Seq(Seq("1")))
-      assert(!df.storageLevel.useMemory,
-        "per-statement release must unpersist the registered frame")
-      assert(graft.Engine.releaseEphemeral(spark) == 0,
-        "no ephemeral may survive the statement boundary")
       c.terminate()
     } finally srv.close()
   }
