@@ -1,48 +1,27 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions._
+import graft.functions.GraftFunctions
 
-/** Cluster deployment hook: `--conf spark.sql.extensions=graft.GraftExtensions`
-  * injects the graft function surface into every session of the
-  * application — the static counterpart of `GraftFunctions.register`
-  * (which Engine.prepare applies to already-created sessions). This is
-  * the fmgr/catalog-bootstrap analogue at deploy time (reference
-  * src/bin/initdb wires functions into the catalog once; a Spark cluster
-  * wires them via extensions).
+/** The graft function surface as a session extension: the scalar
+  * functions (`GraftFunctions.sqlFunctions`) and the index-served table
+  * functions (`Serving.tableFunctions`). `Engine.session` builds every
+  * session with it; a cluster deployment passes
+  * `--conf spark.sql.extensions=graft.GraftExtensions` (plus
+  * `Engine.SessionDefaults`) so every session of the application has the
+  * same surface. This is the fmgr/catalog-bootstrap analogue (reference
+  * src/bin/initdb wires functions into the catalog once; a Spark
+  * application wires them via extensions).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_fnv64"),
-      info("graft_fnv64", "graft_fnv64(str) - deterministic FNV-1a 64-bit hash"),
-      (es: Seq[Expression]) => Fnv64(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      info("graft_minhash", "graft_minhash(tokens, n) - minhash signature"),
-      (es: Seq[Expression]) => MinHashSig(es.head, es.lift(1) match {
-        case Some(org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _)) => v
-        case _ => 64
-      })))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "graft_simhash(tokens) - 64-bit simhash"),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - dense vector dot product"),
-      (es: Seq[Expression]) => ArrayDot(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      info("graft_cosine", "graft_cosine(a, b) - cosine similarity"),
-      (es: Seq[Expression]) => CosineSim(es(0), es(1))))
+    GraftFunctions.sqlFunctions.foreach(ext.injectFunction)
     // The SQL-callable serving surface (index-served ANN / BM25 /
     // hybrid RRF table functions over the `serve_*` catalog tables
     // written by Serving.buildIndexes) — builders self-configure from
     // catalog state at call time, so static injection needs no driver
-    // object. `Serving.install` is the runtime twin for live sessions.
+    // object. `Serving.install` is the runtime twin for other prefixes.
     Serving.tableFunctions(Serving.DefaultPrefix).foreach(ext.injectTableFunction)
   }
 }

@@ -25,7 +25,6 @@ import graft.sources.Copy
   * protocol — the documented divergence of SURVEY §7.3.
   */
 class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) {
-  Engine.prepare(spark)
   dataDir.foreach(Engine.registerViews(spark, _))
 
   /** Identity in the process-wide lock table (lmgr's se_lock_info

@@ -31,7 +31,11 @@ object Layout {
     * `partitionCols`). */
   def writePartitioned(df: DataFrame, table: String,
       partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    savePartitioned(df, table, partitionCols, SaveMode.Overwrite)
+
+  private def savePartitioned(df: DataFrame, table: String,
+      partitionCols: Seq[String], mode: SaveMode): Unit =
+    df.write.mode(mode)
       .partitionBy(partitionCols: _*)
       .format("parquet")
       .saveAsTable(table)
@@ -60,10 +64,7 @@ object Layout {
     * silently re-cell existing entries). New files land only in the
     * partitions the new rows hash to; existing files are untouched. */
   def appendIvfIndex(indexRows: DataFrame, table: String): Unit =
-    indexRows.write.mode(SaveMode.Append)
-      .partitionBy("cid")
-      .format("parquet")
-      .saveAsTable(table)
+    savePartitioned(indexRows, table, Seq("cid"), SaveMode.Append)
 
   /** Persist an LSH index (`VectorSearch.encodeLsh` rows) partitioned
     * by the combined bucket code: probed buckets become partition
@@ -120,13 +121,8 @@ object Layout {
     * IDENTICAL to what a direct scan would estimate (asserted in
     * LayoutSpec), not a second approximation. */
   def writeSketchTable(df: DataFrame, table: String,
-      groupCols: Seq[String], sketchCols: Seq[String]): Unit = {
-    val aggs = sketchCols.map(c =>
-      expr(s"hll_sketch_agg($c)").as(s"hll_$c")) :+ count(lit(1)).as("n_rows")
-    df.groupBy(groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
-  }
+      groupCols: Seq[String], sketchCols: Seq[String]): Unit =
+    saveSketches(df, table, groupCols, sketchCols, SaveMode.Overwrite)
 
   /** Delta-append newly-arrived rows' sketches: a batch aggregates to
     * its own sketch rows and appends; the query-time rollup merges
@@ -134,26 +130,29 @@ object Layout {
     * associative and commutative), so incremental maintenance needs no
     * read-modify-write of existing rows. */
   def appendSketchTable(df: DataFrame, table: String,
-      groupCols: Seq[String], sketchCols: Seq[String]): Unit = {
-    val aggs = sketchCols.map(c =>
-      expr(s"hll_sketch_agg($c)").as(s"hll_$c")) :+ count(lit(1)).as("n_rows")
+      groupCols: Seq[String], sketchCols: Seq[String]): Unit =
+    saveSketches(df, table, groupCols, sketchCols, SaveMode.Append)
+
+  private def saveSketches(df: DataFrame, table: String,
+      groupCols: Seq[String], sketchCols: Seq[String], mode: SaveMode): Unit =
+    saveGroups(df, table, groupCols, sketchCols.map(c =>
+      expr(s"hll_sketch_agg($c)").as(s"hll_$c")), mode)
+
+  /** Aggregate `df` per `groupCols` (`aggs` plus the exact row count
+    * `n_rows`) and save the rows as parquet table `table`. */
+  private def saveGroups(df: DataFrame, table: String, groupCols: Seq[String],
+      aggs: Seq[Column], mode: SaveMode): Unit = {
+    val withCount = aggs :+ count(lit(1)).as("n_rows")
     df.groupBy(groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .write.mode(SaveMode.Append).format("parquet").saveAsTable(table)
+      .agg(withCount.head, withCount.tail: _*)
+      .write.mode(mode).format("parquet").saveAsTable(table)
   }
 
   /** Delta-append moments rows (exact decimal sums add associatively —
     * same incremental discipline as [[appendSketchTable]]). */
   def appendMomentsTable(df: DataFrame, table: String,
-      groupCols: Seq[String], momentCols: Seq[String]): Unit = {
-    val aggs = momentCols.flatMap(c => Seq(
-      sum(Engine.exactDec(col(c))).as(s"s_$c"),
-      sum(Engine.exactDec(col(c) * col(c))).as(s"ss_$c"))) :+
-      count(lit(1)).as("n_rows")
-    df.groupBy(groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .write.mode(SaveMode.Append).format("parquet").saveAsTable(table)
-  }
+      groupCols: Seq[String], momentCols: Seq[String]): Unit =
+    saveMoments(df, table, groupCols, momentCols, SaveMode.Append)
 
   /** Roll a sketch table up to a coarser grain: merge sketches with
     * hll_union_agg, emit estimates + summed exact counts. */
@@ -174,15 +173,14 @@ object Layout {
     * either level. This is how per-day stats tables serve per-month
     * questions at 100 TB without rescanning the lake. */
   def writeMomentsTable(df: DataFrame, table: String,
-      groupCols: Seq[String], momentCols: Seq[String]): Unit = {
-    val aggs = momentCols.flatMap(c => Seq(
+      groupCols: Seq[String], momentCols: Seq[String]): Unit =
+    saveMoments(df, table, groupCols, momentCols, SaveMode.Overwrite)
+
+  private def saveMoments(df: DataFrame, table: String,
+      groupCols: Seq[String], momentCols: Seq[String], mode: SaveMode): Unit =
+    saveGroups(df, table, groupCols, momentCols.flatMap(c => Seq(
       sum(Engine.exactDec(col(c))).as(s"s_$c"),
-      sum(Engine.exactDec(col(c) * col(c))).as(s"ss_$c"))) :+
-      count(lit(1)).as("n_rows")
-    df.groupBy(groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
-  }
+      sum(Engine.exactDec(col(c) * col(c))).as(s"ss_$c"))), mode)
 
   /** Roll a moments table to a coarser grain and emit mean / var_samp /
     * stddev_samp per tracked column — the q55 moment formulas over the
@@ -218,27 +216,20 @@ object Layout {
     * (~1.65% at the default k), which is what LayoutSpec asserts
     * against exact quantiles. */
   def writeQuantileTable(df: DataFrame, table: String,
-      groupCols: Seq[String], quantCols: Seq[String]): Unit = {
-    val aggs = quantCols.map(c =>
-      expr(s"kll_sketch_agg_double(CAST($c AS DOUBLE))").as(s"kll_$c")) :+
-      count(lit(1)).as("n_rows")
-    df.groupBy(groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
-  }
+      groupCols: Seq[String], quantCols: Seq[String]): Unit =
+    saveQuantiles(df, table, groupCols, quantCols, SaveMode.Overwrite)
 
   /** Delta-append quantile sketches (KLL merge is associative and
     * commutative up to its randomized compaction — per-batch rows roll
     * up exactly like per-grain rows, within the rank-error bound). */
   def appendQuantileTable(df: DataFrame, table: String,
-      groupCols: Seq[String], quantCols: Seq[String]): Unit = {
-    val aggs = quantCols.map(c =>
-      expr(s"kll_sketch_agg_double(CAST($c AS DOUBLE))").as(s"kll_$c")) :+
-      count(lit(1)).as("n_rows")
-    df.groupBy(groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .write.mode(SaveMode.Append).format("parquet").saveAsTable(table)
-  }
+      groupCols: Seq[String], quantCols: Seq[String]): Unit =
+    saveQuantiles(df, table, groupCols, quantCols, SaveMode.Append)
+
+  private def saveQuantiles(df: DataFrame, table: String,
+      groupCols: Seq[String], quantCols: Seq[String], mode: SaveMode): Unit =
+    saveGroups(df, table, groupCols, quantCols.map(c =>
+      expr(s"kll_sketch_agg_double(CAST($c AS DOUBLE))").as(s"kll_$c")), mode)
 
   /** Roll a quantile-sketch table up to a coarser grain: merge each
     * column's sketches, emit the requested quantile estimates + the

@@ -41,10 +41,11 @@ import graft.operators.{TextPipeline, VectorSearch}
   * equal).
   *
   * Deployment shape: [[buildIndexes]] persists the three index tables
-  * plus the PQ model (encode once); [[install]] registers the functions
-  * on a live session, and `GraftExtensions` injects the same builders
-  * statically (`--conf spark.sql.extensions=graft.GraftExtensions`) so
-  * every session of a cluster application has them. The model table is
+  * plus the PQ model (encode once); `GraftExtensions` injects the
+  * functions over the default prefix into every session `Engine.session`
+  * builds (and, as `--conf spark.sql.extensions=graft.GraftExtensions`,
+  * into every session of a cluster application); [[install]] registers
+  * the same builders on a live session, for any prefix. The model table is
   * what makes static injection possible: builders self-configure from
   * catalog state at call time instead of a captured driver object.
   */

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, JavaCode, TrueLiteral}
@@ -1714,8 +1714,9 @@ case class MmrSelect(child: Expression, k: Int)
 }
 
 /** Registry — the fmgr analogue (reference src/utils/fmgr.rs:44-53 wires 6
-  * functions by oid; we wire ours by name into Catalyst's FunctionRegistry
-  * so both the Column API (call_function) and plain SQL can use them).
+  * functions by oid; we wire ours by name into every session's
+  * FunctionRegistry through [[sqlFunctions]], so both the Column API
+  * (call_function) and plain SQL can use them).
   */
 object GraftFunctions {
   private def lit2int(e: Expression, default: Int): Int = e match {
@@ -1858,43 +1859,72 @@ object GraftFunctions {
     }
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_fnv64", es => Fnv64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_tokens", es => Tokens(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_token_counts",
-      es => TokenCounts(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      es => Shingles(es.head, if (es.size > 1) lit2int(es(1), 3) else 3), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      es => MinHashSig(es.head, if (es.size > 1) lit2int(es(1), 64) else 64), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash", es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_sig_match",
-      es => SigMatchCount(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bands",
-      es => BandHashes(es.head, if (es.size > 1) lit2int(es(1), 16) else 16), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot", es => ArrayDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine", es => CosineSim(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_max_shingle_count",
-      es => MaxShingleCount(es.head, if (es.size > 1) lit2int(es(1), 1) else 1), "built-in")
-    reg.createOrReplaceTempFunction("graft_interleave_bits",
-      es => InterleaveBits(es), "built-in")
+  private def fn(name: String, usage: String = "")(builder: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in"),
+      builder)
 
+  /** The SQL function surface, one (name, info, builder) per function —
+    * the shape `SparkSessionExtensions.injectFunction` takes.
+    * `GraftExtensions` injects the list into every session that
+    * `Engine.session` builds and, deployed as `spark.sql.extensions`,
+    * into every session of a cluster application. */
+  val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("graft_fnv64", "graft_fnv64(str) - deterministic FNV-1a 64-bit hash")(
+      es => Fnv64(es.head)),
+    fn("graft_tokens", "graft_tokens(text) - lower-cased word tokens")(es => Tokens(es.head)),
+    fn("graft_token_counts")(es => TokenCounts(es.head)),
+    fn("graft_shingles")(es => Shingles(es.head, if (es.size > 1) lit2int(es(1), 3) else 3)),
+    fn("graft_minhash", "graft_minhash(tokens, n) - minhash signature")(
+      es => MinHashSig(es.head, if (es.size > 1) lit2int(es(1), 64) else 64)),
+    fn("graft_simhash", "graft_simhash(tokens) - 64-bit simhash")(es => SimHash64(es.head)),
+    fn("graft_sig_match")(es => SigMatchCount(es(0), es(1))),
+    fn("graft_bands")(es => BandHashes(es.head, if (es.size > 1) lit2int(es(1), 16) else 16)),
+    fn("graft_dot", "graft_dot(a, b) - dense vector dot product")(
+      es => ArrayDot(es(0), es(1))),
+    fn("graft_cosine", "graft_cosine(a, b) - cosine similarity")(
+      es => CosineSim(es(0), es(1))),
+    fn("graft_max_shingle_count")(
+      es => MaxShingleCount(es.head, if (es.size > 1) lit2int(es(1), 1) else 1)),
+    fn("graft_interleave_bits")(es => InterleaveBits(es)),
+    fn("dsqrt")(es => Sqrt(Cast(es.head, DoubleType))),
+    fn("dcbrt")(es => Cbrt(Cast(es.head, DoubleType))),
+    fn("dpow")(es => Pow(Cast(es(0), DoubleType), Cast(es(1), DoubleType))),
+    fn("byteacat")(es => Concat(Seq(Cast(es(0), BinaryType), Cast(es(1), BinaryType)))),
+    fn("boolout")(es => If(Cast(es.head, BooleanType), Literal("t"), Literal("f"))),
+    fn("byteain") { es =>
+      val s = Cast(es.head, StringType)
+      If(StartsWith(s, Literal("\\x")),
+        Unhex(Substring(s, Literal(3), Literal(Int.MaxValue))),
+        Cast(s, BinaryType)) // PG escape-format fallback: raw utf8 bytes
+    },
+    fn("byteaout")(es => Concat(Seq(Literal("\\x"), Lower(Hex(Cast(es.head, BinaryType)))))),
+    fn("varchartypmodin")( // '(n)' -> n + VARHDRSZ
+      es => Add(Cast(es.head, IntegerType), Literal(4))),
+    fn("varchartypmodout")( // typmod -> '(n)'
+      es => Concat(Seq(Literal("("),
+        Cast(Subtract(Cast(es.head, IntegerType), Literal(4)), StringType),
+        Literal(")")))),
+    fn("numeric_fac")(es => Factorial(Cast(es.head, IntegerType))),
+    fn("bytealike")(es => Like(Cast(es(0), StringType), Cast(es(1), StringType), '\\')),
+    fn("byteanlike")(
+      es => Not(Like(Cast(es(0), StringType), Cast(es(1), StringType), '\\')))
+  ) ++
     // The reference's declared arithmetic proc matrix by catalog name
     // (int4pl/int24mul/float48div/..., initdb/main.rs:691-894) — the 6
     // procs its fmgr actually wires (src/utils/fmgr.rs:44-53) plus the
     // full declared envelope, all SQL-callable with PG semantics (ANSI
     // overflow errors, truncating integer division):
-    arithProcs.foreach { case (name, _, _, resOid) =>
+    arithProcs.map { case (name, _, _, resOid) =>
       val result = oidToType(resOid)
-      reg.createOrReplaceTempFunction(name,
-        es => arithExpr(name, result, es), "built-in")
-    }
-    cmpProcs.foreach { case (name, _, _, _) =>
+      fn(name)(es => arithExpr(name, result, es))
+    } ++
+    cmpProcs.map { case (name, _, _, _) =>
       val op = name.replaceAll("^(int|float|bool|bytea)[0-9]*", "")
       val wide = if (name.startsWith("bytea") || name.startsWith("bool")) None
         else Some(oidToType(widerOid(name)))
-      reg.createOrReplaceTempFunction(name, es => {
+      fn(name) { es =>
         val (l, r) = wide match {
           case Some(t) => (Cast(es(0), t), Cast(es(1), t))
           case None => (es(0), es(1))
@@ -1907,18 +1937,18 @@ object GraftFunctions {
           case "le" => LessThanOrEqual(l, r)
           case "ge" => GreaterThanOrEqual(l, r)
         }
-      }, "built-in")
-    }
-    unaryProcs.foreach { case (name, argOid, _) =>
+      }
+    } ++
+    unaryProcs.map { case (name, argOid, _) =>
       val t = oidToType(argOid)
-      reg.createOrReplaceTempFunction(name, es => {
+      fn(name) { es =>
         val a = Cast(es.head, t)
         if (name.endsWith("um")) UnaryMinus(a) else Abs(a)
-      }, "built-in")
-    }
-    bitProcs.foreach { case (name, lOid, _, _) =>
+      }
+    } ++
+    bitProcs.map { case (name, lOid, _, _) =>
       val t = oidToType(lOid)
-      reg.createOrReplaceTempFunction(name, es => {
+      fn(name) { es =>
         val a = Cast(es.head, t)
         name.replaceAll("^int[0-9]", "") match {
           case "and" => BitwiseAnd(a, Cast(es(1), t))
@@ -1933,68 +1963,30 @@ object GraftFunctions {
             Cast(a, if (t == LongType) LongType else IntegerType),
             Cast(es(1), IntegerType)), t)
         }
-      }, "built-in")
-    }
-    reg.createOrReplaceTempFunction("dsqrt",
-      es => Sqrt(Cast(es.head, DoubleType)), "built-in")
-    reg.createOrReplaceTempFunction("dcbrt",
-      es => Cbrt(Cast(es.head, DoubleType)), "built-in")
-    reg.createOrReplaceTempFunction("dpow",
-      es => Pow(Cast(es(0), DoubleType), Cast(es(1), DoubleType)), "built-in")
-    reg.createOrReplaceTempFunction("byteacat",
-      es => Concat(Seq(Cast(es(0), BinaryType), Cast(es(1), BinaryType))), "built-in")
+      }
+    } ++
     // % — PG mod truncates with the dividend's sign, same as Remainder
-    modProcs.foreach { case (name, lOid, _, _) =>
+    modProcs.map { case (name, lOid, _, _) =>
       val t = oidToType(lOid)
-      reg.createOrReplaceTempFunction(name,
-        es => Cast(Remainder(Cast(es(0), t), Cast(es(1), t)), t), "built-in")
-    }
+      fn(name)(es => Cast(Remainder(Cast(es(0), t), Cast(es(1), t)), t))
+    } ++
     // unary + — identity at the declared type
-    upProcs.foreach { case (name, argOid, _) =>
+    upProcs.map { case (name, argOid, _) =>
       val t = oidToType(argOid)
-      reg.createOrReplaceTempFunction(name, es => Cast(es.head, t), "built-in")
-    }
+      fn(name)(es => Cast(es.head, t))
+    } ++
     // typinput/typoutput surface: text form <-> value, PG conventions
     // (bool t/f, bytea \x hex, varchar typmod = n + 4 header bytes)
-    val castIn: Seq[(String, DataType)] = Seq(
-      ("int2in", ShortType), ("int4in", IntegerType), ("int8in", LongType),
+    Seq(("int2in", ShortType), ("int4in", IntegerType), ("int8in", LongType),
       ("float4in", FloatType), ("float8in", DoubleType),
-      ("boolin", BooleanType), ("varcharin", StringType))
-    castIn.foreach { case (name, t) =>
-      reg.createOrReplaceTempFunction(name, es => Cast(es.head, t), "built-in")
-    }
-    val castOut: Seq[(String, DataType)] = Seq(
-      ("int2out", ShortType), ("int4out", IntegerType), ("int8out", LongType),
+      ("boolin", BooleanType), ("varcharin", StringType)).map { case (name, t) =>
+      fn(name)(es => Cast(es.head, t))
+    } ++
+    Seq(("int2out", ShortType), ("int4out", IntegerType), ("int8out", LongType),
       ("float4out", FloatType), ("float8out", DoubleType),
-      ("varcharout", StringType))
-    castOut.foreach { case (name, t) =>
-      reg.createOrReplaceTempFunction(name,
-        es => Cast(Cast(es.head, t), StringType), "built-in")
+      ("varcharout", StringType)).map { case (name, t) =>
+      fn(name)(es => Cast(Cast(es.head, t), StringType))
     }
-    reg.createOrReplaceTempFunction("boolout",
-      es => If(Cast(es.head, BooleanType), Literal("t"), Literal("f")), "built-in")
-    reg.createOrReplaceTempFunction("byteain", es => {
-      val s = Cast(es.head, StringType)
-      If(StartsWith(s, Literal("\\x")),
-        Unhex(Substring(s, Literal(3), Literal(Int.MaxValue))),
-        Cast(s, BinaryType)) // PG escape-format fallback: raw utf8 bytes
-    }, "built-in")
-    reg.createOrReplaceTempFunction("byteaout",
-      es => Concat(Seq(Literal("\\x"),
-        Lower(Hex(Cast(es.head, BinaryType))))), "built-in")
-    reg.createOrReplaceTempFunction("varchartypmodin", // '(n)' -> n + VARHDRSZ
-      es => Add(Cast(es.head, IntegerType), Literal(4)), "built-in")
-    reg.createOrReplaceTempFunction("varchartypmodout", // typmod -> '(n)'
-      es => Concat(Seq(Literal("("),
-        Cast(Subtract(Cast(es.head, IntegerType), Literal(4)), StringType),
-        Literal(")"))), "built-in")
-    reg.createOrReplaceTempFunction("numeric_fac",
-      es => Factorial(Cast(es.head, IntegerType)), "built-in")
-    reg.createOrReplaceTempFunction("bytealike",
-      es => Like(Cast(es(0), StringType), Cast(es(1), StringType), '\\'), "built-in")
-    reg.createOrReplaceTempFunction("byteanlike",
-      es => Not(Like(Cast(es(0), StringType), Cast(es(1), StringType), '\\')), "built-in")
-  }
 
   /** Wider of the two operand types encoded in a mixed-width proc name
     * (int24lt -> int4; float48ge -> float8; same-width -> that width). */

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * implemented int4 kernels).
   *
   * Philosophy (SURVEY §2.8, §4.3): everything here compiles to native
-  * codegen'd Catalyst expressions — no UDFs. ANSI mode (Engine.prepare)
+  * codegen'd Catalyst expressions — no UDFs. ANSI mode (Engine.SessionDefaults)
   * supplies PG overflow/cast-error behavior (adt.rs:29-34: int4pl must
   * error on overflow). Only the few places where Spark and PG semantics
   * differ get a wrapper.

@@ -297,14 +297,6 @@ object Dedup {
     * Returns (id, cluster, is_survivor): cluster = min id reachable,
     * survivor = the row whose id equals its cluster id.
     */
-  /** Release the blocks behind an (eager) localCheckpoint'd frame.
-    * Each loop round supersedes the previous round's checkpoint; without
-    * an explicit unpersist the blocks linger until the ContextCleaner
-    * happens to GC them, carrying storage memory across queries in a
-    * long-lived session. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    Engine.releaseCheckpoint(df)
-
   def nearDupClusters(pairs: DataFrame, nodes: DataFrame): DataFrame =
     componentsByMinLabel(pairs, nodes)
 
@@ -354,7 +346,7 @@ object Dedup {
     lazy val graphRows = p.count()
     if (Engine.driverLocal(pl, DriverMaxEdges)(graphRows)) {
       val edgeRows = p.collect()
-      releaseCheckpoint(p)
+      Engine.releaseCheckpoint(p)
       // ordering must agree with the distributed arm's min()/least():
       // longs compare numerically, strings as UTF-8 bytes (see Scaladoc)
       val lt: (Any, Any) => Boolean = idType match {
@@ -399,7 +391,7 @@ object Dedup {
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst")))
       .repartition(nParts, col("src")).transform(Engine.cut)
-    releaseCheckpoint(p) // edges (eagerly materialized) supersedes p
+    Engine.releaseCheckpoint(p) // edges (eagerly materialized) supersedes p
     // iterate ONLY over nodes that occur in the graph: an isolated node
     // can never adopt a neighbor's label, so dragging the full corpus
     // through every round just re-shuffles rows that cannot change. At
@@ -409,7 +401,7 @@ object Dedup {
     // single-member clusters. The symmetric edge list lists every graph
     // node as a src, so distinct(src) IS the graph's node set.
     // `labelsCp` is always the checkpointed frame itself (its logical
-    // plan is the LogicalRDD), so releaseCheckpoint can find the
+    // plan is the LogicalRDD), so Engine.releaseCheckpoint can find the
     // persisted RDD; `labels` is the (id, lbl) view over it
     var labelsCp = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
@@ -435,11 +427,11 @@ object Dedup {
             coalesce(col("hlbl"), col("old"))).as("lbl"))
         .transform(Engine.cut)
       changed = next.filter(col("lbl") =!= col("old")).count()
-      releaseCheckpoint(labelsCp) // next (eagerly materialized) supersedes it
+      Engine.releaseCheckpoint(labelsCp) // next (eagerly materialized) supersedes it
       labelsCp = next
       labels = next.select("id", "lbl")
     }
-    releaseCheckpoint(edges) // the fixpoint no longer needs the edge list
+    Engine.releaseCheckpoint(edges) // the fixpoint no longer needs the edge list
     // the final labels checkpoint stays persisted: the returned frame
     // reads from it. It holds one (id, lbl) row per GRAPH node (small)
     // and is released by ContextCleaner when the frame is GC'd.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Manual skew mitigation for the cases AQE cannot fix.
   *
-  * AQE's skew-join split (enabled in Engine.prepare) handles skewed
+  * AQE's skew-join split (on in Engine.SessionDefaults) handles skewed
   * SHUFFLE partitions, but a single hot KEY joined against a
   * non-broadcastable right side still serializes on one task's probe
   * side — and when the hot key matches on BOTH sides, the problem is

@@ -1563,7 +1563,7 @@ object VectorSearch {
     // partition count. One collect_list groupBy is now the only
     // exchange past candidate generation; per-group state is
     // kCand·(dim+2) doubles (~4 KB), far under the collect buffer
-    // envelope Engine.prepare documents.
+    // envelope Engine.SessionDefaults documents.
     val corpusV = corpus.select(col("vec_id").as("nid"), col("embedding").as("nv"))
     val cand = bruteForceTopK(corpus, queries, kCand)
       .join(corpusV, "nid")

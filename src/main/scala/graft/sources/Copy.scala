@@ -3,8 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.Engine
-
 /** COPY parity — the one operator KuiBaDB fully implements (reference
   * src/commands/copy.rs:101-201: parallel CSV ingest with DELIMITERS /
   * NULL / CSV / (parallel n) options; grammar src/parser/sql.lalrpop:
@@ -28,7 +26,6 @@ object Copy {
     * surface as ANSI cast errors (cs.rs:58-76 analogue). */
   def from(spark: SparkSession, path: String, schema: StructType,
       opts: Options = Options()): DataFrame = {
-    Engine.prepare(spark)
     val df = spark.read
       .option("delimiter", opts.delimiter)
       .option("nullValue", opts.nullValue)
@@ -45,16 +42,13 @@ object Copy {
     * sql.lalrpop:560-572; STDIN is the protocol-side extension its
     * DestRemote layer implies). */
   def fromLines(lines: Dataset[String], schema: StructType,
-      opts: Options = Options()): DataFrame = {
-    val spark = lines.sparkSession
-    Engine.prepare(spark)
-    spark.read
+      opts: Options = Options()): DataFrame =
+    lines.sparkSession.read
       .option("delimiter", opts.delimiter)
       .option("nullValue", opts.nullValue)
       .option("header", opts.header.toString)
       .schema(schema)
       .csv(lines)
-  }
 
   /** COPY ... TO 'file' (declared-only in the reference; implemented
     * here): DataFrame out to CSV. */
@@ -87,7 +81,6 @@ object Copy {
     * twice and infers per-file). */
   def fromJsonl(spark: SparkSession, path: String,
       schema: Option[StructType] = None): DataFrame = {
-    Engine.prepare(spark)
     val r = spark.read
     schema.map(r.schema).getOrElse(r).json(path)
   }
@@ -99,10 +92,8 @@ object Copy {
   /** ORC interchange (Spark-bundled columnar format; same vectorized
     * reader discipline as parquet — predicate pushdown, column pruning,
     * split-parallel scan). */
-  def fromOrc(spark: SparkSession, path: String): DataFrame = {
-    Engine.prepare(spark)
+  def fromOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
-  }
 
   def toOrc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
@@ -118,7 +109,6 @@ object Copy {
     * dedup-aware downstreams. Split-parallel: text sources split by
     * line ranges exactly like the reference's `(parallel n)` workers. */
   def fromTextShards(spark: SparkSession, path: String): DataFrame = {
-    Engine.prepare(spark)
     import org.apache.spark.sql.functions._
     spark.read.textFile(path).toDF("text")
       .filter(length(trim(col("text"))) > 0)

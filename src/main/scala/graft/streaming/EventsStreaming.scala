@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.Engine
-
 /** Structured Streaming over the `events` stream (SURVEY §2.9 — the
   * reference has no streaming; this is new-build scope per TESTDATA.md).
   *
@@ -28,10 +26,8 @@ object EventsStreaming {
     StructField("value", DoubleType), StructField("props", StringType)))
 
   /** File-source stream over a directory of event parquet files. */
-  def readEvents(spark: SparkSession, path: String): DataFrame = {
-    Engine.prepare(spark)
+  def readEvents(spark: SparkSession, path: String): DataFrame =
     spark.readStream.schema(eventsSchema).parquet(path)
-  }
 
   /** Tumbling-window stats with late-data handling: watermark bounds
     * state; append mode emits finalized windows only. */

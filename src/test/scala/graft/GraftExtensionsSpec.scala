@@ -6,6 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("spark.sql.extensions=graft.GraftExtensions wires the function surface") {
+    // The JVM's SparkContext, and with it the graft defaults in its
+    // SparkConf, must come from Engine.session, not from the builder
+    // below, whichever suite runs first.
+    TestSpark.spark
     // Build a FRESH session (sharing the JVM's SparkContext) with the
     // extension installed the deploy way. getOrCreate() must not grab —
     // or stop() — the shared test session, so save/clear/restore the
@@ -32,11 +36,24 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(r.getDouble(1) == 1.0)
       assert(spark.sql("DESCRIBE FUNCTION graft_minhash").collect()
         .map(_.getString(0)).mkString.contains("graft_minhash"))
+      // the whole surface, not a hand-copied subset: a kernel, a proc of
+      // the arithmetic matrix and a typoutput function
+      val w = spark.sql("SELECT size(graft_tokens('Hello big world')) AS n, " +
+        "int4pl(2, 3) AS s, byteaout(X'CAFE') AS b").head
+      assert(w.getInt(0) == 3)
+      assert(w.getInt(1) == 5)
+      assert(w.getString(2) == "\\xcafe")
     } finally {
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("the function list names each function once") {
+    val names = graft.functions.GraftFunctions.sqlFunctions.map(_._1.funcName)
+    assert(names.distinct.size == names.size,
+      names.diff(names.distinct).distinct.mkString(", "))
   }
 
   test("varchar(n) typmod is enforced on write (SURVEY §7.3)") {

@@ -236,9 +236,10 @@ class PlanLintSpec extends AnyFunSuite {
   }
 
   /** Every main, the test suite and the wire path share one session
-    * shape: cores, shuffle partitions, UTC, UI off and `Engine.prepare`
-    * all come from `Engine.session`, so no other file in src/main may
-    * build a session of its own. */
+    * shape: cores, shuffle partitions, UI off, `Engine.SessionDefaults`
+    * and the `GraftExtensions` function surface all come from
+    * `Engine.session`, so no other file in src/main may build a session
+    * of its own. */
   test("SparkSession.builder appears in src/main only in Engine.scala") {
     val builder = java.util.regex.Pattern.compile("SparkSession\\s*\\.\\s*builder")
     val sites = mainSources
@@ -250,6 +251,22 @@ class PlanLintSpec extends AnyFunSuite {
     if (sites.nonEmpty) fail(
       s"${sites.size} SparkSession.builder site(s) outside Engine.scala — build " +
         s"through Engine.session:\n  ${sites.distinct.sorted.mkString("\n  ")}")
+  }
+
+  /** A session is graft-ready when `Engine.session` builds it, so nothing
+    * re-prepares one: no per-access prepare call, no per-session function
+    * registration, and no file but Engine.scala re-sets a session
+    * default (which would undo a caller's own setting). */
+  test("src/main neither re-prepares a session nor re-sets a session default") {
+    val banned = Seq("Engine.prepare", "createOrReplaceTempFunction")
+    val setKey = "conf\\.set\\(\\s*\"([^\"]+)\"".r
+    val sites = mainSources.flatMap { case (f, src) =>
+      banned.filter(src.contains).map(b => s"$f: $b") ++
+        (if (f.endsWith("/Engine.scala")) Nil
+         else setKey.findAllMatchIn(src).map(_.group(1))
+           .filter(Engine.SessionDefaults.contains).map(k => s"$f: conf.set($k)"))
+    }
+    assert(sites.isEmpty, s"session re-preparing sites:\n  ${sites.sorted.mkString("\n  ")}")
   }
 
   /** The top-k heap plans under HashAggregateExec, so no operator needs

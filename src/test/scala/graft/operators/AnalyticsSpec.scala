@@ -77,13 +77,12 @@ class AnalyticsSpec extends AnyFunSuite {
     // partitioning by the published guarantee, so the driver's hash
     // stays stable whatever parallelism it runs at
     //
-    // Under Engine.prepare's AQE confs Spark sizes every shuffle from
-    // initialPartitionNum and ignores spark.sql.shuffle.partitions, so
-    // each run also turns coalescing off, and checks on the executed
+    // Under the session defaults' AQE confs Spark sizes every shuffle
+    // from initialPartitionNum and ignores spark.sql.shuffle.partitions,
+    // so each run also turns coalescing off, and checks on the executed
     // plan that its hash shuffles really use `parts` partitions. The
-    // confs are set after the frame is built: every Engine.table call
-    // re-applies prepare's AQE confs, and physical planning happens at
-    // the action
+    // confs are set after the frame is built, which is enough: physical
+    // planning happens at the action
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning

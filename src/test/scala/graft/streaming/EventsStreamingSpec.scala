@@ -15,8 +15,8 @@ class EventsStreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   /** events.parquet has TIMESTAMP(NANOS) which the streaming parquet
-    * source reads as long (Engine.prepare sets nanosAsLong) — stage a
-    * micros copy once for the file-source tests. */
+    * source reads as long (nanosAsLong is in Engine.SessionDefaults) —
+    * stage a micros copy once for the file-source tests. */
   lazy val stagedDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
     Engine.table(spark, TestSpark.sf, "events")
