@@ -292,11 +292,6 @@ object Engine {
     MemoKey(tag, canon.semanticHash(), canon.hashCode(), paths, filesFp)
   }
 
-  /** Drop every memoized value (tests / explicit refresh). The normal
-    * write paths need no call here — see the memoCount key contract. */
-  def invalidateCounts(): Unit =
-    memoCache.synchronized { memoCache.clear() }
-
   // -------------------------------------------------------------------
   // Deterministic numeric helpers shared by the operator library.
   // Double sums are order-dependent across partitions; aggregating through

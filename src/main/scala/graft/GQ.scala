@@ -14,6 +14,12 @@ final case class GQ(
     run: (SparkSession, String) => DataFrame)
 
 object GQ {
+  /** An entry whose Spark side runs its oracle's own SQL text over the
+    * registered catalog (`Engine.sql`): the text is written once, so the
+    * two sides cannot drift. */
+  def sql(name: String, text: String): GQ =
+    GQ(name, Some(text), (s, d) => Engine.sql(s, d, text))
+
   /** Decimal-exact double sum, oracle side (see Engine.dsum): aggregate
     * exactly in DECIMAL(38,10), round exactly to scale 6, then one
     * decimal->double conversion that matches Spark's bit-for-bit. */

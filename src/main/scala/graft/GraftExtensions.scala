@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 import graft.functions.GraftFunctions
 
-/** The graft function surface as a session extension: the scalar
-  * functions (`GraftFunctions.sqlFunctions`) and the index-served table
-  * functions (`Serving.tableFunctions`). `Engine.session` builds every
+/** The graft surface as a session extension: the scalar functions
+  * (`GraftFunctions.sqlFunctions`), the index-served table functions
+  * (`Serving.tableFunctions`) and the planner strategy of the as-of join
+  * operator (`AsOfStrategy`). `Engine.session` builds every
   * session with it; a cluster deployment passes
   * `--conf spark.sql.extensions=graft.GraftExtensions` (plus
   * `Engine.SessionDefaults`) so every session of the application has the
@@ -23,5 +24,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // catalog state at call time, so static injection needs no driver
     // object. `Serving.install` is the runtime twin for other prefixes.
     Serving.tableFunctions(Serving.DefaultPrefix).foreach(ext.injectTableFunction)
+    // AsOf.asofJoinPhysical's AsOfJoinNode -> AsOfJoinExec, planned by
+    // every session of the application
+    ext.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
   }
 }

@@ -9,12 +9,17 @@ import org.apache.spark.sql.types._
 import graft.sources.Copy
 
 /** The statement surface of the reference, end to end: a session facade
-  * whose `execute` mirrors `exec_simple_query`'s dispatch (reference
+  * whose [[plan]] is `exec_simple_query`'s one dispatch (reference
   * src/lib.rs:438-466 -> parse -> analyze -> utility::process_utility |
   * planner/executor). The reference grammar accepts exactly: SELECT, SET,
   * SHOW, CREATE TYPE, CREATE TABLE, BEGIN/COMMIT/ABORT, LOCK, COPY, and
-  * the empty statement (src/parser/sql.lalrpop:28-39). Utility statements
-  * are handled here; everything else is Catalyst's job via spark.sql.
+  * the empty statement (src/parser/sql.lalrpop:28-39). [[classify]]
+  * matches a statement against that grammar once (one regex table);
+  * [[plan]] applies the aborted-block gate and the statement-error rule
+  * to every statement and returns one [[GraftSession.Outcome]]: Catalyst
+  * rows, a utility that yields its command tag, or a COPY STDIN/STDOUT
+  * channel. [[execute]], [[copyInTarget]] and the wire front-end are thin
+  * callers of that one path.
   *
   * Transaction semantics: the reference implements a real PG transaction
   * block state machine (TBlockState, src/access/xact.rs:216-234) with
@@ -25,6 +30,8 @@ import graft.sources.Copy
   * protocol — the documented divergence of SURVEY §7.3.
   */
 class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) {
+  import GraftSession._
+
   dataDir.foreach(Engine.registerViews(spark, _))
 
   /** Identity in the process-wide lock table (lmgr's se_lock_info
@@ -100,100 +107,87 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     Seq(t).toDF("command_status")
   }
 
-  private val reSet: Regex = """(?is)^\s*SET\s+(\w+)\s*(?:=|TO)\s*'?([^';]*?)'?\s*;?\s*$""".r
-  private val reShow: Regex = """(?is)^\s*SHOW\s+(\w+)\s*;?\s*$""".r
-  private val reBegin: Regex = """(?is)^\s*(BEGIN|START\s+TRANSACTION)\s*;?\s*$""".r
-  private val reCommit: Regex = """(?is)^\s*(COMMIT|END)\s*;?\s*$""".r
-  private val reAbort: Regex = """(?is)^\s*(ABORT|ROLLBACK)\s*;?\s*$""".r
-  private val reLock: Regex = """(?is)^\s*LOCK\s+(?:TABLE\s+)?([\w.]+)(?:\s+IN\s+(.+?)\s+MODE)?\s*;?\s*$""".r
-  private val reCreateType: Regex = """(?is)^\s*CREATE\s+TYPE\s+([\w.]+)\s*;?\s*$""".r
-  private val reCreateTable: Regex = """(?is)^\s*CREATE\s+TABLE\s+([\w.]+)\s*\((.+?)\)\s*(?:WITH\s*\((.*)\))?\s*;?\s*$""".r
-  private val reCopyFrom: Regex =
-    """(?is)^\s*COPY\s+([\w.]+)\s+FROM\s+'([^']+)'\s*(.*?)\s*;?\s*$""".r
-  private val reCopyTo: Regex =
-    """(?is)^\s*COPY\s+([\w.]+)\s+TO\s+'([^']+)'\s*(.*?)\s*;?\s*$""".r
-  private val reCopyFromStdin: Regex =
-    """(?is)^\s*COPY\s+([\w.]+)\s+FROM\s+STDIN\s*(.*?)\s*;?\s*$""".r
-  private val reCopyToStdout: Regex =
-    """(?is)^\s*COPY\s+([\w.]+)\s+TO\s+STDOUT\s*(.*?)\s*;?\s*$""".r
+  /** Match `sql` against the grammar table, once: the first row whose
+    * regex matches the whole statement decides; anything else is a
+    * query for Catalyst. */
+  private def classify(sql: String): Stmt = {
+    val t = sql.trim
+    if (t.isEmpty || t == ";") Empty
+    else grammar.iterator.flatMap { case (re, stmt) => re.unapplySeq(t).map(stmt) }
+      .nextOption().getOrElse(Query)
+  }
 
-  /** The exec_simple_query analogue. */
-  def execute(sql: String): DataFrame = {
-    val trimmed = sql.trim
-    // empty statement -> EmptyQueryResponse (lib.rs:453-457)
-    if (trimmed.isEmpty || trimmed == ";") return tag("EmptyQueryResponse")
-
-    // aborted-block rejection: only COMMIT/ABORT get through (lib.rs:448-452)
-    if (tblock == TAborted && !(reCommit.matches(trimmed) || reAbort.matches(trimmed)))
+  /** The aborted-block gate and the statement-error rule, for every
+    * statement. In an aborted block only COMMIT/ABORT (and the empty
+    * statement) get through (lib.rs:448-452); a statement that fails
+    * inside a block aborts it — exec_simple_query's error path
+    * (lib.rs:468-473 -> abort_cur_tran, xact.rs:573-576). */
+  private def guarded[T](stmt: Stmt)(body: => T): T = {
+    if (tblock == TAborted && !(stmt == Commit || stmt == Abort || stmt == Empty))
       throw new GraftStateError(Errors.InFailedSqlTransaction,
         "current transaction is aborted, commands ignored until end of transaction block")
+    try body catch { case e: Throwable => onStatementError(); throw e }
+  }
 
-    try trimmed match {
-      case reBegin(_) =>
-        if (tblock == TInProgress) tag("WARNING: there is already a transaction in progress")
-        else { tblock = TInProgress; tag("BEGIN") }
-      case reCommit(_) =>
-        val t = tblock; tblock = TDefault; releaseLocks()
-        tag(if (t == TAborted) "ROLLBACK" else "COMMIT")
-      case reAbort(_) =>
-        tblock = TDefault; releaseLocks(); tag("ROLLBACK")
-      case reSet(name, value) => setGuc(name.toLowerCase, value)
-      case reShow(name) => showGuc(name.toLowerCase)
-      case reLock(table, mode) => lockTable(table, Option(mode))
-      case reCreateType(name) =>
-        // stub parity: parse + namespace-resolve only (typecmds.rs:17-28)
-        tag(s"CreateTypeStmt { name: $name }")
-      case reCreateTable(name, cols, opts) => createTable(name, cols, Option(opts))
-      case reCopyFrom(table, path, opts) => copyFrom(table, path, opts)
-      case reCopyTo(table, path, opts) => copyTo(table, path, opts)
-      case reCopyFromStdin(_, _) =>
-        // STDIN needs a data channel the plain session API does not
-        // have; the wire front-end intercepts this shape BEFORE execute
-        // and drives the copy-in sub-protocol (copyInTarget/copyInRows)
-        throw new GraftArgError(Errors.FeatureNotSupported,
-          "COPY FROM STDIN is only available through the wire protocol's copy-in channel")
-      case reCopyToStdout(_, _) =>
-        // symmetric: STDOUT needs the wire data channel (copy-out)
-        throw new GraftArgError(Errors.FeatureNotSupported,
-          "COPY TO STDOUT is only available through the wire protocol's copy-out channel")
-      case _ =>
-        // the optimizable path: Catalyst parse/analyze/optimize/execute
-        spark.sql(trimmed)
-    } catch {
-      case e: Throwable => onStatementError(); throw e
+  /** The exec_simple_query dispatch: classify `sql` once, gate it, and
+    * plan it. Planning runs Catalyst analysis (named `params` bind
+    * server-side via Spark's parameterized SQL — no string splicing),
+    * SHOW's lookup and COPY STDIN/STDOUT's relation and option checks;
+    * a utility runs, gated again (as PG's Execute re-checks), when the
+    * caller runs its [[GraftSession.Utility]]. */
+  def plan(sql: String, params: Map[String, Any] = Map.empty): Outcome = {
+    val stmt = classify(sql)
+    guarded(stmt) {
+      stmt match {
+        case Query =>
+          Rows(if (params.isEmpty) spark.sql(sql.trim) else spark.sql(sql.trim, params))
+        case ShowGuc(name) => Rows(showGuc(name))
+        case c: CopyWire => channel(c)
+        case u: UtilityStmt => Utility(() => guarded(u)(runUtility(u)))
+      }
     }
   }
 
-  /** A failed statement inside a transaction block aborts the block —
-    * exec_simple_query's error path (lib.rs:468-473 -> abort_cur_tran,
-    * xact.rs:573-576: Inprogress -> Abort). Analysis-time failures hit
-    * the catch in [[execute]]; the wire front-end also reports lazy
-    * execution-time failures here. */
+  /** The session API: [[plan]], then run a utility and render its tag
+    * as a one-row `command_status` frame. COPY STDIN/STDOUT needs the
+    * wire front-end's data channel and fails here. */
+  def execute(sql: String, params: Map[String, Any] = Map.empty): DataFrame =
+    plan(sql, params) match {
+      case Rows(df) => df
+      case Utility(run) => tag(run())
+      case c: CopyChannel =>
+        onStatementError()
+        throw new GraftArgError(Errors.FeatureNotSupported,
+          s"COPY ${if (c.fromClient) "FROM STDIN" else "TO STDOUT"} is only " +
+            "available through the wire protocol's copy channel")
+    }
+
+  private def runUtility(stmt: UtilityStmt): String = stmt match {
+    case Empty => EmptyQuery
+    case Begin =>
+      if (tblock == TInProgress) "WARNING: there is already a transaction in progress"
+      else { tblock = TInProgress; "BEGIN" }
+    case Commit =>
+      val t = tblock; tblock = TDefault; releaseLocks()
+      if (t == TAborted) "ROLLBACK" else "COMMIT"
+    case Abort => tblock = TDefault; releaseLocks(); "ROLLBACK"
+    case SetGuc(name, value) => setGuc(name, value)
+    case Lock(table, mode) => lockTable(table, mode)
+    // stub parity: parse + namespace-resolve only (typecmds.rs:17-28)
+    case CreateType(name) => s"CreateTypeStmt { name: $name }"
+    case CreateTable(name, cols, opts) => createTable(name, cols, opts)
+    case CopyFile(table, path, opts, true) => copyFrom(table, path, opts)
+    case CopyFile(table, path, opts, false) => copyTo(table, path, opts)
+  }
+
+  /** A failed statement inside a transaction block aborts the block
+    * (Inprogress -> Abort). [[plan]] and a utility's run apply it
+    * themselves; the wire front-end also reports lazy execution-time
+    * failures of Catalyst rows and COPY channels here. */
   private[graft] def onStatementError(): Unit =
     if (tblock == TInProgress) tblock = TAborted
 
-  /** Parameterized execution (the extended-protocol analogue of the
-    * reference's simple-query path): named parameters bind server-side
-    * via Spark's parameterized SQL — no string splicing. */
-  def executeWith(sql: String, params: Map[String, Any]): DataFrame =
-    spark.sql(sql, params)
-
-  /** True when [[execute]] would dispatch `sql` to a utility handler
-    * (BEGIN/COMMIT/SET/SHOW/LOCK/CREATE/COPY/empty) rather than
-    * Catalyst. The wire front-end's Describe uses this to answer
-    * NoData without running the statement — utility handlers execute
-    * EAGERLY, so probing their schema would perform the action. */
-  def isUtility(sql: String): Boolean = {
-    val t = sql.trim
-    t.isEmpty || t == ";" ||
-      reBegin.matches(t) || reCommit.matches(t) || reAbort.matches(t) ||
-      reSet.matches(t) || reShow.matches(t) || reLock.matches(t) ||
-      reCreateType.matches(t) || reCreateTable.matches(t) ||
-      reCopyFrom.matches(t) || reCopyTo.matches(t) ||
-      reCopyFromStdin.matches(t)
-  }
-
-  private def setGuc(name: String, value: String): DataFrame = {
+  private def setGuc(name: String, value: String): String = {
     if (!localGucs.contains(name))
       throw new GraftArgError(Errors.UndefinedObject,
         s"unrecognized configuration parameter \"$name\"")
@@ -224,7 +218,7 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     linkedGucs.get(name).foreach { conf =>
       try spark.conf.set(conf, value) catch { case _: Exception => }
     }
-    tag("SET")
+    "SET"
   }
 
   private def showGuc(name: String): DataFrame = name match {
@@ -255,7 +249,7 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
       }.getOrElse(name)
   }
 
-  private def lockTable(table: String, mode: Option[String]): DataFrame = {
+  private def lockTable(table: String, mode: Option[String]): String = {
     // requires a transaction block (src/commands/lockcmds.rs:18-24)
     if (tblock != TInProgress)
       throw new GraftStateError(Errors.NoActiveSqlTransaction,
@@ -268,7 +262,7 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     // enforce the cross-session conflict matrix (lmgr.rs LOCKCONFLICT)
     GraftSession.LockManager.acquire(sessionId, rel, m)
     heldLocks += ((rel, m))
-    tag("LOCK TABLE")
+    "LOCK TABLE"
   }
 
   private def releaseLocks(): Unit = {
@@ -281,7 +275,7 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     * (sql.lalrpop:336-379,432-438); rejected inside a transaction block
     * (tablecmds.rs:105). */
   private def createTable(name: String, colsSpec: String,
-      reloptions: Option[String] = None): DataFrame = {
+      reloptions: Option[String]): String = {
     if (tblock == TInProgress)
       throw new GraftStateError(Errors.ActiveSqlTransaction,
         "CREATE TABLE cannot run inside a transaction block")
@@ -335,6 +329,7 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     val propsSql =
       if (props.isEmpty) "" else s" TBLPROPERTIES (${props.mkString(", ")})"
     spark.sql(s"CREATE TABLE $name (${ddlCols.mkString(", ")}) USING parquet$propsSql")
+    "CREATE TABLE"
   }
 
   /** COPY options with the reference's validation discipline
@@ -370,12 +365,12 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     o
   }
 
-  private def copyFrom(table: String, path: String, opts: String): DataFrame = {
+  private def copyFrom(table: String, path: String, opts: String): String = {
     val rel = resolveRelation(table)
     val schema = spark.table(rel).schema
     checkNotNull(Copy.from(spark, path, schema, copyOpts(opts)), rel, schema)
       .write.mode("append").insertInto(rel)
-    tag(s"COPY")
+    "COPY"
   }
 
   /** PG's not-null check on the COPY ingest paths (23502
@@ -398,17 +393,24 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     }.toIndexedSeq: _*)
   }
 
-  /** Wire front-end hook: if `query` is `COPY t FROM STDIN [opts]`,
-    * resolve the target and parse the options (the same copy.rs option
-    * grammar as the file path) so the server can drive the copy-in
-    * sub-protocol (CopyInResponse/CopyData/CopyDone — the DestRemote
-    * result-streaming analogue in the ingest direction). None for every
-    * other statement. */
+  /** COPY FROM STDIN / TO STDOUT: resolve the relation and parse the
+    * options (the same copy.rs option grammar as the file path) so the
+    * wire front-end can drive the copy sub-protocol (CopyInResponse /
+    * CopyOutResponse, CopyData, CopyDone — the DestRemote
+    * result-streaming analogue, in both directions). */
+  private def channel(c: CopyWire): CopyChannel = {
+    val rel = resolveRelation(c.table)
+    CopyChannel(rel, spark.table(rel).schema, copyOpts(c.opts), c.fromClient)
+  }
+
+  /** The wire copy-in target of `query` when it is
+    * `COPY t FROM STDIN [opts]`, gated like every statement; None for
+    * every other statement, which is left unplanned. */
   def copyInTarget(query: String): Option[(String, StructType, Copy.Options)] =
-    query match {
-      case reCopyFromStdin(table, opts) =>
-        val rel = resolveRelation(table)
-        Some((rel, spark.table(rel).schema, copyOpts(opts)))
+    classify(query) match {
+      case c @ CopyWire(_, _, true) =>
+        val ch = guarded(c)(channel(c))
+        Some((ch.rel, ch.schema, ch.opts))
       case _ => None
     }
 
@@ -430,23 +432,10 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     lines.size.toLong
   }
 
-  private def copyTo(table: String, path: String, opts: String): DataFrame = {
+  private def copyTo(table: String, path: String, opts: String): String = {
     Copy.to(spark.table(resolveRelation(table)), path, copyOpts(opts))
-    tag("COPY")
+    "COPY"
   }
-
-  /** Wire front-end hook, copy-out direction: if `query` is
-    * `COPY t TO STDOUT [opts]`, resolve the source and parse the
-    * options so the server can drive the copy-out sub-protocol
-    * (CopyOutResponse/CopyData/CopyDone — the DestRemote streaming
-    * direction). None for every other statement. */
-  def copyOutSource(query: String): Option[(String, StructType, Copy.Options)] =
-    query match {
-      case reCopyToStdout(table, opts) =>
-        val rel = resolveRelation(table)
-        Some((rel, spark.table(rel).schema, copyOpts(opts)))
-      case _ => None
-    }
 
   /** Stream a relation as COPY text lines for a wire copy-out.
     * toLocalIterator keeps one partition resident on the driver at a
@@ -466,6 +455,71 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
 object GraftSession {
   private val sessionCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   private def nextSessionId(): Long = sessionCounter.incrementAndGet()
+
+  /** What [[GraftSession.plan]] routes a statement to — the three
+    * branches of exec_simple_query. Planning runs nothing but analysis
+    * and catalog lookups; the caller runs the outcome. */
+  sealed trait Outcome
+  /** Catalyst rows: the analyzed plan (or SHOW's one-row frame); an
+    * action on `df` runs it. */
+  final case class Rows(df: DataFrame) extends Outcome
+  /** A utility statement: `run()` performs it and returns its
+    * CommandComplete tag ([[EmptyQuery]] for the empty statement). */
+  final case class Utility(run: () => String) extends Outcome
+  /** COPY FROM STDIN (`fromClient`) or TO STDOUT: the resolved relation,
+    * its schema and the parsed options; the caller owns the data
+    * channel ([[GraftSession.copyInRows]] / [[GraftSession.copyOutLines]]). */
+  final case class CopyChannel(rel: String, schema: StructType,
+      opts: Copy.Options, fromClient: Boolean) extends Outcome
+
+  /** The empty statement's tag: the wire answers it with
+    * EmptyQueryResponse, not CommandComplete (lib.rs:453-457). */
+  final val EmptyQuery = "EmptyQueryResponse"
+
+  /** One classified statement (sql.lalrpop:28-39): a query for
+    * Catalyst, SHOW, a COPY STDIN/STDOUT channel, or a utility that
+    * runs when its outcome is run. */
+  private sealed trait Stmt
+  private case object Query extends Stmt
+  private final case class ShowGuc(name: String) extends Stmt
+  private final case class CopyWire(table: String, opts: String,
+      fromClient: Boolean) extends Stmt
+  private sealed trait UtilityStmt extends Stmt
+  private case object Empty extends UtilityStmt
+  private case object Begin extends UtilityStmt
+  private case object Commit extends UtilityStmt
+  private case object Abort extends UtilityStmt
+  private final case class SetGuc(name: String, value: String) extends UtilityStmt
+  private final case class Lock(table: String, mode: Option[String]) extends UtilityStmt
+  private final case class CreateType(name: String) extends UtilityStmt
+  private final case class CreateTable(name: String, cols: String,
+      reloptions: Option[String]) extends UtilityStmt
+  private final case class CopyFile(table: String, path: String, opts: String,
+      from: Boolean) extends UtilityStmt
+
+  /** The utility grammar as one table, tried in order: each regex must
+    * match the whole (trimmed) statement; its groups build the
+    * statement. A statement no row matches is Catalyst's. */
+  private val grammar: Seq[(Regex, List[String] => Stmt)] = Seq(
+    """(?is)^\s*(?:BEGIN|START\s+TRANSACTION)\s*;?\s*$""".r -> (_ => Begin),
+    """(?is)^\s*(?:COMMIT|END)\s*;?\s*$""".r -> (_ => Commit),
+    """(?is)^\s*(?:ABORT|ROLLBACK)\s*;?\s*$""".r -> (_ => Abort),
+    """(?is)^\s*SET\s+(\w+)\s*(?:=|TO)\s*'?([^';]*?)'?\s*;?\s*$""".r ->
+      (g => SetGuc(g(0).toLowerCase, g(1))),
+    """(?is)^\s*SHOW\s+(\w+)\s*;?\s*$""".r -> (g => ShowGuc(g(0).toLowerCase)),
+    """(?is)^\s*LOCK\s+(?:TABLE\s+)?([\w.]+)(?:\s+IN\s+(.+?)\s+MODE)?\s*;?\s*$""".r ->
+      (g => Lock(g(0), Option(g(1)))),
+    """(?is)^\s*CREATE\s+TYPE\s+([\w.]+)\s*;?\s*$""".r -> (g => CreateType(g(0))),
+    """(?is)^\s*CREATE\s+TABLE\s+([\w.]+)\s*\((.+?)\)\s*(?:WITH\s*\((.*)\))?\s*;?\s*$""".r ->
+      (g => CreateTable(g(0), g(1), Option(g(2)))),
+    """(?is)^\s*COPY\s+([\w.]+)\s+FROM\s+'([^']+)'\s*(.*?)\s*;?\s*$""".r ->
+      (g => CopyFile(g(0), g(1), g(2), from = true)),
+    """(?is)^\s*COPY\s+([\w.]+)\s+TO\s+'([^']+)'\s*(.*?)\s*;?\s*$""".r ->
+      (g => CopyFile(g(0), g(1), g(2), from = false)),
+    """(?is)^\s*COPY\s+([\w.]+)\s+FROM\s+STDIN\s*(.*?)\s*;?\s*$""".r ->
+      (g => CopyWire(g(0), g(1), fromClient = true)),
+    """(?is)^\s*COPY\s+([\w.]+)\s+TO\s+STDOUT\s*(.*?)\s*;?\s*$""".r ->
+      (g => CopyWire(g(0), g(1), fromClient = false)))
 
   /** Split a simple-Query string into its top-level statements — the
     * PG exec_simple_query contract a real client (psql -c) relies on.

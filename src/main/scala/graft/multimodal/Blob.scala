@@ -106,12 +106,6 @@ object Blob {
         [unicode(c)::HUGEINT for c in split($s, '')]),
       (h, b) -> (xor(h, b) * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)"""
 
-  /** Unsigned-HUGEINT -> signed-BIGINT reinterpretation (two's
-    * complement), matching the Scala Long the kernels carry. */
-  private def oracleSigned(e: String): String =
-    s"""CAST(CASE WHEN $e >= 9223372036854775808::HUGEINT
-         THEN $e - 18446744073709551616::HUGEINT ELSE $e END AS BIGINT)"""
-
   /** `math.abs(signed) % m` evaluated in the HUGEINT domain: abs of the
     * signed interpretation never overflows there (|Long.MinValue| = 2^63
     * fits), whereas BIGINT abs() errors on MinValue — where the Scala

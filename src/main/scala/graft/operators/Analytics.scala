@@ -174,21 +174,12 @@ object Analytics {
 
     // explicit GROUPING SETS + grouping() markers (same SQL text on both
     // engines via the passthrough surface)
-    GQ("q31_grouping_sets", {
-      val q = s"""SELECT l_returnflag, l_linestatus,
+    GQ.sql("q31_grouping_sets", s"""SELECT l_returnflag, l_linestatus,
           CAST(grouping(l_returnflag) AS INT) AS g_rf,
           CAST(grouping(l_linestatus) AS INT) AS g_ls,
           COUNT(*) AS n, ${osum("l_quantity")} AS sum_qty
         FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus), ())"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d, s"""SELECT l_returnflag, l_linestatus,
-          CAST(grouping(l_returnflag) AS INT) AS g_rf,
-          CAST(grouping(l_linestatus) AS INT) AS g_ls,
-          COUNT(*) AS n, ${osum("l_quantity")} AS sum_qty
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus), ())""")),
+        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus), ())"""),
 
     // conditional / null-handling scalar family
     GQ("q32_conditional_functions",
@@ -214,19 +205,11 @@ object Analytics {
     // correlated subqueries through the SQL surface — Catalyst
     // decorrelates (RewriteCorrelatedScalarSubquery) into the join+agg
     // the engine would otherwise hand-write; same text runs on both
-    GQ("q33_correlated_subquery", {
-      val q = """SELECT c_custkey, c_name FROM customer c
+    GQ.sql("q33_correlated_subquery", """SELECT c_custkey, c_name FROM customer c
         WHERE EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_totalprice > 2.0 * c.c_acctbal
-                        AND c.c_acctbal > 0.0)"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d, """SELECT c_custkey, c_name FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_totalprice > 2.0 * c.c_acctbal
-                        AND c.c_acctbal > 0.0)""")),
+                        AND c.c_acctbal > 0.0)"""),
 
     // pivot (wide aggregation) — Spark's pivot vs hand-rolled CASE sums
     GQ("q34_pivot",
@@ -284,53 +267,26 @@ object Analytics {
       }),
 
     // correlated scalar-aggregate subquery (decorrelated into an agg join)
-    GQ("q37_correlated_scalar_agg", {
-      val q = """SELECT c_custkey, c_acctbal FROM customer c
+    GQ.sql("q37_correlated_scalar_agg", """SELECT c_custkey, c_acctbal FROM customer c
         WHERE c_acctbal > (SELECT 0.00002 * SUM(o.o_totalprice)
-                           FROM orders o WHERE o.o_custkey = c.c_custkey)"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d,
-        """SELECT c_custkey, c_acctbal FROM customer c
-        WHERE c_acctbal > (SELECT 0.00002 * SUM(o.o_totalprice)
-                           FROM orders o WHERE o.o_custkey = c.c_custkey)""")),
+                           FROM orders o WHERE o.o_custkey = c.c_custkey)"""),
 
     // LATERAL correlated subquery (top-1-per-group via lateral limit)
-    GQ("q38_lateral_join", {
-      val q = """SELECT c_custkey, t.o_orderkey AS best_order, t.o_totalprice AS best_price
+    GQ.sql("q38_lateral_join", """SELECT c_custkey, t.o_orderkey AS best_order, t.o_totalprice AS best_price
         FROM customer, LATERAL (
           SELECT o_orderkey, o_totalprice FROM orders
           WHERE o_custkey = c_custkey
-          ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d,
-        """SELECT c_custkey, t.o_orderkey AS best_order, t.o_totalprice AS best_price
-        FROM customer, LATERAL (
-          SELECT o_orderkey, o_totalprice FROM orders
-          WHERE o_custkey = c_custkey
-          ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t""")),
+          ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t"""),
 
     // three-valued logic / null semantics (PG-grade: null propagation in
     // arithmetic and comparison, null-safe equality, null-aware counts)
-    GQ("q39_null_semantics", {
-      val q = """SELECT c_custkey,
-          nullif(c_mktsegment, 'BUILDING') AS seg_or_null,
-          nullif(c_mktsegment, 'BUILDING') = 'BUILDING' IS NULL AS cmp_is_null,
-          CAST(nullif(c_acctbal, c_acctbal) + 1.0 AS DOUBLE) AS arith_null,
-          nullif(c_mktsegment, 'BUILDING') IS NOT DISTINCT FROM NULL AS nullsafe_eq,
-          coalesce(nullif(c_mktsegment, 'BUILDING'), 'was_building') AS coalesced
-        FROM customer"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d, """SELECT c_custkey,
+    GQ.sql("q39_null_semantics", """SELECT c_custkey,
           nullif(c_mktsegment, 'BUILDING') AS seg_or_null,
           nullif(c_mktsegment, 'BUILDING') = 'BUILDING' IS NULL AS cmp_is_null,
           CAST(nullif(c_acctbal, c_acctbal) + 1.0 AS DOUBLE) AS arith_null,
           nullif(c_mktsegment, 'BUILDING') IS NOT DISTINCT FROM NULL AS nullsafe_eq,
           coalesce(nullif(c_mktsegment, 'BUILDING'), 'was_building') AS coalesced
         FROM customer"""),
-    ),
 
     // UNPIVOT — the inverse of q34's pivot (wide -> long), melting the
     // per-flag sum columns back into (flag, qty) rows; reuses q34's wide
@@ -346,17 +302,10 @@ object Analytics {
 
     // scalar subqueries in the SELECT list (each decorrelated by Catalyst
     // into an aggregate join; same text runs on both engines)
-    GQ("q40_scalar_subquery_select", {
-      val q = """SELECT c_custkey,
+    GQ.sql("q40_scalar_subquery_select", """SELECT c_custkey,
           (SELECT COUNT(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders,
           (SELECT MAX(o_totalprice) FROM orders o WHERE o.o_custkey = c.c_custkey) AS max_price
-        FROM customer c"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d, """SELECT c_custkey,
-          (SELECT COUNT(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders,
-          (SELECT MAX(o_totalprice) FROM orders o WHERE o.o_custkey = c.c_custkey) AS max_price
-        FROM customer c""")),
+        FROM customer c"""),
 
     // DISTINCT ON (first row per key in a total order) — PG/DuckDB surface
     // realized as a ranking window; deterministic via the orderkey tiebreak
@@ -460,8 +409,7 @@ object Analytics {
     // recursive month spine over the orders range, gap-filled monthly
     // counts — the recursion-based twin of q36's generate_series spine;
     // identical text runs on both engines
-    GQ("q44_recursive_cte", Some(recursiveMonthsSql),
-      (s, d) => Engine.sql(s, d, recursiveMonthsSql)),
+    GQ.sql("q44_recursive_cte", recursiveMonthsSql),
 
     // Mergeable-sketch distinct count (HLL, Apache DataSketches builtin
     // + Spark's HLL++). The ESTIMATES are sketch-internal — but their

@@ -73,7 +73,6 @@ object AsOf {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     val spark = left.sparkSession
-    org.apache.spark.sql.GraftShim.addStrategy(spark, graft.plans.AsOfStrategy)
     val lPlan = left.queryExecution.analyzed
     // Both sides often derive from the same scan (self-join shape); the
     // analyzer's DeduplicateRelations only fixes built-in Join nodes, so

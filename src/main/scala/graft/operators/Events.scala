@@ -222,8 +222,7 @@ object Events {
     // The sum aggregates in exact decimal (RANGE frames are evaluated
     // with segment trees / re-association in some engines, so a double
     // sum would be order-sensitive) and emits via the decOut conversion.
-    GQ("e11_rolling_hour_window", Some(rollingHourSql),
-      (s, d) => Engine.sql(s, d, rollingHourSql)),
+    GQ.sql("e11_rolling_hour_window", rollingHourSql),
 
     // range (band) join: views in the hour before each purchase — an
     // equi key (user) + time-band residual. Shuffles once on the equi

@@ -292,20 +292,11 @@ object Relational {
     // Exercises the implemented fmgr surface: int4pl/mi/mul/div semantics
     // (adt.rs) and the CSE the reference does at executor-init
     // (executor.rs:194-211; free in codegen here).
-    GQ("q00_const_projection", {
-      val q = """SELECT 1 + 2 AS three, 7 * 6 - 2 AS forty,
+    GQ.sql("q00_const_projection", """SELECT 1 + 2 AS three, 7 * 6 - 2 AS forty,
           CAST(7 / 2 AS DOUBLE) AS three_five,
           -5 AS neg, abs(-5) AS abs5,
           CAST('42' AS INT) AS in42, CAST(42 AS VARCHAR(10)) AS out42,
-          'a' || 'b' AS cat, 1 < 2 AS lt"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d,
-        """SELECT 1 + 2 AS three, 7 * 6 - 2 AS forty,
-          CAST(7 / 2 AS DOUBLE) AS three_five,
-          -5 AS neg, abs(-5) AS abs5,
-          CAST('42' AS INT) AS in42, CAST(42 AS VARCHAR(10)) AS out42,
-          'a' || 'b' AS cat, 1 < 2 AS lt""")),
+          'a' || 'b' AS cat, 1 < 2 AS lt"""),
 
     // ---- scan + filter + aggregate (TPC-H Q1 shape) --------------------
     // Filter reaches the Parquet scan (PushedFilters); agg is partial+final.
@@ -913,24 +904,13 @@ object Relational {
     // the oracle is the definition). Cost: two window passes over ONE
     // shuffle+sort on (partition, order) — dense_rank and the RANGE
     // aggregate share the same ordering.
-    GQ("q53_groups_frame", {
-      val q = """WITH g AS (SELECT o_orderkey, o_orderstatus, o_orderdate,
+    GQ.sql("q53_groups_frame", """WITH g AS (SELECT o_orderkey, o_orderstatus, o_orderdate,
             DENSE_RANK() OVER (PARTITION BY o_orderstatus ORDER BY o_orderdate) AS dr
           FROM orders)
         SELECT o_orderkey, o_orderstatus,
           CAST(COUNT(*) OVER (PARTITION BY o_orderstatus ORDER BY dr
             RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS BIGINT) AS n_adjacent_days
-        FROM g"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d,
-        """WITH g AS (SELECT o_orderkey, o_orderstatus, o_orderdate,
-            DENSE_RANK() OVER (PARTITION BY o_orderstatus ORDER BY o_orderdate) AS dr
-          FROM orders)
-        SELECT o_orderkey, o_orderstatus,
-          CAST(COUNT(*) OVER (PARTITION BY o_orderstatus ORDER BY dr
-            RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS BIGINT) AS n_adjacent_days
-        FROM g""")),
+        FROM g"""),
 
     // statistical + boolean aggregates (PG surface: stddev_samp /
     // var_samp / corr / covar_samp, bool_and / bool_or). The numeric
@@ -1228,8 +1208,7 @@ object Relational {
     // probe set (order priorities vs a subquery that includes a NULL)
     // — identical text both engines, so any null-semantics regression
     // in either compilation path hash-fails immediately.
-    GQ("q58_not_in_null_trap", {
-      val q = """WITH probe AS (
+    GQ.sql("q58_not_in_null_trap", """WITH probe AS (
           SELECT o_orderkey, o_orderpriority FROM orders WHERE o_orderkey < 1000),
         vals AS (SELECT '1-URGENT' AS p UNION ALL SELECT '3-MEDIUM'
                  UNION ALL SELECT CAST(NULL AS VARCHAR(16)))
@@ -1241,22 +1220,7 @@ object Relational {
             AS not_exists,
           (SELECT COUNT(*) FROM probe
            WHERE o_orderpriority NOT IN
-             (SELECT p FROM vals WHERE p IS NOT NULL)) AS not_in_clean"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d, """WITH probe AS (
-          SELECT o_orderkey, o_orderpriority FROM orders WHERE o_orderkey < 1000),
-        vals AS (SELECT '1-URGENT' AS p UNION ALL SELECT '3-MEDIUM'
-                 UNION ALL SELECT CAST(NULL AS VARCHAR(16)))
-        SELECT
-          (SELECT COUNT(*) FROM probe
-           WHERE o_orderpriority NOT IN (SELECT p FROM vals)) AS not_in_with_null,
-          (SELECT COUNT(*) FROM probe WHERE NOT EXISTS (
-             SELECT 1 FROM vals WHERE vals.p = probe.o_orderpriority))
-            AS not_exists,
-          (SELECT COUNT(*) FROM probe
-           WHERE o_orderpriority NOT IN
-             (SELECT p FROM vals WHERE p IS NOT NULL)) AS not_in_clean""")),
+             (SELECT p FROM vals WHERE p IS NOT NULL)) AS not_in_clean"""),
 
     // NULLS FIRST / NULLS LAST ordering pins — the engines' DEFAULTS
     // diverge (Spark: nulls first ASC; PG/DuckDB: nulls last ASC), so
@@ -1264,8 +1228,7 @@ object Relational {
     // is a latent cross-engine bug; this query pins both explicit
     // placements from identical text (q24-style passthrough). The
     // window partitions on status — never a global single-task sort.
-    GQ("q65_nulls_ordering", {
-      val q = """WITH b AS (SELECT o_orderkey, o_orderstatus,
+    GQ.sql("q65_nulls_ordering", """WITH b AS (SELECT o_orderkey, o_orderstatus,
             CASE WHEN o_orderkey % 7 = 0 THEN NULL
                  ELSE o_orderpriority END AS p
           FROM orders)
@@ -1274,19 +1237,7 @@ object Relational {
             ORDER BY p ASC NULLS FIRST, o_orderkey) AS BIGINT) AS rn_nf,
           CAST(row_number() OVER (PARTITION BY o_orderstatus
             ORDER BY p ASC NULLS LAST, o_orderkey) AS BIGINT) AS rn_nl
-        FROM b"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d, """WITH b AS (SELECT o_orderkey, o_orderstatus,
-            CASE WHEN o_orderkey % 7 = 0 THEN NULL
-                 ELSE o_orderpriority END AS p
-          FROM orders)
-        SELECT o_orderkey, o_orderstatus, p,
-          CAST(row_number() OVER (PARTITION BY o_orderstatus
-            ORDER BY p ASC NULLS FIRST, o_orderkey) AS BIGINT) AS rn_nf,
-          CAST(row_number() OVER (PARTITION BY o_orderstatus
-            ORDER BY p ASC NULLS LAST, o_orderkey) AS BIGINT) AS rn_nl
-        FROM b""")),
+        FROM b"""),
 
     // Null-safe comparison pins: IS [NOT] DISTINCT FROM (PG's
     // null-safe equality family) vs plain `=` under 3VL, counted over
@@ -1294,8 +1245,7 @@ object Relational {
     // equality drops null pairs (UNKNOWN), the DISTINCT FROM family
     // treats NULL as a comparable value; pinning the counts catches
     // any compilation path that confuses the two.
-    GQ("q66_null_safe_compare", {
-      val q = """WITH b AS (SELECT
+    GQ.sql("q66_null_safe_compare", """WITH b AS (SELECT
             CASE WHEN o_orderkey % 5 = 0 THEN NULL ELSE o_orderstatus END AS a,
             CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderstatus END AS c
           FROM orders)
@@ -1305,20 +1255,7 @@ object Relational {
             AS BIGINT) AS nsafe_eq,
           CAST(SUM(CASE WHEN a IS DISTINCT FROM c THEN 1 ELSE 0 END)
             AS BIGINT) AS nsafe_ne
-        FROM b"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d, """WITH b AS (SELECT
-            CASE WHEN o_orderkey % 5 = 0 THEN NULL ELSE o_orderstatus END AS a,
-            CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderstatus END AS c
-          FROM orders)
-        SELECT COUNT(*) AS n,
-          CAST(SUM(CASE WHEN a = c THEN 1 ELSE 0 END) AS BIGINT) AS eq_true,
-          CAST(SUM(CASE WHEN a IS NOT DISTINCT FROM c THEN 1 ELSE 0 END)
-            AS BIGINT) AS nsafe_eq,
-          CAST(SUM(CASE WHEN a IS DISTINCT FROM c THEN 1 ELSE 0 END)
-            AS BIGINT) AS nsafe_ne
-        FROM b""")),
+        FROM b"""),
 
     // ---- ratio_to_report: each nation's share of its REGION's order
     // revenue, the percent-of-parent window every BI layer ships.
@@ -1556,18 +1493,10 @@ object Relational {
 
     // ---- plain-SQL surface (the exec_simple_query analogue §3.1):
     // the same SQL text runs on Spark (via Engine.sql) and on the oracle --
-    GQ("q24_sql_passthrough", {
-      val q = s"""WITH r AS (SELECT l_orderkey, ${osum("l_quantity")} AS q
+    GQ.sql("q24_sql_passthrough", s"""WITH r AS (SELECT l_orderkey, ${osum("l_quantity")} AS q
                  FROM lineitem GROUP BY l_orderkey)
         SELECT o_orderstatus, COUNT(*) AS n, ${osum("q")} AS sum_q
         FROM orders JOIN r ON o_orderkey = l_orderkey
-        GROUP BY o_orderstatus"""
-      Some(q)
-    },
-      (s, d) => Engine.sql(s, d, s"""WITH r AS (SELECT l_orderkey, ${osum("l_quantity")} AS q
-                 FROM lineitem GROUP BY l_orderkey)
-        SELECT o_orderstatus, COUNT(*) AS n, ${osum("q")} AS sum_q
-        FROM orders JOIN r ON o_orderkey = l_orderkey
-        GROUP BY o_orderstatus"""))
+        GROUP BY o_orderstatus""")
   )
 }

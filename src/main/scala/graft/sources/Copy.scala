@@ -116,12 +116,4 @@ object Copy {
       .agg(count(lit(1)).as("n_copies"))
       .select("doc_id", "text", "n_copies")
   }
-
-  /** COPY ... FROM ... into a managed table (the full reference path:
-    * ingest + publish to catalog). */
-  def intoTable(spark: SparkSession, path: String, schema: StructType,
-      table: String, opts: Options = Options()): Unit = {
-    from(spark, path, schema, opts).write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-  }
 }

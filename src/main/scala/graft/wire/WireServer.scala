@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Catalog, Errors, GraftArgError, GraftSession}
+import graft.{Catalog, Errors, GraftArgError, GraftSession, GraftStateError}
+import graft.GraftSession.Outcome
 
 /** PostgreSQL v3 wire-protocol front-end over [[GraftSession]] — the
   * reference's remote entry point re-expressed for the Spark engine
@@ -16,14 +17,20 @@ import graft.{Catalog, Errors, GraftArgError, GraftSession}
   * src/lib.rs:289-375 `do_postgres_main`; thread-per-connection accept
   * src/bin/kuiba/main.rs:50-57).
   *
-  * Supported surface (the reference's own subset): startup handshake
-  * (SSLRequest -> 'N', CancelRequest recognized, StartupMessage with
-  * required `user` param) -> AuthenticationOk -> ParameterStatus report
-  * -> BackendKeyData -> ReadyForQuery loop handling simple Query ('Q')
-  * and Terminate ('X'). Results render in text format via the engine's
-  * PG output conventions (bool t/f, bytea \x hex — PgFunctions
-  * renderers) with type oids from the kb_type bootstrap
-  * (Catalog.typeOid).
+  * Surface: startup handshake (SSLRequest -> 'N', CancelRequest ->
+  * job-group cancel, StartupMessage with required `user` param) ->
+  * AuthenticationOk -> ParameterStatus report -> BackendKeyData ->
+  * ReadyForQuery loop over simple Query ('Q'), the extended protocol
+  * (Parse/Bind/Describe/Execute/Close/Flush/Sync) and Terminate ('X'),
+  * with the COPY FROM STDIN / TO STDOUT sub-protocols. Every statement
+  * takes one path: [[GraftSession.plan]] classifies, gates and plans it
+  * once — per statement for Query, once per portal at Bind (Describe
+  * reads that plan's schema) — and one routine runs the outcome for
+  * both Query and Execute. Every Spark job of a connection runs in its
+  * `graft-wire-<sid>` job group. Results render in text format via the
+  * engine's PG output conventions (bool t/f, bytea \x hex — PgFunctions
+  * renderers) or in binary where Bind asks for it, with type oids from
+  * the kb_type bootstrap (Catalog.typeOid).
   *
   * Scale note: the wire server is a control-plane veneer — each Query
   * executes as a normal distributed Spark job; only the (client-bound)
@@ -154,6 +161,11 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
       if (!params.contains("user"))
         throw new IllegalArgumentException("StartupMessage: no user key")
 
+      // the connection thread is dedicated, so every Spark job it starts
+      // — at Bind, Describe, Execute or Query, and the catalog views
+      // below — runs in its one group, which a CancelRequest cancels
+      spark.sparkContext.setJobGroup(jobGroupOf(sid), s"wire session $sid",
+        interruptOnCancel = true)
       val sess = new GraftSession(spark, dataDir)
       // AuthenticationOk (trust auth, like the reference)
       send(out, 'R', i32(0))
@@ -166,7 +178,7 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
       cancelKeys.put(sid, cancelKeyOf(sid))
       send(out, 'K', i32(sid), i32(cancelKeyOf(sid)))
 
-      queryLoop(in, out, sess, sid)
+      queryLoop(in, out, sess)
     } catch {
       case _: EOFException | _: SocketException => // client went away
       case _: Exception if !running =>
@@ -246,13 +258,13 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
       ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
 
   private def queryLoop(in: DataInputStream, out: DataOutputStream,
-      sess: GraftSession, sid: Int): Unit = {
+      sess: GraftSession): Unit = {
     var alive = true
     // extended-protocol state: prepared statements (query text + declared
-    // param oids) and bound portals (query text + typed param values)
+    // param oids) and bound portals (the statement planned once at Bind +
+    // Bind's result format codes)
     val stmts = scala.collection.mutable.Map[String, (String, Seq[Int])]()
-    val portals =
-      scala.collection.mutable.Map[String, (String, Seq[Any], Seq[Int])]()
+    val portals = scala.collection.mutable.Map[String, (Outcome, Seq[Int])]()
     // suspended-portal cursors (Execute with maxRows hit the cap): the
     // remaining text-rendered rows as a toLocalIterator — one partition
     // resident at a time, so a huge result never materializes server-side.
@@ -263,9 +275,11 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
     var sendReady = true // ReadyForQuery after startup, Query, and Sync ONLY
     var skipTilSync = false // extended error recovery (protocol rule)
 
-    def portalDf(query: String, params: Seq[Any]): DataFrame =
-      if (params.isEmpty) sess.execute(query)
-      else sess.executeWith(translateParams(query),
+    /** Plan a statement with Bind's positional values: `$n` markers
+      * become the named parameters `pn`. */
+    def planWith(query: String, params: Seq[Any]): Outcome =
+      if (params.isEmpty) sess.plan(query)
+      else sess.plan(translateParams(query),
         params.zipWithIndex.map { case (v, i) => s"p${i + 1}" -> v }.toMap)
 
     // Send up to `max` DataRows from a suspended cursor; PortalSuspended
@@ -280,6 +294,47 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
       }
       if (it.hasNext) send(out, 's')
       else { suspended.remove(portal); send(out, 'C', cstr(s"SELECT $n")) }
+    }
+
+    /** Run one planned statement and send its result — the routine the
+      * simple Query loop (`portal` None: RowDescription first, every row)
+      * and Execute (Describe announced the rows; `fetchMax` > 0 opens a
+      * cursor on the portal) share. */
+    def respond(outcome: Outcome, resFmts: Seq[Int] = Nil,
+        portal: Option[String] = None, fetchMax: Int = 0): Unit = outcome match {
+      case GraftSession.Utility(run) =>
+        val tagValue = run()
+        if (tagValue == GraftSession.EmptyQuery) send(out, 'I')
+        else send(out, 'C', cstr(tagValue))
+      case GraftSession.CopyChannel(rel, schema, opts, true) =>
+        handleCopyIn(in, out, sess, rel, schema, opts)
+      case GraftSession.CopyChannel(rel, schema, opts, false) =>
+        handleCopyOut(out, sess, rel, schema, opts)
+      case GraftSession.Rows(df) =>
+        val fmts = resolveFmts(resFmts, df.schema.fields)
+        val (fields, rendered) = renderWire(df, fmts)
+        if (portal.isEmpty) sendRowDescription(out, fields, fmts)
+        // the server-side cap holds on every path
+        val capped = rendered.limit(maxRows)
+        portal match {
+          case Some(p) if fetchMax > 0 => // one partition resident at a time
+            val it = scala.jdk.CollectionConverters
+              .IteratorHasAsScala(capped.toLocalIterator()).asScala
+            suspended(p) = (fields, fmts, it)
+            sendPortalRows(p, fields, fmts, it, fetchMax)
+          case _ =>
+            val rows = capped.collect()
+            rows.foreach(sendDataRow(out, fields, fmts, _))
+            send(out, 'C', cstr(s"SELECT ${rows.length}"))
+        }
+    }
+
+    // a failed statement aborts a transaction block whether it failed
+    // while planned or while run (lib.rs:468-473)
+    def reportError(e: Exception): Unit = {
+      sess.onStatementError()
+      sendError(out, sqlStateOf(e),
+        Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
     }
 
     while (alive && running) {
@@ -310,34 +365,8 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
             val it = statements.iterator
             var failed = false
             while (it.hasNext && !failed) {
-              val stmt = it.next()
-              try {
-                // every Spark job of this statement runs under the
-                // session's job group so a CancelRequest can interrupt
-                // it mid-flight
-                spark.sparkContext.setJobGroup(jobGroupOf(sid),
-                  s"wire session $sid", interruptOnCancel = true)
-                sess.copyInTarget(stmt) match {
-                  case Some((rel, schema, opts)) =>
-                    handleCopyIn(in, out, sess, rel, schema, opts)
-                  case None => sess.copyOutSource(stmt) match {
-                    case Some((rel, schema, opts)) =>
-                      handleCopyOut(out, sess, rel, schema, opts)
-                    case None =>
-                      val df = sess.execute(stmt)
-                      writeResult(out, df)
-                  }
-                }
-              } catch {
-                case e: Exception =>
-                  // a lazy (execution-time) failure must abort a
-                  // transaction block exactly like an analysis-time one
-                  // (lib.rs:468-473)
-                  sess.onStatementError()
-                  sendError(out, sqlStateOf(e),
-                    Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
-                  failed = true
-              } finally spark.sparkContext.clearJobGroup()
+              try respond(sess.plan(it.next()))
+              catch { case e: Exception => reportError(e); failed = true }
             }
           }
           sendReady = true
@@ -353,6 +382,8 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
             case 'B' => // Bind: portal, stmt, fmts, params, result fmts
               val (portal, p1) = readCstr(body, 0)
               val (stmt, p2) = readCstr(body, p1)
+              // re-Bind replaces the portal and any open cursor
+              portals.remove(portal); suspended.remove(portal)
               val (query, oids) = stmts.getOrElse(stmt,
                 throw new GraftArgError("26000", // invalid_sql_statement_name
                   s"prepared statement \"$stmt\" does not exist"))
@@ -389,39 +420,36 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
               if (resFmts.exists(f => f != 0 && f != 1))
                 throw new GraftArgError(Errors.FeatureNotSupported,
                   "result format codes must be 0 (text) or 1 (binary)")
-              portals(portal) = (query, params, resFmts)
-              suspended.remove(portal) // re-Bind replaces any open cursor
+              // the portal's one plan: gated and analyzed here, as PG's
+              // exec_bind_message checks the aborted block
+              portals(portal) = (planWith(query, params), resFmts)
               send(out, '2') // BindComplete
             case 'D' => // Describe: 'S' statement | 'P' portal
               val kind = body(0).toChar
               val (name, _) = readCstr(body, 1)
-              val (query, params, resFmts) = kind match {
+              val (outcome, resFmts) = kind match {
                 case 'S' =>
                   val (q, oids) = stmts.getOrElse(name,
                     throw new GraftArgError("26000",
                       s"prepared statement \"$name\" does not exist"))
+                  // a statement has no values yet: plan it with NULLs
+                  // (an error is reported like any statement's)
+                  val planned = planWith(q, oids.map(_ => null))
                   // ParameterDescription: declared oids (0 = unspecified)
                   send(out, 't',
                     (i16(oids.length) +: oids.map(i32)).reduce(_ ++ _))
-                  // formats are a Bind property — Describe-statement
+                  // formats are a Bind property, so Describe-statement
                   // always reports text (PG semantics)
-                  (q, oids.map(_ => null: Any), Seq.empty[Int])
+                  (planned, Seq.empty[Int])
                 case _ =>
                   portals.getOrElse(name,
                     throw new GraftArgError("34000", // invalid_cursor_name
                       s"portal \"$name\" does not exist"))
               }
-              // utility statements execute eagerly — never probe them
-              val schemaOpt =
-                if (sess.isUtility(query)) None
-                else scala.util.Try(
-                  sess.executeWith(translateParams(query),
-                    params.zipWithIndex.map { case (v, i) =>
-                      s"p${i + 1}" -> v }.toMap).schema).toOption
-              schemaOpt match {
-                case Some(s) if s.nonEmpty =>
-                  sendRowDescription(out, s.fields,
-                    resolveFmts(resFmts, s.fields))
+              outcome match {
+                case GraftSession.Rows(df) if df.schema.nonEmpty =>
+                  val fields = df.schema.fields
+                  sendRowDescription(out, fields, resolveFmts(resFmts, fields))
                 case _ => send(out, 'n') // NoData
               }
             case 'E' => // Execute: portal, int32 maxRows. 0 = run to
@@ -430,39 +458,15 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
               // resumes from the retained row iterator.
               val (portal, p1) = readCstr(body, 0)
               val fetchMax = i32At(body, p1)
-              val (query, params, resFmts) = portals.getOrElse(portal,
+              val (outcome, resFmts) = portals.getOrElse(portal,
                 throw new GraftArgError("34000",
                   s"portal \"$portal\" does not exist"))
-              try {
-                spark.sparkContext.setJobGroup(jobGroupOf(sid),
-                  s"wire session $sid", interruptOnCancel = true)
-                suspended.get(portal) match {
-                  case Some((fields, fmts, it)) => // resume; 0 = no limit
-                    sendPortalRows(portal, fields, fmts, it,
-                      if (fetchMax <= 0) Int.MaxValue else fetchMax)
-                  case None =>
-                    // Execute sends DataRows WITHOUT RowDescription
-                    // (that is Describe's job, per protocol)
-                    val df = portalDf(query, params)
-                    val schema = df.schema
-                    val utility =
-                      schema.length == 1 && schema.head.name == "command_status"
-                    if (fetchMax <= 0 || utility)
-                      writeResult(out, df, withRowDesc = false, resFmts)
-                    else {
-                      val fmts = resolveFmts(resFmts, schema.fields)
-                      val (fields, rendered) = renderWire(df, fmts)
-                      // same server-side cap as the run-to-completion
-                      // path; one partition resident at a time
-                      val it = rendered.limit(maxRows).toLocalIterator()
-                      suspended(portal) =
-                        (fields, fmts, scala.jdk.CollectionConverters
-                          .IteratorHasAsScala(it).asScala)
-                      sendPortalRows(portal, fields, fmts,
-                        suspended(portal)._3, fetchMax)
-                    }
-                }
-              } finally spark.sparkContext.clearJobGroup()
+              suspended.get(portal) match {
+                case Some((fields, fmts, it)) => // resume; 0 = no limit
+                  sendPortalRows(portal, fields, fmts, it,
+                    if (fetchMax <= 0) Int.MaxValue else fetchMax)
+                case None => respond(outcome, resFmts, Some(portal), fetchMax)
+              }
             case 'C' => // Close statement/portal: always succeeds
               val kind = body(0).toChar
               val (name, _) = readCstr(body, 1)
@@ -482,9 +486,7 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
           out.flush()
         } catch {
           case e: Exception =>
-            sess.onStatementError()
-            sendError(out, sqlStateOf(e),
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
+            reportError(e)
             out.flush()
             skipTilSync = true // extended-mode error recovery
         }
@@ -495,12 +497,14 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
   /** Copy-in sub-protocol for `COPY t FROM STDIN`: CopyInResponse ('G',
     * overall format 0 = text + per-column format 0) -> accumulate
     * CopyData ('d') payloads -> CopyDone ('c') parses and appends via
-    * the session's COPY machinery and answers CommandComplete `COPY n`;
-    * CopyFail ('f') aborts with the client's message (PG's
-    * query_canceled code, 57014). Any other message during copy-in is a
-    * protocol violation (08P01). The reference parses only file-path
-    * COPY (sql.lalrpop:560-572) but its DestRemote streams results over
-    * this same protocol layer; this is the matching ingest direction. */
+    * the session's COPY machinery and answers CommandComplete `COPY n`.
+    * CopyFail ('f') fails the statement with the client's message (PG's
+    * query_canceled code, 57014); Flush and Sync are ignored, as PG does
+    * for clients that send them after an extended-protocol Execute; any
+    * other message is a protocol violation (08P01). The reference parses
+    * only file-path COPY (sql.lalrpop:560-572) but its DestRemote streams
+    * results over this same protocol layer; this is the matching ingest
+    * direction. */
   private def handleCopyIn(in: DataInputStream, out: DataOutputStream,
       sess: GraftSession, rel: String,
       schema: StructType, opts: graft.sources.Copy.Options): Unit = {
@@ -521,16 +525,13 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
             new String(buf.toByteArray, UTF_8))
           send(out, 'C', cstr(s"COPY $n"))
           done = true
+        case 'H' | 'S' =>
         case 'f' =>
-          val (reason, _) = readCstr(body, 0)
-          sess.onStatementError()
-          sendError(out, "57014", s"COPY from stdin failed: $reason")
-          done = true
+          throw new GraftStateError("57014",
+            s"COPY from stdin failed: ${readCstr(body, 0)._1}")
         case other =>
-          sess.onStatementError()
-          sendError(out, "08P01",
+          throw new GraftArgError("08P01",
             s"unexpected message type ${other.toChar} during COPY FROM STDIN")
-          done = true
       }
     }
   }
@@ -634,30 +635,6 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
     case BinaryType => row.getAs[Array[Byte]](i)
     case other => throw new GraftArgError(Errors.FeatureNotSupported,
       s"no binary output function for ${other.simpleString}")
-  }
-
-  /** Utility tags (GraftSession's single command_status column) become a
-    * bare CommandComplete; everything else streams RowDescription +
-    * DataRows in text format + "SELECT n". Extended-protocol Execute
-    * passes withRowDesc = false (Describe already announced it). */
-  private def writeResult(out: DataOutputStream, df: DataFrame,
-      withRowDesc: Boolean = true, resFmts: Seq[Int] = Seq.empty): Unit = {
-    val schema = df.schema
-    if (schema.length == 1 && schema.head.name == "command_status") {
-      val tagValue = df.head().getString(0)
-      // the session API renders an empty statement as this pseudo-tag;
-      // on the wire it is its own message type ('I'), not a
-      // CommandComplete (protocol.rs EmptyQueryResponse)
-      if (tagValue == "EmptyQueryResponse") send(out, 'I')
-      else send(out, 'C', cstr(tagValue))
-      return
-    }
-    val fmts = resolveFmts(resFmts, df.schema.fields)
-    val (fields, rendered) = renderWire(df, fmts)
-    if (withRowDesc) sendRowDescription(out, fields, fmts)
-    val rows = rendered.limit(maxRows).collect()
-    rows.foreach(sendDataRow(out, fields, fmts, _))
-    send(out, 'C', cstr(s"SELECT ${rows.length}"))
   }
 
   /** Wire rendering, shared by the run-to-completion path and the

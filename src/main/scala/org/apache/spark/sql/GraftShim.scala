@@ -37,10 +37,4 @@ object GraftShim {
     * delivered (`listenerBus` is private[spark]). */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
-
-  /** Idempotently install a planner strategy on a live session. */
-  def addStrategy(spark: SparkSession, s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(s)) exp.extraStrategies ++= Seq(s)
-  }
 }

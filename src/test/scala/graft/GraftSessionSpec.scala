@@ -438,12 +438,12 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("parameterized queries bind named parameters (extended-protocol analogue)") {
-    val r = sess.executeWith(
+    val r = sess.execute(
       "SELECT count(*) AS n FROM lineitem WHERE l_quantity >= :minq AND l_returnflag = :rf",
       Map("minq" -> 49.0, "rf" -> "R"))
     assert(r.head.getLong(0) > 0)
     // binding, not splicing: a quote in the value cannot break the query
-    val s = sess.executeWith("SELECT :v AS v", Map("v" -> "o'brien"))
+    val s = sess.execute("SELECT :v AS v", Map("v" -> "o'brien"))
     assert(s.head.getString(0) == "o'brien")
   }
 

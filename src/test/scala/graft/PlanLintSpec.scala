@@ -140,8 +140,9 @@ class PlanLintSpec extends AnyFunSuite {
     *    approx_percentile cuts aggregate ((2^bits - 1) x |zCols|
     *    doubles, bounded by parameters not data); centroid-table read
     *    (k rows).
-    *  - WireServer.scala 2: the PG wire SINK — rows cross to the
-    *    client here by definition; portal fetches are maxRows-capped.
+    *  - WireServer.scala 1: the PG wire SINK — rows cross to the
+    *    client here by definition (maxRows-capped); portal fetches
+    *    stream through toLocalIterator.
     *  - Skew.scala 1: the ONE-row max-key-count probe aggregate gating
     *    the salted-join arm (sampled, scalar result).
     *  - ClusterCheck.scala 1: the ONE-row (sum, count) fingerprint
@@ -171,7 +172,7 @@ class PlanLintSpec extends AnyFunSuite {
     // Engine.driverLocal (the d05/BPE/graph dual-regime
     // discipline), so the collect is threshold-bounded by construction
     "Relational.scala" -> 3, "Cluster.scala" -> 5, "VectorSearch.scala" -> 4,
-    "Layout.scala" -> 3, "WireServer.scala" -> 2, "Skew.scala" -> 1,
+    "Layout.scala" -> 3, "WireServer.scala" -> 1, "Skew.scala" -> 1,
     // Graph (r18): the iterative operators' driver-local small-graph
     // regime (the d05 pattern) — one edge-list collect gated by a
     // MEASURED edge count through Engine.driverLocal, plus
@@ -277,6 +278,14 @@ class PlanLintSpec extends AnyFunSuite {
     val banned = Seq("cloneSession", "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
     val sites = for ((f, src) <- mainSources; b <- banned if src.contains(b)) yield s"$f: $b"
     assert(sites.isEmpty, s"conf-forking session sites:\n  ${sites.sorted.mkString("\n  ")}")
+  }
+
+  /** Planner strategies come from `GraftExtensions`
+    * (`injectPlannerStrategy`), once for every session: no file in
+    * src/main installs one on a live session per call. */
+  test("src/main installs no planner strategy on a live session") {
+    val sites = mainSources.collect { case (f, src) if src.contains("extraStrategies") => f }
+    assert(sites.isEmpty, s"per-session strategy installs:\n  ${sites.sorted.mkString("\n  ")}")
   }
 
   /** A window with no partitionBy funnels its entire input through ONE

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Graft's SQL semantics are the defaults of the context `Engine.session`
@@ -29,6 +29,14 @@ class SessionDefaultsSpec extends AnyFunSuite {
     try w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 1700000000123456789L))
     finally w.close()
     path
+  }
+
+  test("Engine.table reads a TIMESTAMP(NANOS) events.ts as micros") {
+    val dir = new java.io.File(nanosFile).getParent
+    val ev = Engine.table(spark, dir, "events")
+    assert(ev.schema("ts").dataType == TimestampType)
+    // 1700000000123456789 ns truncates to 1700000000123456 us
+    assert(ev.selectExpr("unix_micros(ts)").head.getLong(0) == 1700000000123456L)
   }
 
   test("a caller's AQE=false survives building q05 and reaches its plan") {

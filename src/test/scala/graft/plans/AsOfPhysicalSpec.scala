@@ -2,13 +2,14 @@ package graft.plans
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Engine, TestSpark}
 import graft.operators.AsOf
 
-class AsOfPhysicalSpec extends AnyFunSuite {
+class AsOfPhysicalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -54,6 +55,20 @@ class AsOfPhysicalSpec extends AnyFunSuite {
 
     assert(physical == composed)
     assert(physical.nonEmpty)
+  }
+
+  test("a new session plans AsOfJoinExec through the injected strategy") {
+    val s = spark.newSession()
+    import s.implicits._
+    val left = Seq((1L, ts(10), "p1")).toDF("user_id", "ts", "ltag")
+    val right = Seq((1L, ts(5), "v1")).toDF("user_id", "ts", "rtag")
+    val joined = AsOf.asofJoinPhysical(left, right, Seq("user_id"), "ts")
+    val plan = joined.queryExecution.executedPlan
+    assert(find(plan)(_.isInstanceOf[AsOfJoinExec]).nonEmpty, plan.treeString)
+    assert(joined.select("rtag").as[String].collect().toSeq == Seq("v1"))
+    // GraftExtensions injected it; nothing installed it on the session
+    assert(s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .experimental.extraStrategies.isEmpty)
   }
 
   test("the plan is the dedicated exec with one exchange+sort per side") {

@@ -14,9 +14,11 @@ import graft.operators.Events
 class EventsStreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** events.parquet has TIMESTAMP(NANOS) which the streaming parquet
-    * source reads as long (nanosAsLong is in Engine.SessionDefaults) —
-    * stage a micros copy once for the file-source tests. */
+  /** A directory the streaming parquet source can read with
+    * `EventsStreaming.eventsSchema`: the fixture's events (`ts` stored as
+    * `timestamp[us]`), copied through `Engine.table` — which would also
+    * turn a TIMESTAMP(NANOS) `ts` into micros — once for the file-source
+    * tests. */
   lazy val stagedDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
     Engine.table(spark, TestSpark.sf, "events")

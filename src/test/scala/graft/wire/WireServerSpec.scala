@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{JobCounter, TestSpark}
 
 /** Drives the v3 wire front-end through a REAL TCP round-trip with a
   * hand-rolled client: startup -> AuthenticationOk -> ParameterStatus ->
@@ -19,6 +19,8 @@ class WireServerSpec extends AnyFunSuite {
   /** Minimal v3 client for the spec. */
   final class Client(port: Int) {
     private val sock = new Socket("127.0.0.1", port)
+    // a server that stops answering fails the test instead of hanging it
+    sock.setSoTimeout(120000)
     private val in = new DataInputStream(sock.getInputStream)
     private val out = new DataOutputStream(sock.getOutputStream)
 
@@ -174,6 +176,12 @@ class WireServerSpec extends AnyFunSuite {
           else { val s = new String(b, pos, len, UTF_8); pos += len; s }
         }
       }
+
+    /** The session id of BackendKeyData ('K') in the startup messages. */
+    def sessionId(msgs: Seq[(Char, Array[Byte])]): Int =
+      msgs.collectFirst { case ('K', b) =>
+        ((b(0) & 0xff) << 24) | ((b(1) & 0xff) << 16) | ((b(2) & 0xff) << 8) | (b(3) & 0xff)
+      }.get
 
     def cstrAt(b: Array[Byte], pos: Int): String =
       new String(b, pos, b.indexOf(0: Byte, pos) - pos, UTF_8)
@@ -826,5 +834,185 @@ class WireServerSpec extends AnyFunSuite {
       assert(c.dataRows(c.drain()._1) == Seq(Seq("7")))
       c.terminate()
     } finally srv.close()
+  }
+
+  /** The aborted-block gate holds on every path: simple-Query COPY never
+    * opens a copy channel, and an extended-protocol statement is
+    * rejected at Bind (PG's exec_bind_message) before it runs. */
+  test("an aborted block rejects COPY STDIN/STDOUT before the copy response") {
+    spark.sql("DROP TABLE IF EXISTS wire_abort_copy_t")
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup(); c.drain()
+      c.query("CREATE TABLE wire_abort_copy_t (id int, name varchar(16))")
+      c.drain()
+      c.query("COPY wire_abort_copy_t FROM STDIN")
+      assert(c.read()._1 == 'G')
+      c.copyData("1,alpha\n")
+      c.copyDone(); c.drain()
+
+      c.query("BEGIN"); c.drain()
+      c.query("SELECT * FROM no_such_table_qq")
+      assert(c.drain()._2 == 'E')
+      c.query("COPY wire_abort_copy_t FROM STDIN")
+      val (in, inSt) = c.drain()
+      assert(c.errFields(in)('C') == "25P02", s"tags: ${in.map(_._1)}")
+      assert(!in.exists(_._1 == 'G'))
+      assert(inSt == 'E')
+      c.query("COPY wire_abort_copy_t TO STDOUT")
+      val (out, outSt) = c.drain()
+      assert(c.errFields(out)('C') == "25P02", s"tags: ${out.map(_._1)}")
+      assert(!out.exists(m => m._1 == 'H' || m._1 == 'd'))
+      assert(outSt == 'E')
+      c.query("ROLLBACK"); c.drain()
+      c.query("SELECT COUNT(*) AS n FROM wire_abort_copy_t")
+      assert(c.dataRows(c.drain()._1) == Seq(Seq("1")))
+      c.terminate()
+    } finally {
+      srv.close()
+      spark.sql("DROP TABLE IF EXISTS wire_abort_copy_t")
+    }
+  }
+
+  test("an aborted block rejects a parameterized Bind with 25P02 and runs no job") {
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup()
+      val sid = c.sessionId(c.drain()._1)
+      c.query("BEGIN"); c.drain()
+      c.query("SELECT * FROM no_such_table_qq"); c.drain()
+      val jobs = JobCounter(spark, JobCounter.inGroup(s"graft-wire-$sid"))
+      try {
+        c.parse("", "SELECT n_name FROM nation WHERE n_nationkey = $1", Seq(20))
+        c.bind("", "", Seq("3"))
+        c.executePortal("")
+        c.sync()
+        val (msgs, st) = c.drain()
+        assert(c.errFields(msgs)('C') == "25P02", s"tags: ${msgs.map(_._1)}")
+        assert(!msgs.exists(_._1 == 'D'), "the rejected statement must not run")
+        assert(st == 'E')
+        assert(jobs.drained() == 0)
+      } finally jobs.close()
+      c.query("ROLLBACK"); c.drain()
+      c.parse("", "SELECT n_name FROM nation WHERE n_nationkey = $1", Seq(20))
+      c.bind("", "", Seq("3"))
+      c.executePortal("")
+      c.sync()
+      assert(c.dataRows(c.drain()._1) == Seq(Seq("NATION_3")))
+      c.terminate()
+    } finally srv.close()
+  }
+
+  /** Bind plans the portal once and Describe reads that plan: a table
+    * function whose builder looks its query vector up on the driver
+    * runs that lookup once per call, in the connection's job group. */
+  test("a warm extended serving call starts the jobs of a simple Query, all in the wire group") {
+    graft.Serving.buildIndexes(spark, TestSpark.sf, "wsrv")
+    graft.Serving.install(spark, "wsrv")
+    val q = "SELECT * FROM graft_ann_topk(0, 5)"
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup()
+      val sid = c.sessionId(c.drain()._1)
+      def simple(): Unit = {
+        c.query(q)
+        val (msgs, _) = c.drain()
+        assert(c.dataRows(msgs).length == 5, s"err: ${c.errFields(msgs)}")
+      }
+      def extended(): Unit = {
+        c.parse("", q)
+        c.bind("", "", Nil)
+        c.describe('P', "")
+        c.executePortal("")
+        c.sync()
+        val (msgs, _) = c.drain()
+        assert(msgs.map(_._1).containsSlice(Seq('1', '2', 'T', 'D')),
+          s"tags: ${msgs.map(_._1)} err: ${c.errFields(msgs)}")
+        assert(c.dataRows(msgs).length == 5)
+      }
+      /** (jobs outside every wire group, jobs in this connection's group) */
+      def jobs(body: => Unit): (Int, Int) = {
+        val outside = JobCounter(spark, p =>
+          !Option(p.getProperty("spark.jobGroup.id")).exists(_.startsWith("graft-wire-")))
+        val mine = JobCounter(spark, JobCounter.inGroup(s"graft-wire-$sid"))
+        try { body; (outside.drained(), mine.drained()) }
+        finally { outside.close(); mine.close() }
+      }
+      simple(); extended() // warm
+      val (simpleOutside, simpleJobs) = jobs(simple())
+      val (extOutside, extJobs) = jobs(extended())
+      assert(simpleOutside == 0 && extOutside == 0,
+        s"jobs outside the wire group: simple $simpleOutside, extended $extOutside")
+      assert(simpleJobs > 0)
+      assert(extJobs == simpleJobs, s"extended $extJobs jobs vs simple $simpleJobs")
+      c.terminate()
+    } finally srv.close()
+  }
+
+  test("Parse/Bind/Execute drives COPY FROM STDIN and COPY TO STDOUT like Query") {
+    spark.sql("DROP TABLE IF EXISTS wire_ext_copy_t")
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup(); c.drain()
+      c.query("CREATE TABLE wire_ext_copy_t (id int, name varchar(16))")
+      c.drain()
+
+      // libpq sends Sync right behind Execute; copy-in ignores it
+      c.parse("", "COPY wire_ext_copy_t FROM STDIN")
+      c.bind("", "", Nil)
+      c.executePortal("")
+      c.sync()
+      assert(c.read()._1 == '1')
+      assert(c.read()._1 == '2')
+      val (g, gb) = c.read()
+      assert(g == 'G', s"got $g: ${c.errFields(Seq(g -> gb))}")
+      assert(gb(0) == 0 && (((gb(1) & 0xff) << 8) | (gb(2) & 0xff)) == 2)
+      c.copyData("1,alpha\n2,")
+      c.copyData("beta\n")
+      c.copyDone()
+      c.sync()
+      val (in, inSt) = c.drain()
+      assert(in.exists { case (t, b) => t == 'C' && c.cstrAt(b, 0) == "COPY 2" },
+        s"tags: ${in.map(_._1)} err: ${c.errFields(in)}")
+      assert(inSt == 'I')
+
+      c.parse("", "COPY wire_ext_copy_t TO STDOUT")
+      c.bind("", "", Nil)
+      c.describe('P', "")
+      c.executePortal("")
+      c.sync()
+      val (out, _) = c.drain()
+      assert(out.map(_._1).take(4) == Seq('1', '2', 'n', 'H'),
+        s"tags: ${out.map(_._1)} err: ${c.errFields(out)}")
+      val lines = out.collect { case ('d', b) => new String(b, UTF_8) }
+        .mkString.split("\n").toSeq.sorted
+      assert(lines == Seq("1,alpha", "2,beta"))
+      assert(out.exists(_._1 == 'c'))
+      assert(out.exists { case (t, b) => t == 'C' && c.cstrAt(b, 0) == "COPY 2" })
+
+      // a CopyFail ends the extended statement with 57014; error
+      // recovery skips to Sync and the session keeps serving
+      c.parse("", "COPY wire_ext_copy_t FROM STDIN")
+      c.bind("", "", Nil)
+      c.executePortal("")
+      c.flushMsg()
+      assert(c.read()._1 == '1' && c.read()._1 == '2' && c.read()._1 == 'G')
+      c.copyData("9,never\n")
+      c.copyFail("client changed its mind")
+      c.executePortal("") // skipped: recovery discards until Sync
+      c.sync()
+      val (fail, _) = c.drain()
+      assert(c.errFields(fail)('C') == "57014")
+      c.query("SELECT COUNT(*) AS n FROM wire_ext_copy_t")
+      assert(c.dataRows(c.drain()._1) == Seq(Seq("2")))
+      c.terminate()
+    } finally {
+      srv.close()
+      spark.sql("DROP TABLE IF EXISTS wire_ext_copy_t")
+    }
   }
 }
