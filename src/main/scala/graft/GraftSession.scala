@@ -2,7 +2,8 @@ package graft
 
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, ParsedStatement}
 import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.apache.spark.sql.types._
 
@@ -13,13 +14,14 @@ import graft.sources.Copy
   * src/lib.rs:438-466 -> parse -> analyze -> utility::process_utility |
   * planner/executor). The reference grammar accepts exactly: SELECT, SET,
   * SHOW, CREATE TYPE, CREATE TABLE, BEGIN/COMMIT/ABORT, LOCK, COPY, and
-  * the empty statement (src/parser/sql.lalrpop:28-39). [[classify]]
-  * matches a statement against that grammar once (one regex table);
-  * [[plan]] applies the aborted-block gate and the statement-error rule
-  * to every statement and returns one [[GraftSession.Outcome]]: Catalyst
-  * rows, a utility that yields its command tag, or a COPY STDIN/STDOUT
-  * channel. [[execute]], [[copyInTarget]] and the wire front-end are thin
-  * callers of that one path.
+  * the empty statement (src/parser/sql.lalrpop:28-39). [[plan]] applies
+  * the aborted-block gate and the statement-error rule to every
+  * statement, matches it once against that grammar's regexes and returns
+  * one [[GraftSession.Outcome]]: Catalyst rows, a utility that yields its
+  * command tag, or a COPY STDIN/STDOUT channel. [[admit]] re-applies the
+  * gate when a planned outcome runs later (a wire portal). [[execute]],
+  * [[copyInTarget]] and the wire front-end are thin callers of that one
+  * path.
   *
   * Transaction semantics: the reference implements a real PG transaction
   * block state machine (TBlockState, src/access/xact.rs:216-234) with
@@ -106,45 +108,102 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     import spark.implicits._
     Seq(t).toDF("command_status")
   }
+  private def rows(df: DataFrame): Rows = Rows(df.schema, () => df)
 
-  /** Match `sql` against the grammar table, once: the first row whose
-    * regex matches the whole statement decides; anything else is a
-    * query for Catalyst. */
-  private def classify(sql: String): Stmt = {
-    val t = sql.trim
-    if (t.isEmpty || t == ";") Empty
-    else grammar.iterator.flatMap { case (re, stmt) => re.unapplySeq(t).map(stmt) }
-      .nextOption().getOrElse(Query)
-  }
+  private val reSet: Regex = """(?is)^\s*SET\s+(\w+)\s*(?:=|TO)\s*'?([^';]*?)'?\s*;?\s*$""".r
+  private val reShow: Regex = """(?is)^\s*SHOW\s+(\w+)\s*;?\s*$""".r
+  private val reBegin: Regex = """(?is)^\s*(BEGIN|START\s+TRANSACTION)\s*;?\s*$""".r
+  private val reCommit: Regex = """(?is)^\s*(COMMIT|END)\s*;?\s*$""".r
+  private val reAbort: Regex = """(?is)^\s*(ABORT|ROLLBACK)\s*;?\s*$""".r
+  private val reLock: Regex = """(?is)^\s*LOCK\s+(?:TABLE\s+)?([\w.]+)(?:\s+IN\s+(.+?)\s+MODE)?\s*;?\s*$""".r
+  private val reCreateType: Regex = """(?is)^\s*CREATE\s+TYPE\s+([\w.]+)\s*;?\s*$""".r
+  private val reCreateTable: Regex = """(?is)^\s*CREATE\s+TABLE\s+([\w.]+)\s*\((.+?)\)\s*(?:WITH\s*\((.*)\))?\s*;?\s*$""".r
+  private val reCopyFrom: Regex =
+    """(?is)^\s*COPY\s+([\w.]+)\s+FROM\s+'([^']+)'\s*(.*?)\s*;?\s*$""".r
+  private val reCopyTo: Regex =
+    """(?is)^\s*COPY\s+([\w.]+)\s+TO\s+'([^']+)'\s*(.*?)\s*;?\s*$""".r
+  private val reCopyFromStdin: Regex =
+    """(?is)^\s*COPY\s+([\w.]+)\s+FROM\s+STDIN\s*(.*?)\s*;?\s*$""".r
+  private val reCopyToStdout: Regex =
+    """(?is)^\s*COPY\s+([\w.]+)\s+TO\s+STDOUT\s*(.*?)\s*;?\s*$""".r
 
-  /** The aborted-block gate and the statement-error rule, for every
-    * statement. In an aborted block only COMMIT/ABORT (and the empty
-    * statement) get through (lib.rs:448-452); a statement that fails
-    * inside a block aborts it — exec_simple_query's error path
-    * (lib.rs:468-473 -> abort_cur_tran, xact.rs:573-576). */
-  private def guarded[T](stmt: Stmt)(body: => T): T = {
-    if (tblock == TAborted && !(stmt == Commit || stmt == Abort || stmt == Empty))
+  /** The aborted-block gate: in an aborted block only COMMIT/ABORT and
+    * the empty statement get through (lib.rs:448-452). */
+  private def gate(endsBlock: Boolean): Unit =
+    if (tblock == TAborted && !endsBlock)
       throw new GraftStateError(Errors.InFailedSqlTransaction,
         "current transaction is aborted, commands ignored until end of transaction block")
+
+  /** The statement-error rule: a statement that fails inside a block
+    * aborts it — exec_simple_query's error path (lib.rs:468-473 ->
+    * abort_cur_tran, xact.rs:573-576). */
+  private def failing[T](body: => T): T =
     try body catch { case e: Throwable => onStatementError(); throw e }
+
+  private def endsBlock(t: String): Boolean =
+    t.isEmpty || t == ";" || reCommit.matches(t) || reAbort.matches(t)
+
+  /** The exec_simple_query dispatch: gate `sql`, then match it once
+    * against the grammar and plan it. Planning runs Catalyst analysis
+    * (named `params` bind server-side via Spark's parameterized SQL — no
+    * string splicing), SHOW's lookup and COPY STDIN/STDOUT's relation and
+    * option checks; it runs no statement. The caller runs the outcome,
+    * after [[admit]] when the block may have changed since planning. */
+  def plan(sql: String, params: Map[String, Any] = Map.empty): Outcome = {
+    val t = sql.trim
+    gate(endsBlock(t))
+    failing(route(t, params))
   }
 
-  /** The exec_simple_query dispatch: classify `sql` once, gate it, and
-    * plan it. Planning runs Catalyst analysis (named `params` bind
-    * server-side via Spark's parameterized SQL — no string splicing),
-    * SHOW's lookup and COPY STDIN/STDOUT's relation and option checks;
-    * a utility runs, gated again (as PG's Execute re-checks), when the
-    * caller runs its [[GraftSession.Utility]]. */
-  def plan(sql: String, params: Map[String, Any] = Map.empty): Outcome = {
-    val stmt = classify(sql)
-    guarded(stmt) {
-      stmt match {
-        case Query =>
-          Rows(if (params.isEmpty) spark.sql(sql.trim) else spark.sql(sql.trim, params))
-        case ShowGuc(name) => Rows(showGuc(name))
-        case c: CopyWire => channel(c)
-        case u: UtilityStmt => Utility(() => guarded(u)(runUtility(u)))
+  /** The Execute-time gate (PG's exec_execute_message): an outcome
+    * planned before its block aborted runs only if it ends the block. */
+  def admit(outcome: Outcome): Unit =
+    gate(outcome match { case u: Utility => u.endsBlock; case _ => false })
+
+  /** The row schema of `sql` planned with `params` (Describe of a
+    * prepared statement, whose values are not bound yet). Outside the
+    * gate and the statement-error rule: a statement that cannot be
+    * planned before its values are known describes as no rows. */
+  def describe(sql: String, params: Map[String, Any]): Option[StructType] =
+    scala.util.Try(route(sql.trim, params)).toOption.collect { case Rows(s, _) => s }
+
+  private def route(t: String, params: Map[String, Any]): Outcome = {
+    def utility(body: => String) = Utility(() => failing(body))
+    t match {
+      case "" | ";" => Utility(() => EmptyQuery, endsBlock = true)
+      case reBegin(_) => utility {
+        if (tblock == TInProgress) "WARNING: there is already a transaction in progress"
+        else { tblock = TInProgress; "BEGIN" }
       }
+      case reCommit(_) => Utility(() => {
+        val was = tblock; tblock = TDefault; releaseLocks()
+        if (was == TAborted) "ROLLBACK" else "COMMIT"
+      }, endsBlock = true)
+      case reAbort(_) =>
+        Utility(() => { tblock = TDefault; releaseLocks(); "ROLLBACK" }, endsBlock = true)
+      case reSet(name, value) => utility(setGuc(name.toLowerCase, value))
+      case reShow(name) => rows(showGuc(name.toLowerCase))
+      case reLock(table, mode) => utility(lockTable(table, Option(mode)))
+      // stub parity: parse + namespace-resolve only (typecmds.rs:17-28)
+      case reCreateType(name) => utility(s"CreateTypeStmt { name: $name }")
+      case reCreateTable(name, cols, opts) => utility(createTable(name, cols, Option(opts)))
+      case reCopyFrom(table, path, opts) => utility(copyFrom(table, path, opts))
+      case reCopyTo(table, path, opts) => utility(copyTo(table, path, opts))
+      case reCopyFromStdin(table, opts) => channel(table, opts, fromClient = true)
+      case reCopyToStdout(table, opts) => channel(table, opts, fromClient = false)
+      case _ =>
+        def run() = if (params.isEmpty) spark.sql(t) else spark.sql(t, params)
+        // spark.sql runs a Spark command (INSERT, DROP, CREATE VIEW, ...)
+        // as soon as it analyzes it, so a command waits for the caller to
+        // run it; its result schema is declared on the parsed node
+        scala.util.Try(GraftShim.parsePlan(spark, t)).toOption.filter(_.exists {
+          case _: Command | _: ParsedStatement => true
+          case _ => false
+        }) match {
+          case Some(cmd) =>
+            Rows(scala.util.Try(cmd.schema).getOrElse(new StructType()), () => run())
+          case None => rows(run())
+        }
     }
   }
 
@@ -153,8 +212,8 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     * wire front-end's data channel and fails here. */
   def execute(sql: String, params: Map[String, Any] = Map.empty): DataFrame =
     plan(sql, params) match {
-      case Rows(df) => df
-      case Utility(run) => tag(run())
+      case Rows(_, df) => df()
+      case Utility(run, _) => tag(run())
       case c: CopyChannel =>
         onStatementError()
         throw new GraftArgError(Errors.FeatureNotSupported,
@@ -162,28 +221,10 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
             "available through the wire protocol's copy channel")
     }
 
-  private def runUtility(stmt: UtilityStmt): String = stmt match {
-    case Empty => EmptyQuery
-    case Begin =>
-      if (tblock == TInProgress) "WARNING: there is already a transaction in progress"
-      else { tblock = TInProgress; "BEGIN" }
-    case Commit =>
-      val t = tblock; tblock = TDefault; releaseLocks()
-      if (t == TAborted) "ROLLBACK" else "COMMIT"
-    case Abort => tblock = TDefault; releaseLocks(); "ROLLBACK"
-    case SetGuc(name, value) => setGuc(name, value)
-    case Lock(table, mode) => lockTable(table, mode)
-    // stub parity: parse + namespace-resolve only (typecmds.rs:17-28)
-    case CreateType(name) => s"CreateTypeStmt { name: $name }"
-    case CreateTable(name, cols, opts) => createTable(name, cols, opts)
-    case CopyFile(table, path, opts, true) => copyFrom(table, path, opts)
-    case CopyFile(table, path, opts, false) => copyTo(table, path, opts)
-  }
-
   /** A failed statement inside a transaction block aborts the block
     * (Inprogress -> Abort). [[plan]] and a utility's run apply it
-    * themselves; the wire front-end also reports lazy execution-time
-    * failures of Catalyst rows and COPY channels here. */
+    * themselves; the wire front-end also reports execution-time failures
+    * of Catalyst rows and COPY channels here. */
   private[graft] def onStatementError(): Unit =
     if (tblock == TInProgress) tblock = TAborted
 
@@ -398,18 +439,19 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     * wire front-end can drive the copy sub-protocol (CopyInResponse /
     * CopyOutResponse, CopyData, CopyDone — the DestRemote
     * result-streaming analogue, in both directions). */
-  private def channel(c: CopyWire): CopyChannel = {
-    val rel = resolveRelation(c.table)
-    CopyChannel(rel, spark.table(rel).schema, copyOpts(c.opts), c.fromClient)
+  private def channel(table: String, opts: String, fromClient: Boolean): CopyChannel = {
+    val rel = resolveRelation(table)
+    CopyChannel(rel, spark.table(rel).schema, copyOpts(opts), fromClient)
   }
 
   /** The wire copy-in target of `query` when it is
     * `COPY t FROM STDIN [opts]`, gated like every statement; None for
     * every other statement, which is left unplanned. */
   def copyInTarget(query: String): Option[(String, StructType, Copy.Options)] =
-    classify(query) match {
-      case c @ CopyWire(_, _, true) =>
-        val ch = guarded(c)(channel(c))
+    query match {
+      case reCopyFromStdin(table, opts) =>
+        gate(endsBlock = false)
+        val ch = failing(channel(table, opts, fromClient = true))
         Some((ch.rel, ch.schema, ch.opts))
       case _ => None
     }
@@ -460,12 +502,15 @@ object GraftSession {
     * branches of exec_simple_query. Planning runs nothing but analysis
     * and catalog lookups; the caller runs the outcome. */
   sealed trait Outcome
-  /** Catalyst rows: the analyzed plan (or SHOW's one-row frame); an
-    * action on `df` runs it. */
-  final case class Rows(df: DataFrame) extends Outcome
+  /** Catalyst rows of `schema`: `df()` returns the analyzed plan (or
+    * SHOW's one-row frame), which an action runs. A Spark command runs
+    * when `df()` is called. */
+  final case class Rows(schema: StructType, df: () => DataFrame) extends Outcome
   /** A utility statement: `run()` performs it and returns its
-    * CommandComplete tag ([[EmptyQuery]] for the empty statement). */
-  final case class Utility(run: () => String) extends Outcome
+    * CommandComplete tag ([[EmptyQuery]] for the empty statement).
+    * `endsBlock` marks COMMIT/ABORT and the empty statement, which an
+    * aborted block admits. */
+  final case class Utility(run: () => String, endsBlock: Boolean = false) extends Outcome
   /** COPY FROM STDIN (`fromClient`) or TO STDOUT: the resolved relation,
     * its schema and the parsed options; the caller owns the data
     * channel ([[GraftSession.copyInRows]] / [[GraftSession.copyOutLines]]). */
@@ -475,51 +520,6 @@ object GraftSession {
   /** The empty statement's tag: the wire answers it with
     * EmptyQueryResponse, not CommandComplete (lib.rs:453-457). */
   final val EmptyQuery = "EmptyQueryResponse"
-
-  /** One classified statement (sql.lalrpop:28-39): a query for
-    * Catalyst, SHOW, a COPY STDIN/STDOUT channel, or a utility that
-    * runs when its outcome is run. */
-  private sealed trait Stmt
-  private case object Query extends Stmt
-  private final case class ShowGuc(name: String) extends Stmt
-  private final case class CopyWire(table: String, opts: String,
-      fromClient: Boolean) extends Stmt
-  private sealed trait UtilityStmt extends Stmt
-  private case object Empty extends UtilityStmt
-  private case object Begin extends UtilityStmt
-  private case object Commit extends UtilityStmt
-  private case object Abort extends UtilityStmt
-  private final case class SetGuc(name: String, value: String) extends UtilityStmt
-  private final case class Lock(table: String, mode: Option[String]) extends UtilityStmt
-  private final case class CreateType(name: String) extends UtilityStmt
-  private final case class CreateTable(name: String, cols: String,
-      reloptions: Option[String]) extends UtilityStmt
-  private final case class CopyFile(table: String, path: String, opts: String,
-      from: Boolean) extends UtilityStmt
-
-  /** The utility grammar as one table, tried in order: each regex must
-    * match the whole (trimmed) statement; its groups build the
-    * statement. A statement no row matches is Catalyst's. */
-  private val grammar: Seq[(Regex, List[String] => Stmt)] = Seq(
-    """(?is)^\s*(?:BEGIN|START\s+TRANSACTION)\s*;?\s*$""".r -> (_ => Begin),
-    """(?is)^\s*(?:COMMIT|END)\s*;?\s*$""".r -> (_ => Commit),
-    """(?is)^\s*(?:ABORT|ROLLBACK)\s*;?\s*$""".r -> (_ => Abort),
-    """(?is)^\s*SET\s+(\w+)\s*(?:=|TO)\s*'?([^';]*?)'?\s*;?\s*$""".r ->
-      (g => SetGuc(g(0).toLowerCase, g(1))),
-    """(?is)^\s*SHOW\s+(\w+)\s*;?\s*$""".r -> (g => ShowGuc(g(0).toLowerCase)),
-    """(?is)^\s*LOCK\s+(?:TABLE\s+)?([\w.]+)(?:\s+IN\s+(.+?)\s+MODE)?\s*;?\s*$""".r ->
-      (g => Lock(g(0), Option(g(1)))),
-    """(?is)^\s*CREATE\s+TYPE\s+([\w.]+)\s*;?\s*$""".r -> (g => CreateType(g(0))),
-    """(?is)^\s*CREATE\s+TABLE\s+([\w.]+)\s*\((.+?)\)\s*(?:WITH\s*\((.*)\))?\s*;?\s*$""".r ->
-      (g => CreateTable(g(0), g(1), Option(g(2)))),
-    """(?is)^\s*COPY\s+([\w.]+)\s+FROM\s+'([^']+)'\s*(.*?)\s*;?\s*$""".r ->
-      (g => CopyFile(g(0), g(1), g(2), from = true)),
-    """(?is)^\s*COPY\s+([\w.]+)\s+TO\s+'([^']+)'\s*(.*?)\s*;?\s*$""".r ->
-      (g => CopyFile(g(0), g(1), g(2), from = false)),
-    """(?is)^\s*COPY\s+([\w.]+)\s+FROM\s+STDIN\s*(.*?)\s*;?\s*$""".r ->
-      (g => CopyWire(g(0), g(1), fromClient = true)),
-    """(?is)^\s*COPY\s+([\w.]+)\s+TO\s+STDOUT\s*(.*?)\s*;?\s*$""".r ->
-      (g => CopyWire(g(0), g(1), fromClient = false)))
 
   /** Split a simple-Query string into its top-level statements — the
     * PG exec_simple_query contract a real client (psql -c) relies on.

@@ -23,10 +23,12 @@ import graft.GraftSession.Outcome
   * ReadyForQuery loop over simple Query ('Q'), the extended protocol
   * (Parse/Bind/Describe/Execute/Close/Flush/Sync) and Terminate ('X'),
   * with the COPY FROM STDIN / TO STDOUT sub-protocols. Every statement
-  * takes one path: [[GraftSession.plan]] classifies, gates and plans it
+  * takes one path: [[GraftSession.plan]] gates, matches and plans it
   * once — per statement for Query, once per portal at Bind (Describe
   * reads that plan's schema) — and one routine runs the outcome for
-  * both Query and Execute. Every Spark job of a connection runs in its
+  * both Query and Execute, gated again by [[GraftSession.admit]].
+  * Describe of a prepared statement plans it with NULL values through
+  * [[GraftSession.describe]]. Every Spark job of a connection runs in its
   * `graft-wire-<sid>` job group. Results render in text format via the
   * engine's PG output conventions (bool t/f, bytea \x hex — PgFunctions
   * renderers) or in binary where Bind asks for it, with type oids from
@@ -197,9 +199,10 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
   }
 
   /** `$n` positional markers -> Spark named parameters `:pn`, skipping
-    * single-quoted literal spans. */
-  private def translateParams(q: String): String = {
+    * single-quoted literal spans; also returns the names written. */
+  private def translateParams(q: String): (String, Set[String]) = {
     val sb = new StringBuilder
+    val names = Set.newBuilder[String]
     var i = 0
     var inQuote = false
     while (i < q.length) {
@@ -211,10 +214,11 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
         // NB: sb.append(q, i+1, j) auto-tuples into append(Any) — scala
         // StringBuilder has no (CharSequence, from, to) overload
         sb.append(":p").append(q.substring(i + 1, j))
+        names += "p" + q.substring(i + 1, j)
         i = j
       } else { sb.append(c); i += 1 }
     }
-    sb.toString
+    (sb.toString, names.result())
   }
 
   /** Text-format bind value -> typed Scala value by declared oid; oid 0
@@ -279,7 +283,7 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
       * become the named parameters `pn`. */
     def planWith(query: String, params: Seq[Any]): Outcome =
       if (params.isEmpty) sess.plan(query)
-      else sess.plan(translateParams(query),
+      else sess.plan(translateParams(query)._1,
         params.zipWithIndex.map { case (v, i) => s"p${i + 1}" -> v }.toMap)
 
     // Send up to `max` DataRows from a suspended cursor; PortalSuspended
@@ -299,34 +303,44 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
     /** Run one planned statement and send its result — the routine the
       * simple Query loop (`portal` None: RowDescription first, every row)
       * and Execute (Describe announced the rows; `fetchMax` > 0 opens a
-      * cursor on the portal) share. */
+      * cursor on the portal, or resumes the open one) share. The outcome
+      * runs only if the block admits it now: a portal may have been
+      * bound before its block aborted. */
     def respond(outcome: Outcome, resFmts: Seq[Int] = Nil,
-        portal: Option[String] = None, fetchMax: Int = 0): Unit = outcome match {
-      case GraftSession.Utility(run) =>
-        val tagValue = run()
-        if (tagValue == GraftSession.EmptyQuery) send(out, 'I')
-        else send(out, 'C', cstr(tagValue))
-      case GraftSession.CopyChannel(rel, schema, opts, true) =>
-        handleCopyIn(in, out, sess, rel, schema, opts)
-      case GraftSession.CopyChannel(rel, schema, opts, false) =>
-        handleCopyOut(out, sess, rel, schema, opts)
-      case GraftSession.Rows(df) =>
-        val fmts = resolveFmts(resFmts, df.schema.fields)
-        val (fields, rendered) = renderWire(df, fmts)
-        if (portal.isEmpty) sendRowDescription(out, fields, fmts)
-        // the server-side cap holds on every path
-        val capped = rendered.limit(maxRows)
-        portal match {
-          case Some(p) if fetchMax > 0 => // one partition resident at a time
-            val it = scala.jdk.CollectionConverters
-              .IteratorHasAsScala(capped.toLocalIterator()).asScala
-            suspended(p) = (fields, fmts, it)
-            sendPortalRows(p, fields, fmts, it, fetchMax)
-          case _ =>
-            val rows = capped.collect()
-            rows.foreach(sendDataRow(out, fields, fmts, _))
-            send(out, 'C', cstr(s"SELECT ${rows.length}"))
-        }
+        portal: Option[String] = None, fetchMax: Int = 0): Unit = {
+      sess.admit(outcome)
+      outcome match {
+        case GraftSession.Utility(run, _) =>
+          val tagValue = run()
+          if (tagValue == GraftSession.EmptyQuery) send(out, 'I')
+          else send(out, 'C', cstr(tagValue))
+        case GraftSession.CopyChannel(rel, schema, opts, true) =>
+          handleCopyIn(in, out, sess, rel, schema, opts)
+        case GraftSession.CopyChannel(rel, schema, opts, false) =>
+          handleCopyOut(out, sess, rel, schema, opts)
+        case GraftSession.Rows(_, _) if portal.exists(suspended.contains) =>
+          val (fields, fmts, it) = suspended(portal.get) // 0 = no limit
+          sendPortalRows(portal.get, fields, fmts, it,
+            if (fetchMax <= 0) Int.MaxValue else fetchMax)
+        case GraftSession.Rows(_, plan) =>
+          val df = plan()
+          val fmts = resolveFmts(resFmts, df.schema.fields)
+          val (fields, rendered) = renderWire(df, fmts)
+          if (portal.isEmpty) sendRowDescription(out, fields, fmts)
+          // the server-side cap holds on every path
+          val capped = rendered.limit(maxRows)
+          portal match {
+            case Some(p) if fetchMax > 0 => // one partition resident at a time
+              val it = scala.jdk.CollectionConverters
+                .IteratorHasAsScala(capped.toLocalIterator()).asScala
+              suspended(p) = (fields, fmts, it)
+              sendPortalRows(p, fields, fmts, it, fetchMax)
+            case _ =>
+              val rows = capped.collect()
+              rows.foreach(sendDataRow(out, fields, fmts, _))
+              send(out, 'C', cstr(s"SELECT ${rows.length}"))
+          }
+      }
     }
 
     // a failed statement aborts a transaction block whether it failed
@@ -421,35 +435,39 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
                 throw new GraftArgError(Errors.FeatureNotSupported,
                   "result format codes must be 0 (text) or 1 (binary)")
               // the portal's one plan: gated and analyzed here, as PG's
-              // exec_bind_message checks the aborted block
+              // exec_bind_message checks the aborted block; a Spark
+              // command (INSERT, DROP, ...) runs only at Execute
               portals(portal) = (planWith(query, params), resFmts)
               send(out, '2') // BindComplete
             case 'D' => // Describe: 'S' statement | 'P' portal
               val kind = body(0).toChar
               val (name, _) = readCstr(body, 1)
-              val (outcome, resFmts) = kind match {
+              val (schema, resFmts) = kind match {
                 case 'S' =>
                   val (q, oids) = stmts.getOrElse(name,
                     throw new GraftArgError("26000",
                       s"prepared statement \"$name\" does not exist"))
-                  // a statement has no values yet: plan it with NULLs
-                  // (an error is reported like any statement's)
-                  val planned = planWith(q, oids.map(_ => null))
+                  // a statement has no values yet: plan it with a NULL
+                  // for every declared or written parameter; one that
+                  // cannot be planned so describes as NoData
+                  val (text, written) = translateParams(q)
+                  val nulls = ((1 to oids.length).map(i => s"p$i") ++ written)
+                    .map(_ -> (null: Any)).toMap
                   // ParameterDescription: declared oids (0 = unspecified)
                   send(out, 't',
                     (i16(oids.length) +: oids.map(i32)).reduce(_ ++ _))
                   // formats are a Bind property, so Describe-statement
                   // always reports text (PG semantics)
-                  (planned, Seq.empty[Int])
+                  (sess.describe(text, nulls), Seq.empty[Int])
                 case _ =>
-                  portals.getOrElse(name,
+                  val (outcome, fmts) = portals.getOrElse(name,
                     throw new GraftArgError("34000", // invalid_cursor_name
                       s"portal \"$name\" does not exist"))
+                  (Some(outcome).collect { case GraftSession.Rows(s, _) => s }, fmts)
               }
-              outcome match {
-                case GraftSession.Rows(df) if df.schema.nonEmpty =>
-                  val fields = df.schema.fields
-                  sendRowDescription(out, fields, resolveFmts(resFmts, fields))
+              schema match {
+                case Some(s) if s.nonEmpty =>
+                  sendRowDescription(out, s.fields, resolveFmts(resFmts, s.fields))
                 case _ => send(out, 'n') // NoData
               }
             case 'E' => // Execute: portal, int32 maxRows. 0 = run to
@@ -461,12 +479,7 @@ class WireServer(spark: SparkSession, dataDir: Option[String] = None,
               val (outcome, resFmts) = portals.getOrElse(portal,
                 throw new GraftArgError("34000",
                   s"portal \"$portal\" does not exist"))
-              suspended.get(portal) match {
-                case Some((fields, fmts, it)) => // resume; 0 = no limit
-                  sendPortalRows(portal, fields, fmts, it,
-                    if (fetchMax <= 0) Int.MaxValue else fetchMax)
-                case None => respond(outcome, resFmts, Some(portal), fetchMax)
-              }
+              respond(outcome, resFmts, Some(portal), fetchMax)
             case 'C' => // Close statement/portal: always succeeds
               val kind = body(0).toChar
               val (name, _) = readCstr(body, 1)

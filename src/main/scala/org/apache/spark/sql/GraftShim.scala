@@ -9,6 +9,11 @@ object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Parse `sql` into its unresolved plan without analyzing or running
+    * it (`spark.sql` runs a command as soon as it analyzes it). */
+  def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
+    spark.asInstanceOf[classic.SparkSession].sessionState.sqlParser.parsePlan(sql)
+
   /** Wrap a raw Catalyst expression as a Column (private[sql] in 4.x).
     * Needed for expressions carrying non-serializable-by-name state (a
     * driver-built sketch object): a registry-name indirection would share

@@ -1015,4 +1015,127 @@ class WireServerSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS wire_ext_copy_t")
     }
   }
+
+  /** A portal survives Sync, so one bound before its block aborted is
+    * gated again at Execute (PG's exec_execute_message): only a portal
+    * that ends the block runs. */
+  test("Execute rejects a portal bound before its block aborted, but runs ROLLBACK") {
+    spark.sql("DROP TABLE IF EXISTS wire_abort_portal_t")
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup(); c.drain()
+      c.query("CREATE TABLE wire_abort_portal_t (id int, name varchar(16))")
+      c.drain()
+      c.query("BEGIN"); c.drain()
+      c.parse("", "SELECT COUNT(*) AS n FROM region")
+      c.bind("ps", "", Nil)
+      c.parse("", "COPY wire_abort_portal_t FROM STDIN")
+      c.bind("pc", "", Nil)
+      c.parse("", "ROLLBACK")
+      c.bind("pr", "", Nil)
+      c.sync()
+      val (bound, boundSt) = c.drain()
+      assert(bound.map(_._1) == Seq('1', '2', '1', '2', '1', '2'),
+        s"tags: ${bound.map(_._1)} err: ${c.errFields(bound)}")
+      assert(boundSt == 'T')
+      c.query("SELECT * FROM no_such_table_qq")
+      assert(c.drain()._2 == 'E')
+      for (portal <- Seq("ps", "pc")) {
+        c.executePortal(portal)
+        c.sync()
+        val (msgs, st) = c.drain()
+        assert(c.errFields(msgs)('C') == "25P02", s"$portal tags: ${msgs.map(_._1)}")
+        assert(!msgs.exists(m => m._1 == 'D' || m._1 == 'G'), s"$portal ran")
+        assert(st == 'E')
+      }
+      c.executePortal("pr")
+      c.sync()
+      val (rb, rbSt) = c.drain()
+      assert(rb.exists { case (t, b) => t == 'C' && c.cstrAt(b, 0) == "ROLLBACK" },
+        s"tags: ${rb.map(_._1)} err: ${c.errFields(rb)}")
+      assert(rbSt == 'I')
+      c.query("SELECT COUNT(*) AS n FROM wire_abort_portal_t")
+      assert(c.dataRows(c.drain()._1) == Seq(Seq("0")))
+      c.terminate()
+    } finally {
+      srv.close()
+      spark.sql("DROP TABLE IF EXISTS wire_abort_portal_t")
+    }
+  }
+
+  /** Describe of a prepared statement plans it with NULL values; a
+    * statement that cannot be planned so describes as NoData and neither
+    * fails nor aborts the block. */
+  test("Describe of a statement that NULL values cannot plan answers NoData in an open block") {
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup(); c.drain()
+      c.query("BEGIN"); c.drain()
+      c.parse("sl", "SELECT n_name FROM nation ORDER BY n_nationkey LIMIT $1", Seq(23))
+      c.describe('S', "sl")
+      c.sync()
+      val (lim, limSt) = c.drain()
+      assert(lim.map(_._1) == Seq('1', 't', 'n'),
+        s"tags: ${lim.map(_._1)} err: ${c.errFields(lim)}")
+      assert(limSt == 'T')
+      // `$n` with no declared oid is still a parameter, not a parse error
+      c.parse("sn", "SELECT n_name FROM nation WHERE n_nationkey = $1")
+      c.describe('S', "sn")
+      c.sync()
+      val (eq, eqSt) = c.drain()
+      assert(eq.map(_._1) == Seq('1', 't', 'T'),
+        s"tags: ${eq.map(_._1)} err: ${c.errFields(eq)}")
+      assert(c.cstrAt(eq.find(_._1 == 'T').get._2, 2) == "n_name")
+      assert(eqSt == 'T')
+      c.bind("pl", "sl", Seq("2"))
+      c.executePortal("pl")
+      c.sync()
+      val (rows, rowsSt) = c.drain()
+      assert(c.dataRows(rows) == Seq(Seq("NATION_0"), Seq("NATION_1")),
+        s"tags: ${rows.map(_._1)} err: ${c.errFields(rows)}")
+      assert(rowsSt == 'T')
+      c.query("COMMIT"); c.drain()
+      c.terminate()
+    } finally srv.close()
+  }
+
+  /** Bind plans a Spark command without running it: the command runs at
+    * Execute, once, and a portal closed unexecuted leaves no trace. */
+  test("a bound INSERT runs at Execute only, once") {
+    spark.sql("DROP TABLE IF EXISTS wire_lazy_insert_t")
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup(); c.drain()
+      c.query("CREATE TABLE wire_lazy_insert_t (id int)")
+      c.drain()
+      def count(): String = {
+        c.query("SELECT COUNT(*) AS n FROM wire_lazy_insert_t")
+        c.dataRows(c.drain()._1).head.head
+      }
+      c.parse("si", "INSERT INTO wire_lazy_insert_t VALUES (1)")
+      c.describe('S', "si")
+      c.bind("pi", "si", Nil)
+      c.describe('P', "pi")
+      c.closeStmt('P', "pi")
+      c.sync()
+      val (closed, _) = c.drain()
+      assert(closed.map(_._1) == Seq('1', 't', 'n', '2', 'n', '3'),
+        s"tags: ${closed.map(_._1)} err: ${c.errFields(closed)}")
+      assert(count() == "0")
+      c.bind("pi", "si", Nil)
+      c.describe('P', "pi")
+      c.executePortal("pi")
+      c.sync()
+      val (ran, _) = c.drain()
+      assert(c.errFields(ran).isEmpty, s"err: ${c.errFields(ran)}")
+      assert(count() == "1")
+      c.terminate()
+    } finally {
+      srv.close()
+      spark.sql("DROP TABLE IF EXISTS wire_lazy_insert_t")
+    }
+  }
 }
