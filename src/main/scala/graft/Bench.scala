@@ -56,7 +56,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-bench", Engine.cpus)
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-bench")
     spark.sparkContext.setLogLevel("ERROR") // keep stdout/stderr free of WARN noise
     // Per-query Spark JOB counts ride along in BENCH_DETAIL.json: job
     // counts are a host-noise-immune regression signal (seconds drift

@@ -18,10 +18,11 @@ import org.apache.spark.sql.types._
   * the catalog.
   *
   * Scale notes (100 TB): every knob here is declarative — AQE handles
-  * runtime re-planning (skew joins, partition coalescing), shuffle
-  * partition count is a config, and all table access goes through the
-  * Parquet vectorized reader (the `Datums` column-batch analogue,
-  * reference src/datums.rs:24-52).
+  * runtime re-planning (skew joins, partition coalescing) and sizes
+  * every batch shuffle, and all table access goes through the Parquet
+  * vectorized reader (the `Datums` column-batch analogue, reference
+  * src/datums.rs:24-52). The two counts AQE cannot pick are sized here
+  * only: cuts ([[cutByKey]]) and written files ([[filesFor]]).
   */
 object Engine {
 
@@ -61,6 +62,11 @@ object Engine {
     // resets), while decade-3/4-sized aggregation inputs stay wide and
     // per-task state shrinks proportionally.
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "256",
+    // Read only where AQE does not size a shuffle: a streaming query's
+    // state-store partitions (fixed in its checkpoint at first start)
+    // and plans run with AQE or its coalescing off (the shuffles inside
+    // a cutByKey input, tests that sweep the count).
+    "spark.sql.shuffle.partitions" -> "32",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // runtime row-level join filtering: build a bloom filter from the
     // selective side of a shuffle join and push it into the other side's
@@ -83,17 +89,15 @@ object Engine {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** The one session factory: every main, the test suite, perfbench and
-    * the wire path build through it. `partitions` is the initial
-    * shuffle-partition count; `confs` are static confs that must be set
-    * before the context starts (a warehouse dir, an executor classpath).
-    * The first call in a JVM starts the context with [[SessionDefaults]]
-    * in its SparkConf; a later call returns the existing session and
-    * sets the runtime confs among these on it again. */
+    * the wire path build through it. `confs` are static confs that must
+    * be set before the context starts (a warehouse dir, an executor
+    * classpath). The first call in a JVM starts the context with
+    * [[SessionDefaults]] in its SparkConf; a later call returns the
+    * existing session and sets the runtime confs among these on it
+    * again. */
   def session(master: String = "local[*]", app: String = "graft",
-      partitions: Int = 32, confs: Map[String, String] = Map.empty): SparkSession =
-    (SessionDefaults ++ Map(
-      "spark.sql.shuffle.partitions" -> partitions.toString,
-      "spark.ui.enabled" -> "false") ++ confs)
+      confs: Map[String, String] = Map.empty): SparkSession =
+    (SessionDefaults ++ Map("spark.ui.enabled" -> "false") ++ confs)
       .foldLeft(SparkSession.builder().master(master).appName(app)
         .withExtensions(new GraftExtensions)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
@@ -540,6 +544,25 @@ object Engine {
     }
   }
 
+  /** [[cut]] `df` hash-partitioned on `key`, one partition per core,
+    * with the layout kept ([[withoutAqe]]): an iterative operator's
+    * rounds group or join the cut on `key` with no exchange on its side
+    * (the graph fixpoints, Dedup's components). */
+  def cutByKey(df: DataFrame, key: String): DataFrame = {
+    val spark = df.sparkSession
+    withoutAqe(spark) {
+      cut(df.repartition(spark.sparkContext.defaultParallelism, col(key)))
+    }
+  }
+
+  /** Files a write of `bytes` lands: one per 128 MB, at least one. */
+  def filesFor(bytes: Long): Int =
+    math.max(1L, math.min(bytes / (128L << 20), Int.MaxValue)).toInt
+
+  /** `df`, `bytes` in all, coalesced (no shuffle) to [[filesFor]] write
+    * partitions: a COPY batch or a compaction writes by size, not by core. */
+  def inFiles(df: DataFrame, bytes: Long): DataFrame = df.coalesce(filesFor(bytes))
+
   /** Drop the storage behind a cut() frame once a downstream
     * materialization supersedes it (iterative operators cut lineage
     * every round; without the release each local-mode round's blocks
@@ -589,16 +612,14 @@ object Engine {
   def withoutConstraintPropagation[T](spark: SparkSession)(body: => T): T =
     withConfOff(spark, "spark.sql.constraintPropagation.enabled")(body)
 
-  /** Scope AQE off for `body`. Used by the graph operators'
-    * pre-partitioned cuts (r19): an EAGER checkpoint planned under AQE
-    * captures AdaptiveSparkPlanExec, whose outputPartitioning is
-    * UnknownPartitioning, so the LogicalRDD silently loses the hash
-    * layout the repartition paid for (measured with the copart probe,
-    * deleted after a1c96e4 — a join over an AQE-planned pre-partitioned
-    * cut still exchanges both sides; the AQE-off cut exchanges only the
-    * other side).
-    * CONSUMERS still plan under AQE — only the materializing execution
-    * of the cut frame itself runs without it. */
+  /** Scope AQE off for `body`. Used by [[cutByKey]] (r19): an EAGER
+    * checkpoint planned under AQE captures AdaptiveSparkPlanExec, whose
+    * outputPartitioning is UnknownPartitioning, so the LogicalRDD
+    * silently loses the hash layout the repartition paid for (a join
+    * over an AQE-planned pre-partitioned cut still exchanges both
+    * sides; the AQE-off cut exchanges only the other side, pinned in
+    * CheckpointStrategySpec). CONSUMERS still plan under AQE — only the
+    * materializing execution of the cut frame itself runs without it. */
   def withoutAqe[T](spark: SparkSession)(body: => T): T =
     withConfOff(spark, "spark.sql.adaptive.enabled")(body)
 

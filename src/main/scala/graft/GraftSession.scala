@@ -462,15 +462,16 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     * append to the table. Returns the ingested row count for the
     * `COPY n` CommandComplete tag. The payload arrived through one
     * socket, so it is driver-local by construction; file-path COPY
-    * remains the bulk route (distributed scan, `(parallel n)`). */
+    * remains the bulk route (distributed scan, `(parallel n)`). The
+    * batch writes `Engine.filesFor(payload size)` files. */
   def copyInRows(rel: String, schema: StructType, opts: Copy.Options,
       payload: String): Long = {
     import spark.implicits._
     val lines = payload.split("\n", -1).toIndexedSeq
       .filter(l => l.nonEmpty && l != "\\.") // v3 ends with CopyDone; tolerate a trailing \.
     val ds = spark.createDataset(lines)
-    checkNotNull(Copy.fromLines(ds, schema, opts), rel, schema)
-      .write.mode("append").insertInto(rel)
+    Engine.inFiles(checkNotNull(Copy.fromLines(ds, schema, opts), rel, schema),
+      payload.length.toLong).write.mode("append").insertInto(rel)
     lines.size.toLong
   }
 

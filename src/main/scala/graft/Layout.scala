@@ -252,8 +252,8 @@ object Layout {
   def withEventDate(df: DataFrame, tsCol: String): DataFrame =
     df.withColumn("event_date", to_date(col(tsCol)))
 
-  /** Compact a table's small files: rewrite with ~`targetFileMB` output
-    * files (continuous ingest produces one file per micro-batch/task —
+  /** Compact a table's small files: rewrite as `Engine.filesFor` files
+    * (continuous ingest produces one file per micro-batch/task —
     * the classic small-files problem; compaction restores scan
     * efficiency: fewer footers, full row groups, better codec ratios).
     *
@@ -277,8 +277,7 @@ object Layout {
     * comparison is NOT used — it cannot distinguish a truncated target
     * from one that legitimately shrank after the crash.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, table: String,
-      targetFileMB: Int = 128): Unit = {
+  def compact(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
     val staging = s"${table}__compacted"
     if (spark.catalog.tableExists(staging)) {
       if (hasPublishIntent(spark, staging))
@@ -286,15 +285,17 @@ object Layout {
       else
         spark.sql(s"DROP TABLE $staging") // crash pre-publish: target authoritative
     }
-    val df = spark.table(table)
-    val bytes = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .stats.map(_.sizeInBytes.toLong)
-      .getOrElse(df.queryExecution.optimizedPlan.stats.sizeInBytes.toLong)
-    val files = math.max(1, (bytes / (targetFileMB * 1024L * 1024L)).toInt)
-    df.repartition(files).write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(staging)
+    Engine.inFiles(spark.table(table), tableBytes(spark, table))
+      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(staging)
     publish(spark, staging, table)
+  }
+
+  /** Bytes of the files under `table`'s location (a partitioned table's
+    * plan statistics hold no size). */
+  private def tableBytes(spark: org.apache.spark.sql.SparkSession, table: String): Long = {
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+    loc.getFileSystem(spark.sessionState.newHadoopConf()).getContentSummary(loc).getLength
   }
 
   /** Compact a stream-maintained (partCols..., batch_id) table (the
@@ -309,7 +310,7 @@ object Layout {
     * for any external rewrite of a streaming sink's table). Crash-safe
     * via the same staging + publish-intent protocol as [[compact]]. */
   def compactBatchTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, partCols: Seq[String], targetFiles: Int = 1): Unit = {
+      table: String, partCols: Seq[String]): Unit = {
     val staging = s"${table}__compacted"
     if (spark.catalog.tableExists(staging)) {
       if (hasPublishIntent(spark, staging))
@@ -317,8 +318,8 @@ object Layout {
       else
         spark.sql(s"DROP TABLE $staging")
     }
-    spark.table(table).withColumn("batch_id", lit(-1L))
-      .repartition(targetFiles)
+    Engine.inFiles(spark.table(table).withColumn("batch_id", lit(-1L)),
+        tableBytes(spark, table))
       .write.mode(SaveMode.Overwrite)
       .partitionBy((partCols :+ "batch_id"): _*)
       .format("parquet").saveAsTable(staging)

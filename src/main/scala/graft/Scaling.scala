@@ -98,7 +98,7 @@ object Scaling {
       else if (args.length > 2) args.drop(2).toSeq
       else headline
     val budget = if (gateMode) Some(loadBudget()) else None
-    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-scaling", Engine.cpus)
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-scaling")
     spark.sparkContext.setLogLevel("ERROR")
     def f3(v: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

@@ -191,6 +191,10 @@ object Serving {
   private def litLong(fn: String, want: String, e: Expression): Long = e match {
     case Literal(v: Long, LongType) => v
     case Literal(v: Int, IntegerType) => v.toLong
+    // a text value bound with no declared type (Bind of '0' for $1):
+    // like PG's unknown-typed literal, it takes the argument's type
+    case Literal(v, StringType) if v != null =>
+      v.toString.trim.toLongOption.getOrElse(argErr(fn, want))
     case _ => argErr(fn, want)
   }
   /** The `k` argument: a literal >= 1 (the plans end in `limit(k)`). */

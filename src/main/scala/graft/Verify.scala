@@ -8,7 +8,7 @@ object Verify {
     // optional extra args: run only these queries (local iteration;
     // the driver always passes exactly two args = full run)
     val only = args.drop(2).toSet
-    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-verify", Engine.cpus)
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

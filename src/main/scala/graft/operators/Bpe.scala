@@ -51,7 +51,9 @@ object Bpe {
   }
 
   /** Driver-local merge-loop limit for [[trainMerges]]: 500k word
-    * types. */
+    * types. The twin stays: t24 runs 253 ms against 1487 ms for the
+    * distributed loop, 5.89x (sf0.1, local[4], median of 5 interleaved
+    * warm build+collect pairs, rows equal). */
   private val DriverMaxVocab = 500000L
 
   /** Learn `numMerges` merges; returns (rank, left, right, pair_count)

@@ -226,7 +226,9 @@ object Cluster {
     * fixed latency at any corpus size, exactly the overhead class the
     * graph fixpoints shed in r18. The gate's count is memoized on the
     * input plan, so the 100 TB path pays at most one count per plan per
-    * session. */
+    * session. The twin stays: c01 runs 790 ms against 1546 ms for the
+    * distributed loop, 1.96x (sf0.1, local[4], median of 5 interleaved
+    * warm build+collect pairs, rows equal). */
   private val DriverMaxVecs = 100000L
 
   /** The driver-local twin of [[kmeans]] — identical values by

@@ -301,7 +301,10 @@ object Dedup {
     componentsByMinLabel(pairs, nodes)
 
   /** Driver-local union-find limit for [[componentsByMinLabel]]: 2M
-    * pairs, ~32 MB of longs (see the regime note there). */
+    * pairs, ~32 MB of longs (see the regime note there). The union-find
+    * stays: d05 runs 555 ms against 3296 ms (5.94x) and d16 794 ms
+    * against 2067 ms (2.60x) for the fixpoint (sf0.1, local[4], median
+    * of 5 interleaved warm build+collect pairs, rows equal). */
   private val DriverMaxEdges = 2000000L
 
   /** Connected components by min-label propagation, generic over the
@@ -340,11 +343,9 @@ object Dedup {
     //  - larger, or the Engine.DriverLocalConf switch off (how the
     //    ClusterCheck chaos harness executor-kills the min-label
     //    fixpoint at gate scale): the distributed min-label fixpoint
-    //    below, whose partitioning is itself sized from the edge count.
-    // The gate memoizes its count on the pre-cut plan; the lazy val
-    // runs at most one count job per call, shared with the sizing.
-    lazy val graphRows = p.count()
-    if (Engine.driverLocal(pl, DriverMaxEdges)(graphRows)) {
+    //    below, over cuts pre-partitioned on the round keys.
+    // The gate memoizes its count on the pre-cut plan.
+    if (Engine.driverLocal(pl, DriverMaxEdges)(p.count())) {
       val edgeRows = p.collect()
       Engine.releaseCheckpoint(p)
       // ordering must agree with the distributed arm's min()/least():
@@ -386,11 +387,8 @@ object Dedup {
           .map(id => org.apache.spark.sql.Row(id, root(id))).asJava, schema)
       return attachLabels(nodes, labels)
     }
-    val nParts = math.max(1, math.min(
-      graphRows / 50000L, p.sparkSession.sparkContext.defaultParallelism.toLong)).toInt
-    val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(nParts, col("src")).transform(Engine.cut)
+    val edges = Engine.cutByKey(p.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst"))), "src")
     Engine.releaseCheckpoint(p) // edges (eagerly materialized) supersedes p
     // iterate ONLY over nodes that occur in the graph: an isolated node
     // can never adopt a neighbor's label, so dragging the full corpus
@@ -403,9 +401,8 @@ object Dedup {
     // `labelsCp` is always the checkpointed frame itself (its logical
     // plan is the LogicalRDD), so Engine.releaseCheckpoint can find the
     // persisted RDD; `labels` is the (id, lbl) view over it
-    var labelsCp = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl"))
-      .repartition(nParts, col("id")).transform(Engine.cut)
+    var labelsCp = Engine.cutByKey(edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("lbl")), "id")
     var labels = labelsCp
     var changed = 1L
     while (changed > 0) {

@@ -49,7 +49,14 @@ object Graph {
     * 2M edges bounds driver memory (~32 MB of edge longs, the d05
     * sizing) AND keeps hitsLocal's plain-Long normalization product in
     * range: raw <= 1e6 micros x 2e6 edges = 2e12, x 1e6 = 2e18 < 2^63
-    * (the distributed arm widens through DECIMAL(38,0) instead). */
+    * (the distributed arm widens through DECIMAL(38,0) instead).
+    *
+    * Driver-local vs distributed, ms (sf0.1, local[4], median of 5
+    * interleaved warm build+collect pairs, rows equal): g01 958/2114
+    * (2.21x), g02 807/1455 (1.80x), g03 618/953 (1.54x), g04 688/1576
+    * (2.29x), g05 587/976 (1.66x), g06 491/792 (1.61x), g08 731/1941
+    * (2.65x), g10 606/1022 (1.69x). Each twin beats the 1.5x bar;
+    * assortativity's (g07, 1.33x) did not and is deleted. */
   private val DriverMaxEdges = 2000000L
 
   /** Cut the edge plan once and collect it when the driver regime
@@ -70,7 +77,7 @@ object Graph {
   }
 
   /** Gate + collect for the ONE-SHOT pair-graph operators (triangle
-    * counts, local clustering, adamic-adar, assortativity) — the same
+    * counts, local clustering, adamic-adar) — the same
     * regime as the fixpoints, r19, with the [[cutAndMaybeCollect]]
     * cut-and-reuse discipline: the pair plan executes exactly ONCE (the
     * cut), the gate count and the local fetch are cheap re-reads of the
@@ -128,28 +135,6 @@ object Graph {
       })
     }
     (deg, tri)
-  }
-
-  /** Materialize a frame PRE-PARTITIONED on `key`, with the hash layout
-    * PRESERVED into the cut (r19, verdict item 3 — guide §2.1/§2.4).
-    * The iterative operators that cut lineage PER ROUND re-execute each
-    * round as its own job, so runtime exchange reuse cannot help them:
-    * every round re-shuffled the static |E|-sized adjacency before this.
-    * A cut frame pre-partitioned on the round join key makes each
-    * round's join read an already-partitioned table; only the small
-    * (|V|-sized) score/frontier side still exchanges. The partition
-    * count pins to spark.sql.shuffle.partitions — the session's scale
-    * dial — and the materializing execution runs with AQE scoped off
-    * ([[Engine.withoutAqe]]: an AQE-planned eager checkpoint reports
-    * UnknownPartitioning and silently loses the layout; consumers still
-    * plan under AQE and see the LogicalRDD's HashPartitioning). Only
-    * the DISTRIBUTED regime calls this — the driver regime collects. */
-  private def cutByKey(df: DataFrame, key: String): DataFrame = {
-    val spark = df.sparkSession
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    Engine.withoutAqe(spark) {
-      Engine.cut(df.repartition(p, col(key)))
-    }
   }
 
   /** The node ids appearing in a collected edge list, as a local
@@ -214,7 +199,7 @@ object Graph {
     // r19: adjacency materialized pre-partitioned on the round join key
     // — each round's contribution join then reads it without an |E|-
     // sized exchange (only the rank side shuffles)
-    val adj = cutByKey(e.join(deg, "src")
+    val adj = Engine.cutByKey(e.join(deg, "src")
       .select(col("src"), col("dst"), col("deg")), "src")
     Engine.releaseCheckpoint(e)
     var ranks = nodes.select(col("id"), lit(1000000L).as("micros"))
@@ -326,7 +311,7 @@ object Graph {
     // r19: pre-partitioned on src (the per-round score-join key); each
     // round executes as its own cut job, so without this the static
     // adjacency re-shuffled every round
-    val adj = cutByKey(e.join(deg, "dst")
+    val adj = Engine.cutByKey(e.join(deg, "dst")
       .select(col("src"), col("dst"), col("deg")), "src")
     Engine.releaseCheckpoint(e)
     var scores = seeds.select(col("id"), col("micros").cast(LongType).as("micros"))
@@ -488,8 +473,8 @@ object Graph {
     * re-aggregated degrees from the FULL shrinking edge table and
     * re-materialized |E| blocks every round, 2.1x slower at decade 3).
     * The edge table materializes ONCE, pre-partitioned on dst
-    * ([[cutByKey]], the r19 copartition law), and each round maintains
-    * the |V|-sized degree table:
+    * ([[Engine.cutByKey]], the r19 copartition law), and each round
+    * maintains the |V|-sized degree table:
     *
     *   peel_r  = deg rows with dg < k           (nodes leaving now)
     *   delta   = eByDst ⋈ peel_r on dst, grouped by src
@@ -515,7 +500,7 @@ object Graph {
       Engine.releaseCheckpoint(e1)
       return kCorePeelLocal(arr, nodes, k, rounds)
     }
-    val eByDst = cutByKey(e1, "dst")
+    val eByDst = Engine.cutByKey(e1, "dst")
     Engine.releaseCheckpoint(e1)
     // Seed the degree table with EVERY endpoint: a dst-only node (an
     // asymmetric input — no out-edges) has no src-degree row, yet the
@@ -990,11 +975,6 @@ object Graph {
       })
   )
 
-  /** Newman degree assortativity of an undirected graph. `pairs` is
-    * the canonical edge list (id_a < id_b); both directions enter the
-    * correlation so it is symmetric by construction. The degree table
-    * is |V| rows (broadcasts; falls back to an id-keyed shuffle join
-    * beyond the threshold) and the result is one row. */
   /** Spark `round(x, 6)` on a double, driver-side: not-finite passes
     * through, else BigDecimal.valueOf + HALF_UP — the kmeansLocal-
     * verified quantization twin. */
@@ -1013,48 +993,26 @@ object Graph {
     else d.doubleValue
   }
 
+  /** Newman degree assortativity of an undirected graph. `pairs` is
+    * the canonical edge list (id_a < id_b); both directions enter the
+    * correlation so it is symmetric by construction. The degree table
+    * is |V| rows (broadcasts; falls back to an id-keyed shuffle join
+    * beyond the threshold) and the result is one row. A graph whose
+    * degrees do not vary (one edge, a ring) has no correlation: NULL,
+    * as PG's corr() answers.
+    *
+    * One plan at every size: the driver-local twin measured 520 ms
+    * against 693 ms for this plan on g07 at sf0.1 (local[4], 5 warm
+    * pairs, 1.33x), inside the 1.5x a twin must beat to stay. The pair
+    * cut feeds both union arms, so the pair plan executes once. */
   def degreeAssortativity(pairs: DataFrame): DataFrame = {
-    // r19 dual-regime: the six moment sums fold driver-locally below
-    // DriverMaxEdges — same Long ring arithmetic (wrap included), same
-    // double expression, same 6dp round; GraphSpec parity pins it.
-    // Above threshold the distributed arm consumes the gate's cut —
-    // the pre-r19 lazy shape executed the pair-generation subtree once
-    // per union arm; reading the materialized blocks twice is strictly
-    // less work.
-    val (pCut, small) = cutAndMaybeCollectPairs(pairs)
-    small.foreach { arr =>
-      Engine.releaseCheckpoint(pCut)
-      val spark = pairs.sparkSession
-      val deg = new scala.collection.mutable.HashMap[Long, Long]()
-      arr.foreach { case (a, b) =>
-        deg(a) = deg.getOrElse(a, 0L) + 1L
-        deg(b) = deg.getOrElse(b, 0L) + 1L
-      }
-      var n = 0L; var sx = 0L; var sy = 0L
-      var sxy = 0L; var sxx = 0L; var syy = 0L
-      arr.foreach { case (a, b) =>
-        val da = deg(a); val db = deg(b)
-        n += 2L; sx += da + db; sy += da + db
-        sxy += 2L * da * db
-        sxx += da * da + db * db; syy += da * da + db * db
-      }
-      val row =
-        if (n == 0L) org.apache.spark.sql.Row(0, null)
-        else org.apache.spark.sql.Row(n.toInt, round6Local(
-          (n * sxy - sx * sy).toDouble /
-            (math.sqrt((n * sxx - sx * sx).toDouble) *
-              math.sqrt((n * syy - sy * sy).toDouble))))
-      return spark.createDataFrame(
-        java.util.Arrays.asList(row),
-        StructType(Seq(StructField("n_edges", IntegerType),
-          StructField("assortativity", DoubleType))))
-    }
+    val pCut = pairs.select(col("id_a"), col("id_b")).transform(Engine.cut)
     val e = pCut.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pCut.select(col("id_b").as("src"), col("id_a").as("dst")))
     val dg = e.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("id"), col("deg"))
     // the 1-row result cuts eagerly (the sibling ops' shape) so the
-    // gate's pair cut can release before returning
+    // pair cut can release before returning
     val out = e.join(dg.as("dx"), col("src") === col("dx.id"))
       .join(dg.as("dy"), col("dst") === col("dy.id"))
       .select(col("dx.deg").as("x"), col("dy.deg").as("y"))
@@ -1064,8 +1022,8 @@ object Graph {
         sum(col("x") * col("x")).as("sxx"),
         sum(col("y") * col("y")).as("syy"))
       .select(col("n").cast(IntegerType).as("n_edges"),
-        expr("round(CAST(n*sxy - sx*sy AS DOUBLE) / " +
-          "(sqrt(CAST(n*sxx - sx*sx AS DOUBLE)) * " +
+        expr("round(try_divide(CAST(n*sxy - sx*sy AS DOUBLE), " +
+          "sqrt(CAST(n*sxx - sx*sx AS DOUBLE)) * " +
           "sqrt(CAST(n*syy - sy*sy AS DOUBLE))), 6)").as("assortativity"))
       .transform(Engine.cut)
     Engine.releaseCheckpoint(pCut)
@@ -1242,8 +1200,8 @@ object Graph {
     // iteration. Two pre-partitioned copies — one per key — make both
     // halves exchange only the |V|-sized score table. Storage is 2x|E|
     // once (evictable blocks, released below) vs 2 x iters exchanges.
-    val eBySrc = cutByKey(e0, "src")
-    val eByDst = cutByKey(e0, "dst")
+    val eBySrc = Engine.cutByKey(e0, "src")
+    val eByDst = Engine.cutByKey(e0, "dst")
     Engine.releaseCheckpoint(e0)
     val n = nodes.transform(Engine.cut)
     def half(scores: DataFrame, edgeKey: String, groupKey: String): DataFrame = {

@@ -47,7 +47,7 @@ object BigGraph {
       case a if a.startsWith("--only=") =>
         a.stripPrefix("--only=").split(",").toSet
     }.getOrElse(Set.empty[String])
-    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-biggraph", Engine.cpus)
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-biggraph")
     spark.sparkContext.setLogLevel("ERROR")
 
     val e = Engine.table(spark, dir, "embeddings")

@@ -57,7 +57,7 @@ object DerivedOracles {
     // --sql-only regenerates oracle_sql.json against existing dumps
     // (oracle-text refactors do not change the Spark side)
     val sqlOnly = args.contains("--sql-only")
-    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-derived-oracles", Engine.cpus)
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-derived-oracles")
     spark.sparkContext.setLogLevel("ERROR")
     val fam = derivedFamily(spark, dir)
     for ((name, _) <- fam if !sqlOnly) {

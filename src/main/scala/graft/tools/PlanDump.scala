@@ -10,8 +10,8 @@ import graft.{Engine, SparkEntry}
   *     sbt "runMain graft.tools.PlanDump plans/r18 before q59_mad_outliers ..."
   *
   * Runs on the bench's session shape (`Engine.session` at
-  * `Engine.cpus` cores and partitions) so the dumped plans are the plans
-  * the bench executes. AQE renders `AdaptiveSparkPlan isFinalPlan=false` — the
+  * `Engine.cpus` cores) so the dumped plans are the plans the bench
+  * executes. AQE renders `AdaptiveSparkPlan isFinalPlan=false` — the
   * initial plan; Exchange counts / join strategies / PushedFilters are
   * all visible there.
   */
@@ -28,7 +28,7 @@ object PlanDump {
     }.toSeq
     val names = args.drop(2).filterNot(_.startsWith("--conf=")).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-plandump", Engine.cpus)
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

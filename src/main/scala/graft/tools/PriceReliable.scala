@@ -54,8 +54,7 @@ object PriceReliable {
     val slow = args.contains("--slow")
     val rttMs = intArg("rtt-ms", 40L)
     val mbps = intArg("mbps", 100L)
-    val spark = graft.Engine.session(s"local[${graft.Engine.cpus}]",
-      "graft-price-reliable", graft.Engine.cpus)
+    val spark = graft.Engine.session(s"local[${graft.Engine.cpus}]", "graft-price-reliable")
     spark.sparkContext.setLogLevel("ERROR")
     val slowDir = {
       val hc = spark.sparkContext.hadoopConfiguration

@@ -133,7 +133,7 @@ object SampledOracles {
     val family0 = args.collectFirst {
       case a if a.startsWith("--family=") => a.stripPrefix("--family=")
     }.getOrElse("all")
-    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-sampled-oracles", Engine.cpus)
+    val spark = Engine.session(s"local[${Engine.cpus}]", "graft-sampled-oracles")
     spark.sparkContext.setLogLevel("ERROR")
     val e = Engine.table(spark, dir, "embeddings")
     import org.apache.spark.sql.functions.col

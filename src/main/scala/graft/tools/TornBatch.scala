@@ -24,8 +24,8 @@ object TornBatch {
 
   def main(args: Array[String]): Unit = {
     val Array(src, ckpt, wh, table, haltAt) = args.take(5)
-    val spark = Engine.session("local[8]", "graft-tornbatch-child", 8,
-      Map("spark.sql.warehouse.dir" -> wh))
+    val spark = Engine.session("local[8]", "graft-tornbatch-child",
+      confs = Map("spark.sql.warehouse.dir" -> wh))
     spark.sparkContext.setLogLevel("ERROR")
     if (haltAt.toLong >= 0L) spark.conf.set(Chaos.HaltAfterBatchWrite, haltAt)
 

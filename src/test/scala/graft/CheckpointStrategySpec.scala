@@ -211,6 +211,37 @@ class CheckpointStrategySpec extends AnyFunSuite {
     }
   }
 
+  /** `Engine.cutByKey` keeps the hash layout its repartition paid for:
+    * one partition per core, and a group or a join on the key plans no
+    * exchange on the cut side, in either cut mode. */
+  test("a cutByKey frame grouped or joined on its key plans no Exchange on the cut side") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object Aqe extends AdaptiveSparkPlanHelper
+    def exchanges(df: DataFrame): Int = {
+      df.collect()
+      Aqe.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }.size
+    }
+    // a broadcast join would hide the layout: both sides shuffle-joined
+    val noBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prior = noBroadcast.map(k => k -> spark.conf.getOption(k))
+    noBroadcast.foreach(spark.conf.set(_, "-1"))
+    try for (mode <- Seq("local", "reliable")) withMode(mode, Some(ckptRoot)) {
+      val cut = Engine.cutByKey(
+        spark.range(0, 5000).select((col("id") % 97).as("k"), col("id").as("v")), "k")
+      assert(cut.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+      assert(exchanges(cut.groupBy("k").count()) == 0, mode)
+      val other = spark.range(0, 97).select(col("id").as("k"), (col("id") * 2).as("w"))
+      assert(exchanges(cut.join(other, "k")) == 1, s"$mode: only the other side exchanges")
+      Engine.releaseCheckpoint(cut)
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("unknown mode fails loudly") {
     intercept[IllegalArgumentException] {
       withMode("durable")(Engine.table(spark, sf, "nation").transform(Engine.cut))

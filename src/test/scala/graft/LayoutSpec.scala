@@ -45,7 +45,7 @@ class LayoutSpec extends AnyFunSuite {
     val before = nFiles
     assert(before >= 40)
     val rows = spark.table("frag_t").count()
-    Layout.compact(spark, "frag_t", targetFileMB = 128)
+    Layout.compact(spark, "frag_t")
     assert(nFiles < 5, s"files after compact: $nFiles")
     assert(spark.table("frag_t").count() == rows) // no data loss
   }

@@ -180,8 +180,8 @@ class PlanLintSpec extends AnyFunSuite {
     // seed ids), each bounded by 2x the already-collected edge count
     // via a broadcast semi join; the node/seed tables themselves are
     // never collected
-    // The one-shot ops (triangles/clustering/adamic-adar/
-    // assortativity) share that collect: cutAndMaybeCollectPairs
+    // The one-shot ops (triangles/clustering/adamic-adar) share
+    // that collect: cutAndMaybeCollectPairs
     // delegates to the fixpoints' cutAndMaybeCollect
     "Graph.scala" -> 5,
     // TextPipeline (r15/r16, folded r18): the NB one-pass scorer's
@@ -237,7 +237,7 @@ class PlanLintSpec extends AnyFunSuite {
   }
 
   /** Every main, the test suite and the wire path share one session
-    * shape: cores, shuffle partitions, UI off, `Engine.SessionDefaults`
+    * shape: cores, UI off, `Engine.SessionDefaults`
     * and the `GraftExtensions` function surface all come from
     * `Engine.session`, so no other file in src/main may build a session
     * of its own. */
@@ -286,6 +286,44 @@ class PlanLintSpec extends AnyFunSuite {
   test("src/main installs no planner strategy on a live session") {
     val sites = mainSources.collect { case (f, src) if src.contains("extraStrategies") => f }
     assert(sites.isEmpty, s"per-session strategy installs:\n  ${sites.sorted.mkString("\n  ")}")
+  }
+
+  /** Sites outside Engine.scala that pass a count to repartition or
+    * coalesce: file -> sites. Each names its count for a reason of its
+    * own, not as a sizing policy. */
+  private val allowCountedRepartition: Map[String, Int] = Map(
+    // COPY's `(parallel n)`: the statement names its file count, as
+    // KuiBaDB's COPY names its `parallel` workers
+    "sources/Copy.scala" -> 1,
+    // the correctness dump writes each entry's result as one file
+    "Verify.scala" -> 1,
+    // test input, not an engine write: each slice of the streaming
+    // chaos arms' source directory is written as one file
+    "tools/ClusterCheck.scala" -> 6)
+
+  /** One sizing rule: `Engine` picks every cut's partition count (the
+    * context's cores, `Engine.cutByKey`) and every written file count
+    * (`Engine.filesFor`), and AQE sizes every other shuffle. So no other
+    * file in src/main reads the shuffle-partition conf or the core
+    * count, and none passes a count to repartition/coalesce but the
+    * audited sites above. */
+  test("only Engine.scala sizes cuts and written files") {
+    val reads = "spark\\.sql\\.shuffle\\.partitions|defaultParallelism".r
+    val counted = "\\.(repartition|coalesce)\\(\\s*(?!col\\()".r
+    val others = mainSources.filterNot(_._1.endsWith("/Engine.scala"))
+    val readSites = others.flatMap { case (f, src) =>
+      reads.findAllIn(src).map(m => s"$f: $m") }
+    assert(readSites.isEmpty,
+      s"sizing reads outside Engine.scala:\n  ${readSites.sorted.mkString("\n  ")}")
+    val countSites = others.flatMap { case (f, src) =>
+      val n = counted.findAllIn(src).size
+      val allowed = allowCountedRepartition.collectFirst {
+        case (suffix, k) if f.endsWith("/" + suffix) => k }.getOrElse(0)
+      if (n != allowed) Some(s"$f: $n counted repartition/coalesce sites, $allowed allowed")
+      else None
+    }
+    assert(countSites.isEmpty,
+      s"partition or file counts outside Engine.scala:\n  ${countSites.sorted.mkString("\n  ")}")
   }
 
   /** A window with no partitionBy funnels its entire input through ONE

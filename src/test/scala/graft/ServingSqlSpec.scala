@@ -89,9 +89,11 @@ class ServingSqlSpec extends AnyFunSuite {
       JobCounter.jobsInGroup(spark, "serving-job-pin")(spark.sql(sql).collect())
     }
     val ann = jobs("SELECT * FROM graft_ann_topk(7, 10)")
+    val bm25 = jobs("SELECT * FROM graft_bm25_topk('scan hash merge', 20)")
     val hybrid = jobs("SELECT * FROM graft_hybrid_topk(7, 'scan hash merge', 20)")
     // a change that moves these must say which layer moved them
     assert(ann == 3, s"graft_ann_topk ran $ann jobs")
+    assert(bm25 == 6, s"graft_bm25_topk ran $bm25 jobs")
     assert(hybrid == 8, s"graft_hybrid_topk ran $hybrid jobs")
   }
 

@@ -261,7 +261,12 @@ class GraphSpec extends AnyFunSuite {
     both("triangleCounts")(Graph.triangleCounts(pairs, nodes))
     both("localClustering")(Graph.localClustering(pairs, nodes))
     both("adamicAdar")(Graph.adamicAdar(pairs, maxMidDegree = 12))
-    both("degreeAssortativity")(Graph.degreeAssortativity(pairs))
+    // one plan at every size: the value its deleted driver-local twin
+    // returned on this graph, pinned; a graph whose degrees do not vary
+    // (one edge) has no correlation, NULL
+    assert(rows(Graph.degreeAssortativity(pairs)) == Seq(Seq(620, -0.035469)))
+    assert(rows(Graph.degreeAssortativity(Seq((1L, 2L)).toDF("id_a", "id_b"))) ==
+      Seq(Seq(2, null)))
   }
 
   test("localClustering's distributed arm reuses its gate's cut") {

@@ -517,6 +517,41 @@ class WireServerSpec extends AnyFunSuite {
     }
   }
 
+  /** A COPY batch is sized by its bytes (`Engine.filesFor`), not by the
+    * cores: a wire-sized batch lands one parquet file. */
+  test("a 2,000-row COPY FROM STDIN batch adds exactly one parquet file") {
+    spark.sql("DROP TABLE IF EXISTS wire_copy_files_t")
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup(); c.drain()
+      c.query("CREATE TABLE wire_copy_files_t (id int, name varchar(16))")
+      c.drain()
+      val loc = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier("wire_copy_files_t")).location)
+      def files = Option(loc.listFiles()).toSeq.flatten.count(_.getName.endsWith(".parquet"))
+      def batch(from: Int): Unit = {
+        c.query("COPY wire_copy_files_t FROM STDIN")
+        assert(c.read()._1 == 'G')
+        c.copyData((from until from + 2000).map(i => s"$i,name$i\n").mkString)
+        c.copyDone()
+        val (msgs, _) = c.drain()
+        assert(msgs.exists { case (t, b) => t == 'C' && c.cstrAt(b, 0) == "COPY 2000" },
+          s"err: ${c.errFields(msgs)}")
+      }
+      batch(0)
+      assert(files == 1, s"first batch wrote $files files")
+      batch(2000)
+      assert(files == 2, s"two batches wrote $files files")
+      c.query("SELECT COUNT(*), COUNT(DISTINCT id) FROM wire_copy_files_t")
+      assert(c.dataRows(c.drain()._1) == Seq(Seq("4000", "4000")))
+      c.terminate()
+    } finally {
+      srv.close()
+      spark.sql("DROP TABLE IF EXISTS wire_copy_files_t")
+    }
+  }
+
   test("COPY TO STDOUT streams the table back through the copy-out sub-protocol") {
     spark.sql("DROP TABLE IF EXISTS wire_copyout_t")
     val srv = new WireServer(spark, Some(TestSpark.sf)).start()
@@ -832,6 +867,58 @@ class WireServerSpec extends AnyFunSuite {
       assert(c.errFields(c.drain()._1)('C') == "22023")
       c.query("SELECT 7 AS x")
       assert(c.dataRows(c.drain()._1) == Seq(Seq("7")))
+      c.terminate()
+    } finally srv.close()
+  }
+
+  /** JDBC and libpq-param clients bind the serving functions' arguments:
+    * a bound call answers the rows of the literal call, whatever the
+    * values' format or declared type, and k < 1 is still 22023. */
+  test("the serving table functions accept bound parameters") {
+    graft.Serving.buildIndexes(spark, TestSpark.sf, "wsrv")
+    graft.Serving.install(spark, "wsrv")
+    val srv = new WireServer(spark, Some(TestSpark.sf)).start()
+    try {
+      val c = new Client(srv.boundPort)
+      c.startup(); c.drain()
+      def simple(q: String): Seq[Seq[String]] = {
+        c.query(q)
+        val (msgs, _) = c.drain()
+        assert(c.errFields(msgs).isEmpty, c.errFields(msgs))
+        c.dataRows(msgs)
+      }
+      def bound(q: String, oids: Seq[Int], params: Seq[Array[Byte]],
+          fmts: Seq[Int]): Seq[(Char, Array[Byte])] = {
+        c.parse("", q, oids)
+        c.bindRaw("", "", params, fmts)
+        c.executePortal("")
+        c.sync()
+        c.drain()._1
+      }
+      def rows(msgs: Seq[(Char, Array[Byte])]): Seq[Seq[String]] = {
+        assert(c.errFields(msgs).isEmpty, c.errFields(msgs))
+        c.dataRows(msgs)
+      }
+      def text(vs: String*) = vs.map(_.getBytes(UTF_8))
+      def be(n: Int, v: Long): Array[Byte] =
+        (0 until n).map(i => (v >> (8 * (n - 1 - i))).toByte).toArray
+      val annQ = "SELECT * FROM graft_ann_topk(%s, %s) ORDER BY sim DESC, nid"
+      val ann = simple(annQ.format("0", "5"))
+      assert(ann.length == 5)
+      // text values with unspecified (0) oids
+      assert(rows(bound(annQ.format("$1", "$2"), Nil, text("0", "5"), Nil)) == ann)
+      // int8 / int4 values in binary format
+      assert(rows(bound(annQ.format("$1", "$2"), Seq(20, 23),
+        Seq(be(8, 0L), be(4, 5L)), Seq(1))) == ann)
+      // a text-typed terms argument
+      val bmQ = "SELECT * FROM graft_bm25_topk(%s, 5) ORDER BY bm25 DESC, doc_id"
+      val bm = simple(bmQ.format("'scan hash merge'"))
+      assert(bm.nonEmpty)
+      assert(rows(bound(bmQ.format("$1"), Seq(25), text("scan hash merge"), Nil)) == bm)
+      // a bound k < 1 is still 22023, and the connection keeps serving
+      val err = c.errFields(bound(annQ.format("$1", "$2"), Nil, text("0", "0"), Nil))
+      assert(err('C') == "22023" && err('M').contains("k must be"), err)
+      assert(simple("SELECT 7 AS x") == Seq(Seq("7")))
       c.terminate()
     } finally srv.close()
   }
