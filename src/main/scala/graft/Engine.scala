@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -105,9 +106,16 @@ object Engine {
   /** Read one driver table. Scans stay declarative so Catalyst pushes
     * filters + prunes columns into the Parquet reader (check with
     * .explain: PushedFilters / ReadSchema).
+    *
+    * The read is given its schema ([[tableSchema]]), so building the
+    * frame runs no Spark job: Spark's own schema inference starts one
+    * job per call to read one footer. The frame still lists its files
+    * here and scans them at every action, so an appended or replaced
+    * file is seen on the next call.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(tableSchema(spark, path)).parquet(path)
     // events.ts as TIMESTAMP(NANOS) reads as long nanos (nanosAsLong in
     // SessionDefaults): truncate to microseconds (matching DuckDB's
     // TIMESTAMP_NS read).
@@ -121,8 +129,9 @@ object Engine {
     * plain-SQL surface (`spark.sql`).
     */
   def registerViews(spark: SparkSession, dir: String): Unit = {
-    // idempotent per (session, dir): re-registering re-reads 10 parquet
-    // footers per call otherwise (hot on the SQL passthrough path)
+    // idempotent per (session, dir): re-registering lists every table's
+    // files and replaces 10 views per call otherwise (hot on the SQL
+    // passthrough path)
     val key = "graft.catalog.dir"
     if (spark.conf.getOption(key).contains(dir)) return
     tableNames.foreach { n =>
@@ -189,10 +198,72 @@ object Engine {
       tag: String, semHash: Int, planHash: Int, paths: Seq[String],
       filesFp: Long)
 
-  private val memoCache =
-    new java.util.LinkedHashMap[MemoKey, AnyRef](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[MemoKey, AnyRef]): Boolean = size() > 64
+  /** An access-ordered map that drops its least recently used entry
+    * past `bound` entries. Callers synchronize on it. */
+  private def lru[K, V](bound: Int): java.util.LinkedHashMap[K, V] =
+    new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size() > bound
+    }
+
+  private val memoCache = lru[MemoKey, AnyRef](64)
+
+  /** The key [[tableSchema]] memoizes a schema under: the path, the
+    * listing fold of every file under it, and the parquet confs the
+    * session sets. */
+  private final case class SchemaKey(
+      path: String, filesFp: Long, confs: Map[String, String])
+
+  private val schemaCache = lru[SchemaKey, StructType](64)
+
+  /** A table's schema as Spark infers it, `spark.read.parquet(path)
+    * .schema`, resolved once per snapshot of the files under `path` —
+    * the `kb_attribute` analogue, without a schema declared anywhere
+    * but in the files. A replaced or added file changes the listing
+    * fold, so it misses; so does any parquet conf the session sets
+    * (they decide how footer types convert: nanosAsLong,
+    * binaryAsString, int96AsTimestamp, ...) and `spark.sql.caseSensitive`,
+    * which the converter also reads, so a caller's `spark.conf.set`
+    * reaches the schema. The listing is driver-side metadata, no Spark
+    * job; only a miss runs Spark's inference job. */
+  private def tableSchema(spark: SparkSession, path: String): StructType = {
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+    val k = SchemaKey(path, listingFold(fnvSeed, filesUnder(spark, path)), confs)
+    schemaCache.synchronized {
+      val hit = schemaCache.get(k)
+      if (hit != null) return hit
+    }
+    val s = spark.read.parquet(path).schema
+    schemaCache.synchronized { schemaCache.put(k, s) }
+    s
+  }
+
+  /** Every file under `path` (a file, a directory or a glob); none when
+    * nothing matches, and then inference raises Spark's own error.
+    * Walked with `listStatus`: `listFiles` returns located statuses,
+    * which load each file's permissions, and the local file system
+    * forks a process for that (2.7 ms against 0.02 ms per table). */
+  private def filesUnder(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk) else Seq(st)
+    Option(fs.globStatus(p)).toSeq.flatten.flatMap(walk)
+  }
+
+  private val fnvSeed = -3750763034362895579L
+  private def fnvS(h: Long, s: String): Long =
+    s.foldLeft(h)((a, c) => (a ^ c.toLong) * 1099511628211L)
+  private def fnvL(h: Long, v: Long): Long = (h ^ v) * 1099511628211L
+
+  /** FNV-1a fold of (path, length, mtime) over `files` in path order:
+    * any added, removed, rewritten or touched file changes it. */
+  private def listingFold(h0: Long, files: Seq[FileStatus]): Long =
+    files.sortBy(_.getPath.toString).foldLeft(h0) { (h, f) =>
+      fnvL(fnvL(fnvS(h, f.getPath.toString), f.getLen), f.getModificationTime)
     }
 
   def memoCount(df: DataFrame): Long = memoStat(df, "count")(df.count())
@@ -259,16 +330,13 @@ object Engine {
       case Right(loc) => loc.rootPaths.mkString(",")
       case Left(s) => s
     }
-    def fnvS(h: Long, s: String): Long =
-      s.foldLeft(h)((a, c) => (a ^ c.toLong) * 1099511628211L)
-    def fnvL(h: Long, v: Long): Long = (h ^ v) * 1099511628211L
     def isBatchTable(loc: FileIndex): Boolean =
       loc.partitionSchema.fieldNames.contains("batch_id")
     // invalidation token per relation (see the key contract above):
     // commit-version (partition set) for batch_id tables, full listing
     // (path + length + mtime) for raw roots
     val filesFp = locs.collect { case Right(loc) => loc }
-      .foldLeft(-3750763034362895579L) { (h0, loc) =>
+      .foldLeft(fnvSeed) { (h0, loc) =>
         loc match {
           case c: CatalogFileIndex if isBatchTable(c) =>
             // partition names straight from the catalog — no file listing
@@ -284,12 +352,7 @@ object Engine {
               .map(_.path.toString).sorted
             parts.foldLeft(fnvL(h0, parts.size.toLong))(fnvS)
           case other =>
-            other.listFiles(Nil, Nil).flatMap(_.files)
-              .sortBy(_.getPath.toString)
-              .foldLeft(h0) { (h, f) =>
-                fnvL(fnvL(fnvS(h, f.getPath.toString), f.getLen),
-                  f.getModificationTime)
-              }
+            listingFold(h0, other.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus))
         }
       }
     val canon = plan.canonicalized

@@ -267,9 +267,9 @@ object ClusterCheck {
     *  - g08 HITS: the longest fixpoint chain (2 cut half-steps x
     *    iters, ~45 jobs) — kill at 20, past the adjacency cuts.
     *  - d05 near-dup components with the DISTRIBUTED min-label arm
-    *    forced (graft.driverLocal=off; 159 jobs at sf0.01) — kill at 60,
+    *    forced (graft.driverLocal=off; 153 jobs at sf0.01) — kill at 60,
     *    inside the label-propagation rounds.
-    *  - t24 BPE trainer (8 merge ranks, 29 jobs) — kill at 12,
+    *  - t24 BPE trainer (8 merge ranks, 28 jobs) — kill at 12,
     *    mid-merge-loop, between one rank's cut and the next's
     *    pair-count. */
   // r18: the graph fixpoints and the BPE trainer gained driver-local

@@ -326,6 +326,39 @@ class PlanLintSpec extends AnyFunSuite {
       s"partition or file counts outside Engine.scala:\n  ${countSites.sorted.mkString("\n  ")}")
   }
 
+  /** Sites outside Engine.scala that read parquet with Spark's schema
+    * inference: file -> sites. None of them reads a driver table. */
+  private val allowParquetRead: Map[String, Int] = Map(
+    // a restarted child re-creates the catalog entry of the batch table
+    // it finds on disk, from the files themselves, once per process
+    "tools/TornBatch.scala" -> 1,
+    // test input and output: the big-graph arm's prebuilt edge fixture,
+    // and the torn-batch arm's table read back by path for its fingerprint
+    "tools/ClusterCheck.scala" -> 2)
+
+  /** `file: n` for every file whose `read.parquet(` count differs from
+    * [[allowParquetRead]] (Engine.scala exempt). */
+  private def parquetReadSites(sources: Seq[(String, String)]): Seq[String] =
+    sources.filterNot(_._1.endsWith("/Engine.scala")).flatMap { case (f, src) =>
+      val n = "read\\s*\\.\\s*parquet\\(".r.findAllIn(src).size
+      val allowed = allowParquetRead.collectFirst {
+        case (suffix, k) if f.endsWith("/" + suffix) => k }.getOrElse(0)
+      if (n != allowed) Some(s"$f: $n read.parquet sites, $allowed allowed") else None
+    }
+
+  /** Driver tables are read through `Engine.table`, which gives the read
+    * the schema it memoized per file snapshot: a `read.parquet(` elsewhere
+    * would bring back one schema-inference job per call. */
+  test("only Engine.scala infers a parquet schema") {
+    val sites = parquetReadSites(mainSources)
+    assert(sites.isEmpty,
+      s"parquet reads outside Engine.table:\n  ${sites.sorted.mkString("\n  ")}")
+    val planted = "src/main/scala/graft/operators/Planted.scala" ->
+      "object Planted { def f(spark: SparkSession) = spark.read.parquet(\"x\") }"
+    assert(parquetReadSites(mainSources :+ planted) ==
+      Seq("src/main/scala/graft/operators/Planted.scala: 1 read.parquet sites, 0 allowed"))
+  }
+
   /** A window with no partitionBy funnels its entire input through ONE
     * task (Exchange SinglePartition + full sort) — the r10 verdict
     * found exactly this inside d16's dense-ID mapping, where "input" is
