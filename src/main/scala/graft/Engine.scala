@@ -129,15 +129,23 @@ object Engine {
     * plain-SQL surface (`spark.sql`).
     */
   def registerViews(spark: SparkSession, dir: String): Unit = {
-    // idempotent per (session, dir): re-registering lists every table's
-    // files and replaces 10 views per call otherwise (hot on the SQL
-    // passthrough path)
-    val key = "graft.catalog.dir"
-    if (spark.conf.getOption(key).contains(dir)) return
-    tableNames.foreach { n =>
-      table(spark, dir, n).createOrReplaceTempView(n)
+    // a view pins the file listing it was created with, so each call
+    // folds every table's listing (driver-side metadata, no Spark job)
+    // and replaces only the views whose files changed since the session
+    // last registered `dir`: an appended part file reaches the next
+    // statement, and a warm call reads no schema and builds no frame
+    val (dirKey, foldsKey) = ("graft.catalog.dir", "graft.catalog.listing")
+    val folds = tableNames.map(n =>
+      java.lang.Long.toHexString(listingFold(fnvSeed, filesUnder(spark, s"$dir/$n.parquet"))))
+    val before =
+      if (spark.conf.getOption(dirKey).contains(dir))
+        spark.conf.getOption(foldsKey).fold(Seq.empty[String])(_.split(',').toSeq)
+      else Seq.empty
+    tableNames.zip(folds).zipWithIndex.foreach { case ((n, f), i) =>
+      if (!before.lift(i).contains(f)) table(spark, dir, n).createOrReplaceTempView(n)
     }
-    spark.conf.set(key, dir)
+    spark.conf.set(dirKey, dir)
+    spark.conf.set(foldsKey, folds.mkString(","))
   }
 
   /** SQL passthrough over the registered catalog — the
@@ -383,13 +391,13 @@ object Engine {
   // Column-API double -> DEC casts go through exactDec (the SQL-text
   // window sums of q47/q50/e11 keep the plain CAST). Spark's cast builds
   // Double.toString(x), parses it as a BigDecimal and rounds HALF_UP to
-  // 10 places, per row. The ExactDec10 kernel instead computes
-  // r = rint(x * 1e10) and, with an fma residual, the exact distance of
-  // x from r * 1e-10. When |x| < 2^17 and that distance is < 0.25 units
-  // of 1e-10, the cast's string (within half an ulp of x, < 0.073 units
-  // there) is < 0.5 units from r * 1e-10, so HALF_UP gives exactly r:
+  // 10 places, per row. The ExactDec10 expression instead calls
+  // `ExactDecKernel.unscaled(x, 10)`: r = rint(x * 1e10) and, with an fma
+  // residual, the exact distance of x from r * 1e-10. When that distance
+  // plus half an ulp of x (how far the cast's string can lie from x),
+  // both in units of 1e-10, stays below 0.5, HALF_UP gives exactly r:
   // the kernel returns Decimal(r, 38, 10) with no string and no
-  // BigDecimal. Anything else (NaN, +-Inf, |x| >= 2^17, near a
+  // BigDecimal. Anything else (NaN, +-Inf, |x| >= 2^19, near a
   // half-point, a non-double input) is NULL from the kernel and takes
   // the cast itself, so values and ANSI errors are unchanged by
   // construction. Spark's Sum over DEC stays the accumulator.

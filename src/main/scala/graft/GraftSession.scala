@@ -168,6 +168,9 @@ class GraftSession(val spark: SparkSession, val dataDir: Option[String] = None) 
     scala.util.Try(route(sql.trim, params)).toOption.collect { case Rows(s, _) => s }
 
   private def route(t: String, params: Map[String, Any]): Outcome = {
+    // the driver tables' views follow their files: a part file appended
+    // since the last statement is in this one's plan
+    dataDir.foreach(Engine.registerViews(spark, _))
     def utility(body: => String) = Utility(() => failing(body))
     t match {
       case "" | ";" => Utility(() => EmptyQuery, endsBlock = true)

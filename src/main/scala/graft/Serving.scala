@@ -30,15 +30,18 @@ import graft.operators.{TextPipeline, VectorSearch}
   * pruned index scan (the cells are PartitionFilters), ADC-scored
   * sort-limit shortlist, broadcast join to `{prefix}_emb` for the exact
   * rerank, sort-limit k. No per-query aggregate, no query-side
-  * broadcast. The lexical arm prunes to the query terms' postings at
-  * the scan. At 100 TB a call touches nprobe cells of the index plus
-  * the rerank shortlist, or the query terms' postings, never the
-  * corpus. Building a plan runs one job (the query-vector lookup, vector
-  * arm only); the PQ model is read once per snapshot of the model table
-  * ([[readModel]]). The returned LogicalPlan is the same analyzed plan
-  * the Scala APIs produce, so the wire path and the driver-contract path
-  * can never drift (ServingSqlSpec + WireServerSpec hash-check them
-  * equal).
+  * broadcast. The lexical arm (`TextPipeline.bm25FromIndex`) prunes to
+  * the query terms' postings at the scan and counts df over them with a
+  * window; the corpus stats n and avgdl are literals. At 100 TB a call
+  * touches nprobe cells of the index plus the rerank shortlist, or the
+  * query terms' postings, never the corpus. Building a plan runs one job
+  * (the query-vector lookup, vector arm only); the PQ model is read once
+  * per snapshot of the model table ([[readModel]]) and n/avgdl once per
+  * snapshot of the doclens table, so a warm BM25 call runs 3 jobs, ANN 3
+  * and hybrid 5 (ServingSqlSpec). The returned LogicalPlan is the same
+  * analyzed plan the Scala APIs produce, so the wire path and the
+  * driver-contract path can never drift (ServingSqlSpec + WireServerSpec
+  * hash-check them equal).
   *
   * Deployment shape: [[buildIndexes]] persists the three index tables
   * plus the PQ model (encode once); `GraftExtensions` injects the
@@ -220,7 +223,8 @@ object Serving {
   }
 
   /** The lexical serving arm: BM25 top-k from the persisted inverted
-    * index — query-term postings prune at the scan. */
+    * index — query-term postings prune at the scan; doclens is read only
+    * when its files changed since the last call. */
   private def bm25Plan(prefix: String, terms: Seq[String], k: Int): LogicalPlan = {
     val s = active
     TextPipeline.bm25FromIndex(

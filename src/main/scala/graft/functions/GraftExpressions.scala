@@ -1106,45 +1106,84 @@ case class Round6(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_round6"
 }
 
-/** Proven fast path for `cast(x AS DECIMAL(38,10))` on a double.
+/** Proven fast path for `cast(x AS DECIMAL(p, s))` on a double.
   *
   * Spark's cast parses `Double.toString(x)` as a BigDecimal and rounds
-  * it HALF_UP to 10 places: a string build, a parse and a setScale per
+  * it HALF_UP to s places: a string build, a parse and a setScale per
   * row. [[unscaled]] returns the same unscaled value from double
   * arithmetic alone whenever it can prove the two agree, and
-  * [[NotProven]] otherwise. It proves agreement when |x| < 2^17 and
-  * x lies within 0.25 units of 1e-10 of the grid point r * 1e-10,
-  * r = rint(x * 1e10):
-  *  - p = x * 1e10 rounded and e = fma(x, 1e10, -p) give x * 1e10 =
-  *    p + e exactly (1e10 is a double; e can only be inexact on
-  *    underflow, far below the 0.25 margin). p - r is exact, so
-  *    (p - r) + e rounds x * 1e10 - r once, and rounding is monotonic:
-  *    a computed |d| < 0.25 means the true distance is < 0.25 units.
+  * [[NotProven]] otherwise. With p = x * 10^s rounded, r = rint(p) and
+  * units of 10^-s, it proves agreement when |p| < 2^62 and
+  * |x * 10^s - r| + ulp(x) * 10^s / 2 < 1/2 - delta:
+  *  - e = fma(x, 10^s, -p) gives x * 10^s = p + e exactly (10^s is a
+  *    double for s <= 22; e can only be inexact on underflow, far below
+  *    delta). p - r is exact, so (p - r) + e rounds x * 10^s - r once.
   *  - The cast's string parses back to x, so it lies within half an
-  *    ulp of x; below 2^17 that is at most 2^-37 < 0.073 units.
-  *  - The string is therefore < 0.25 + 0.073 < 0.5 units from
-  *    r * 1e-10 and rounds to it (the margin holds even for a full ulp,
-  *    0.146 units). |r| < 2^17 * 1e10 < 1e18, so r fits the long.
-  * NaN, +-Inf, |x| >= 2^17 and values near a half-point fail the test.
+  *    ulp of x: at most ulp(x) * 10^s / 2 units from x.
+  *  - The string is therefore less than 1/2 unit from r * 10^-s and
+  *    rounds to it. delta covers the three roundings of the test itself
+  *    (each below 2^-53 relative to a sum under 1/2). |r| < 2^62 fits
+  *    the long and every DECIMAL(38, s) with s <= 18.
+  * NaN, +-Inf, magnitudes whose ulp reaches 10^-s (|x| >= 2^19 at
+  * s = 10, 2^13 at s = 12) and values near a half-point fail the test.
   * [[ExactDec10]] emits NULL for them and [[graft.Engine.exactDec]]
   * falls back to the Cast itself, so values and ANSI errors are the
-  * cast's by construction. Property-pinned against Spark's Cast in
+  * cast's by construction; [[ExactDecSums]] falls back to BigDecimal.
+  * Property-pinned against BigDecimal and Spark's Cast in
   * KernelPropertySpec. */
-object ExactDec10Kernel {
+object ExactDecKernel {
   final val NotProven = Long.MinValue
-  private final val Limit = 131072.0 // 2^17
+  private final val Limit = 4.611686018427387904e18 // 2^62
+  private final val Margin = 0.5 - 1e-9
+  private val pow10 = Array.iterate(1.0, 19)(_ * 10) // exact through 10^18
 
-  def unscaled(x: Double): Long = {
-    if (!(java.lang.Math.abs(x) < Limit)) return NotProven // also NaN
-    val p = x * 1e10
-    val e = java.lang.Math.fma(x, 1e10, -p)
+  def unscaled(x: Double, scale: Int): Long = {
+    val m = pow10(scale)
+    val p = x * m
+    if (!(java.lang.Math.abs(p) < Limit)) return NotProven // also NaN
+    val e = java.lang.Math.fma(x, m, -p)
     val r = java.lang.Math.rint(p)
-    if (java.lang.Math.abs((p - r) + e) < 0.25) r.toLong else NotProven
+    if (java.lang.Math.abs((p - r) + e) + 0.5 * java.lang.Math.ulp(x) * m < Margin)
+      r.toLong
+    else NotProven
+  }
+}
+
+/** Exact per-cell sums of `cast(x AS DECIMAL(38, scale))` over doubles,
+  * the driver-side twin of `sum(x.cast(DECIMAL(38, scale)))` grouped by
+  * cell: each cell sums unscaled longs while [[ExactDecKernel]] proves
+  * the cast and the sum fits a long; an unproven value, or one whose
+  * addition would overflow, goes to the cell's BigDecimal spill
+  * instead (Spark's quantization, `BigDecimal.valueOf(x).setScale`).
+  * [[sum]] is therefore the exact decimal sum either way. */
+final class ExactDecSums(cells: Int, scale: Int) {
+  private val longs = new Array[Long](cells)
+  private val spill = new Array[java.math.BigDecimal](cells)
+  /** Values added per cell. */
+  val counts = new Array[Long](cells)
+
+  def add(cell: Int, x: Double): Unit = {
+    counts(cell) += 1
+    val u = ExactDecKernel.unscaled(x, scale)
+    if (u != ExactDecKernel.NotProven) {
+      val a = longs(cell)
+      val s = a + u
+      if (((a ^ s) & (u ^ s)) >= 0) { longs(cell) = s; return }
+    }
+    val d =
+      if (u != ExactDecKernel.NotProven) java.math.BigDecimal.valueOf(u, scale)
+      else java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP)
+    spill(cell) = if (spill(cell) == null) d else spill(cell).add(d)
+  }
+
+  def sum(cell: Int): java.math.BigDecimal = {
+    val l = java.math.BigDecimal.valueOf(longs(cell), scale)
+    if (spill(cell) == null) l else l.add(spill(cell))
   }
 }
 
 /** graft_exact_dec10(x) -> DECIMAL(38,10): the exact
-  * `cast(x AS DECIMAL(38,10))` when [[ExactDec10Kernel]] proves it, NULL
+  * `cast(x AS DECIMAL(38,10))` when [[ExactDecKernel]] proves it, NULL
   * otherwise (and always NULL for a non-double input). Only meaningful
   * under `coalesce(ExactDec10(x), cast(x AS DECIMAL(38,10)))` —
   * [[graft.Engine.exactDec]]. The result is a long-backed Decimal. */
@@ -1153,8 +1192,8 @@ case class ExactDec10(child: Expression) extends UnaryExpression {
   override def nullable: Boolean = true
   override def nullSafeEval(v: Any): Any = child.dataType match {
     case DoubleType =>
-      val u = ExactDec10Kernel.unscaled(v.asInstanceOf[Double])
-      if (u == ExactDec10Kernel.NotProven) null else Decimal.createUnsafe(u, 38, 10)
+      val u = ExactDecKernel.unscaled(v.asInstanceOf[Double], 10)
+      if (u == ExactDecKernel.NotProven) null else Decimal.createUnsafe(u, 38, 10)
     case _ => null
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -1163,8 +1202,8 @@ case class ExactDec10(child: Expression) extends UnaryExpression {
     else {
       val u = ctx.freshName("unscaled")
       nullSafeCodeGen(ctx, ev, v =>
-        s"""long $u = graft.functions.ExactDec10Kernel.unscaled($v);
-           |if ($u == ${ExactDec10Kernel.NotProven}L) {
+        s"""long $u = graft.functions.ExactDecKernel.unscaled($v, 10);
+           |if ($u == ${ExactDecKernel.NotProven}L) {
            |  ${ev.isNull} = true;
            |} else {
            |  ${ev.value} = org.apache.spark.sql.types.Decimal.createUnsafe($u, 38, 10);

@@ -226,9 +226,10 @@ object Cluster {
     * fixed latency at any corpus size, exactly the overhead class the
     * graph fixpoints shed in r18. The gate's count is memoized on the
     * input plan, so the 100 TB path pays at most one count per plan per
-    * session. The twin stays: c01 runs 790 ms against 1546 ms for the
-    * distributed loop, 1.96x (sf0.1, local[4], median of 5 interleaved
-    * warm build+collect pairs, rows equal). */
+    * session. The twin stays: c01 runs 390 ms against 1442 ms for the
+    * distributed loop, 3.70x (sf0.1, local[4], median of 5 interleaved
+    * warm build+collect pairs, rows equal; 790 against 1546 ms, 1.96x,
+    * while each element's sum went through a BigDecimal). */
   private val DriverMaxVecs = 100000L
 
   /** The driver-local twin of [[kmeans]] — identical values by
@@ -239,9 +240,10 @@ object Cluster {
     *    `topN` the distributed expression compiles to, over the same
     *    ArrayData element types (float widening included);
     *  - the centroid mean replicates the distributed
-    *    `sum(x.cast(DECIMAL(38,12))) / n` fold: per-element
-    *    `BigDecimal.valueOf(x).setScale(12, HALF_UP)` — Spark's
-    *    double→decimal cast quantization — summed exactly, then the
+    *    `sum(x.cast(DECIMAL(38,12))) / n` fold: per-element Spark's
+    *    double→decimal cast quantization, summed exactly in
+    *    [[graft.functions.ExactDecSums]] (unscaled longs where the
+    *    kernel proves the cast, BigDecimal otherwise), then the
     *    identical `.doubleValue / n` emission; empty clusters keep the
     *    previous centroid like the distributed `next = cents.clone()`;
     *  - the RETURNED assignment frame applies the kernel EXPRESSION
@@ -253,7 +255,7 @@ object Cluster {
       iters: Int): (DataFrame, Array[Array[Double]]) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-    import graft.functions.{NearestCellsKernel, VectorKernels}
+    import graft.functions.{ExactDecSums, NearestCellsKernel, VectorKernels}
     val spark = e.sparkSession
     val schema = e.schema
     val idIdx = schema.fieldIndex("vec_id")
@@ -274,14 +276,14 @@ object Cluster {
         val v = vecs(i)
         Array.tabulate(v.numElements())(t => get(v, t))
       }
+    val dim = if (vecs.isEmpty) 0 else vecs.map(_.numElements()).max
     var it = 0
     while (it < iters) {
       val norms = NearestCellsKernel.sqrtNorms(cents)
       val next = cents.map(_.clone())
       // per-(cid, pos) exact decimal sums + counts, then mean — the
       // distributed groupBy("cid","pos") fold
-      val sums = new java.util.HashMap[Long, java.math.BigDecimal]()
-      val cnts = new java.util.HashMap[Long, Long]()
+      val sums = new ExactDecSums(k * dim, 12)
       var i = 0
       while (i < vecs.length) {
         val v = vecs(i)
@@ -290,20 +292,16 @@ object Cluster {
         var p = 0
         val n = v.numElements()
         while (p < n) {
-          val key = (cid.toLong << 32) | p
-          val x = java.math.BigDecimal.valueOf(get(v, p))
-            .setScale(12, java.math.RoundingMode.HALF_UP)
-          val prev = sums.get(key)
-          sums.put(key, if (prev == null) x else prev.add(x))
-          cnts.put(key, cnts.getOrDefault(key, 0L) + 1L)
+          sums.add(cid * dim + p, get(v, p))
           p += 1
         }
         i += 1
       }
-      sums.forEach { (key, sx) =>
-        val cid = (key >> 32).toInt
-        val pos = (key & 0xffffffffL).toInt
-        next(cid)(pos) = sx.doubleValue / cnts.get(key)
+      var cell = 0
+      while (cell < k * dim) {
+        if (sums.counts(cell) > 0)
+          next(cell / dim)(cell % dim) = sums.sum(cell).doubleValue / sums.counts(cell)
+        cell += 1
       }
       cents = next
       it += 1

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -116,40 +116,55 @@ object TextPipeline {
       .filter(col("token").isin(terms: _*))
       .groupBy("doc_id", "token")
       .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
-    bm25FromParts(tf, stats)
+    val df_ = tf.groupBy("token").agg(count(lit(1)).as("df"))
+    perDoc(tf.join(broadcast(df_), "token").crossJoin(broadcast(stats))
+      .select(col("doc_id"), termScore(col("n"), col("df"), col("tf"), col("dl"),
+        col("avgdl")).as("term_score")))
   }
 
-  /** The BM25 scoring tail over a (doc_id, token, tf, dl) postings
-    * frame + a one-row (n, avgdl) stats frame — shared verbatim by the
-    * corpus-scan path ([[bm25Scores]]) and the persisted-index path
-    * ([[bm25FromIndex]]) so the two can never drift arithmetically. */
-  private def bm25FromParts(tf: DataFrame, stats: DataFrame): DataFrame = {
-    val df_ = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    tf.join(broadcast(df_), "token")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1)
-          * col("tf") * 2.2
-          / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-          .as("term_score"))
-      .groupBy("doc_id")
-      .agg(round(sum(col("term_score")), 4).as("bm25"))
-  }
+  /** One query term's BM25 score in one document — the arithmetic
+    * [[bm25Scores]] and [[bm25FromIndex]] both call, so the corpus-scan
+    * and index-served paths can never drift. */
+  private def termScore(n: Column, df: Column, tf: Column, dl: Column,
+      avgdl: Column): Column =
+    log((n - df + 0.5) / (df + 0.5) + 1) * tf * 2.2 /
+      (tf + lit(1.2) * (lit(0.25) + lit(0.75) * dl / avgdl))
+
+  /** The per-document sum of (doc_id, term_score) rows, at 4dp. */
+  private def perDoc(scores: DataFrame): DataFrame =
+    scores.groupBy("doc_id").agg(round(sum(col("term_score")), 4).as("bm25"))
 
   /** BM25 over a PERSISTED inverted index (the serving path fed by
     * `streaming.DocsStreaming.invertedIndexIngestQuery`): postings =
     * (doc_id, token, tf, dl) rows, doclens = (doc_id, dl) one row per
     * ingested document (n/avgdl must count EVERY document, not only
-    * those holding query terms). Query-term postings prune at the scan
-    * (predicate pushdown on `token`); the arithmetic is bm25Scores'
-    * own tail, so index-served scores equal corpus-scan scores exactly
-    * (DocsStreamingSpec pins it across micro-batches). */
+    * those holding query terms).
+    *
+    * n and avgdl are read from doclens once per snapshot of its files
+    * ([[corpusStats]]) and bound into the plan as literals, so a warm
+    * call never scans doclens. Query-term postings prune at the scan
+    * (predicate pushdown on `token`), and df is a window count over the
+    * surviving rows: the plan scans postings once and runs two
+    * exchanges (token for df, doc_id for the sum). The term arithmetic
+    * is [[bm25Scores]]' own, so index-served scores equal corpus-scan
+    * scores exactly (DocsStreamingSpec pins it across micro-batches). */
   def bm25FromIndex(postings: DataFrame, doclens: DataFrame,
       terms: Seq[String]): DataFrame = {
-    val stats = doclens.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
-    val tf = postings.filter(col("token").isin(terms: _*))
-      .select("doc_id", "token", "tf", "dl")
-    bm25FromParts(tf, stats)
+    val (n, avgdl) = corpusStats(doclens)
+    perDoc(postings.filter(col("token").isin(terms: _*))
+      .select(col("doc_id"), termScore(lit(n),
+        count(lit(1)).over(Window.partitionBy("token")), col("tf"), col("dl"),
+        typedLit(avgdl)).as("term_score")))
+  }
+
+  /** (n, avgdl) of a doclens table — its row count and `avg(dl)`, None
+    * when it has no rows — computed by Spark once per snapshot of its
+    * files (`Engine.memoSnapshot`, the `Serving.readModel` contract):
+    * an appended or rewritten doclens is seen on the next call. */
+  private def corpusStats(doclens: DataFrame): (Long, Option[Double]) = {
+    val r = Engine.memoSnapshot(doclens, "bm25Stats")(
+      doclens.agg(count(lit(1)), avg(col("dl"))).head())
+    (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))
   }
 
   val defs: Seq[GQ] = Seq(

@@ -189,8 +189,12 @@ class PlanLintSpec extends AnyFunSuite {
     // weights — now ONE |langs|-row collect (collectClasses; the
     // centroid-k bounded-collect class). The model's class dimension
     // must be driver-known to emit per-class sum columns, the
-    // row-local argmax/top-2 folds, and the OOV coalesce literals
-    "TextPipeline.scala" -> 1,
+    // row-local argmax/top-2 folds, and the OOV coalesce literals.
+    // TextPipeline #2: bm25FromIndex's corpus stats — the ONE-row
+    // (count, avg) aggregate of the doclens table, memoized per file
+    // snapshot (Engine.memoSnapshot, readModel's contract) and bound
+    // into the serving plan as two literals
+    "TextPipeline.scala" -> 2,
     "ClusterCheck.scala" -> 1,
     // BigGraph (r16): the decade-3 graph-law probe's one-row
     // fingerprint aggregate (a dev tool, never a query path)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -81,9 +81,9 @@ class ServingSqlSpec extends AnyFunSuite {
 
   test("a warm serving call runs a pinned number of jobs") {
     installed
-    // first calls build the plans and read the PQ model (memoized per
-    // model-table snapshot); a warm call then runs the query-vector
-    // lookup plus the plan's own jobs
+    // first calls build the plans, read the PQ model and the BM25 corpus
+    // stats (each memoized per table snapshot); a warm call then runs
+    // the query-vector lookup plus the plan's own jobs
     def jobs(sql: String): Int = {
       spark.sql(sql).collect()
       JobCounter.jobsInGroup(spark, "serving-job-pin")(spark.sql(sql).collect())
@@ -93,8 +93,82 @@ class ServingSqlSpec extends AnyFunSuite {
     val hybrid = jobs("SELECT * FROM graft_hybrid_topk(7, 'scan hash merge', 20)")
     // a change that moves these must say which layer moved them
     assert(ann == 3, s"graft_ann_topk ran $ann jobs")
-    assert(bm25 == 6, s"graft_bm25_topk ran $bm25 jobs")
-    assert(hybrid == 8, s"graft_hybrid_topk ran $hybrid jobs")
+    assert(bm25 == 3, s"graft_bm25_topk ran $bm25 jobs")
+    assert(hybrid == 5, s"graft_hybrid_topk ran $hybrid jobs")
+  }
+
+  /** Drop a table and its warehouse location (a previous JVM's copy). */
+  private def fresh(t: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    val loc = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
+    if (loc.exists) new scala.reflect.io.Directory(loc).deleteRecursively()
+  }
+
+  test("a doclens append changes the next graft_bm25_topk answer; n and avgdl are read once") {
+    installed
+    import spark.implicits._
+    val sql = "SELECT * FROM graft_bm25_topk('scan hash merge', 20)"
+    val terms = Seq("scan", "hash", "merge")
+    val docs = Engine.table(spark, TestSpark.sf, "documents").select("doc_id", "text")
+    def scanned(d: DataFrame) =
+      canon(TextPipeline.bm25Scores(d, terms).orderBy(col("bm25").desc, col("doc_id")).limit(20))
+    def jobs(body: => Unit) = JobCounter.jobsInGroup(spark, "doclens-append")(body)
+    Seq("svqa_postings", "svqa_doclens").foreach(fresh)
+    try {
+      // a private copy of the inverted index: the svq tables stay as built
+      for (t <- Seq("postings", "doclens"))
+        spark.table(s"svq_$t").write.format("parquet").saveAsTable(s"svqa_$t")
+      Serving.install(spark, "svqa")
+      val before = canon(spark.sql(sql))
+      assert(before == scanned(docs))
+      assert(jobs(spark.sql(sql).collect()) == 3)
+
+      // 200 documents of five tokens, none a query term: n and avgdl
+      // move, so every score does
+      val extra = (0 until 200).map(i => (1000000000L + i, "lorem ipsum dolor sit amet"))
+      extra.map { case (id, _) => (id, 5) }.toDF("doc_id", "dl")
+        .write.mode(SaveMode.Append).format("parquet").saveAsTable("svqa_doclens")
+      val statsJobs = jobs(spark.table("svqa_doclens")
+        .agg(count(lit(1)), avg(col("dl"))).collect())
+      assert(statsJobs > 0)
+      var after = Seq.empty[(Long, String)]
+      assert(jobs { after = canon(spark.sql(sql)) } == 3 + statsJobs,
+        "the first call after the append reads the stats once")
+      assert(after != before)
+      assert(after == scanned(docs.unionByName(extra.toDF("doc_id", "text"))))
+      assert(jobs(spark.sql(sql).collect()) == 3, "the warm call reads no stats")
+    } finally Serving.install(spark, "svq")
+  }
+
+  test("empty index tables, absent and repeated terms serve the corpus-scan rows") {
+    installed
+    val docs = Engine.table(spark, TestSpark.sf, "documents")
+    val e = Engine.table(spark, TestSpark.sf, "embeddings")
+    def top(df: DataFrame, k: Int) = df.orderBy(col("bm25").desc, col("doc_id")).limit(k)
+    for ((terms, k) <- Seq("zzzqqq" -> 20, "scan scan hash" -> 7, "merge zzzqqq" -> 1)) {
+      val ts = terms.split(" ").toSeq
+      assert(canon(spark.sql(s"SELECT * FROM graft_bm25_topk('$terms', $k)")) ==
+        canon(top(TextPipeline.bm25Scores(docs, ts), k)), terms)
+      val q7 = e.filter(col("vec_id") === 7)
+        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val inline = VectorSearch.hybridRrfFuse(
+        VectorSearch.rankLex(TextPipeline.bm25Scores(docs, ts), k),
+        VectorSearch.rankVec(VectorSearch.ivfPqTopK(e, q7, k)))
+      assert(canon(spark.sql(s"SELECT * FROM graft_hybrid_topk(7, '$terms', $k)")) ==
+        canon(inline), terms)
+    }
+    assert(spark.sql("SELECT * FROM graft_bm25_topk('zzzqqq', 5)").collect().isEmpty)
+
+    Seq("svqe_postings", "svqe_doclens").foreach(fresh)
+    for (t <- Seq("postings", "doclens"))
+      spark.table(s"svq_$t").filter(lit(false)).write.format("parquet").saveAsTable(s"svqe_$t")
+    val empty = TextPipeline.bm25FromIndex(
+      spark.table("svqe_postings"), spark.table("svqe_doclens"), Seq("scan", "hash"))
+    assert(empty.columns.toSeq == Seq("doc_id", "bm25"))
+    assert(empty.collect().isEmpty)
+    assert(TextPipeline.bm25Scores(docs.filter(lit(false)), Seq("scan", "hash"))
+      .collect().isEmpty)
   }
 
   test("the PQ model is read once per model-table snapshot") {

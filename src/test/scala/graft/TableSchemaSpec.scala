@@ -92,4 +92,23 @@ class TableSchemaSpec extends AnyFunSuite {
     assert(jobs == 0, s"registerViews on a fresh session ran $jobs job(s)")
     assert(s.table("nation").count() == 25L)
   }
+
+  test("a part file appended under a driver table reaches the next Engine.sql call and session statement") {
+    import java.nio.file.{Files, Paths}
+    val dir = tempDir("graft_views_append")
+    for (n <- Engine.tableNames) {
+      Files.createDirectory(Paths.get(s"$dir/$n.parquet"))
+      Files.copy(Paths.get(s"${TestSpark.sf}/$n.parquet"), Paths.get(s"$dir/$n.parquet/part-0.parquet"))
+    }
+    val count = "SELECT count(*) FROM nation"
+    val s = spark.newSession()
+    val sess = new GraftSession(spark.newSession(), Some(dir))
+    def viaSql = Engine.sql(s, dir, count).head().getLong(0)
+    def viaSession = sess.execute(count).head().getLong(0)
+    assert(viaSql == 25L && viaSession == 25L)
+    assert(jobsInGroup(Engine.registerViews(s, dir)) == 0, "a warm registerViews ran a job")
+    Files.copy(Paths.get(s"${TestSpark.sf}/nation.parquet"), Paths.get(s"$dir/nation.parquet/part-1.parquet"))
+    assert(viaSql == 50L, "Engine.sql kept the view's old file listing")
+    assert(viaSession == 50L, "the session's next statement kept the old file listing")
+  }
 }

@@ -435,6 +435,18 @@ class KernelPropertySpec extends AnyFunSuite {
       }
     }
 
+  /** Whether [[ExactDecKernel]] answers `x` at `scale`; fails when an
+    * answer differs from Double.toString -> BigDecimal HALF_UP. */
+  private def provenAgrees(x: Double, scale: Int): Boolean = {
+    val u = ExactDecKernel.unscaled(x, scale)
+    u != ExactDecKernel.NotProven && {
+      val ref = new java.math.BigDecimal(java.lang.Double.toString(x))
+        .setScale(scale, java.math.RoundingMode.HALF_UP).unscaledValue
+      assert(java.math.BigInteger.valueOf(u) == ref, s"kernel diverged on x=$x at scale $scale")
+      true
+    }
+  }
+
   test("ExactDec10Kernel == Double.toString -> BigDecimal HALF_UP 10dp wherever it answers") {
     val rnd = new scala.util.Random(5)
     var fast = 0
@@ -445,23 +457,66 @@ class KernelPropertySpec extends AnyFunSuite {
         case 2 => (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(24) - 16)
         case _ => java.lang.Double.longBitsToDouble(rnd.nextLong())
       }
-      val u = ExactDec10Kernel.unscaled(x)
-      if (u != ExactDec10Kernel.NotProven) {
-        fast += 1
-        val ref = new java.math.BigDecimal(java.lang.Double.toString(x))
-          .setScale(10, java.math.RoundingMode.HALF_UP).unscaledValue
-        assert(java.math.BigInteger.valueOf(u) == ref, s"kernel diverged on x=$x")
-      }
+      if (provenAgrees(x, 10)) fast += 1
     }
     assert(fast > 100000, s"only $fast of 300000 took the fast path")
     Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
-      two17, -two17, 5e-11, -5e-11, 1e20)
-      .foreach(x => assert(ExactDec10Kernel.unscaled(x) == ExactDec10Kernel.NotProven, s"x=$x"))
+      5e-11, -5e-11, 1e20, 4.0 * two17)
+      .foreach(x => assert(ExactDecKernel.unscaled(x, 10) == ExactDecKernel.NotProven, s"x=$x"))
+    // exact integers past the old |x| < 2^17 limit, inside the ulp bound
+    Seq(two17, -two17, 2 * two17 - 1, 0.0, -0.0)
+      .foreach(x => assert(provenAgrees(x, 10), s"x=$x"))
+  }
+
+  test("ExactDecKernel at scale 12 == BigDecimal HALF_UP 12dp wherever it answers, float-widened inputs included") {
+    val rnd = new scala.util.Random(12)
+    var fast = 0
+    var widened = 0
+    for (i <- 0 until 300000) {
+      val x = i % 5 match {
+        case 0 => (rnd.nextFloat() * 2 - 1).toDouble // a float embedding element
+        case 1 => ((rnd.nextFloat() - 0.5f) * 16384f).toDouble
+        case 2 => (rnd.nextLong() % 10000000000000000L + 0.5 * rnd.nextInt(2)) / 1e12
+        case 3 => (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(24) - 16)
+        case _ => java.lang.Double.longBitsToDouble(rnd.nextLong())
+      }
+      if (provenAgrees(x, 12)) { fast += 1; if (i % 5 < 2) widened += 1 }
+    }
+    assert(fast > 100000 && widened > 80000, s"fast path: $fast of 300000, $widened widened floats")
+    // |x| * 10^12 past 2^62 (a long's reach) and past the ulp bound
+    Seq(Double.NaN, Double.NegativeInfinity, 5e-13, -5e-13, 8192.5, 4.7e6, -1e7, 1e20,
+      Double.MaxValue)
+      .foreach(x => assert(ExactDecKernel.unscaled(x, 12) == ExactDecKernel.NotProven, s"x=$x"))
+    Seq(0.1f.toDouble, -0.7f.toDouble, 4096.0, -8191.0, 1e-12, Double.MinPositiveValue)
+      .foreach(x => assert(provenAgrees(x, 12), s"x=$x"))
+  }
+
+  test("ExactDecSums == exact BigDecimal sums of the 12dp cast, past a long's reach too") {
+    val rnd = new scala.util.Random(13)
+    // cell 0 sums proven values past Long.MaxValue unscaled; cell 1
+    // mixes signs; cell 2 holds values the kernel cannot prove
+    val xs = Seq.tabulate(30000)(i => i % 3 -> (i % 3 match {
+      case 0 => rnd.nextFloat().toDouble * 2000
+      case 1 => (rnd.nextFloat() - 0.5f).toDouble
+      case _ => Seq(5e-13, 1e20, -3e7, rnd.nextDouble() * 1e9)(i / 3 % 4)
+    }))
+    val sums = new ExactDecSums(3, 12)
+    val ref = Array.fill(3)(java.math.BigDecimal.valueOf(0L, 12))
+    for ((c, x) <- xs) {
+      sums.add(c, x)
+      ref(c) = ref(c).add(java.math.BigDecimal.valueOf(x).setScale(12, java.math.RoundingMode.HALF_UP))
+    }
+    assert(ref(0).unscaledValue.bitLength > 63, "cell 0 must overflow a long")
+    for (c <- 0 until 3) {
+      assert(sums.sum(c) == ref(c), s"cell $c")
+      assert(sums.counts(c) == 10000L)
+      assert(sums.sum(c).doubleValue == ref(c).doubleValue)
+    }
   }
 
   test("Engine.exactDec == cast(x AS DECIMAL(38,10)) in value and error, every codegen mode") {
     val xs = exactDecInputs
-    val fast = xs.flatten.count(x => ExactDec10Kernel.unscaled(x) != ExactDec10Kernel.NotProven)
+    val fast = xs.flatten.count(x => ExactDecKernel.unscaled(x, 10) != ExactDecKernel.NotProven)
     assert(fast > xs.size / 2 && fast < xs.size - 20, s"fast $fast of ${xs.size}")
     // NaN, +-Inf and values past DECIMAL(38,10)'s range may raise under
     // ANSI: they run one at a time, so one error cannot mask another
@@ -531,8 +586,8 @@ class KernelPropertySpec extends AnyFunSuite {
       check(empty, mode, "empty")
     }
     // the groups really do split across the two paths
-    assert(g0.flatten.forall(x => ExactDec10Kernel.unscaled(x) != ExactDec10Kernel.NotProven))
-    assert(g1.flatten.exists(x => ExactDec10Kernel.unscaled(x) == ExactDec10Kernel.NotProven))
+    assert(g0.flatten.forall(x => ExactDecKernel.unscaled(x, 10) != ExactDecKernel.NotProven))
+    assert(g1.flatten.exists(x => ExactDecKernel.unscaled(x, 10) == ExactDecKernel.NotProven))
     assert(finite.groupBy("g").agg(dsum(col("x"))).collect()
       .exists(r => r.getInt(0) == 2 && r.isNullAt(1)), "an all-NULL group sums to NULL")
   }
@@ -547,7 +602,7 @@ class KernelPropertySpec extends AnyFunSuite {
     // the stage whose root (first line) is the partial aggregate
     val partial = stages.filter(_._1.linesIterator.next().contains("partial_sum"))
     assert(partial.nonEmpty, stages.map(_._1).mkString("\n"))
-    assert(partial.forall(_._2.contains("graft.functions.ExactDec10Kernel.unscaled(")),
+    assert(partial.forall(_._2.contains("graft.functions.ExactDecKernel.unscaled(")),
       "the partial aggregate must call the kernel's static method")
     assert(!stages.exists(_._2.contains("CodegenFallback")), "no fallback boxing in q05")
   }
